@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.io.LocalFs
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -44,7 +46,7 @@ object Verify {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Option[(String, Throwable)] =
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        LocalFs.write(fn(spark, sfDir).coalesce(1)).mode("overwrite")
           .parquet(s"$outDir/$name")
         None
       } catch { case e: Throwable =>

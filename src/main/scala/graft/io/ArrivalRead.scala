@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Unified arrival-file reader — the reference's read dispatch
@@ -27,18 +25,11 @@ object ArrivalRead {
   private val BiffMagic =
     Array(0xD0, 0xCF, 0x11, 0xE0, 0xA1, 0xB1, 0x1A, 0xE1).map(_.toByte)
 
-  private def readHead(path: String): Array[Byte] = {
-    val in = Files.newInputStream(Paths.get(path))
-    try in.readNBytes(4096) finally in.close()
-  }
-
   /** True when the file head can never be CSV text: zip / OLE magic or
-    * embedded NUL bytes. */
-  private[io] def looksBinary(path: String): Boolean = {
-    val head = readHead(path)
+    * NUL bytes in its first 4 KB. */
+  private def looksBinary(head: Array[Byte]): Boolean =
     head.startsWith(ZipMagic) || head.startsWith(BiffMagic) ||
-      head.contains(0.toByte)
-  }
+      head.iterator.take(4096).contains(0.toByte)
 
   /** Try CSV, fall back to xlsx; error out otherwise. Binary content
     * dispatches on the DETECTED container magic before the claimed
@@ -52,10 +43,9 @@ object ArrivalRead {
     * already-typed columns and do the coercion work on strings. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val lower = path.toLowerCase
-    val head = readHead(path)
-    val binary = head.startsWith(ZipMagic) || head.startsWith(BiffMagic) ||
-      head.contains(0.toByte)
-    if (!binary) CsvProbe.read(spark, path)
+    // one head read serves the binary sniff, the CSV probe and the header
+    val head = CsvProbe.readHead(path)
+    if (!looksBinary(head)) CsvProbe.read(spark, path, head)
     else if (head.startsWith(BiffMagic))
       throw new IllegalArgumentException(
         s"'$path' is a legacy binary .xls (BIFF/OLE) workbook; re-export " +

@@ -121,7 +121,7 @@ object ArtifactStore {
           e
       }
       val dataDir = s"$root/$name/v$next/data"
-      df.write.mode("overwrite").parquet(dataDir)
+      LocalFs.write(df).mode("overwrite").parquet(dataDir)
       val rows = spark.read.parquet(dataDir).count()
       val m = Manifest(name, next, rows, df.schema.toDDL)
       val mp = manifestPath(root, name, next)

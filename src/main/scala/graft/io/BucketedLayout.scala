@@ -37,11 +37,12 @@ object BucketedLayout {
         spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    val w = df.write
+    val w = LocalFs.write(df)
       .mode("overwrite")
       .format("parquet")
       .bucketBy(buckets, key)
       .sortBy(key)
     location.fold(w)(l => w.option("path", l)).saveAsTable(table)
+    LocalFs.clearTableOptions(spark, table)
   }
 }

@@ -59,7 +59,7 @@ object Compact {
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new Path(staging), true)
     fs.delete(new Path(retired), true)
-    val writer = clustered.write
+    val writer = LocalFs.write(clustered)
       .option("maxRecordsPerFile", maxRecordsPerFile.toLong)
       .mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)

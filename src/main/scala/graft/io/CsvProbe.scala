@@ -3,7 +3,12 @@ package graft.io
 import java.nio.charset.{Charset, CharsetDecoder, CodingErrorAction, StandardCharsets}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Messy-CSV ingestion: charset fallback + delimiter sniffing.
   *
@@ -13,44 +18,60 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reader takes one fixed charset/sep, so we decide both driver-side,
   * then launch the distributed `spark.read` with the detected options:
   *
-  *   - separator: sniffed from the first few KB — O(1) in file size;
-  *   - charset: validated over the WHOLE file with a streaming decoder
-  *     (O(n) sequential read, O(1) memory). A head-only probe would
-  *     silently corrupt a latin-1 file whose first non-ASCII byte sits
-  *     past the window (UTF-8 "passes" on the head, then the bad byte
-  *     decodes to U+FFFD mid-file); the reference decodes the whole
-  *     file too, so the cost is the same work pandas does.
+  *   - separator: sniffed from the file head — O(1) in file size;
+  *   - charset: UTF-8 when the WHOLE file decodes as UTF-8 (a
+  *     streaming decoder: O(n) sequential read, O(1) memory), else
+  *     latin-1. A head-only probe would silently corrupt a latin-1
+  *     file whose first non-ASCII byte sits past the window (UTF-8
+  *     "passes" on the head, then the bad byte decodes to U+FFFD
+  *     mid-file); the reference decodes the whole file too, so the
+  *     cost is the same work pandas does.
   *
-  * cp1252 is listed for reference parity but is unreachable after
-  * ISO-8859-1 (latin-1 maps every byte, so it never fails) — exactly
-  * as in the reference, where pandas' latin-1 attempt also never
-  * raises. Kept to document the fallback chain faithfully.
+  * latin-1 maps every byte, so it never fails and needs no pass of
+  * its own; cp1252, after it in the reference's chain, is unreachable
+  * there too (pandas' latin-1 attempt never raises either).
+  *
+  * The same head gives the header: [[read]] hands Spark the all-string
+  * schema its header inference would build, so no job runs to read
+  * the first line of the file.
   */
 object CsvProbe {
 
   private val CandidateSeps = Seq(',', ';', '\t', '|')
-  private val CandidateCharsets =
-    Seq(StandardCharsets.UTF_8, StandardCharsets.ISO_8859_1, Charset.forName("windows-1252"))
+  private val HeadBytes = 65536
+
+  /** The first `n` bytes of the file (fewer when it is shorter). */
+  private[io] def readHead(path: String, n: Int = HeadBytes): Array[Byte] = {
+    val in = Files.newInputStream(Paths.get(path))
+    try in.readNBytes(n) finally in.close()
+  }
 
   /** Detect (charset, separator): charset by streaming full-file
     * validation, separator from the first `probeBytes` only. */
-  def probe(path: String, probeBytes: Int = 65536): (Charset, Char) = {
-    val in = Files.newInputStream(Paths.get(path))
-    val full = try in.readNBytes(probeBytes) finally in.close()
-    val head =
-      if (full.length < probeBytes) full // whole file fit: nothing was split
-      else {
-        val lastNl = full.lastIndexWhere(_ == '\n'.toByte)
-        if (lastNl > 0) java.util.Arrays.copyOf(full, lastNl) else full
-      }
-    val cs = CandidateCharsets
-      .find(c => decodesStream(path, c))
-      .getOrElse(StandardCharsets.ISO_8859_1) // latin-1 accepts any byte
-    val text = new String(head, cs)
-    val firstLine = text.linesIterator.toSeq.headOption.getOrElse("")
+  def probe(path: String, probeBytes: Int = HeadBytes): (Charset, Char) =
+    probe(path, readHead(path, probeBytes), probeBytes)
+
+  private def probe(path: String, head: Array[Byte],
+      probeBytes: Int): (Charset, Char) = {
+    val cs =
+      if (decodesStream(path, StandardCharsets.UTF_8)) StandardCharsets.UTF_8
+      else StandardCharsets.ISO_8859_1
+    val text = new String(completeLines(head, probeBytes).getOrElse(head), cs)
+    val firstLine = text.linesIterator.nextOption().getOrElse("")
     val sep = CandidateSeps.maxBy(s => countOutsideQuotes(firstLine, s))
     (cs, sep)
   }
+
+  /** The head cut back to its last complete line: a read of `limit`
+    * bytes may end inside a line or a multibyte character. None when
+    * the head was cut and holds no line break. */
+  private def completeLines(head: Array[Byte],
+      limit: Int): Option[Array[Byte]] =
+    if (head.length < limit) Some(head) // whole file fit: nothing was split
+    else {
+      val lastNl = head.lastIndexWhere(_ == '\n'.toByte)
+      if (lastNl > 0) Some(java.util.Arrays.copyOf(head, lastNl)) else None
+    }
 
   /** Whole-file charset validation with a 64 KB rolling buffer —
     * InputStreamReader drives the incremental decoder, so split
@@ -78,18 +99,51 @@ object CsvProbe {
     n
   }
 
+  private val Bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+
+  /** The schema `spark.read.option("header", "true").csv` infers, by
+    * Spark's own rule: Hadoop's line reader drops a leading UTF-8
+    * byte-order mark (whatever the charset) and breaks lines at LF,
+    * CR or CRLF; the first line left by `filterCommentAndEmpty` is
+    * parsed with the read's own options and named by `makeSafeHeader`.
+    * None when the head holds no complete such line: Spark infers. */
+  private def headerSchema(spark: SparkSession, head: Array[Byte],
+      options: Map[String, String]): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val parsed = new CSVOptions(options, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone)
+    completeLines(head, HeadBytes).flatMap { bytes =>
+      val from = if (bytes.startsWith(Bom)) Bom.length else 0
+      val text = new String(bytes, from, bytes.length - from, parsed.charset)
+      CSVUtils.filterCommentAndEmpty(text.lines().iterator().asScala, parsed)
+        .nextOption()
+    }.flatMap { line =>
+      Option(new com.univocity.parsers.csv.CsvParser(parsed.asParserSettings)
+        .parseLine(line))
+    }.map { row =>
+      StructType(CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, parsed)
+        .map(StructField(_, StringType)))
+    }
+  }
+
   /** Probe then read. All values arrive as strings; downstream
     * conformance ([[graft.conform.Conform]]) does the typed casts —
     * matching the reference, where pandas infers and the transform
     * re-coerces anyway. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val (cs, sep) = probe(path)
-    spark.read
-      .option("header", "true")
-      .option("sep", sep.toString)
-      .option("encoding", cs.name())
-      .option("mode", "PERMISSIVE") // bad rows → nulls, like errors='coerce'
-      .csv(path)
+  def read(spark: SparkSession, path: String): DataFrame =
+    read(spark, path, readHead(path))
+
+  /** [[read]] from a head already read ([[ArrivalRead]]). */
+  private[io] def read(spark: SparkSession, path: String,
+      head: Array[Byte]): DataFrame = {
+    val (cs, sep) = probe(path, head, HeadBytes)
+    val options = Map(
+      "header" -> "true",
+      "sep" -> sep.toString,
+      "encoding" -> cs.name(),
+      "mode" -> "PERMISSIVE") // bad rows → nulls, like errors='coerce'
+    val reader = spark.read.options(options)
+    headerSchema(spark, head, options).fold(reader)(reader.schema).csv(path)
   }
 
   /** File-type router by filename substring (S4, reference

@@ -670,8 +670,8 @@ object IdempotentWriter {
       .filter(col(partitionCol).isin(touched.toIndexedSeq: _*))
     val survivors = scoped
       .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
-    survivors.unionByName(batch, allowMissingColumns = false)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(staging)
+    LocalFs.write(survivors.unionByName(batch, allowMissingColumns = false))
+      .mode("overwrite").partitionBy(partitionCol).parquet(staging)
     // staging is removed only on SUCCESS: after a failed or killed
     // overwrite it is the recovery copy of the merged partitions,
     // and the entry recovery above replays it on the next call
@@ -704,7 +704,7 @@ object IdempotentWriter {
     // unlike the old set/restore toggle it cannot race a concurrent
     // writer of a DIFFERENT table sharing the session (the lease only
     // serializes same-path writers).
-    out.write.mode("overwrite")
+    LocalFs.write(out).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
   }

@@ -92,5 +92,5 @@ final class RunAudit(val runId: String) {
   /** Append the trail to a parquet audit table — runs accumulate,
     * queryable by run_id. */
   def write(spark: SparkSession, path: String): Unit =
-    toDF(spark).write.mode("append").parquet(path)
+    LocalFs.write(toDF(spark)).mode("append").parquet(path)
 }

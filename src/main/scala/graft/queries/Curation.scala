@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.LocalFs
+
 /** Corpus-curation operators a large-scale training-data pipeline
   * runs AFTER pair mining and scoring: near-dup cluster consolidation
   * (connected components over the verified LSH pairs), benchmark
@@ -630,7 +632,7 @@ object Curation {
       latestLabels(store).get.getFileName.toString
         .stripPrefix("labels_v").toInt + 1
     else 0)
-    repaired.write.mode("overwrite")
+    LocalFs.write(repaired).mode("overwrite")
       .parquet(store.resolve(s"labels_v$next").toString)
     // Idempotent append (advisor find, round 11): a crash-replay after
     // a COMMITTED append re-delivers the batch, and a bare append would
@@ -645,7 +647,7 @@ object Curation {
         deltaSigs.join(baseSigs.select(col("doc_id")), Seq("doc_id"),
           "left_anti")
       else deltaSigs
-    unseenSigs.write.mode("append").parquet(sigDir.toString)
+    LocalFs.write(unseenSigs).mode("append").parquet(sigDir.toString)
     // Snapshot retention (the ArtifactStore.prune policy applied to
     // the streamed store): one snapshot lands per arrival and would
     // otherwise accumulate forever. Keep the newest TWO committed

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.conform.Conform
-import graft.io.{CsvProbe, IdempotentWriter, JdbcSink, JsonlRead}
+import graft.io.{CsvProbe, IdempotentWriter, JdbcSink, JsonlRead, LocalFs}
 import graft.norm.Coerce
 
 /** Layer-A queries: the reference's literal operator semantics
@@ -1516,7 +1516,7 @@ object Reference {
             throw new java.io.IOException("transient sink failure")
           val df = dfOpt.getOrElse(
             throw new IllegalArgumentException(s"unreadable drop: $name"))
-          df.write.mode("overwrite").parquet(s"$path/$name")
+          LocalFs.write(df).mode("overwrite").parquet(s"$path/$name")
           spark.read.parquet(s"$path/$name").count()
         }
     }
@@ -1590,8 +1590,8 @@ object Reference {
     prep(spark)
     val scratch = newScratch("graft_compact")
       .resolve("docs").toString
-    documents(spark, dir).repartition(8)
-      .write.mode("overwrite").partitionBy("lang").parquet(scratch)
+    LocalFs.write(documents(spark, dir).repartition(8))
+      .mode("overwrite").partitionBy("lang").parquet(scratch)
     val stats = graft.io.Compact.compact(spark, scratch, Seq("lang"), 200)
     spark.read.parquet(scratch)
       .agg(count(lit(1)).as("n_rows"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.LocalFs
+
 /** Layer-B relational surface: the BI/reporting queries the
   * reference's loaded tables exist to serve (SURVEY §2.4-§2.6;
   * purpose stated at reference README.md:113 — "listos para ser
@@ -2649,12 +2651,12 @@ object Relational {
         // output file, so each file's footer min/max span ~one bucket
         // (hash partitioning mixed ~1.5 arbitrary buckets per file and
         // measurably halved the skip rate)
-        buckets.repartitionByRange(ZFiles, col("linear_f"))
-          .select(col("ok"), col("pk"))
-          .write.mode("overwrite").parquet(lin)
-        buckets.repartitionByRange(ZFiles, col("zorder_f"))
-          .select(col("ok"), col("pk"))
-          .write.mode("overwrite").parquet(zo)
+        LocalFs.write(buckets.repartitionByRange(ZFiles, col("linear_f"))
+          .select(col("ok"), col("pk")))
+          .mode("overwrite").parquet(lin)
+        LocalFs.write(buckets.repartitionByRange(ZFiles, col("zorder_f"))
+          .select(col("ok"), col("pk")))
+          .mode("overwrite").parquet(zo)
         buckets.unpersist()
         (lin, zo)
       }
@@ -2895,14 +2897,14 @@ object Relational {
       val thr = b.agg(max(col("ok"))).head.getLong(0) * 7 / 8 // 1-row
       val appended = s"$base/appended"
       val optimized = s"$base/optimized"
-      b.filter(col("ok") <= thr)
+      LocalFs.write(b.filter(col("ok") <= thr)
         .repartitionByRange(ZFiles, col("zorder_f"))
-        .select(col("ok"), col("pk")).write.parquet(appended)
-      b.filter(col("ok") > thr)
+        .select(col("ok"), col("pk"))).parquet(appended)
+      LocalFs.write(b.filter(col("ok") > thr)
         .repartitionByRange(ZDeltaFiles, col("ok"))
-        .select(col("ok"), col("pk")).write.mode("append").parquet(appended)
-      b.repartitionByRange(ZFiles + ZDeltaFiles, col("zorder_f"))
-        .select(col("ok"), col("pk")).write.parquet(optimized)
+        .select(col("ok"), col("pk"))).mode("append").parquet(appended)
+      LocalFs.write(b.repartitionByRange(ZFiles + ZDeltaFiles, col("zorder_f"))
+        .select(col("ok"), col("pk"))).parquet(optimized)
       (appended, optimized)
     }
 

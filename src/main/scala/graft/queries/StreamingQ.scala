@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.io.LocalFs
 import graft.streaming.Streams
 
 /** Streaming queries: each runs a Structured Streaming job to
@@ -278,8 +279,8 @@ object StreamingQ {
     try {
       val q = Streams.embeddingsStream(spark, dir).writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Similarity.ivfAssign(spark, dir, batch)
-            .write.mode("append").partitionBy("cell").parquet(out)
+          LocalFs.write(Similarity.ivfAssign(spark, dir, batch))
+            .mode("append").partitionBy("cell").parquet(out)
         }
         .option("checkpointLocation", scratch.resolve("ckpt").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -753,11 +754,11 @@ object StreamingQ {
     val scratch = Reference.newScratch("graft_stream_scd2")
     val dim = scratch.resolve("dim").toString
     // seed: the current snapshot, every member one open version
-    Tables.customer(spark, dir)
+    LocalFs.write(Tables.customer(spark, dir)
       .select(col("c_custkey").as("k"),
         expr("cast(round(c_acctbal * 100) as bigint)").as("cents"),
-        lit(true).as("cur"))
-      .write.parquet(dim)
+        lit(true).as("cur")))
+      .parquet(dim)
     // the arrival stream carries the q131 change-set
     val schema = spark.read
       .parquet(s"$dir/customer.parquet").schema
@@ -850,7 +851,7 @@ object StreamingQ {
     val cut = lit("2024-01-16").cast("timestamp")
     def writeArrival(name: String, rows: DataFrame): Unit = {
       val staging = scratch.resolve(s"staging_$name")
-      rows.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      LocalFs.write(rows.coalesce(1)).mode("overwrite").parquet(staging.toString)
       val part = java.nio.file.Files.list(staging).iterator()
       val it = scala.jdk.CollectionConverters.IteratorHasAsScala(part).asScala
       val src = it.find(_.getFileName.toString.endsWith(".parquet")).get

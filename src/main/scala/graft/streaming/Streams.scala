@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.io.LocalFs
+
 /** Structured Streaming surface over the harness `events` stream
   * (SURVEY §2.10). The reference itself is a scheduled daily batch
   * (main.py:201-209; README.md:113) whose Spark-native form is an
@@ -344,7 +346,7 @@ object Streams {
     // entry recovery above, a crash at ANY point leaves a complete
     // dimension reachable (at dimPath or at .scd2_old).
     fs.delete(stgP, true)
-    merged.write.mode("overwrite").parquet(staging)
+    LocalFs.write(merged).mode("overwrite").parquet(staging)
     fs.delete(retP, true)
     if (fs.exists(dimP))
       require(fs.rename(dimP, retP),
@@ -440,7 +442,7 @@ object Streams {
                 batch.sparkSession.read.parquet(path).select("fp"),
                 Seq("fp"), "left_anti")
             else keepers
-          fresh.write.mode("append").parquet(path)
+          LocalFs.write(fresh).mode("append").parquet(path)
         }
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.AvailableNow())

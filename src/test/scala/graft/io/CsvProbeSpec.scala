@@ -3,6 +3,8 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** S1 charset/separator probing and S4 routing
@@ -63,6 +65,73 @@ class CsvProbeSpec extends SparkSpec {
     assert(df.columns.toSeq === Seq("id", "campaña"))
     assert(df.count() === 2)
     assert(df.collect().map(_.getString(1)).toSet === Set("café", "niño"))
+  }
+
+  /** What `spark.read` infers with the options `read` chose. */
+  private def sparkInferred(path: String) = {
+    val (cs, sep) = CsvProbe.probe(path)
+    spark.read.option("header", "true").option("sep", sep.toString)
+      .option("encoding", cs.name()).option("mode", "PERMISSIVE").csv(path)
+  }
+
+  private val headerFixtures: Seq[(String, Array[Byte])] = Seq(
+    "duplicate names" -> "a,b,a,b\n1,2,3,4\n5,6,7,8\n".getBytes(StandardCharsets.UTF_8),
+    "blank names" -> "a,,c, \n1,2,3,4\n".getBytes(StandardCharsets.UTF_8),
+    "case-colliding names" -> "Id,id,ID,x\n1,2,3,4\n".getBytes(StandardCharsets.UTF_8),
+    "quoted name holding the separator" ->
+      "\"a;b\";c;\"d\"\"e\"\n1;2;3\n".getBytes(StandardCharsets.UTF_8),
+    "latin-1 accented header" ->
+      "campaña;año;dirección\nsí;1;calle ñ\n".getBytes(StandardCharsets.ISO_8859_1),
+    "utf-8 BOM" -> "\uFEFFid,nombre\n1,José\n".getBytes(StandardCharsets.UTF_8),
+    "BOM before a latin-1 body" -> (Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++
+      "id;año\n1;sí\n".getBytes(StandardCharsets.ISO_8859_1)),
+    "leading blank lines" -> "\n\n   \nid,v\n\n1,x\n2,y\n".getBytes(StandardCharsets.UTF_8),
+    "CRLF and lone CR breaks" -> "id;v\r\n1;x\r2;y\r\n".getBytes(StandardCharsets.UTF_8),
+    "header longer than the head window" ->
+      ((1 to 9000).map(i => s"col_$i").mkString(",") + "\n" +
+        (1 to 9000).mkString(",") + "\n").getBytes(StandardCharsets.UTF_8))
+
+  headerFixtures.foreach { case (name, bytes) =>
+    test(s"read: header schema and rows equal Spark's inference ($name)") {
+      val path = tmpCsv(bytes)
+      val got = CsvProbe.read(spark, path)
+      val want = sparkInferred(path)
+      assert(got.schema === want.schema)
+      val rows = (df: org.apache.spark.sql.DataFrame) =>
+        df.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+      assert(rows(got) === rows(want))
+    }
+  }
+
+  test("read builds its frame without a Spark job (the header comes from " +
+      "the probed head)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val path = tmpCsv("id;campaña\n1;café\n".getBytes(StandardCharsets.ISO_8859_1))
+    sc.addSparkListener(listener)
+    try {
+      def jobsIn(group: String)(body: => Unit): Int = {
+        sc.setJobGroup(group, group)
+        try body finally sc.clearJobGroup()
+        // a marker job after the body: the bus delivers events in order,
+        // so once it is seen every job the body started has been seen
+        sc.setJobGroup(s"$group-marker", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (!seen.contains(s"$group-marker") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(seen.contains(s"$group-marker"))
+        seen.asScala.count(_ == group)
+      }
+      assert(jobsIn("probe-read")(CsvProbe.read(spark, path)) === 0)
+      // the listener does see the header job Spark's own inference runs
+      assert(jobsIn("spark-infer")(sparkInferred(path)) >= 1)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("property: routeCol (distributed) == routeByName (driver) on " +
