@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val cfg = graft.io.Config.fromEnv
     val sfDir = cfg.optional("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cfg.int("SPARK_GRAFT_CPUS", 32).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     val names = SparkEntry.benchQueries
     // Materialize with a noop WRITE, not count(): under count() the
     // optimizer prunes aggregate functions to their grouping keys and

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone cold-DELTA timer — the "today" process of the q204
   * bar-vs-path split (r15 verdict ask #3). [[ColdPublish]] is the
   * bar: the once-per-day corpus-scale artifact build a real pipeline
@@ -21,14 +19,7 @@ object ColdDelta {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val root = args(1)
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 4).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     spark.range(100).agg(org.apache.spark.sql.functions.sum("id"))
       .collect() // untimed: absorb session/codegen cold start
     val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone artifact publisher — the "yesterday" process of the
   * cold-restart proof (reference main.py:201-209: one process per
   * day). Builds the seven incremental-maintenance base artifacts and
@@ -28,14 +26,7 @@ object ColdPublish {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val root = args(1)
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 4).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     if (args.length >= 4 && args(3) == "rollup") {
       graft.queries.ColdRestart.chainRollupPublish(
         spark, dir, root, args(2).toInt)

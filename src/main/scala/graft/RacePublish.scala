@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone racing publisher — one contender of the multi-process
   * artifact-store soak (ArtifactRaceSpec). Each instance is a live
   * JVM calling [[graft.io.ArtifactStore.publish]] with version
@@ -23,13 +21,7 @@ import org.apache.spark.sql.SparkSession
 object RacePublish {
   def main(args: Array[String]): Unit = {
     val Array(root, name, expectV, nRows, readyFile, goFile) = args.take(6)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(2)
     import spark.implicits._
     // 32 output files: the post-write manifest step (read-back count
     // over the written parquet) then spans enough footer reads that

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Standalone runner for ONE streamed-maintenance cell — the process
@@ -36,13 +35,7 @@ object StreamCellRun {
     val ckpt = args(2)
     val root = args(3)
     val crashAfter = if (args.length >= 5) args(4).toLong else -1L
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
     // the arrival files all share one schema; the static read is the
     // standard way to hand it to the streaming file source
     val schema = spark.read.parquet(arrival).schema

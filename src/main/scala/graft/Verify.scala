@@ -11,14 +11,7 @@ object Verify {
     // Optional extra args: run only these query names (local dev loop;
     // the driver always passes exactly two args -> full run).
     val only = args.drop(2).toSet
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 4).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

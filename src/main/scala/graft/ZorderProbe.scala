@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * layout back under a single-dimension range predicate and reports
   * what the parquet footer stats actually bought — the scan's
   * POST-row-group-skip output rows vs the table's total — plus the
-  * exact matched-row count. Dev/bench tooling (BENCH_NOTES' skip-ratio
-  * table), not part of the driver contract; ZorderWriteSpec asserts
-  * the same numbers at sf0.001.
+  * exact matched-row count. `graft.Dev zorder` prints BENCH_NOTES'
+  * skip-ratio table with it; ZorderWriteSpec asserts the same numbers
+  * at sf0.001.
   *
   * Measurement note: with filter pushdown, Spark's vectorized parquet
   * reader skips whole row groups whose min/max exclude the predicate
@@ -49,27 +49,5 @@ object ZorderProbe {
       case p                        => p
     }
     plan.collect { case s: FileSourceScanExec => s }.head
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.queries.Tables.prep(spark)
-    val (lin, zo) = graft.queries.Relational.zorderWritten(spark, sfDir)
-    for ((label, path) <- Seq(("linear", lin), ("zorder", zo));
-         dim <- Seq("ok", "pk")) {
-      val (scanned, matched, files, total) = measure(spark, path, dim)
-      println(f"PROBE layout=$label dim=$dim scanned=$scanned " +
-        f"matched=$matched files=$files total=$total " +
-        f"skip_pct=${100.0 * (total - scanned) / total}%.1f")
-    }
-    spark.stop()
   }
 }

@@ -124,10 +124,9 @@ class TopTermsAgg(k: Int)
     else 0
 
   /** term comparison mirroring SQL `ASC NULLS FIRST`: a null term
-    * wins a score tie (sorts first), so the [[graft.plans
-    * .WindowTopKRewrite]] path — whose window ordering is the default
-    * ASC NULLS FIRST — stays row-identical even on nullable string
-    * columns. Raw `<` would NPE on null. */
+    * wins a score tie (sorts first), so rankings stay row-identical to
+    * a window ordered by the default ASC NULLS FIRST even on nullable
+    * string columns. Raw `<` would NPE on null. */
   private def cmpTerm(x: String, y: String): Int =
     if (x == null && y == null) 0
     else if (x == null) -1

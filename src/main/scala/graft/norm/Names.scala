@@ -33,7 +33,4 @@ object Names {
       .stripSuffix("_")
       .toLowerCase
   }
-
-  /** Normalize every column name of a schema'd column list. */
-  def normalizeAll(cols: Seq[String]): Seq[String] = cols.map(normalizeName)
 }

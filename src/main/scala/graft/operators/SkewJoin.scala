@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * the scan. AQE's skew-join split remains the first-line fix; this
   * operator is the explicit form for extreme single-key skew, non-AQE
   * engines, or when the skew is known ahead of planning — MEASURED in
-  * [[graft.BenchSkew]] (BENCH_NOTES.md r9 table): AQE wins moderate
+  * `graft.Dev skew` (BENCH_NOTES.md r9 table): AQE wins moderate
   * skew for free; at 90% single-key skew the split stops helping and
   * salting wins even with the profile pass, while the known-keys form
   * runs ~2.6× faster than AQE at either skew level.

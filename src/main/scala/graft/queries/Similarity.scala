@@ -2391,7 +2391,7 @@ object Similarity {
       .orderBy("qid", "rnk")
   }
 
-  /** The walk with its hop knob exposed ([[graft.BeamSweep]] measures
+  /** The walk with its hop knob exposed (`graft.Dev beam` measures
     * the H=1..4 recall/cost curve for BENCH_NOTES; q168 serves the
     * production H = [[BeamHops]]). */
   private[graft] def graphBeamWalk(spark: SparkSession, dir: String,

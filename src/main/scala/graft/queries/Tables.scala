@@ -153,19 +153,6 @@ object Tables {
     // pruning-vacuous — fixed-width non-empty signature arrays.
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    // Deployable state-store arm: SPARK_GRAFT_STATESTORE=rocksdb runs
-    // every stateful streaming query on the RocksDB provider — at
-    // 100 TB stream state the JVM-heap HDFSBackedStateStore is not an
-    // option (state must spill; snapshot upload + changelog live off
-    // heap). Correctness entries hold under either provider
-    // (StreamingSpec asserts it); BENCH_NOTES "r10 state-store rung"
-    // records the measured overhead. Default stays the in-memory
-    // provider: at the harness's row counts it is faster and the
-    // oracle only checks values.
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").exists(
-        _.equalsIgnoreCase("rocksdb")))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     graft.functions.GraftFunctions.register(spark)
     // keep this session's scratch visibly ALIVE to other sessions'
     // 6-hour orphan sweeps (write-once artifacts never refresh their

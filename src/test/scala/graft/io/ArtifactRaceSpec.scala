@@ -1,6 +1,6 @@
 package graft.io
 
-import graft.SparkSpec
+import graft.{ForkedJvm, SparkSpec}
 
 /** Multi-process concurrency soak for the artifact store (r14 verdict
   * ask #5): the lease, commit fence, version threading, and debris
@@ -22,37 +22,12 @@ class ArtifactRaceSpec extends SparkSpec {
 
   private def launch(root: String, name: String, expectV: Int,
       nRows: Int, ready: java.io.File, go: java.io.File,
-      env: Map[String, String] = Map.empty): (Process, java.io.File) = {
-    val javaBin = java.nio.file.Paths
-      .get(System.getProperty("java.home"), "bin", "java").toString
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ opens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.RacePublish", root, name, expectV.toString, nRows.toString,
-      ready.getAbsolutePath, go.getAbsolutePath)).toIndexedSeq
-    val log = java.nio.file.Files
-      .createTempFile("graft_race", ".log").toFile
-    val pb = new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true)
-      .redirectOutput(log)
-    env.foreach { case (k, v) => pb.environment().put(k, v) }
-    (pb.start(), log)
-  }
+      env: Map[String, String] = Map.empty): (Process, java.io.File) =
+    ForkedJvm.launch("graft.RacePublish", Seq(root, name,
+      expectV.toString, nRows.toString, ready.getAbsolutePath,
+      go.getAbsolutePath), env)
 
-  private def tail(log: java.io.File): String =
-    try scala.io.Source.fromFile(log, "UTF-8")
-      .getLines().toSeq.takeRight(40).mkString("\n")
-    catch { case _: Throwable => "<log unreadable>" }
+  private def tail(log: java.io.File): String = ForkedJvm.tail(log, 40)
 
   private def await(p: Process, log: java.io.File, minutes: Long = 5)
       : Int = {

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ForkedJvm, SparkSpec}
 import graft.io.ArtifactStore
 
 /** Cold-artifact restart proof (round-10 verdict, top ask).
@@ -379,36 +379,16 @@ class ColdRestartSpec extends SparkSpec {
     assert(ArtifactStore.parseSnapshot(json) === s)
   }
 
-  /** Launch a ColdPublish JVM against (dir, root); returns the
-    * process handle plus its log file so a failure can self-diagnose
-    * (caller waits via [[awaitPublisher]]). */
+  /** Launch a ColdPublish (or `mainClass`) JVM with arguments
+    * (dir, root, extraArgs...); returns the process handle plus its
+    * log file so a failure can self-diagnose (caller waits via
+    * [[awaitPublisher]]). */
   private def launchPublisher(
       dir: String, root: String,
       extraArgs: Seq[String] = Nil,
-      mainClass: String = "graft.ColdPublish"): (Process, java.io.File) = {
-    val javaBin = java.nio.file.Paths
-      .get(System.getProperty("java.home"), "bin", "java").toString
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ opens ++ Seq(
-      "-Xmx3g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      mainClass, dir, root) ++ extraArgs).toIndexedSeq
-    val log = java.nio.file.Files
-      .createTempFile("graft_coldpub", ".log").toFile
-    (new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true)
-      .redirectOutput(log)
-      .start(), log)
-  }
+      mainClass: String = "graft.ColdPublish"): (Process, java.io.File) =
+    ForkedJvm.launch(mainClass, Seq(dir, root) ++ extraArgs,
+      xmx = "3g")
 
   private def awaitPublisher(
       p: (Process, java.io.File), what: String,
@@ -419,11 +399,9 @@ class ColdRestartSpec extends SparkSpec {
       // surface the publisher's own stack trace, not just the exit
       // code — the log is otherwise an unnamed temp file nobody reads
       // (reviewer find, r11)
-      val tail = try scala.io.Source.fromFile(log, "UTF-8")
-        .getLines().toSeq.takeRight(30).mkString("\n")
-      catch { case _: Throwable => "<log unreadable>" }
       fail(s"$what failed " +
-        s"(exit ${if (done) proc.exitValue() else "timeout"}):\n$tail")
+        s"(exit ${if (done) proc.exitValue() else "timeout"}):\n" +
+        ForkedJvm.tail(log, 30))
     }
   }
 
@@ -731,8 +709,8 @@ class ColdRestartSpec extends SparkSpec {
       writeSlice(1)
       // run 1: crash (halt, not exit — no shutdown hooks) right after
       // batch 0's artifact publish, BEFORE its streaming commit log
-      val p1 = launchPublisher(arrival.toString, ckpt,
-        Seq(root, "0"), "graft.StreamRollupRun")
+      val p1 = launchPublisher("additive", arrival.toString,
+        Seq(ckpt, root, "0"), "graft.StreamCellRun")
       awaitPublisher(p1, "stream rollup run 1 (crash arm)",
         expectExit = 137)
       assert(ArtifactStore.latestVersion(spark, root,
@@ -740,8 +718,8 @@ class ColdRestartSpec extends SparkSpec {
         "batch 0 did not commit its artifact before the crash")
       // run 2: the rest of the feed lands; the SAME checkpoint resumes
       writeSlice(2); writeSlice(3)
-      val p2 = launchPublisher(arrival.toString, ckpt,
-        Seq(root), "graft.StreamRollupRun")
+      val p2 = launchPublisher("additive", arrival.toString,
+        Seq(ckpt, root), "graft.StreamCellRun")
       awaitPublisher(p2, "stream rollup run 2 (resume)")
       // the crashed batch WAS re-delivered (WAL replay) ...
       val log2 = scala.io.Source.fromFile(p2._2, "UTF-8").getLines()
@@ -770,8 +748,8 @@ class ColdRestartSpec extends SparkSpec {
       // ids restart at 0, so without the lineage guard six real
       // batches would be silently skipped; it must fail LOUDLY instead
       val freshCkpt = base.resolve("ckpt2").toString
-      val p3 = launchPublisher(arrival.toString, freshCkpt,
-        Seq(root), "graft.StreamRollupRun")
+      val p3 = launchPublisher("additive", arrival.toString,
+        Seq(freshCkpt, root), "graft.StreamCellRun")
       val done = p3._1.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
       assert(done && p3._1.exitValue() != 0,
         "a foreign checkpoint lineage was accepted")

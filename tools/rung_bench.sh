@@ -5,8 +5,8 @@
 #   tools/rung_bench.sh [sfdir]          (default /root/testdata/sf0.1)
 #
 # Produces, on a QUIET box:
-#   1. graph/dedup family x8 rungs   (BenchOne, min of 3, shared corpus)
-#   2. warehouse-layout family rungs (BenchOne on the --layout corpus,
+#   1. graph/dedup family x8 rungs   (Dev bench-one, min of 3, shared corpus)
+#   2. warehouse-layout family rungs (Dev bench-one on the --layout corpus,
 #      orders+lineitem multiplied with one shared orderkey stride)
 #   3. q204 bar-vs-path split        (ColdPublish / ColdDelta, fresh
 #      JVM per process, untimed-probe timed windows)
@@ -24,13 +24,13 @@ CPUS=${SPARK_GRAFT_CPUS:-28}
 [ -d /tmp/stress_layout_x8 ] || \
   python3 tools/make_stress.py "$SF" /tmp/stress_layout_x8 8 --layout
 
-# min of 3 BenchOne sweeps for the listed queries; q14 absorbs the
+# min of 3 Dev bench-one sweeps for the listed queries; q14 absorbs the
 # session cold start (untimed by position, discarded from output)
 bench_min() { # bench_min <dir> <mem> <queries...>
   local dir=$1 mem=$2; shift 2
   for i in 1 2 3; do
     SPARK_DRIVER_MEM=$mem SPARK_GRAFT_CPUS=$CPUS \
-      ./run-class.sh graft.BenchOne "$dir" q14_topk "$@" 2>/dev/null |
+      ./run-class.sh graft.Dev bench-one "$dir" q14_topk "$@" 2>/dev/null |
       grep "^TIMING " | grep -v " q14_topk "
   done | awk '{ if (!($2 in m) || $3 < m[$2]) m[$2] = $3 }
               END { for (q in m) print "RUNG", q, m[q] }' | sort
