@@ -1,6 +1,6 @@
 package graft.conform
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,23 +26,35 @@ import graft.norm.Names
 object Conform {
 
   def conformTo(target: StructType, renames: Map[String, String] = Map.empty)(
-      df: DataFrame): DataFrame = {
-    // original name -> conformed name (normalize, then rename map)
-    val conformedName: Seq[(String, String)] = df.columns.toSeq.map { orig =>
+      df: DataFrame): DataFrame =
+    df.select(projection(target, renames, df.columns.toSeq)(
+      (f, c) => c.cast(f.dataType)): _*)
+
+  /** One column per target field, in target order: the source column
+    * matched to it (steps 1-3), or a NULL when none is, passed through
+    * `finish` and named after the field. [[conformTo]] casts there; the
+    * conform chains ([[Pipeline]]) coerce there, so the whole chain is
+    * still this one projection. */
+  private[conform] def projection(target: StructType, renames: Map[String, String],
+      columns: Seq[String])(finish: (StructField, Column) => Column): Seq[Column] = {
+    val source = sourceOf(conformedNames(renames, columns))
+    target.fields.toSeq.map { f =>
+      val c = source.get(f.name).fold(lit(null))(src => col(s"`$src`"))
+      finish(f, c).as(f.name)
+    }
+  }
+
+  /** Each source column with its conformed name: normalized, then renamed. */
+  private def conformedNames(renames: Map[String, String],
+      columns: Seq[String]): Seq[(String, String)] =
+    columns.map { orig =>
       val n = Names.normalizeName(orig)
       orig -> renames.getOrElse(n, n)
     }
-    // target name -> first matching source column
-    val source: Map[String, String] =
-      conformedName.groupBy(_._2).map { case (t, srcs) => t -> srcs.head._1 }
-    val cols = target.fields.map { f =>
-      source.get(f.name) match {
-        case Some(src) => col(s"`$src`").cast(f.dataType).as(f.name)
-        case None      => lit(null).cast(f.dataType).as(f.name)
-      }
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
+
+  /** Conformed name → the first source column carrying it. */
+  private def sourceOf(conformed: Seq[(String, String)]): Map[String, String] =
+    conformed.groupBy(_._2).map { case (t, srcs) => t -> srcs.head._1 }
 
   /** One schema-drift finding. `column` is the conformed name the
     * finding is about; source_* are absent for columns the source
@@ -76,12 +88,8 @@ object Conform {
     * the conformance actually did. */
   def driftRows(target: StructType, renames: Map[String, String] = Map.empty)(
       source: StructType): Seq[DriftRow] = {
-    val conformedName: Seq[(String, String)] = source.fields.toSeq.map { f =>
-      val n = Names.normalizeName(f.name)
-      f.name -> renames.getOrElse(n, n)
-    }
-    val chosen: Map[String, String] =
-      conformedName.groupBy(_._2).map { case (t, srcs) => t -> srcs.head._1 }
+    val conformedName = conformedNames(renames, source.fieldNames.toSeq)
+    val chosen = sourceOf(conformedName)
     val targetByName = target.fields.map(f => f.name -> f).toMap
     val added = target.fields.toSeq.collect {
       case f if !chosen.contains(f.name) =>

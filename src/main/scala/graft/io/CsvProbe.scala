@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.charset.{Charset, CharsetDecoder, CodingErrorAction, StandardCharsets}
+import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 
 /** Messy-CSV ingestion: charset fallback + delimiter sniffing.
   *
@@ -19,8 +20,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * then launch the distributed `spark.read` with the detected options:
   *
   *   - separator: sniffed from the file head — O(1) in file size;
-  *   - charset: UTF-8 when the WHOLE file decodes as UTF-8 (a
-  *     streaming decoder: O(n) sequential read, O(1) memory), else
+  *   - charset: UTF-8 when the WHOLE file is well-formed UTF-8 (a
+  *     streaming byte check: O(n) sequential read, O(1) memory), else
   *     latin-1. A head-only probe would silently corrupt a latin-1
   *     file whose first non-ASCII byte sits past the window (UTF-8
   *     "passes" on the head, then the bad byte decodes to U+FFFD
@@ -47,15 +48,16 @@ object CsvProbe {
   }
 
   /** Detect (charset, separator): charset by streaming full-file
-    * validation, separator from the first `probeBytes` only. */
+    * UTF-8 validation, separator from the first `probeBytes` only. */
   def probe(path: String, probeBytes: Int = HeadBytes): (Charset, Char) =
     probe(path, readHead(path, probeBytes), probeBytes)
 
   private def probe(path: String, head: Array[Byte],
       probeBytes: Int): (Charset, Char) = {
+    val in = Files.newInputStream(Paths.get(path))
     val cs =
-      if (decodesStream(path, StandardCharsets.UTF_8)) StandardCharsets.UTF_8
-      else StandardCharsets.ISO_8859_1
+      try if (isUtf8(in)) StandardCharsets.UTF_8 else StandardCharsets.ISO_8859_1
+      finally in.close()
     val text = new String(completeLines(head, probeBytes).getOrElse(head), cs)
     val firstLine = text.linesIterator.nextOption().getOrElse("")
     val sep = CandidateSeps.maxBy(s => countOutsideQuotes(firstLine, s))
@@ -73,20 +75,50 @@ object CsvProbe {
       if (lastNl > 0) Some(java.util.Arrays.copyOf(head, lastNl)) else None
     }
 
-  /** Whole-file charset validation with a 64 KB rolling buffer —
-    * InputStreamReader drives the incremental decoder, so split
-    * multibyte sequences across chunk boundaries are handled and
-    * memory stays O(1) at any file size. */
-  private def decodesStream(path: String, cs: Charset): Boolean = {
-    val dec: CharsetDecoder = cs.newDecoder()
-      .onMalformedInput(CodingErrorAction.REPORT)
-      .onUnmappableCharacter(CodingErrorAction.REPORT)
-    val rd = new java.io.InputStreamReader(
-      Files.newInputStream(Paths.get(path)), dec)
-    val buf = new Array[Char](1 << 16)
-    try { while (rd.read(buf) != -1) {}; true }
-    catch { case _: java.nio.charset.CharacterCodingException => false }
-    finally rd.close()
+  /** True iff the stream is well-formed UTF-8 — Unicode Table 3-7, the
+    * acceptance of the JDK decoder with `CodingErrorAction.REPORT`: no
+    * overlong forms (C0, C1, E0 80-9F, F0 80-8F), no surrogates
+    * (ED A0-BF), nothing above U+10FFFF (F4 90-BF, F5-FF), no stray
+    * continuation byte and no sequence cut off by the end. Checked on
+    * the bytes with a 64 KB rolling buffer: no chars are decoded,
+    * memory stays O(1) at any file size, a sequence split across reads
+    * carries its state over, and runs of ASCII are skipped 8 bytes at
+    * a time. */
+  private[io] def isUtf8(in: java.io.InputStream): Boolean = {
+    val buf = new Array[Byte](HeadBytes)
+    var need = 0 // continuation bytes still expected
+    var lo = 0x80; var hi = 0xBF // range of the next continuation byte
+    var n = in.read(buf)
+    while (n > 0) {
+      var i = 0
+      while (i < n) {
+        if (need == 0) {
+          while (i + 8 <= n && (Platform.getLong(buf, Platform.BYTE_ARRAY_OFFSET + i) &
+              0x8080808080808080L) == 0) i += 8
+          if (i < n) {
+            val b = buf(i) & 0xFF
+            lo = 0x80; hi = 0xBF
+            if (b < 0x80) need = 0
+            else if (b >= 0xC2 && b <= 0xDF) need = 1
+            else if (b == 0xE0) { need = 2; lo = 0xA0 }
+            else if (b == 0xED) { need = 2; hi = 0x9F }
+            else if (b >= 0xE1 && b <= 0xEF) need = 2
+            else if (b == 0xF0) { need = 3; lo = 0x90 }
+            else if (b >= 0xF1 && b <= 0xF3) need = 3
+            else if (b == 0xF4) { need = 3; hi = 0x8F }
+            else return false
+            i += 1
+          }
+        } else {
+          val b = buf(i) & 0xFF
+          if (b < lo || b > hi) return false
+          need -= 1; lo = 0x80; hi = 0xBF
+          i += 1
+        }
+      }
+      n = in.read(buf)
+    }
+    need == 0
   }
 
   private def countOutsideQuotes(line: String, sep: Char): Int = {

@@ -1,6 +1,6 @@
 package graft.norm
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Lenient, never-failing value coercions (`Column => Column`).
@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * (reference main.py:425-528) as Catalyst expression trees built
   * only from `org.apache.spark.sql.functions` — fully
   * whole-stage-codegen'd, no UDFs, so at 100 TB they run inside the
-  * scan/project stage at vectorized-reader speed.
+  * scan/project stage at vectorized-reader speed. The day-first date
+  * parse is the exception: it is the native `parse_date_day_first`.
   *
   * NOTE: all of these assume non-ANSI cast semantics
   * (`spark.sql.ansi.enabled=false`): a failed string→number cast
@@ -42,7 +43,11 @@ object Coerce {
     * NaN, we coerce to the default (documented deviation — NaN
     * poisons digests). Python's `int('1_0')` underscore acceptance in
     * `H:M:S` PIECES is deliberately not mirrored (pieces stay
-    * digits-only in both the engine and the oracle). */
+    * digits-only in both the engine and the oracle). Digits are ASCII
+    * `[0-9]` only, in numbers and pieces, in every form (combinator,
+    * native, oracle SQL): Python's `float()`/`int()` also take other
+    * Unicode decimal digits (`'١:٣٠'` → 90.0 in the reference), which
+    * the engine maps to 0.0 — documented deviation. */
   private val D = "[0-9]+(_[0-9]+)*"
   private[graft] val NumRe = s"^[+-]?($D\\.?($D)?|\\.$D)([eE][+-]?$D)?$$"
   private[graft] val InfRe = "^[+-]?[iI][nN][fF]([iI][nN][iI][tT][yY])?$"
@@ -138,21 +143,28 @@ object Coerce {
   }
 
   /** Day-first date parse, garbage → NULL (then droppable)
-    * (reference main.py:1239/1295, `to_datetime(dayfirst=True)`). */
+    * (reference main.py:1239/1295, `to_datetime(dayfirst=True)`):
+    * `dd/MM/yyyy`, else `d/M/yyyy`, after [[wsTrim]]. The native
+    * `parse_date_day_first` ([[graft.functions.ParseDateDayFirst]]) is
+    * the one implementation — the `to_date` pair it replaced threw a
+    * java.time exception before every `d/M/yyyy` parse, and stays in
+    * CoerceSpec as its oracle. Registers the function in the active
+    * session. */
   def parseDateDayFirst(c: Column): Column = {
-    val s = wsTrim(c.cast("string"))
-    coalesce(to_date(s, "dd/MM/yyyy"), to_date(s, "d/M/yyyy"))
+    graft.functions.GraftFunctions.register(SparkSession.active)
+    call_function("parse_date_day_first", c.cast("string"))
   }
 
-  // Native codegen'd forms of these coercions exist as registered SQL
-  // functions — `time_to_minutes`, `lenient_double`, `lenient_long`
+  // Native codegen'd forms of the other coercions exist as registered
+  // SQL functions — `time_to_minutes`, `lenient_double`, `lenient_long`
   // ([[graft.functions.GraftFunctions.register]]) — with IDENTICAL
-  // semantics (parity-asserted input-class-by-input-class in
-  // TimeToMinutesSpec / LenientNumSpec) but one static Java call per
-  // row instead of a multi-regexp `when`-tree. The wide conform
-  // pipelines ([[graft.conform.Pipeline]]) use those: coercing 22-32
-  // columns with the regexp combinators puts ~100-250 compiled
-  // matchers into ONE whole-stage-codegen method, which blows
+  // semantics (parity-asserted input-class-by-input-class and on random
+  // strings in TimeToMinutesSpec / LenientNumSpec) but one static Java
+  // call per row, reading the canonical forms straight from the string's
+  // bytes, instead of a multi-regexp `when`-tree. The conform chains
+  // ([[graft.conform.Pipeline]]) use those, all in one projection:
+  // coercing 22-32 columns with the regexp combinators puts ~100-250
+  // compiled matchers into ONE whole-stage-codegen method, which blows
   // Janino's 64 KB method limit and silently drops the entire conform
   // stage to interpreted execution.
 }

@@ -17,7 +17,13 @@ class TimeToMinutesSpec extends SparkSpec {
     // and Python/DuckDB-common forms (accepted: ±infinity literals,
     // PEP-515 underscore groups) — parity either way.
     "1d", "1f", "1D", "0x1p3", "inf", "Infinity", "-inf", "1_000",
-    "iNfInItY", "+inf", "1_0.0_1e1_0", "_1", "1_", "1__0", "1e_1")
+    "iNfInItY", "+inf", "1_0.0_1e1_0", "_1", "1_", "1__0", "1e_1",
+    // byte-level fast paths and their edges
+    "00:00", "23:59:59", " 2:15 ", "\t1:30\n", "+1:30", "-1:30", "-0:-0",
+    "1: 30", "123456789012345:00", "1234567890123456:00",
+    "123456789012345", "1234567890123456", "0.30000000000000004", "-0", ".",
+    // non-ASCII digits and pieces past the Int range
+    "١:٣٠", "99999999999:00")
 
   test("native expression == Coerce combinator on all input classes") {
     import spark.implicits._
@@ -29,6 +35,36 @@ class TimeToMinutesSpec extends SparkSpec {
     val combinator = df.select(Coerce.timeToMinutes(col("s")).as("m"))
       .collect().map(_.getDouble(0)).toSeq
     assert(native === combinator)
+  }
+
+  test("non-ASCII digits and pieces past the Int range agree with the " +
+      "combinator") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val cases = Seq("١:٣٠" -> 0.0, "99999999999:00" -> 5.99999999994e12,
+      "1:99999999999:0" -> (60 + 9.9999999999e10))
+    val df = cases.map(_._1).toDF("s")
+    val native = df.select(expr("time_to_minutes(s)")).collect().map(_.getDouble(0)).toSeq
+    val combinator = df.select(Coerce.timeToMinutes(col("s")))
+      .collect().map(_.getDouble(0)).toSeq
+    assert(native === cases.map(_._2))
+    assert(combinator === cases.map(_._2))
+  }
+
+  test("random strings: native == combinator, bit for bit") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val r = new scala.util.Random(11)
+    val alphabet = "0123456789::.+- "
+    val in = Seq.fill(4000)(
+      Seq.fill(r.nextInt(14))(alphabet(r.nextInt(alphabet.length))).mkString)
+    val df = in.toDF("s")
+    def bits(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(row => java.lang.Double.doubleToLongBits(row.getDouble(0))).toSeq
+    val native = bits(df.select(expr("time_to_minutes(s)")))
+    val combinator = bits(df.select(Coerce.timeToMinutes(col("s"))))
+    val diff = in.indices.filter(i => native(i) != combinator(i)).map(in)
+    assert(diff.isEmpty, diff.take(10))
   }
 
   test("null input -> 0.0, never null output") {

@@ -152,4 +152,58 @@ class CsvProbeSpec extends SparkSpec {
         s"diverged on '${r.getString(0)}'")
     }
   }
+
+  /** What the JDK's UTF-8 decoder says with `CodingErrorAction.REPORT`. */
+  private def jdkDecodes(bytes: Array[Byte]): Boolean =
+    try {
+      StandardCharsets.UTF_8.newDecoder()
+        .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
+        .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
+        .decode(java.nio.ByteBuffer.wrap(bytes))
+      true
+    } catch { case _: java.nio.charset.CharacterCodingException => false }
+
+  private def isUtf8(bytes: Array[Byte]): Boolean =
+    CsvProbe.isUtf8(new java.io.ByteArrayInputStream(bytes))
+
+  test("byte-level UTF-8 check == the JDK decoder on adversarial bytes") {
+    def b(xs: Int*) = xs.map(_.toByte).toArray
+    val cases = Seq(
+      b(), b(0x41), b(0x7F), b(0x80), b(0xBF), b(0xC0, 0x80), b(0xC1, 0xBF),
+      b(0xC2, 0x80), b(0xDF, 0xBF), b(0xC2), b(0xC2, 0x41),
+      b(0xE0, 0x80, 0x80), b(0xE0, 0x9F, 0xBF), b(0xE0, 0xA0, 0x80),
+      b(0xE1, 0x80, 0x80), b(0xEC, 0xBF, 0xBF), b(0xED, 0x9F, 0xBF),
+      b(0xED, 0xA0, 0x80), b(0xED, 0xBF, 0xBF), b(0xEE, 0x80, 0x80),
+      b(0xEF, 0xBF, 0xBF), b(0xEF, 0xBF), b(0xF0, 0x80, 0x80, 0x80),
+      b(0xF0, 0x8F, 0xBF, 0xBF), b(0xF0, 0x90, 0x80, 0x80),
+      b(0xF3, 0xBF, 0xBF, 0xBF), b(0xF4, 0x8F, 0xBF, 0xBF),
+      b(0xF4, 0x90, 0x80, 0x80), b(0xF5, 0x80, 0x80, 0x80), b(0xF8), b(0xFF),
+      b(0xF0, 0x90, 0x80), b(0xE2, 0x82, 0xAC, 0x80),
+      "año ü € 😀 a".getBytes(StandardCharsets.UTF_8),
+      "año".getBytes(StandardCharsets.ISO_8859_1))
+    cases.foreach(c => assert(isUtf8(c) === jdkDecodes(c), c.map(x => f"$x%02X").mkString(" ")))
+  }
+
+  test("byte-level UTF-8 check == the JDK decoder on random bytes and " +
+      "sequences cut at the 64 KB read boundary") {
+    val r = new scala.util.Random(17)
+    val alphabet = Array(0x41, 0x7F, 0x80, 0x9F, 0xA0, 0xBF, 0xC0, 0xC2,
+      0xDF, 0xE0, 0xE1, 0xED, 0xEF, 0xF0, 0xF4, 0xF5, 0xFF).map(_.toByte)
+    (1 to 20000).foreach { _ =>
+      val c = Array.fill(r.nextInt(9))(
+        if (r.nextInt(4) == 0) r.nextInt(256).toByte else alphabet(r.nextInt(alphabet.length)))
+      assert(isUtf8(c) === jdkDecodes(c), c.map(x => f"$x%02X").mkString(" "))
+    }
+    val chars = Seq("a", "ñ", "€", "😀").map(_.getBytes(StandardCharsets.UTF_8))
+    for (ch <- chars; shift <- 0 until ch.length; tail <- Seq(true, false)) {
+      // ASCII up to the boundary, then a char that straddles it
+      val head = Array.fill[Byte](65536 - shift)('x'.toByte)
+      val whole = head ++ ch ++ Array[Byte]('y')
+      assert(isUtf8(whole) && jdkDecodes(whole))
+      val cut = if (tail) head ++ ch.dropRight(1) else head ++ ch.dropRight(1) ++ Array[Byte]('y')
+      if (ch.length > 1) assert(!isUtf8(cut) && !jdkDecodes(cut))
+    }
+    val latin = ("x" * 70000 + "año").getBytes(StandardCharsets.ISO_8859_1)
+    assert(!isUtf8(latin) && !jdkDecodes(latin))
+  }
 }

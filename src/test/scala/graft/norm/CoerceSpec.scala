@@ -1,7 +1,8 @@
 package graft.norm
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{coalesce, col, regexp_replace, to_date}
 
 /** X1/X3/X4/X5 edge-case tests, pinned to the reference's exact
   * semantics (main.py:425-462 time conversion, 501-528 coercions,
@@ -68,6 +69,53 @@ class CoerceSpec extends SparkSpec {
       .toDF("s").select(Coerce.lenientDouble(col("s")).as("d"))
       .collect().map(_.getDouble(0)).toSeq
     assert(out === Seq(42.0, 3.9, -5.2, 0.0, 0.0, 0.0))
+  }
+
+  /** The `to_date` pair the native parse replaced: the oracle. */
+  private def dayFirstOracle(c: Column): Column = {
+    val s = regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+    coalesce(to_date(s, "dd/MM/yyyy"), to_date(s, "d/M/yyyy"))
+  }
+
+  private def dayFirstDiff(in: Seq[String]): Seq[(String, String, String)] = {
+    import spark.implicits._
+    val out = in.toDF("s").select(Coerce.parseDateDayFirst(col("s")).cast("string"),
+      dayFirstOracle(col("s")).cast("string")).collect()
+    in.zip(out).collect {
+      case (s, r) if r.getString(0) != r.getString(1) => (s, r.getString(0), r.getString(1))
+    }
+  }
+
+  test("parseDateDayFirst == the to_date oracle on every input class") {
+    val in = Seq("15/01/2024", "5/1/2024", "15/1/2024", "5/01/2024",
+      "005/01/2024", "15/001/2024", "0/1/2024", "00/01/2024", "32/01/2024",
+      "15/13/2024", "31/02/2024", "29/02/2023", "29/02/2024", "29/02/2000",
+      "29/02/1900", "29/02/0000", "31/04/2024", "30/04/2024", "31/12/9999",
+      "15/01/0000", "15/01/0001", "01/01/1970", "31/12/1969", "15/10/1582",
+      "4/10/1582", "15/01/24", "15/01/02024", "15/01/10000", "1/1/99999",
+      "15/01/+2024", "15/01/-2024", "15/01/+12345", "1/1/+294247",
+      "22/12/-290308", "1/2/-290307",
+      "15/1/+2024", " 15/01/2024 ", "\t5/1/2024\n", "15/01/2024\u2028",
+      "15/01/2024 10:00", "15-01-2024", "2024-01-15", "15/01/2024x",
+      "١٥/٠١/٢٠٢٤", "15//2024", "/01/2024", "15/01/", "", "  ", "junk", null)
+    val diff = dayFirstDiff(in)
+    assert(diff.isEmpty, diff)
+  }
+
+  test("parseDateDayFirst: NULL, not a failed query, past the timestamp " +
+      "range where to_date throws") {
+    import spark.implicits._
+    val out = Seq("15/01/+999999999", "15/01/+294248", "1/1/-290309").toDF("s")
+      .select(Coerce.parseDateDayFirst(col("s"))).collect()
+    assert(out.forall(_.isNullAt(0)))
+  }
+
+  test("parseDateDayFirst == the to_date oracle on random strings") {
+    val r = new scala.util.Random(3)
+    val alphabet = "0123456789012345//// +-"
+    val diff = dayFirstDiff(Seq.fill(3000)(
+      Seq.fill(r.nextInt(13))(alphabet(r.nextInt(alphabet.length))).mkString))
+    assert(diff.isEmpty, diff.take(10))
   }
 
   test("parseDateDayFirst: DD/MM/YYYY and lenient variants; garbage -> null") {
