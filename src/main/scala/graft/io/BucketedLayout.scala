@@ -25,9 +25,8 @@ object BucketedLayout {
     * spec lives in the catalog either way). Callers should prefer it
     * over the managed default: the shared ./spark-warehouse is swept
     * by NOTHING — a crashed run's managed layout (two full fact-table
-    * copies) leaks there forever, while a `graft_`-prefixed tmpdir
-    * location is covered by the orphan sweep + pid-liveness markers
-    * (reviewer find, r11). */
+    * copies) leaks there forever, while a location under the
+    * [[Scratch]] root is reclaimed by the next JVM's orphan pass. */
   def writeBucketed(df: DataFrame, table: String, key: String,
       buckets: Int, location: Option[String] = None): Unit = {
     val spark = df.sparkSession

@@ -2,16 +2,16 @@ package graft.io
 
 /** Typed environment configuration (R5, reference main.py:55-72
   * `obtener_variable_entorno`): required-variable validation with an
-  * actionable error, optional variables with defaults, and typed
-  * getters on top — the piece the reference uses to fail fast on a
+  * actionable error, optional variables with defaults, and a typed
+  * integer getter — the piece the reference uses to fail fast on a
   * missing `.env` instead of dying mid-run with a None credential.
   *
   * Mirrors the reference's semantics exactly: a variable that is set
   * but EMPTY counts as missing (`if obligatoria and not valor`), and
   * the missing-required error names the variable and tells the
-  * operator what to do. Typed getters add the engine-side need the
-  * Python original delegated to call sites: a malformed numeric
-  * value fails with the variable name and offending value, not a
+  * operator what to do. The integer getter adds the engine-side need
+  * the Python original delegated to call sites: a malformed value
+  * fails with the variable name and offending value, not a
   * bare NumberFormatException.
   *
   * The environment is injected (default `sys.env`) so specs can
@@ -32,35 +32,13 @@ final class Config(env: Map[String, String]) {
   def optional(name: String, default: String = ""): String =
     present(name).getOrElse(default)
 
-  private def typed[A](name: String, raw: String, kind: String)(
-      parse: String => Option[A]): A =
-    parse(raw.trim).getOrElse(throw new IllegalArgumentException(
-      s"Environment variable '$name' must be $kind, got '$raw'."))
-
+  /** Integer variable with a default; a malformed value fails with the
+    * variable name and the offending value. */
   def int(name: String, default: Int): Int =
-    present(name).map(v => typed(name, v, "an integer")(_.toIntOption))
+    present(name).map(v => v.trim.toIntOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"Environment variable '$name' must be an integer, got '$v'.")))
       .getOrElse(default)
-
-  def requiredInt(name: String): Int =
-    typed(name, required(name), "an integer")(_.toIntOption)
-
-  def long(name: String, default: Long): Long =
-    present(name).map(v => typed(name, v, "an integer")(_.toLongOption))
-      .getOrElse(default)
-
-  def double(name: String, default: Double): Double =
-    present(name).map(v => typed(name, v, "a number")(_.toDoubleOption))
-      .getOrElse(default)
-
-  /** true/false/1/0/yes/no, case-insensitive. */
-  def boolean(name: String, default: Boolean): Boolean =
-    present(name).map(v => typed(name, v, "a boolean (true/false/1/0/yes/no)") {
-      _.toLowerCase match {
-        case "true" | "1" | "yes" => Some(true)
-        case "false" | "0" | "no" => Some(false)
-        case _                    => None
-      }
-    }).getOrElse(default)
 
   /** Validate a set of required variables up front — the reference's
     * fail-fast posture (it resolves all credentials at import time,

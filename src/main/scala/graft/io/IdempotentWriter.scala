@@ -263,26 +263,14 @@ object IdempotentWriter {
       lockP: org.apache.hadoop.fs.Path): Option[String] =
     try {
       val in = fs.open(lockP)
-      try {
-        // read to EOF, never a single read(): a legal short read
-        // returning a strict PREFIX of the stored token would make the
-        // own-debris test delete a lock whose PUT landed and make
-        // verifyHeldLease spuriously fence a valid holder (advisor
-        // find, round 13). Tokens are 36-byte UUIDs; the buffer is
-        // sized for the LARGEST content this compare ever sees — a
-        // manifest/snapshot JSON on the conditional-PUT commit path
-        // (commitMetadata), whose schema DDL can run to kilobytes. A
-        // truncated read would re-open the same prefix-compare hole.
-        val buf = new Array[Byte](1 << 20)
-        var off = 0
-        var n = in.read(buf, off, buf.length - off)
-        while (n > 0 && off + n < buf.length) {
-          off += n
-          n = in.read(buf, off, buf.length - off)
-        }
-        if (n > 0) off += n
-        if (off <= 0) None else Some(new String(buf, 0, off, "UTF-8"))
-      } finally in.close()
+      // read to EOF (readAllBytes), never a single read(): a legal
+      // short read returning a strict PREFIX of the stored content
+      // would make the own-debris test delete a lock whose PUT landed
+      // and make verifyHeldLease spuriously fence a valid holder. The
+      // content compared here runs from a 36-byte token to a manifest
+      // JSON (commitMetadata) of kilobytes.
+      val bytes = try in.readAllBytes() finally in.close()
+      if (bytes.isEmpty) None else Some(new String(bytes, "UTF-8"))
     } catch { case _: java.io.IOException => None }
 
   /** The path capability advertised by stores whose plain

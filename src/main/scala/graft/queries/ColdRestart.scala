@@ -296,15 +296,13 @@ object ColdRestart {
     ()
   }
 
-  /** Store root, published exactly once per (application, dir) —
-    * [[graft.KeyedOnce]] so racing first callers cannot both run the
-    * delete+publish against the same deterministic path. */
-  private val stores = new graft.KeyedOnce[(String, String), String]
+  /** Store root, published exactly once per (application, dir). */
+  private val stores =
+    new graft.io.Scratch.Artifact[String]("graft_artifacts")
 
   private[queries] def publishedStore(
       spark: SparkSession, dir: String): String =
-    stores((spark.sparkContext.applicationId, dir)) {
-      val root = Reference.appScopedScratch(spark, "graft_artifacts", dir)
+    stores(spark, dir) { root =>
       publishAll(spark, dir, root)
       root
     }

@@ -656,7 +656,7 @@ object Curation {
     // full arrival cycle to finish); the version counter stays
     // monotone because `next` derives from the newest survivor.
     committedLabelSnapshots(store).dropRight(2).foreach { p =>
-      deleteDir(spark, p.toString)
+      graft.io.Scratch.delete(spark, p.toString)
     }
   }
 
@@ -963,15 +963,11 @@ object Curation {
       arms: DailyArms): DataFrame = {
     val s = arms.s
     val thr = deltaThreshold(s, dir)
-    // applicationId-scoped like every other scratch path, plus the
-    // arm's own name: the warm and cold runs of one application must
-    // not clobber each other's audit table mid-read
-    val auditTbl = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"),
-        s"graft_inc_daily_audit_${s.sparkContext.applicationId}_" +
-          arms.auditName)
-      .toString
-    deleteDir(s, auditTbl)
+    // named after the arm: the warm and cold runs must not clobber
+    // each other's audit table mid-read
+    val auditTbl =
+      graft.io.Scratch.path(s"graft_inc_daily_audit_${arms.auditName}")
+    graft.io.Scratch.delete(s, auditTbl)
     val audit = new graft.io.RunAudit(arms.auditName)
     audit.phase[Unit]("arrival", "append_signatures") {
       ((), Dedup.signaturesFresh(s,
@@ -1037,13 +1033,6 @@ object Curation {
       .select(col("seq"), col("dataset"), col("phase"), col("rows_out"),
         col("outcome"))
       .orderBy("seq")
-  }
-
-  /** Hadoop-FS recursive delete (scratch reset, scheme-correct). */
-  private def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
   }
 
   lazy val incrementalDailySql: String =

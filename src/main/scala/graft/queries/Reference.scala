@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.conform.Conform
-import graft.io.{CsvProbe, IdempotentWriter, JdbcSink, JsonlRead, LocalFs}
+import graft.io.{CsvProbe, IdempotentWriter, JdbcSink, JsonlRead, LocalFs,
+  Scratch}
 import graft.norm.Coerce
 
 /** Layer-A queries: the reference's literal operator semantics
@@ -238,9 +239,8 @@ object Reference {
     // read-back counts. (Driver-local path: this probe validates the
     // overwrite SEMANTICS; on a cluster the target would be shared
     // storage. Excluded from the timed bench set for the same reason.)
-    val tmp = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"), "graft_idem_scratch").toString
-    deleteRecursively(tmp)
+    val tmp = Scratch.path("graft_idem_scratch")
+    Scratch.delete(spark, tmp)
     val src = events(spark, dir).select(
       to_date(col("ts")).as("fecha"),
       col("event_id"), col("user_id"), col("value"))
@@ -267,25 +267,19 @@ object Reference {
     * the reference's load phase produces (S7, main.py:1500-1578) and
     * its BI consumers read back by date (README.md:113; the hot
     * predicate `WHERE CAST(fecha AS DATE) = ?`, main.py:1535).
-    * Memoized so q189 benches the READ, not a per-call rebuild.
-    * [[graft.KeyedOnce]], not TrieMap: two racing threads must never
-    * both run the delete+rewrite against the same deterministic
-    * warehouse path (advisor find, round 11). */
-  private val fechaWarehouses =
-    new graft.KeyedOnce[(String, String), String]
+    * Memoized so q189 benches the READ, not a per-call rebuild. */
+  private val fechaWarehouses = new Scratch.Artifact[String]("graft_fecha_wh")
 
   private[graft] def fechaWarehouse(
       spark: SparkSession, dir: String): String =
-    fechaWarehouses(
-      (spark.sparkContext.applicationId, dir)) {
-        val tmp = appScopedScratch(spark, "graft_fecha_wh", dir)
-        IdempotentWriter.overwritePartitions(
-          events(spark, dir).select(
-            to_date(col("ts")).as("fecha"), col("event_id"),
-            col("user_id"), col("event_type"), col("value")),
-          tmp, addLoadDate = false)
-        tmp
-      }
+    fechaWarehouses(spark, dir) { tmp =>
+      IdempotentWriter.overwritePartitions(
+        events(spark, dir).select(
+          to_date(col("ts")).as("fecha"), col("event_id"),
+          col("user_id"), col("event_type"), col("value")),
+        tmp, addLoadDate = false)
+      tmp
+    }
 
   /** The warehouse read path q189 proves: filter on the PARTITION
     * column, so the scan's `PartitionFilters` prune the directory
@@ -458,13 +452,12 @@ object Reference {
     * The initial (pre-evolution) registration and the re-registration
     * both run here so the query exercises the upgrade path a live
     * deployment takes; ReferenceSpec pins the intermediate states. */
-  private val evolvedWarehouses = new graft.KeyedOnce[(String, String),
-    (String, String)]
+  private val evolvedWarehouses =
+    new Scratch.Artifact[(String, String)]("graft_evo_wh")
 
   private[graft] def evolvedWarehouse(spark: SparkSession,
       dir: String): (String, String) =
-    evolvedWarehouses((spark.sparkContext.applicationId, dir)) {
-      val wh = appScopedScratch(spark, "graft_evo_wh", dir)
+    evolvedWarehouses(spark, dir) { wh =>
       val name = "graft_evo_wh_" +
         java.security.MessageDigest.getInstance("MD5")
           .digest(dir.getBytes("UTF-8"))
@@ -533,17 +526,15 @@ object Reference {
     * `reRegisterSchema` (metadata only — q224's widening needs the
     * catalog DDL to be the authority, exactly like q223's add-column;
     * q225/q226 are ingest-side drifts and leave the catalog alone).
-    * Built once per (application, dir, tag) — [[graft.KeyedOnce]], the
-    * same discipline as every other deterministic-path builder. */
-  private val driftWarehouses =
-    new graft.KeyedOnce[(String, String, String), (String, String)]
+    * Built once per (application, dir) for each tag. */
+  private val driftWarehouses = Seq("widen", "rename", "dropcol").map(t =>
+    t -> new Scratch.Artifact[(String, String)](s"graft_${t}_wh")).toMap
 
   private[graft] def driftWarehouse(spark: SparkSession, dir: String,
       tag: String, historyTarget: StructType, arrivalTarget: StructType,
       renames: Map[String, String], reRegisterSchema: Option[StructType])(
       arrivalShape: DataFrame => DataFrame): (String, String) =
-    driftWarehouses((spark.sparkContext.applicationId, dir, tag)) {
-      val wh = appScopedScratch(spark, s"graft_${tag}_wh", dir)
+    driftWarehouses(tag)(spark, dir) { wh =>
       val name = s"graft_${tag}_wh_" +
         java.security.MessageDigest.getInstance("MD5")
           .digest(dir.getBytes("UTF-8"))
@@ -681,8 +672,7 @@ object Reference {
         "2;Café;-;1:30;16/01/2024\n" +
         ";Soporte;x;90;17/01/2024\n" +
         "3;Niño;88;;18/01/2024\n"
-    // Fixed-name fixture (overwritten per run) — createTempFile would
-    // leak one file per invocation across bench/verify passes.
+    // Fixed-name fixture, overwritten per run.
     val f = java.nio.file.Paths.get(
       writeFixture("graft_conducta_raw.csv", csv, "ISO-8859-1"))
     val target = StructType(Seq(
@@ -781,22 +771,10 @@ object Reference {
   // end-to-end, every target column exercised)
   // ---------------------------------------------------------------
 
-  /** Remove a scratch directory tree if present (children first). */
-  private def deleteRecursively(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (Files.exists(p)) {
-      val stream = java.nio.file.Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-      finally stream.close()
-    }
-  }
-
   private def writeFixture(name: String, content: String, cs: String): String = {
-    val f = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"), name)
-    Files.write(f, content.getBytes(Charset.forName(cs)))
-    f.toString
+    val f = Scratch.path(name)
+    Files.write(java.nio.file.Paths.get(f), content.getBytes(Charset.forName(cs)))
+    f
   }
 
   /** Full 22-column Conducta chain: latin-1 `;` CSV with the CRM's
@@ -824,9 +802,8 @@ object Reference {
     val path =
       writeFixture("graft_conducta_full.csv", conductaCsvFixture, "ISO-8859-1")
     val transformed = graft.conform.Pipeline.conducta(CsvProbe.read(spark, path))
-    val out = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"), "graft_conducta_tbl").toString
-    deleteRecursively(out) // see idempotentLoad: no stale partitions
+    val out = Scratch.path("graft_conducta_tbl")
+    Scratch.delete(spark, out) // see idempotentLoad: no stale partitions
     IdempotentWriter.overwritePartitions(transformed, out)
     spark.read.parquet(out)
       .select(graft.conform.Schemas.Conducta.fieldNames.map(col).toIndexedSeq: _*)
@@ -922,212 +899,15 @@ object Reference {
     * DELETE+batched-INSERT — one date loaded TWICE (the daily re-run);
     * read back through spark.read.jdbc. Same oracle as q37: if the
     * re-run doubled rows or the sink mangled a value, the hash breaks. */
-  /** Session-scoped embedded-Derby location (the q162 lesson the
-    * advisor taught for fixed tmp paths): Derby allows ONE process
-    * per database directory, so a fixed /tmp path makes two
-    * concurrent sessions on a machine fail each other's boots.
-    * Scoping by applicationId keeps q42/q170 sharing one warehouse
-    * within a session while isolating sessions. */
-  private def derbyUrl(spark: SparkSession): String = {
-    val dir = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"),
-        s"graft_derby_${spark.sparkContext.applicationId}").toString
-    registerScratchCleanup(dir)
-    "jdbc:derby:" + dir + ";create=true"
-  }
-
-  /** Application-scoped scratch (Derby warehouses, the q189 fecha
-    * warehouse) accumulated forever under java.io.tmpdir before this
-    * hook (advisor note, round 9: the old fixed paths were at least
-    * self-overwriting). One recursive-delete shutdown hook per
-    * directory, registered once. The hook can RACE Derby's own
-    * engine-shutdown hook and leave a partial tree — and because
-    * every path embeds this application's id, no later run ever
-    * registers a hook for that exact dir (reviewer find, r10), so
-    * the first registration also sweeps STALE graft scratch from
-    * prior sessions: any `graft_*` tmpdir entry untouched for 6+
-    * hours is a dead session's orphan, deleted here. "Untouched" is
-    * made TRUE for live sessions by [[touchOwnScratch]]: write-once
-    * artifacts (the fecha warehouse, z-order layouts, a Derby db)
-    * never update their mtime on READ, so without an explicit
-    * refresh a 6-hour-lived session's live warehouse would look like
-    * an orphan to a newly started sweep (reviewer find, r10
-    * continuation). */
-  private val scratchCleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Refresh the mtime of every scratch dir THIS session registered —
-    * called from [[Tables.prep]] (every query invocation) AND from a
-    * 30-minute daemon heartbeat, so even an IDLE session's live
-    * scratch stays visibly alive to other sessions' sweeps. Entries
-    * whose dir is gone (evicted by [[newScratch]], or swept) drop
-    * from the registry here, so the walk stays bounded by the LIVE
-    * dirs: one per session-scoped artifact plus one per active
-    * scratch prefix. */
-  private[queries] def touchOwnScratch(): Unit = {
-    val now = System.currentTimeMillis()
-    // touch-if-exists ONLY — never prune missing entries here: the
-    // session-scoped artifacts (fecha warehouse, Derby, z-order
-    // layout) register BEFORE their multi-second creating write, and
-    // a heartbeat firing inside that window would otherwise
-    // unregister them forever (reviewer find, r10 continuation).
-    // Boundedness comes from [[newScratch]] removing evicted entries
-    // explicitly.
-    scratchCleanupRegistered.forEach { d =>
-      val f = new java.io.File(d)
-      if (f.exists()) {
-        f.setLastModified(now)
-        // liveness marker for the pid-aware sweep: written here (not
-        // at registration — the dir may legitimately not exist yet,
-        // and pre-creating it breaks Derby's create=true) once the
-        // dir materializes; idempotent thereafter.
-        val marker = new java.io.File(f, OwnerPidFile)
-        if (f.isDirectory && !marker.isFile)
-          try java.nio.file.Files.write(marker.toPath,
-            ProcessHandle.current().pid().toString.getBytes("UTF-8"))
-          catch { case _: Throwable => () }
-        ()
-      }
-    }
-  }
-
-  /** The previous invocation's scratch dir per prefix — evicted when
-    * the next invocation creates its own (the memory-sink pattern):
-    * per-call scratch then never outlives two invocations, instead of
-    * accumulating one orphan per call until JVM exit. */
-  private val lastScratch =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Create a registered per-invocation scratch dir, evicting the
-    * SAME-PREFIX dir of the previous invocation. Use this (never raw
-    * createTempDirectory) for scratch that is dead once the query
-    * returns; session-scoped artifacts that must survive the whole
-    * session (Derby, the fecha warehouse, z-order layouts) register
-    * directly via [[registerScratchCleanup]] instead.
-    *
-    * CONTRACT — single outstanding result per prefix+thread (advisor
-    * note, round 11): queries that read their result back from this
-    * scratch return a LAZY DataFrame still referencing the dir, and
-    * the next same-prefix invocation on the same thread DELETES it.
-    * So a caller must fully consume (collect/write) invocation N's
-    * result before re-invoking the same query on that thread —
-    * exactly the harness's invoke-consume-discard pattern (Verify
-    * writes each result before the next call; Bench's noop write
-    * consumes inline). Holding two live results of one query and
-    * collecting the older one is unsupported and fails with
-    * FileNotFoundException rather than silently serving stale data. */
-  private[queries] def newScratch(prefix: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    registerScratchCleanup(dir.toString)
-    // eviction chain scoped per THREAD: two concurrent invocations of
-    // the same query (different threads by construction) must never
-    // delete each other's in-use scratch; sequential re-invocations
-    // share a thread and still clean eagerly. Orphans from retired
-    // threads drain at the shutdown hook (reviewer find, r10
-    // continuation).
-    val key = s"$prefix@${Thread.currentThread().getId}"
-    lastScratch.put(key, dir.toString).foreach { prev =>
-      scratchCleanupRegistered.remove(prev)
-      try deleteRecursively(prev) catch { case _: Throwable => () }
-    }
-    dir
-  }
-
-  /** Fresh deterministic per-(application, data-dir) scratch root
-    * under tmpdir: `<prefix>_<appId>_<md5(dir).take(16)>`, deleted if
-    * present and registered for the shutdown sweep. Full md5 of the
-    * dir, never String.hashCode — a 32-bit collision between two data
-    * dirs in one session would silently serve one dir's artifact for
-    * the other (reviewer find, r10). Factored so the next
-    * path-discipline fix lands in ONE place instead of six parallel
-    * copies (reviewer find, r11); every session-scoped physical
-    * artifact (fecha warehouse, z-order layouts, artifact stores,
-    * bucketed-table locations) builds its root here. Callers that
-    * write-once must still guard the body with [[graft.KeyedOnce]] —
-    * this helper is deterministic, so racing threads would get the
-    * SAME path. */
-  private[graft] def appScopedScratch(spark: SparkSession,
-      prefix: String, dir: String): String = {
-    val root = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"),
-        s"${prefix}_${spark.sparkContext.applicationId}_" +
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(dir.getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString.take(16))
-      .toString
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
-    registerScratchCleanup(root)
-    root
-  }
-
-  /** Name of the per-dir liveness marker: holds the owning JVM's pid.
-    * The stale sweep skips any dir whose marker names a LIVE process,
-    * so a long-lived session is protected by something stronger than
-    * the mtime heartbeat — even a session built from an older binary
-    * of THIS code (which writes the marker but may heartbeat on a
-    * different cadence) can never lose live scratch to another
-    * session's sweep (advisor find, round 11). Dirs without a marker
-    * (foreign `graft_` users, pre-marker binaries) still fall back to
-    * the 6-hour mtime rule. */
-  private val OwnerPidFile = ".graft_owner_pid"
-
-  private def ownerAlive(dir: java.io.File): Boolean = {
-    val f = new java.io.File(dir, OwnerPidFile)
-    if (!f.isFile) return false
-    try {
-      val pid = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toLong
-      ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-    } catch { case _: Throwable => false }
-  }
-
-  /** One pass of the orphan sweep — runs on its OWN daemon thread
-    * (never on the first caller's query path: tmpdir listing + deep
-    * deletes are unbounded latency that used to land inside the first
-    * query's clock — advisor find, round 11). */
-  private def sweepStaleScratch(): Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
-    Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.getName.startsWith("graft_") && f.isDirectory &&
-          f.lastModified() < cutoff && !ownerAlive(f))
-        try deleteRecursively(f.getPath) catch { case _: Throwable => () }
-    }
-  }
-
-  private lazy val staleScratchSwept: Unit = {
-    val t = new Thread(() => sweepStaleScratch(), "graft-orphan-sweep")
-    t.setDaemon(true)
-    t.start()
-  }
-
-  /** ONE shutdown hook draining the whole registry (per-dir hooks
-    * would accumulate one Thread per registration — unbounded for the
-    * per-invocation [[newScratch]] class), plus the idle-session
-    * heartbeat that keeps registered dirs' mtimes fresh between
-    * queries. */
-  private val scratchHookInstalled =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private[queries] def registerScratchCleanup(dir: String): Unit = {
-    staleScratchSwept
-    scratchCleanupRegistered.add(dir)
-    if (scratchHookInstalled.compareAndSet(false, true)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        scratchCleanupRegistered.forEach(d =>
-          try deleteRecursively(d) catch { case _: Throwable => () })))
-      val t = new java.util.Timer("graft-scratch-heartbeat", true)
-      t.scheduleAtFixedRate(new java.util.TimerTask {
-        override def run(): Unit = touchOwnScratch()
-      }, 30L * 60 * 1000, 30L * 60 * 1000)
-    }
-  }
+  /** The embedded-Derby location: Derby allows ONE process per
+    * database directory, and the per-JVM scratch root gives each
+    * process its own, shared by q42/q170 within the JVM. */
+  private def derbyUrl: String =
+    "jdbc:derby:" + Scratch.path("graft_derby") + ";create=true"
 
   def jdbcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val url = derbyUrl(spark)
+    val url = derbyUrl
     val table = "tbl_neotel_conducta"
     val ddl = graft.conform.Schemas.Conducta.fields.map { f =>
       val t = f.dataType match {
@@ -1182,7 +962,7 @@ object Reference {
     * load (idempotent) + JDBC-source read with the date predicate. */
   private[queries] def jdbcFilteredConducta(spark: SparkSession,
       dir: String, cutoff: String): DataFrame = {
-    val url = derbyUrl(spark)
+    val url = derbyUrl
     val table = "tbl_neotel_conducta"
     val ddl = graft.conform.Schemas.Conducta.fields.map { f =>
       val t = f.dataType match {
@@ -1336,7 +1116,7 @@ object Reference {
     * table back; the oracle states the seed. */
   def emptyWriteGuard(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val path = newScratch("graft_f3").toString + "/t"
+    val path = Scratch.perCall("graft_f3").toString + "/t"
     val seed = orders(spark, dir)
       .filter(col("o_orderkey") < 100)
       .select(col("o_orderkey"), col("o_orderdate").cast("date").as("fecha"))
@@ -1410,7 +1190,7 @@ object Reference {
           java.sql.Timestamp.from(java.time.LocalDate.of(2024, 1, 1)
             .plusDays(k).atStartOfDay(java.time.ZoneOffset.UTC).toInstant))
       }
-    val path = newScratch("graft_xlsx")
+    val path = Scratch.perCall("graft_xlsx")
       .resolve("nation.xlsx").toString
     graft.io.XlsxRead.writeMinimal(path,
       Seq(Seq[Any]("ID", "Nombre País", "Región", "Valor", "Fecha")) ++ src)
@@ -1443,7 +1223,7 @@ object Reference {
     val src = nation(spark, dir)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .orderBy("n_nationkey").collect()
-    val tmp = newScratch("graft_arrival")
+    val tmp = Scratch.perCall("graft_arrival")
     val xlsxPath = tmp.resolve("reporte_nation.xlsx").toString
     // TYPED cells (numbers, a real date) — the xlsx arm must surface
     // them typed pre-conform (ArrivalRead routes through readTyped)
@@ -1501,7 +1281,7 @@ object Reference {
     * oracle states outcomes and loaded rowcounts independently. */
   def retryLoadQ(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val path = newScratch("graft_retry").toString
+    val path = Scratch.perCall("graft_retry").toString
     val flaky = new java.util.concurrent.atomic.AtomicInteger(0)
     val datasets: Seq[(String, Option[DataFrame])] = Seq(
       "pedidos" -> Some(orders(spark, dir)
@@ -1588,7 +1368,7 @@ object Reference {
     * a scale-parameterized oracle.) */
   def compactQ(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val scratch = newScratch("graft_compact")
+    val scratch = Scratch.perCall("graft_compact")
       .resolve("docs").toString
     LocalFs.write(documents(spark, dir).repartition(8))
       .mode("overwrite").partitionBy("lang").parquet(scratch)
@@ -1618,14 +1398,10 @@ object Reference {
     prep(spark)
     val path =
       writeFixture("graft_conducta_audit.csv", conductaCsvFixture, "ISO-8859-1")
-    val out = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"), "graft_conducta_audit_tbl")
-      .toString
-    val auditTbl = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"), "graft_run_audit_tbl")
-      .toString
-    deleteRecursively(out)
-    deleteRecursively(auditTbl)
+    val out = Scratch.path("graft_conducta_audit_tbl")
+    val auditTbl = Scratch.path("graft_run_audit_tbl")
+    Scratch.delete(spark, out)
+    Scratch.delete(spark, auditTbl)
     val audit = new graft.io.RunAudit("q101")
     // each phase returns (result, its own recorded count) so the next
     // phase's rows_in reuses it — no count job runs twice
@@ -1685,24 +1461,20 @@ object Reference {
     * 1 failed); the oracle pins every cell. */
   def dailyRunQ(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val tmp = System.getProperty("java.io.tmpdir")
-    // Session-scoped suffix: two concurrent sessions on one machine
-    // must not interleave drops or corrupt each other's audit trail
-    // (within one session the paths are stable, so re-runs still
-    // exercise the delete-and-replace idempotence below)
-    val runTag = spark.sparkContext.applicationId
     // R5: every location comes from typed config, validated up front
-    // (injected env — the spec for process-env backing is ConfigSpec)
+    // (injected env — the spec for process-env backing is ConfigSpec).
+    // Fixed per-JVM paths: re-runs exercise the delete-and-replace
+    // idempotence below.
     val cfg = new graft.io.Config(Map(
-      "GRAFT_DOWNLOAD_DIR" -> java.nio.file.Paths.get(tmp, s"graft_daily_drop_$runTag").toString,
-      "GRAFT_TARGET_DIR" -> java.nio.file.Paths.get(tmp, s"graft_daily_tbl_$runTag").toString,
-      "GRAFT_AUDIT_DIR" -> java.nio.file.Paths.get(tmp, s"graft_daily_audit_$runTag").toString))
+      "GRAFT_DOWNLOAD_DIR" -> Scratch.path("graft_daily_drop"),
+      "GRAFT_TARGET_DIR" -> Scratch.path("graft_daily_tbl"),
+      "GRAFT_AUDIT_DIR" -> Scratch.path("graft_daily_audit")))
     cfg.validateRequired("GRAFT_DOWNLOAD_DIR", "GRAFT_TARGET_DIR",
       "GRAFT_AUDIT_DIR")
     val drop = cfg.required("GRAFT_DOWNLOAD_DIR")
     val tgt = cfg.required("GRAFT_TARGET_DIR")
     val auditTbl = cfg.required("GRAFT_AUDIT_DIR")
-    Seq(drop, tgt, auditTbl).foreach(deleteRecursively)
+    Seq(drop, tgt, auditTbl).foreach(Scratch.delete(spark, _))
     Files.createDirectories(java.nio.file.Paths.get(drop))
     // the day's arrivals: two good reports + one mangled download
     // (NUL bytes, no zip/BIFF magic → ArrivalRead's actionable error)
@@ -1828,7 +1600,7 @@ object Reference {
     * digest from the same base/batch definitions. */
   def mergeUpsertQ(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val out = newScratch("graft_merge").resolve("fact").toString
+    val out = Scratch.perCall("graft_merge").resolve("fact").toString
     val o = orders(spark, dir)
     def shaped(amount: org.apache.spark.sql.Column) =
       o.select(col("o_orderkey").as("id"), amount.as("amount"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.LocalFs
+import graft.io.{LocalFs, Scratch}
 
 /** Layer-B relational surface: the BI/reporting queries the
   * reference's loaded tables exist to serve (SURVEY §2.4-§2.6;
@@ -914,11 +914,10 @@ object Relational {
     * deployments amortize. Excluded from the timed bench set (it
     * re-writes the layout every invocation by construction). */
   /** Monotone q23 invocation counter: each call writes layouts under
-    * UNIQUE table names + a fresh newScratch location, so two threads
-    * in one application (two data dirs in one verify run — the exact
-    * race KeyedOnce guards elsewhere) can never rewrite each other's
-    * live table (reviewer find, r11). Previous invocations' data dirs
-    * drain through the newScratch eviction chain; their (tiny,
+    * UNIQUE table names + a fresh [[Scratch.perCall]] location, so two
+    * threads in one application (two data dirs in one verify run) can
+    * never rewrite each other's live table. Previous invocations' data
+    * dirs drain through the per-call eviction chain; their (tiny,
     * in-memory) catalog entries die with the JVM. */
   private val bucketedJoinSeq =
     new java.util.concurrent.atomic.AtomicLong(0)
@@ -926,7 +925,7 @@ object Relational {
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val buckets = 8
-    val scratch = Reference.newScratch("graft_b23_")
+    val scratch = Scratch.perCall("graft_b23_")
     val tag = spark.sparkContext.applicationId
       .replaceAll("[^a-zA-Z0-9]", "_") + "_" +
       bucketedJoinSeq.incrementAndGet()
@@ -964,17 +963,16 @@ object Relational {
     * the application id and the data dir's md5: the warehouse
     * directory (./spark-warehouse) is SHARED across processes, and
     * two concurrent runs writing one table name would race on its
-    * location — the same hazard the applicationId-scoped Derby dir
-    * fixed for the JDBC sink. Data lives at EXTERNAL tmpdir locations
-    * covered by the orphan sweep + pid markers, so even a CRASHED
-    * run's layout is reclaimed (the shutdown hook alone cannot
-    * promise that, and nothing sweeps the shared warehouse dir). */
+    * location. Data lives at EXTERNAL locations under the per-JVM
+    * [[Scratch]] root, so even a CRASHED run's layout is reclaimed by
+    * the next JVM's orphan pass (nothing sweeps the shared warehouse
+    * dir). */
   private val bucketedTables =
-    new graft.KeyedOnce[(String, String), (String, String)]
+    new Scratch.Artifact[(String, String)]("graft_bucketed")
 
   private[graft] def bucketedWritten(
       spark: SparkSession, dir: String): (String, String) =
-    bucketedTables((spark.sparkContext.applicationId, dir)) {
+    bucketedTables(spark, dir) { root =>
       val tag = spark.sparkContext.applicationId
         .replaceAll("[^a-zA-Z0-9]", "_") + "_" +
         java.security.MessageDigest.getInstance("MD5")
@@ -982,11 +980,6 @@ object Relational {
           .map("%02x".format(_)).mkString.take(12)
       val ot = s"graft_orders_cb_$tag"
       val lt = s"graft_lineitem_cb_$tag"
-      // EXTERNAL locations under the swept tmpdir prefix, not the
-      // shared ./spark-warehouse (which nothing sweeps — a crashed
-      // run's managed layout would leak two fact-table copies
-      // forever; reviewer find, r11)
-      val root = Reference.appScopedScratch(spark, "graft_bucketed", dir)
       graft.io.BucketedLayout.writeBucketed(
         orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")),
         ot, "o_orderkey", 8, Some(s"$root/orders"))
@@ -2628,38 +2621,29 @@ object Relational {
     * (linearPath, zorderPath). The spec and [[graft.ZorderProbe]]
     * read these back under single-dimension range predicates and
     * measure the scan's post-row-group-skip output rows — the
-    * physical file/row-group pruning the layout decision buys.
-    * [[graft.KeyedOnce]], not TrieMap: two racing threads must never
-    * both run the delete+rewrite against the same deterministic path
-    * (advisor find, round 11). */
+    * physical file/row-group pruning the layout decision buys. */
   private val zorderWrites =
-    new graft.KeyedOnce[(String, String), (String, String)]
+    new Scratch.Artifact[(String, String)]("graft_zorder")
 
   private[graft] def zorderWritten(
       spark: SparkSession, dir: String): (String, String) =
-    zorderWrites(
-      (spark.sparkContext.applicationId, dir)) {
-        // session-scoped write-once artifact: registration keeps the
-        // touch-own-scratch heartbeat protecting it from other
-        // sessions' 6-hour orphan sweep (reviewer find, r10
-        // continuation)
-        val base = Reference.appScopedScratch(spark, "graft_zorder", dir)
-        val buckets = zorderBuckets(spark, dir).persist()
-        val lin = s"$base/linear"
-        val zo = s"$base/zorder"
-        // RANGE repartition, not hash: contiguous bucket ranges per
-        // output file, so each file's footer min/max span ~one bucket
-        // (hash partitioning mixed ~1.5 arbitrary buckets per file and
-        // measurably halved the skip rate)
-        LocalFs.write(buckets.repartitionByRange(ZFiles, col("linear_f"))
-          .select(col("ok"), col("pk")))
-          .mode("overwrite").parquet(lin)
-        LocalFs.write(buckets.repartitionByRange(ZFiles, col("zorder_f"))
-          .select(col("ok"), col("pk")))
-          .mode("overwrite").parquet(zo)
-        buckets.unpersist()
-        (lin, zo)
-      }
+    zorderWrites(spark, dir) { base =>
+      val buckets = zorderBuckets(spark, dir).persist()
+      val lin = s"$base/linear"
+      val zo = s"$base/zorder"
+      // RANGE repartition, not hash: contiguous bucket ranges per
+      // output file, so each file's footer min/max span ~one bucket
+      // (hash partitioning mixed ~1.5 arbitrary buckets per file and
+      // measurably halved the skip rate)
+      LocalFs.write(buckets.repartitionByRange(ZFiles, col("linear_f"))
+        .select(col("ok"), col("pk")))
+        .mode("overwrite").parquet(lin)
+      LocalFs.write(buckets.repartitionByRange(ZFiles, col("zorder_f"))
+        .select(col("ok"), col("pk")))
+        .mode("overwrite").parquet(zo)
+      buckets.unpersist()
+      (lin, zo)
+    }
 
   /** q192: the q184 decision executed — both layouts written to
     * parquet, read back under the SAME two relative range predicates,
@@ -2884,15 +2868,13 @@ object Relational {
     * [[ZFiles]] files, plus the delta appended as [[ZDeltaFiles]]
     * arrival-ordered files — each spanning nearly the full pk
     * domain); `optimized` is the OPTIMIZE executed — every row
-    * rewritten by z into the same total file budget. KeyedOnce for
-    * the same racing-writer reason as [[zorderWritten]]. */
+    * rewritten by z into the same total file budget. */
   private val zoptWrites =
-    new graft.KeyedOnce[(String, String), (String, String)]
+    new Scratch.Artifact[(String, String)]("graft_zopt")
 
   private[graft] def zoptWritten(
       spark: SparkSession, dir: String): (String, String) =
-    zoptWrites((spark.sparkContext.applicationId, dir)) {
-      val base = Reference.appScopedScratch(spark, "graft_zopt", dir)
+    zoptWrites(spark, dir) { base =>
       val b = zorderBuckets(spark, dir).localCheckpoint(false)
       val thr = b.agg(max(col("ok"))).head.getLong(0) * 7 / 8 // 1-row
       val appended = s"$base/appended"

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.io.LocalFs
+import graft.io.{LocalFs, Scratch}
 import graft.streaming.Streams
 
 /** Streaming queries: each runs a Structured Streaming job to
@@ -192,7 +192,7 @@ object StreamingQ {
     * digest straight off the events table. */
   def streamLoad(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val scratch = Reference.newScratch("graft_stream_load")
+    val scratch = Scratch.perCall("graft_stream_load")
     val out = scratch.resolve("fact").toString
     def runOnce(tag: String): Unit = Streams.incrementalLoad(
       Streams.eventsStream(spark, dir)
@@ -233,7 +233,7 @@ object StreamingQ {
     * semantics, which StreamsSpec pins. */
   def streamDedupCorpus(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val scratch = Reference.newScratch("graft_stream_dedup")
+    val scratch = Scratch.perCall("graft_stream_dedup")
     val out = scratch.resolve("corpus").toString
     def runOnce(tag: String): Unit = Streams.dedupCorpusLoad(
       Streams.documentsStream(spark, dir), docFingerprint,
@@ -272,7 +272,7 @@ object StreamingQ {
     * the index build too. */
   def streamIvfIndex(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val scratch = Reference.newScratch("graft_ivf_index")
+    val scratch = Scratch.perCall("graft_ivf_index")
     val out = scratch.resolve("index").toString
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -312,7 +312,7 @@ object StreamingQ {
     * incremental family. */
   def streamLabelRepair(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val store = Reference.newScratch("graft_label_repair")
+    val store = Scratch.perCall("graft_label_repair")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
@@ -348,7 +348,7 @@ object StreamingQ {
     * version; oracle = q127's full-rebuild SQL verbatim. */
   def streamPostingsMerge(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val store = Reference.newScratch("graft_postings_stream")
+    val store = Scratch.perCall("graft_postings_stream")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
@@ -380,7 +380,7 @@ object StreamingQ {
     * sees, the ranks. */
   def streamBm25Merge(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val store = Reference.newScratch("graft_bm25_stream")
+    val store = Scratch.perCall("graft_bm25_stream")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
@@ -412,7 +412,7 @@ object StreamingQ {
     * rollup. */
   def streamRollupMaintain(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val store = Reference.newScratch("graft_rollup_stream")
+    val store = Scratch.perCall("graft_rollup_stream")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
@@ -443,7 +443,7 @@ object StreamingQ {
     * rollup. */
   def streamRollupAdditive(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val store = Reference.newScratch("graft_rollup_addstream")
+    val store = Scratch.perCall("graft_rollup_addstream")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
@@ -751,7 +751,7 @@ object StreamingQ {
     * fresh keys) straight from the customer table. */
   def streamScd2(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    val scratch = Reference.newScratch("graft_stream_scd2")
+    val scratch = Scratch.perCall("graft_stream_scd2")
     val dim = scratch.resolve("dim").toString
     // seed: the current snapshot, every member one open version
     LocalFs.write(Tables.customer(spark, dir)
@@ -840,7 +840,7 @@ object StreamingQ {
   def streamLateData(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     import org.apache.spark.sql.streaming.Trigger
-    val scratch = Reference.newScratch("graft_stream_late")
+    val scratch = Scratch.perCall("graft_stream_late")
     val arrivals = java.nio.file.Files
       .createDirectory(scratch.resolve("arrivals"))
     val sinkDir = scratch.resolve("win").toString

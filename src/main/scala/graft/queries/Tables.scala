@@ -154,10 +154,6 @@ object Tables {
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     graft.functions.GraftFunctions.register(spark)
-    // keep this session's scratch visibly ALIVE to other sessions'
-    // 6-hour orphan sweeps (write-once artifacts never refresh their
-    // mtime on read — see Reference.touchOwnScratch)
-    Reference.touchOwnScratch()
   }
 
   /** Per-(session, path) parquet schema memo: every bare

@@ -68,14 +68,11 @@ object WarehouseIvm {
   private def isDay = col("fecha") <=> lit(Day).cast("date")
 
   /** Store root with both base artifacts, published exactly once per
-    * (application, dir) from the warm session — [[graft.KeyedOnce]]
-    * so racing first callers cannot both run the delete+publish
-    * against the same deterministic path. */
-  private val stores = new graft.KeyedOnce[(String, String), String]
+    * (application, dir) from the warm session. */
+  private val stores = new graft.io.Scratch.Artifact[String]("graft_whstore")
 
   private[queries] def store(spark: SparkSession, dir: String): String =
-    stores((spark.sparkContext.applicationId, dir)) {
-      val root = Reference.appScopedScratch(spark, "graft_whstore", dir)
+    stores(spark, dir) { root =>
       val wh = whRead(spark, dir)
       // q218's base: yesterday's rollup — the warehouse BEFORE today's
       // fecha landed (one-time artifact build, like baseSigsTable)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.io.LocalFs
+import graft.io.{Compact, LocalFs}
 
 /** Structured Streaming surface over the harness `events` stream
   * (SURVEY §2.10). The reference itself is a scheduled daily batch
@@ -289,71 +289,47 @@ object Streams {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** One micro-batch merged into the dimension, swapped in through
+    * [[Compact.replace]]: a crash at any point leaves a
+    * complete dimension reachable (at dimPath or at `.scd2_old`), and
+    * the next batch restores it before reading. */
   private def scd2Merge(batchRaw: DataFrame, dimPath: String): Unit = {
     if (batchRaw.isEmpty) return
-    val spark = batchRaw.sparkSession
     val batch = batchRaw.groupBy(col("k"))
       .agg(min(col("cents")).as("cents"))
-    val staging = dimPath + ".scd2_stg"
-    val retired = dimPath + ".scd2_old"
-    val dimP = new org.apache.hadoop.fs.Path(dimPath)
-    val stgP = new org.apache.hadoop.fs.Path(staging)
-    val retP = new org.apache.hadoop.fs.Path(retired)
-    val fs = dimP.getFileSystem(spark.sessionState.newHadoopConf())
-    // Crash recovery FIRST: a retired copy with no live dimension
-    // means a previous run died between the two swap renames — the
-    // retired copy is the only complete dimension; restore it before
-    // reading or deleting anything. (Existence probes go through the
-    // Hadoop FileSystem, never java.io.File: the dimension lives on
-    // whatever scheme the path names, and a local-File probe on
-    // hdfs:// or s3a:// is always false — which would silently
-    // replace the whole dimension with the current batch.)
-    if (!fs.exists(dimP) && fs.exists(retP))
-      require(fs.rename(retP, dimP),
-        s"scd2 recovery failed: could not restore $retired to $dimPath")
-    val merged: DataFrame =
-      if (!fs.exists(dimP)) {
-        batch.select(col("k"), col("cents"), lit(true).as("cur"))
-      } else {
-        val dim = spark.read.parquet(dimPath)
-        val history = dim.filter(!col("cur"))
-        val current = dim.filter(col("cur"))
-          .select(col("k"), col("cents").as("d_cents"))
-        val j = current.withColumn("in_dim", lit(1))
-          .join(batch.withColumn("in_b", lit(1)), Seq("k"), "full_outer")
-        val rows = j.select(col("k"), explode(expr(
-          """filter(array(
-            |  CASE WHEN in_dim IS NOT NULL AND in_b IS NOT NULL
-            |         AND d_cents = cents
-            |       THEN named_struct('cents', d_cents, 'cur', true) END,
-            |  CASE WHEN in_dim IS NOT NULL AND in_b IS NOT NULL
-            |         AND d_cents != cents
-            |       THEN named_struct('cents', d_cents, 'cur', false) END,
-            |  CASE WHEN in_dim IS NOT NULL AND in_b IS NOT NULL
-            |         AND d_cents != cents
-            |       THEN named_struct('cents', cents, 'cur', true) END,
-            |  CASE WHEN in_b IS NULL
-            |       THEN named_struct('cents', d_cents, 'cur', true) END,
-            |  CASE WHEN in_dim IS NULL
-            |       THEN named_struct('cents', cents, 'cur', true) END),
-            |x -> x IS NOT NULL)""".stripMargin)).as("r"))
-          .select(col("k"), col("r.cents").as("cents"), col("r.cur").as("cur"))
-        history.select(col("k"), col("cents"), col("cur"))
-          .unionByName(rows)
-      }
-    // rename-aside swap (Compact discipline): stage, retire, move
-    // in, and only then drop the retired copy — combined with the
-    // entry recovery above, a crash at ANY point leaves a complete
-    // dimension reachable (at dimPath or at .scd2_old).
-    fs.delete(stgP, true)
-    LocalFs.write(merged).mode("overwrite").parquet(staging)
-    fs.delete(retP, true)
-    if (fs.exists(dimP))
-      require(fs.rename(dimP, retP),
-        s"scd2 swap failed: could not retire $dimPath")
-    require(fs.rename(stgP, dimP),
-      s"scd2 swap failed: could not move $staging into place")
-    fs.delete(retP, true)
+    Compact.replace(batchRaw.sparkSession, dimPath, "scd2") {
+      (existing, staging) =>
+        val merged: DataFrame = existing match {
+          case None =>
+            batch.select(col("k"), col("cents"), lit(true).as("cur"))
+          case Some(dim) =>
+            val history = dim.filter(!col("cur"))
+            val current = dim.filter(col("cur"))
+              .select(col("k"), col("cents").as("d_cents"))
+            val j = current.withColumn("in_dim", lit(1))
+              .join(batch.withColumn("in_b", lit(1)), Seq("k"), "full_outer")
+            val rows = j.select(col("k"), explode(expr(
+              """filter(array(
+                |  CASE WHEN in_dim IS NOT NULL AND in_b IS NOT NULL
+                |         AND d_cents = cents
+                |       THEN named_struct('cents', d_cents, 'cur', true) END,
+                |  CASE WHEN in_dim IS NOT NULL AND in_b IS NOT NULL
+                |         AND d_cents != cents
+                |       THEN named_struct('cents', d_cents, 'cur', false) END,
+                |  CASE WHEN in_dim IS NOT NULL AND in_b IS NOT NULL
+                |         AND d_cents != cents
+                |       THEN named_struct('cents', cents, 'cur', true) END,
+                |  CASE WHEN in_b IS NULL
+                |       THEN named_struct('cents', d_cents, 'cur', true) END,
+                |  CASE WHEN in_dim IS NULL
+                |       THEN named_struct('cents', cents, 'cur', true) END),
+                |x -> x IS NOT NULL)""".stripMargin)).as("r"))
+              .select(col("k"), col("r.cents").as("cents"), col("r.cur").as("cur"))
+            history.select(col("k"), col("cents"), col("cur"))
+              .unionByName(rows)
+        }
+        LocalFs.write(merged).mode("overwrite").parquet(staging)
+    }
   }
 
   private val DocsSchema = StructType(Seq(

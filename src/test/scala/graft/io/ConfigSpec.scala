@@ -4,15 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** R5 typed env config (reference main.py:55-72
   * `obtener_variable_entorno`): required validation, empty-is-missing,
-  * defaults, typed getters with actionable parse errors. */
+  * defaults, the typed int getter with an actionable parse error. */
 class ConfigSpec extends AnyFunSuite {
 
   private val cfg = new Config(Map(
     "DB_HOST" -> "db.example.internal",
     "EMPTY" -> "",
     "PORT" -> "1433",
-    "RATE" -> "0.75",
-    "FLAG" -> "Yes",
     "BAD_INT" -> "eleven"))
 
   test("required: present, missing, and empty-counts-as-missing") {
@@ -31,21 +29,16 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.optional("NOPE") === "") // main.py:72 `valor or ""`
   }
 
-  test("typed getters: int/long/double/boolean with defaults") {
+  test("typed getter: int with a default") {
     assert(cfg.int("PORT", 1) === 1433)
     assert(cfg.int("NOPE", 7) === 7)
-    assert(cfg.long("PORT", 1L) === 1433L)
-    assert(cfg.double("RATE", 0.0) === 0.75)
-    assert(cfg.boolean("FLAG", false) === true)
-    assert(cfg.boolean("NOPE", true) === true)
-    assert(cfg.requiredInt("PORT") === 1433)
+    assert(cfg.int("EMPTY", 7) === 7)
   }
 
   test("malformed typed value: error names the variable and the value") {
     val e = intercept[IllegalArgumentException](cfg.int("BAD_INT", 1))
     assert(e.getMessage.contains("'BAD_INT'"))
     assert(e.getMessage.contains("'eleven'"))
-    intercept[IllegalArgumentException](cfg.boolean("BAD_INT", false))
   }
 
   test("validateRequired: reports every missing variable at once") {
