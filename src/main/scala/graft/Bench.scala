@@ -1,5 +1,15 @@
 package graft
 object Bench {
+
+  /** Per failed or flaky query, its last failed sweep's exception as
+    * `"<name>":"<class>: <message>"` (Verify's failure-record shape). */
+  private[graft] def failuresJson(names: Seq[String],
+      sweeps: Seq[Map[String, (Double, Option[Throwable])]]): String =
+    names.flatMap { n =>
+      sweeps.flatMap(_(n)._2).lastOption.map(e => Verify.jsonStr(n) + ":" +
+        Verify.jsonStr(s"${e.getClass.getName}: ${e.getMessage}"))
+    }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val cfg = graft.io.Config.fromEnv
     val sfDir = cfg.optional("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -11,15 +21,17 @@ object Bench {
     // side never executed — its bench time measured a fraction of the
     // query). The noop sink consumes every output column, so the
     // timing covers the full plan a real consumer would run.
-    def once(name: String): (Double, Boolean) = {
+    // A failed run keeps its exception, so bench_local.json can say
+    // why a query failed or flaked, not only that it did.
+    def once(name: String): (Double, Option[Throwable]) = {
       val t0 = System.nanoTime()
-      val ok =
+      val err =
         try {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case _: Throwable => false }
-      ((System.nanoTime() - t0) / 1e9, ok)
+          None
+        } catch { case t: Throwable => Some(t) }
+      ((System.nanoTime() - t0) / 1e9, err)
     }
     // Best-of-3 as three FULL SWEEPS, not back-to-back triples: sweep
     // 1 doubles as warm-up (JIT, codegen, caches) and the minutes
@@ -39,11 +51,11 @@ object Bench {
     // best-of-N never recovered — q01 benched 3-4x its steady state.
     // One discarded pass moves those costs outside every clock.
     names.headOption.foreach(once)
-    val sweeps: Seq[Map[String, (Double, Boolean)]] =
+    val sweeps: Seq[Map[String, (Double, Option[Throwable])]] =
       Seq.fill(3)(names.map(n => n -> once(n)).toMap)
     val results = names.map { name =>
       val runs = sweeps.map(_(name))
-      val okRuns = runs.filter(_._2)
+      val okRuns = runs.filter(_._2.isEmpty)
       val ok = okRuns.nonEmpty
       val best = if (ok) okRuns.map(_._1).min else runs.head._1
       // A crashed query reports NEGATIVE elapsed time so failures are
@@ -72,7 +84,7 @@ object Bench {
     // every query so any future "x got slower" read can check the
     // spread before chasing it.
     val spreadNames = names.filter { n =>
-      val ts = sweeps.map(_(n)).filter(_._2).map(_._1)
+      val ts = sweeps.map(_(n)).filter(_._2.isEmpty).map(_._1)
       ts.size >= 2 && ts.max > 1.5 * ts.min
     }
     val noisy = spreadNames.map(n => s"\"" + n + "\"")
@@ -82,12 +94,12 @@ object Bench {
     // Belt-and-braces against the line truncation: the full JSON —
     // including the per-sweep timings the stdout line has no room
     // for — is also left on disk next to the build.
-    def sweepJson(sw: Map[String, (Double, Boolean)]): String =
+    def sweepJson(sw: Map[String, (Double, Option[Throwable])]): String =
       names.map(n => s"\"" + n + "\":" + ms(
-        if (sw(n)._2) sw(n)._1 else -sw(n)._1)).mkString("{", ",", "}")
+        if (sw(n)._2.isEmpty) sw(n)._1 else -sw(n)._1)).mkString("{", ",", "}")
     val fileJson = json.dropRight(1) + sweeps.zipWithIndex.map {
       case (sw, i) => s""","queries_sweep${i + 1}":${sweepJson(sw)}"""
-    }.mkString + "}"
+    }.mkString + s""","failures":${failuresJson(names, sweeps)}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_local.json"),
       fileJson.getBytes("UTF-8"))
     spark.stop()

@@ -178,7 +178,6 @@ object Dev {
   private def skew(spark: SparkSession, args: Seq[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20000000L)
     val hotPct = args.drop(1).headOption.map(_.toInt).getOrElse(50)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     // hotPct% of rows on key 7; the rest uniform over 100k keys
     def big: DataFrame = spark.range(n).select(
@@ -198,34 +197,28 @@ object Dev {
       j.groupBy(col("dk")).agg(count(lit(1)).as("cnt"),
         sum(col("dim_v")).as("s"))
 
-    def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-      val prev = kv.map { case (k, _) => k -> spark.conf.get(k) }
-      kv.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
-
-    // warm-up (shuffle service init, codegen)
-    time("warmup")(agg(big.join(small, col("k") === col("dk"))))
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      time("plain_smj_aqe_off")(agg(big.join(small, col("k") === col("dk"))))
-    }
-    withConf(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8m",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m") {
-      time("aqe_skew_split")(agg(big.join(small, col("k") === col("dk"))))
-    }
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      time("salted_aqe_off")(
-        agg(graft.operators.SkewJoin.autoSalted(big, "k", small, "dk")))
-    }
-    // skew known ahead of planning: no profiling pass
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      time("salted_known_keys")(
-        agg(graft.operators.SkewJoin.saltedForKeys(
-          big, "k", small, "dk", Seq(7L))))
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // warm-up (shuffle service init, codegen)
+      time("warmup")(agg(big.join(small, col("k") === col("dk"))))
+      Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+        time("plain_smj_aqe_off")(agg(big.join(small, col("k") === col("dk"))))
+      }
+      Session.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m") {
+        time("aqe_skew_split")(agg(big.join(small, col("k") === col("dk"))))
+      }
+      Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+        time("salted_aqe_off")(
+          agg(graft.operators.SkewJoin.autoSalted(big, "k", small, "dk")))
+        // skew known ahead of planning: no profiling pass
+        time("salted_known_keys")(
+          agg(graft.operators.SkewJoin.saltedForKeys(
+            big, "k", small, "dk", Seq(7L))))
+      }
     }
   }
 

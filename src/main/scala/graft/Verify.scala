@@ -6,6 +6,20 @@ import graft.io.LocalFs
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in hand-written SQL or an exception
+    * message would otherwise make a consumer's json.load fail. */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     // Optional extra args: run only these query names (local dev loop;
@@ -13,24 +27,12 @@ object Verify {
     val only = args.drop(2).toSet
     val spark = Session.local(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // oracle_sql.json FIRST: it depends on nothing the query loop
     // computes, and writing it up front means a run killed mid-loop
     // still leaves every already-dumped query comparable instead of
     // zeroing the whole artifact.
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val selected =
       if (only.isEmpty) SparkEntry.queries
@@ -67,7 +69,7 @@ object Verify {
     // always explained by either this record or the process dying.
     val failJson = stillFailed
       .map { case (n, e) =>
-        s"${q(n)}: ${q(s"${e.getClass.getName}: ${e.getMessage}")}" }
+        s"${jsonStr(n)}: ${jsonStr(s"${e.getClass.getName}: ${e.getMessage}")}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_verify_failures.json"), failJson)
     if (stillFailed.nonEmpty)

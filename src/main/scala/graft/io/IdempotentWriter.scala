@@ -10,10 +10,18 @@ import org.apache.spark.sql.functions._
   * insert — "partition overwrite" semantics (dedup-by-date rationale
   * README.md:111). In Spark this is DYNAMIC PARTITION OVERWRITE on a
   * `fecha`-partitioned table: only the partitions present in the
-  * incoming frame are replaced, atomically per partition via the file
-  * commit protocol — the scalable equivalent of DELETE+INSERT (no
-  * table scan, no row-level delete; at 100 TB replacing one day
-  * touches one partition directory).
+  * incoming frame are replaced — the scalable equivalent of
+  * DELETE+INSERT (no table scan, no row-level delete; at 100 TB
+  * replacing one day touches one partition directory). The
+  * replacement is NOT atomic: Spark's job commit
+  * (`HadoopMapReduceCommitProtocol.commitJob`) deletes each target
+  * partition directory and then renames the staged one into place, so
+  * a JVM that dies inside that loop leaves dates missing (the
+  * reference's one-transaction DELETE+INSERT would keep the old rows),
+  * and a concurrent reader can see a date missing mid-commit. What
+  * holds is idempotence: re-running the load replaces the same
+  * partitions with the same rows. ROADMAP direction 1 makes the
+  * engine own the commit.
   *
   * The reference's per-row salvage on failed batches (silent drop of
   * poison rows, main.py:1564-1569) is deliberately replaced by an

@@ -1100,30 +1100,30 @@ object Relational {
           .as("avg_revenue"))
   }
 
+  /** The planner confs [[bloomPruneJoin]] runs under.
+    * autoBroadcastJoinThreshold=-1 reproduces the 100 TB condition at
+    * toy scale: InjectRuntimeFilter only fires for probably-SHUFFLE
+    * joins, and fact tables this small look broadcast-able. */
+  private[queries] val bloomConfs: Seq[(String, String)] = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   /** Fact-fact join with a SELECTIVE dimension-side predicate, executed
     * under Catalyst's runtime bloom-filter injection (InjectRuntimeFilter):
     * the optimizer builds a bloom filter over the filtered orders keys
     * as a subquery and applies `might_contain` on lineitem BEFORE its
     * shuffle — at 100 TB, ~3/4 of the fact rows (here: the non-URGENT
     * share) never leave the scan stage. Thresholds are scoped to this
-    * query (set, eagerly materialized via localCheckpoint, restored):
+    * query ([[graft.Session.withConf]] around the collected digest):
     * the driver-shared session must not inherit a 1 KB application-side
     * threshold. Pruning is semantics-preserving (the bloom admits every
     * true key; the join verifies exactly), so the oracle is the plain
     * join. */
   def bloomPruneJoin(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    // autoBroadcastJoinThreshold=-1 reproduces the 100 TB condition at
-    // toy scale: InjectRuntimeFilter only fires for probably-SHUFFLE
-    // joins, and fact tables this small look broadcast-able.
-    val scoped = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.Session.withConf(spark, bloomConfs: _*) {
       // Eager materialization: injection happens at optimization time,
       // which must run while the scoped confs are in force. The DIGEST
       // (3 rows) is collected and re-wrapped rather than checkpointed:
@@ -1136,9 +1136,6 @@ object Relational {
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(
         digest.collect().toSeq.asJava, digest.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -1,10 +1,10 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType, TimestampType}
 
 import graft.io.{LocalFs, Scratch}
 import graft.streaming.Streams
@@ -17,26 +17,12 @@ import graft.streaming.Streams
 object StreamingQ {
   import Tables.prep
 
-  /** Memory-sink names must be unique per invocation (verify + bench
-    * share one session), and the PREVIOUS invocation's sink table is
-    * dropped when a new one starts — MemorySink retains its full row
-    * copy in driver memory, so without the drop every bench/verify
-    * pass would permanently accumulate another copy of its output. */
-  private val runId = new AtomicLong(0)
-  private val lastSink =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def sink(spark: SparkSession, base: String): String = {
-    val name = s"${base}_${runId.incrementAndGet()}"
-    lastSink.put(base, name).foreach(spark.catalog.dropTempView)
-    name
-  }
-
   /** Streaming tumbling window == batch q19 (same expression). */
   def streamTumbling(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val out = Streams.runToMemory(
       Streams.tumblingCounts(Streams.eventsStream(spark, dir)),
-      sink(spark, "s_tumbling"), OutputMode.Complete())
+      "s_tumbling", OutputMode.Complete())
     out.orderBy("w_start", "event_type")
   }
 
@@ -53,7 +39,7 @@ object StreamingQ {
     val doubled = Streams.eventsStream(spark, dir)
       .union(Streams.eventsStream(spark, dir))
     val out = Streams.runToMemory(
-      Streams.dedupEvents(doubled), sink(spark, "s_dedup"), OutputMode.Append())
+      Streams.dedupEvents(doubled), "s_dedup", OutputMode.Append())
     out.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
       .orderBy("event_type")
@@ -76,7 +62,7 @@ object StreamingQ {
     prep(spark)
     val out = Streams.runToMemory(
       Streams.sessionize(Streams.eventsStream(spark, dir)).toDF(),
-      sink(spark, "s_sessions"), OutputMode.Append(),
+      "s_sessions", OutputMode.Append(),
       finalizeWatermark = true)
     out.groupBy((col("user_id") % 8).as("bucket"))
       .agg(count(lit(1)).as("n_sessions"),
@@ -121,7 +107,7 @@ object StreamingQ {
     prep(spark)
     val out = Streams.runToMemory(
       Streams.slidingCounts(Streams.eventsStream(spark, dir)),
-      sink(spark, "s_sliding"), OutputMode.Complete())
+      "s_sliding", OutputMode.Complete())
     out.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_windows"),
         sum(col("n")).as("n_events"),
@@ -139,7 +125,7 @@ object StreamingQ {
     prep(spark)
     val out = Streams.runToMemory(
       Streams.clickPurchaseJoin(Streams.eventsStream(spark, dir)),
-      sink(spark, "s_join"), OutputMode.Append())
+      "s_join", OutputMode.Append())
     out.groupBy((col("c_user") % 8).as("bucket"))
       .agg(count(lit(1)).as("n_pairs"),
         round(sum(col("p_value")), 4).as("sum_purchase"))
@@ -174,7 +160,7 @@ object StreamingQ {
     val out = Streams.runToMemory(
       enriched.groupBy(col("n_name"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value")),
-      sink(spark, "s_enrich"), OutputMode.Complete())
+      "s_enrich", OutputMode.Complete())
     out.orderBy("n_name")
   }
 
@@ -274,19 +260,12 @@ object StreamingQ {
     prep(spark)
     val scratch = Scratch.perCall("graft_ivf_index")
     val out = scratch.resolve("index").toString
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.embeddingsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          LocalFs.write(Similarity.ivfAssign(spark, dir, batch))
-            .mode("append").partitionBy("cell").parquet(out)
-        }
-        .option("checkpointLocation", scratch.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.embeddingsStream(spark, dir),
+        Some(scratch.resolve("ckpt").toString))(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        LocalFs.write(Similarity.ivfAssign(spark, dir, batch))
+          .mode("append").partitionBy("cell").parquet(out)
+    })
     spark.read.parquet(out)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_ids"))
@@ -313,18 +292,11 @@ object StreamingQ {
   def streamLabelRepair(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Scratch.perCall("graft_label_repair")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.documentsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Curation.applyArrivalBatch(spark, batch, store)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.documentsStream(spark, dir),
+        Some(store.resolve("ckpt").toString))(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        Curation.applyArrivalBatch(spark, batch, store)
+    })
     spark.read.parquet(Curation.latestLabels(store).get.toString)
       .groupBy(col("root")).agg(count(lit(1)).as("csize"))
       .groupBy(col("csize"))
@@ -349,18 +321,11 @@ object StreamingQ {
   def streamPostingsMerge(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Scratch.perCall("graft_postings_stream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.documentsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          TextAnalysis.applyPostingsBatch(spark, batch, store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.documentsStream(spark, dir),
+        Some(store.resolve("ckpt").toString))(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        TextAnalysis.applyPostingsBatch(spark, batch, store.toString)
+    })
     TextAnalysis.postingsDigestOf(graft.io.ArtifactStore.read(
       spark, store.toString, TextAnalysis.StreamPostingsArtifact))
   }
@@ -381,18 +346,11 @@ object StreamingQ {
   def streamBm25Merge(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Scratch.perCall("graft_bm25_stream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.documentsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          TextAnalysis.applyBm25Batch(spark, batch, store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.documentsStream(spark, dir),
+        Some(store.resolve("ckpt").toString))(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        TextAnalysis.applyBm25Batch(spark, batch, store.toString)
+    })
     TextAnalysis.bm25FromStreamStore(spark, store.toString)
   }
 
@@ -413,18 +371,11 @@ object StreamingQ {
   def streamRollupMaintain(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Scratch.perCall("graft_rollup_stream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.eventsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          WarehouseIvm.applyRollupBatch(spark, batch, store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.eventsStream(spark, dir),
+        Some(store.resolve("ckpt").toString))(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        WarehouseIvm.applyRollupBatch(spark, batch, store.toString)
+    })
     WarehouseIvm.rollupOut(graft.io.ArtifactStore.read(
       spark, store.toString, WarehouseIvm.StreamRollupArtifact))
   }
@@ -444,24 +395,15 @@ object StreamingQ {
   def streamRollupAdditive(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Scratch.perCall("graft_rollup_addstream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.eventsStream(spark, dir).writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            // lineage = the checkpoint location: batch ids are only
-            // monotone within it, and the artifact's replay guard
-            // must refuse ids from any other lineage
-            WarehouseIvm.applyRollupBatchAdditive(
-              spark, batch, id, store.resolve("ckpt").toString,
-              store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val ckpt = store.resolve("ckpt").toString
+    Streams.drain(Streams.eventsStream(spark, dir), Some(ckpt))(_.foreachBatch {
+      (batch: DataFrame, id: Long) =>
+        // lineage = the checkpoint location: batch ids are only
+        // monotone within it, and the artifact's replay guard must
+        // refuse ids from any other lineage
+        WarehouseIvm.applyRollupBatchAdditive(
+          spark, batch, id, ckpt, store.toString)
+    })
     WarehouseIvm.rollupOut(graft.io.ArtifactStore.read(
       spark, store.toString, WarehouseIvm.AdditiveRollupArtifact))
   }
@@ -502,7 +444,7 @@ object StreamingQ {
     val out = Streams.runToMemory(
       enriched.groupBy(col("n_name"), col("version"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value")),
-      sink(spark, "s_venrich"), OutputMode.Complete())
+      "s_venrich", OutputMode.Complete())
     out.orderBy("n_name", "version")
   }
 
@@ -547,7 +489,7 @@ object StreamingQ {
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("w_start"), col("bin"), col("cnt"))
     val t = Streams.runToMemory(
-      binned, sink(spark, "s_psi"), OutputMode.Complete())
+      binned, "s_psi", OutputMode.Complete())
     val bins = spark.range(8).select(col("id").as("bin"))
     val nW = t.groupBy(col("w_start")).agg(sum(col("cnt")).as("nw"))
     // fresh-aliased projection of the sink table: nW/ref/nTot derive
@@ -617,7 +559,7 @@ object StreamingQ {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("sum_tokens"))
     val out = Streams.runToMemory(
-      agg, sink(spark, "s_mix"), OutputMode.Complete())
+      agg, "s_mix", OutputMode.Complete())
       .withColumn("cls", expr("cast(substr(source, 4) as int) % 4"))
       .withColumn("cw",
         when(col("cls") === 0, 4L).when(col("cls") === 1, 3L)
@@ -697,7 +639,7 @@ object StreamingQ {
       .agg(graft.functions.MisraGries.sketch(TrendingSketchK)(col("w"))
         .as("sk"))
     val cand = Streams.runToMemory(
-      sketch, sink(spark, "s_topterms"), OutputMode.Complete())
+      sketch, "s_topterms", OutputMode.Complete())
       .select(col("lang"), explode(col("sk.term")).as("w"))
     val words = Tables.documents(spark, dir)
       .select(col("lang"),
@@ -839,7 +781,6 @@ object StreamingQ {
     * event-time state instead of partition overwrite. */
   def streamLateData(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
-    import org.apache.spark.sql.streaming.Trigger
     val scratch = Scratch.perCall("graft_stream_late")
     val arrivals = java.nio.file.Files
       .createDirectory(scratch.resolve("arrivals"))
@@ -857,37 +798,23 @@ object StreamingQ {
       val src = it.find(_.getFileName.toString.endsWith(".parquet")).get
       java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
     }
-    def runOnce(): Unit = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = spark.readStream
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType))))
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(arrivals.toString)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-          .select(col("window.start").as("w_start"), col("event_type"),
-            col("n"), col("sum_cents"))
-          .writeStream
-          .format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    def runOnce(): Unit = Streams.drain(
+      spark.readStream
+        .schema(StructType(Seq(
+          StructField("event_id", LongType),
+          StructField("ts", TimestampType),
+          StructField("event_type", StringType),
+          StructField("cents", LongType))))
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(arrivals.toString)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
+        .select(col("window.start").as("w_start"), col("event_type"),
+          col("n"), col("sum_cents")),
+      Some(ckpt))(
+      _.format("parquet").option("path", sinkDir)
+        .outputMode(OutputMode.Append()))
     writeArrival("a", ev.filter(col("ts") < cut))
     runOnce()
     writeArrival("b", ev.filter(col("ts") >= cut).unionByName(

@@ -93,7 +93,9 @@ object Tables {
     * the artifact side. The build is a bounded one-off artifact
     * construction, so losing AQE coalescing/skew handling inside it
     * is immaterial; the conf flip is scoped to the eager checkpoint
-    * and the engine's entry points drive one query at a time.
+    * by [[graft.Session.withConf]], but it is still session-global
+    * while the checkpoint runs (ROADMAP direction 4): the engine's
+    * entry points drive one query at a time.
     *
     * Scale posture: the partition count follows
     * `spark.sql.shuffle.partitions` (scale-adaptive, not a local
@@ -105,10 +107,8 @@ object Tables {
     tableMemo((spark, dir, key)) {
       val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val df = build.repartition(n, cols.map(col): _*)
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try df.localCheckpoint()
-      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      graft.Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false")(
+        df.localCheckpoint())
     }
   }
 
@@ -234,16 +234,25 @@ object Tables {
     * generations: parquet INT64 TIMESTAMP(NANOS) — which Spark 4
     * refuses to read as a timestamp (PARQUET_TYPE_ILLEGAL), so it
     * surfaces as a raw nanosecond Long under the legacy conf — and a
-    * plain TIMESTAMP(MICROS) that reads natively. Branch on the
-    * surfaced type: a Long is nanos, truncated ns→µs with INTEGRAL
-    * division (`div`, not `/` — the ns values exceed Double's 53-bit
-    * exact-integer range, so a fractional divide would corrupt
+    * plain TIMESTAMP(MICROS) that reads natively. */
+  def events(s: SparkSession, d: String): DataFrame = eventsWith(s, d)(identity)
+
+  /** The one events `ts` adapter, shared by the batch reader
+    * ([[events]]) and the stream reader
+    * ([[graft.streaming.Streams.eventsStream]]): `read` gets the batch
+    * frame (its schema is the one a stream must declare — declaring
+    * Long against a µs file silently yields garbage epochs, not an
+    * error) and the frame it returns gets `ts` as TIMESTAMP µs. Branch
+    * on the surfaced type: a Long is nanos, truncated ns→µs with
+    * INTEGRAL division (`div`, not `/` — the ns values exceed Double's
+    * 53-bit exact-integer range, so a fractional divide would corrupt
     * low-order digits); a native timestamp is already µs. µs matches
     * DuckDB, whose `CAST(ts AS TIMESTAMP)` lands on µs for both
     * encodings, so oracle parity holds either way. */
-  def events(s: SparkSession, d: String): DataFrame = {
+  private[graft] def eventsWith(s: SparkSession, d: String)(
+      read: DataFrame => DataFrame): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
+    val raw = read(table(s, d, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts",

@@ -1,8 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.io.{Compact, LocalFs}
@@ -25,46 +30,20 @@ import graft.io.{Compact, LocalFs}
   */
 object Streams {
 
-  /** events.parquet has carried ts in two encodings across data
-    * generations (INT64 TIMESTAMP(NANOS) surfacing as a Long, and a
-    * native TIMESTAMP(MICROS)); a streaming read needs an explicit
-    * schema, so build it per the type the batch reader surfaces —
-    * declaring Long against a µs file silently yields garbage epochs,
-    * not an error. Mirrors [[graft.queries.Tables.events]]. */
-  private def rawSchema(tsType: org.apache.spark.sql.types.DataType) =
-    StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-
   /** Streaming source over the events parquet (file source — the
-    * directory-listing replacement for the reference's polling). */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Probe the encoding with a footer-only batch read (no data scan),
-    // then declare the matching stream schema.
-    val tsType = spark.read.parquet(s"$sfDir/events.parquet")
-      .schema("ts").dataType
+    * directory-listing replacement for the reference's polling). A
+    * streaming read needs an explicit schema: it is the one the batch
+    * reader surfaces, and [[graft.queries.Tables.eventsWith]] adapts
+    * `ts` exactly as it does for [[graft.queries.Tables.events]]. */
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
     // The file source wants a DIRECTORY to list (that's the whole
     // point — it replaces the reference's arrival polling); the
     // harness table is a single file, so list its parent filtered.
-    val src = spark.readStream
-      .schema(rawSchema(tsType))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    tsType match {
-      case LongType =>
-        src.withColumn("ts", timestamp_micros(expr("ts div 1000L")))
-      case TimestampNTZType =>
-        // Watermarks require TIMESTAMP (ltz); session TZ is pinned
-        // UTC, so the cast preserves wall-clock.
-        src.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => src
-    }
-  }
+    graft.queries.Tables.eventsWith(spark, sfDir)(batch =>
+      spark.readStream
+        .schema(batch.schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sfDir))
 
   /** Tumbling event-time window aggregation — the STREAMING form of
     * the identical batch expression (Relational.tumblingWindow / q19).
@@ -223,25 +202,18 @@ object Streams {
     * within one run, each partition value must arrive in a single
     * micro-batch (true for date-partitioned daily loads — one day per
     * arrival file), because a later batch REPLACES any partition it
-    * touches. Checkpointing makes the replay restartable; the file
-    * commit protocol makes each batch's overwrite atomic. */
+    * touches. Checkpointing makes the replay restartable. A batch's
+    * overwrite is NOT atomic: Spark's job commit deletes each touched
+    * partition directory and then renames the staged one into place,
+    * so a crash inside that loop leaves those dates missing until a
+    * re-run replaces them, and a concurrent reader can see a date
+    * missing (ROADMAP direction 1). */
   def incrementalLoad(df: DataFrame, path: String, partitionCol: String,
-      checkpoint: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = df.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.io.IdempotentWriter.overwritePartitions(
-            batch, path, partitionCol, addLoadDate = false)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      checkpoint: String): Unit =
+    drain(df, Some(checkpoint))(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      graft.io.IdempotentWriter.overwritePartitions(
+        batch, path, partitionCol, addLoadDate = false)
+    })
 
   /** Streaming SCD2 dimension maintenance: each arriving batch of
     * (k, cents) member versions merges into the dimension at
@@ -273,21 +245,10 @@ object Streams {
     * partitions (the q105 scope discipline); dimensions are dwarfed
     * by facts, so the full-outer stays cheap. */
   def scd2Load(incoming: DataFrame, dimPath: String,
-      checkpoint: String): Unit = {
-    val spark = incoming.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = incoming.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          scd2Merge(batch, dimPath)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      checkpoint: String): Unit =
+    drain(incoming, Some(checkpoint))(_.foreachBatch {
+      (batch: DataFrame, _: Long) => scd2Merge(batch, dimPath)
+    })
 
   /** One micro-batch merged into the dimension, swapped in through
     * [[Compact.replace]]: a crash at any point leaves a
@@ -399,69 +360,75 @@ object Streams {
     * same arrivals into an all-seen anti-join and appends NOTHING —
     * the idempotent re-run contract, dedup-flavored. */
   def dedupCorpusLoad(docs: DataFrame, fpExpr: org.apache.spark.sql.Column,
-      path: String, checkpoint: String): Unit = {
-    val spark = docs.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = docs.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val cols = batch.columns.map(col).toIndexedSeq
-          val keepers = batch.withColumn("fp", fpExpr)
-            .groupBy(col("fp"))
-            .agg(min_by(struct(cols: _*), col("doc_id")).as("d"))
-            .select(col("fp") +: cols.map(c => col(s"d.$c")): _*)
-          val fresh =
-            if (graft.io.IdempotentWriter.pathExists(
-                batch.sparkSession, path))
-              keepers.join(
-                batch.sparkSession.read.parquet(path).select("fp"),
-                Seq("fp"), "left_anti")
-            else keepers
-          LocalFs.write(fresh).mode("append").parquet(path)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      path: String, checkpoint: String): Unit =
+    drain(docs, Some(checkpoint))(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      val cols = batch.columns.map(col).toIndexedSeq
+      val keepers = batch.withColumn("fp", fpExpr)
+        .groupBy(col("fp"))
+        .agg(min_by(struct(cols: _*), col("doc_id")).as("d"))
+        .select(col("fp") +: cols.map(c => col(s"d.$c")): _*)
+      val fresh =
+        if (graft.io.IdempotentWriter.pathExists(batch.sparkSession, path))
+          keepers.join(
+            batch.sparkSession.read.parquet(path).select("fp"),
+            Seq("fp"), "left_anti")
+        else keepers
+      LocalFs.write(fresh).mode("append").parquet(path)
+    })
 
-  /** Run a streaming DataFrame to completion (AvailableNow) into a
-    * memory sink and return the sink table.
+  /** The engine's one runner for a bounded stream (SURVEY §2.10's
+    * arrival scan): `sink` configures the writer, the stream runs under
+    * `Trigger.AvailableNow` to completion, and `drain` returns once its
+    * last micro-batch has committed.
     *
     * Stateful operators create one state store PER shuffle partition;
-    * for these bounded replays 32 partitions means 32 stores of
-    * per-micro-batch setup/commit overhead dwarfing the data. Pin a
-    * small partition count for the stream's lifetime (a live
-    * deployment sizes this to state volume, not CPU count). */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode,
+    * for these bounded replays the session's count (32 at bench size)
+    * means 32 stores of per-micro-batch setup/commit overhead dwarfing
+    * the data, so the stream runs on 4 (a live deployment sizes this to
+    * state volume, not CPU count). `noDataBatches`, when given, sets
+    * whether a trailing no-data micro-batch runs. Both are held on the
+    * session only around `start()`: the query's constructor clones the
+    * session (`StreamExecution`, Spark 4.1) and every micro-batch
+    * plans on the clone, so the caller's session keeps its own conf
+    * for the whole run — driver-side work a `foreachBatch` body does
+    * on it plans with its own partition count (StreamsSpec pins both).
+    * A fresh checkpoint records the count; a resumed one keeps the
+    * count it recorded. */
+  def drain(df: DataFrame, checkpoint: Option[String] = None,
+      noDataBatches: Option[Boolean] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val w = sink(df.writeStream).trigger(Trigger.AvailableNow())
+    checkpoint.foreach(w.option("checkpointLocation", _))
+    val pin = ("spark.sql.shuffle.partitions" -> "4") +: noDataBatches.map(
+      b => "spark.sql.streaming.noDataMicroBatches.enabled" -> b.toString).toSeq
+    graft.Session.withConf(df.sparkSession, pin: _*)(w.start())
+      .awaitTermination()
+  }
+
+  /** Memory-sink names are unique per invocation (verify + bench share
+    * one session), and the PREVIOUS sink of the same base is dropped
+    * when a new one starts — MemorySink retains its full row copy in
+    * driver memory, so without the drop every bench/verify pass would
+    * permanently accumulate another copy of its output. */
+  private val sinkSeq = new AtomicLong(0)
+  private val lastSink = TrieMap.empty[String, String]
+
+  /** [[drain]] a streaming DataFrame into a memory sink named
+    * `<base>_<n>` and return the sink table.
+    *
+    * The trailing no-data micro-batch is skipped unless the stream
+    * NEEDS the final watermark advance (event-time timeouts —
+    * sessionize, `finalizeWatermark`): it exists to advance the
+    * watermark for Append-mode state, and for Complete-mode aggs /
+    * immediate-emit operators (dedup, inner interval join) it is pure
+    * state-store churn on a bounded replay. */
+  def runToMemory(df: DataFrame, base: String, mode: OutputMode,
       finalizeWatermark: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData =
-      spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // Skip the trailing no-data micro-batch unless the stream NEEDS
-    // the final watermark advance (event-time timeouts — sessionize):
-    // it exists to advance the watermark for Append-mode state, and
-    // for Complete-mode aggs / immediate-emit operators (dedup, inner
-    // interval join) it is pure state-store churn on a bounded replay.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      finalizeWatermark.toString)
-    try {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        prevNoData)
-    }
+    val name = s"${base}_${sinkSeq.incrementAndGet()}"
+    lastSink.put(base, name).foreach(spark.catalog.dropTempView)
+    drain(df, noDataBatches = Some(finalizeWatermark))(
+      _.format("memory").queryName(name).outputMode(mode))
     spark.table(name)
   }
 }

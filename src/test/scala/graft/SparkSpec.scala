@@ -7,7 +7,31 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for suites (created once per test JVM). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  override def afterAll(): Unit = () // session shared; JVM exit cleans up
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A fresh directory in `java.io.tmpdir`, deleted with its contents
+    * when the suite ends. Spec dirs named `graft_*` must come from
+    * here: they share the engine scratch orphan pass's namespace. */
+  protected def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  // The session is shared across suites; JVM exit stops it.
+  override def afterAll(): Unit =
+    tempDirs.forEach { d =>
+      // a test may have deleted its dir already (a store root handed
+      // over absent)
+      if (java.nio.file.Files.exists(d)) {
+        val s = java.nio.file.Files.walk(d)
+        try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        finally s.close()
+      }
+    }
 
   /** Assert the frame plans NO corpus-shuffling join (sort-merge or
     * shuffled-hash) — the bounded-broadcast plan contract several

@@ -37,7 +37,7 @@ class ArtifactRaceSpec extends SparkSpec {
   }
 
   private def tmpRoot(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_race_root")
+    val d = tempDir("graft_race_root")
     d.toFile.delete()
     d.toString
   }
@@ -66,7 +66,7 @@ class ArtifactRaceSpec extends SparkSpec {
   test("double-fired step on one artifact: exactly one of two live " +
       "publisher JVMs commits, the loser refuses loudly") {
     val root = tmpRoot()
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_bar")
+    val dir = tempDir("graft_race_bar")
     val go = new java.io.File(dir.toFile, "go")
     val readyA = new java.io.File(dir.toFile, "ra")
     val readyB = new java.io.File(dir.toFile, "rb")
@@ -104,7 +104,7 @@ class ArtifactRaceSpec extends SparkSpec {
   test("sibling artifacts under one root: two live publishers commit " +
       "independently, no false conflict") {
     val root = tmpRoot()
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_bar2")
+    val dir = tempDir("graft_race_bar2")
     val go = new java.io.File(dir.toFile, "go")
     val readyA = new java.io.File(dir.toFile, "ra")
     val readyB = new java.io.File(dir.toFile, "rb")
@@ -138,7 +138,7 @@ class ArtifactRaceSpec extends SparkSpec {
     var done = false
     for (attempt <- 1 to attempts if !done) {
       val root = tmpRoot()
-      val dir = java.nio.file.Files.createTempDirectory("graft_race_bar3")
+      val dir = tempDir("graft_race_bar3")
       val go = new java.io.File(dir.toFile, "go")
       val readyA = new java.io.File(dir.toFile, "ra")
       touch(go) // no barrier: the holder publishes as soon as it is up

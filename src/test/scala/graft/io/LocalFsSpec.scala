@@ -88,7 +88,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("a bucketed table written through the helper keeps no fs.file.* " +
       "option in the catalog, so its readers get the stock file system") {
-    val loc = Files.createTempDirectory("graft_localfs_spec").resolve("t").toString
+    val loc = tempDir("graft_localfs_spec").resolve("t").toString
     BucketedLayout.writeBucketed(facts, "localfs_spec_bucketed", "id", 2, Some(loc))
     val t = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier("localfs_spec_bucketed"))

@@ -27,8 +27,7 @@ class ColdRestartSpec extends SparkSpec {
   test("ArtifactStore: versioned publish, manifest commit marker, " +
       "row-count verification teeth") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_artstore_spec").toString
+    val root = tempDir("graft_artstore_spec").toString
     try {
       val v1 = ArtifactStore.publish(
         Seq((1L, "a"), (2L, "b")).toDF("id", "s"), root, "t")
@@ -62,8 +61,7 @@ class ColdRestartSpec extends SparkSpec {
   test("ArtifactStore: readVersion time-travels to any committed " +
       "version and refuses uncommitted ones") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_readver_spec").toString
+    val root = tempDir("graft_readver_spec").toString
     try {
       (1 to 3).foreach { i =>
         ArtifactStore.publish(
@@ -100,8 +98,7 @@ class ColdRestartSpec extends SparkSpec {
   test("ArtifactStore: prune keeps the newest K committed versions, " +
       "removes older ones and crash debris, never the serving version") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_prune_spec").toString
+    val root = tempDir("graft_prune_spec").toString
     try {
       for (i <- 1 to 4)
         ArtifactStore.publish(
@@ -138,8 +135,7 @@ class ColdRestartSpec extends SparkSpec {
   test("ArtifactStore: a retyped column fails the read loudly — the " +
       "manifest verifies types, not just field names") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_retype_spec").toString
+    val root = tempDir("graft_retype_spec").toString
     try {
       ArtifactStore.publish(Seq((1L, 2L)).toDF("id", "n"), root, "t")
       // republish the SAME field names with one column retyped
@@ -156,8 +152,7 @@ class ColdRestartSpec extends SparkSpec {
   test("ArtifactStore: a crash between manifest write and commit leaves " +
       "only a temp file — readers skip the version, publish supersedes it") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_tornman_spec").toString
+    val root = tempDir("graft_tornman_spec").toString
     try {
       ArtifactStore.publish(Seq((1L, "a")).toDF("id", "s"), root, "t")
       // simulate the advisor's crash window: data written, manifest
@@ -192,8 +187,7 @@ class ColdRestartSpec extends SparkSpec {
       "artifact k and k+1 leaves snapshot readers serving the previous " +
       "COMPLETE consistent set — never a mixed day") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_spec").toString
+    val root = tempDir("graft_snap_spec").toString
     try {
       // day 1: two artifacts + the snapshot as the LAST act
       val a1 = ArtifactStore.publish(Seq((1L, "d1")).toDF("id", "tag"),
@@ -263,8 +257,7 @@ class ColdRestartSpec extends SparkSpec {
       "a crash-retry that publishes twice before its snapshot commits " +
       "cannot wedge snapshot readers (count-based retention alone would)") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_prunepin_spec").toString
+    val root = tempDir("graft_prunepin_spec").toString
     try {
       ArtifactStore.publish(Seq((1L, "d1")).toDF("id", "tag"), root, "a")
       ArtifactStore.publish(Seq((1L, "d1")).toDF("id", "tag"), root, "b")
@@ -316,8 +309,7 @@ class ColdRestartSpec extends SparkSpec {
       "publish time instead of inflating the counter past the step, " +
       "while a crash-retry reclaims its own debris and mints its step") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_expectv_spec").toString
+    val root = tempDir("graft_expectv_spec").toString
     try {
       // step 1 publishes v1
       assert(ArtifactStore.publish(Seq((1L, "s1")).toDF("id", "tag"),
@@ -356,8 +348,7 @@ class ColdRestartSpec extends SparkSpec {
   test("the label chain refuses a root owned by another publisher: a " +
       "foreign snapshot must fail loudly, never silently no-op a step") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_chainguard_spec").toString
+    val root = tempDir("graft_chainguard_spec").toString
     try {
       ArtifactStore.publish(Seq((1L, "x")).toDF("id", "tag"),
         root, "someone_elses")
@@ -409,8 +400,7 @@ class ColdRestartSpec extends SparkSpec {
       "seven artifacts, exits, and the five delta paths read them cold " +
       "and equal their warm twins") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_coldpub_spec").toString
+    val root = tempDir("graft_coldpub_spec").toString
     hadoopDelete(root) // publisher owns creation
     try {
       // ---- the "yesterday" process: publish and DIE ----
@@ -464,8 +454,7 @@ class ColdRestartSpec extends SparkSpec {
       "increment through the store and DIE; day 3's index equals the " +
       "one-shot rebuild list-for-list") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_chain_spec").toString
+    val root = tempDir("graft_chain_spec").toString
     hadoopDelete(root)
     try {
       // day 1 and day 2: separate JVMs, strictly sequential, each dead
@@ -526,8 +515,7 @@ class ColdRestartSpec extends SparkSpec {
       "across three JVMs equals the one-shot rebuild label-for-label, " +
       "and a FOURTH process replaying a finished step is a no-op") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_label_chain").toString
+    val root = tempDir("graft_label_chain").toString
     hadoopDelete(root)
     try {
       // days 1 and 2: separate JVMs, each dead before the next starts
@@ -592,10 +580,8 @@ class ColdRestartSpec extends SparkSpec {
       (8L, s"$textA $textB"))
       .map { case (id, t) => (id, t, "en", "fixture", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val fixDir = java.nio.file.Files
-      .createTempDirectory("graft_label_fix").toString
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_label_fix_store").toString
+    val fixDir = tempDir("graft_label_fix").toString
+    val root = tempDir("graft_label_fix_store").toString
     hadoopDelete(root)
     try {
       docs.coalesce(1).write.mode("overwrite")
@@ -639,8 +625,7 @@ class ColdRestartSpec extends SparkSpec {
       "FOURTH process replaying a finished step is a content no-op — " +
       "the high-water mark survives on storage") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_rollup_chain").toString
+    val root = tempDir("graft_rollup_chain").toString
     hadoopDelete(root)
     try {
       for (s <- 1 to 3) {
@@ -686,8 +671,7 @@ class ColdRestartSpec extends SparkSpec {
       "uninterrupted run — and a NEW checkpoint lineage fails loudly") {
     val dir = "/root/testdata/sf0.001"
     Tables.prep(spark)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_killresume")
+    val base = tempDir("graft_killresume")
     val arrival = base.resolve("arrival")
     java.nio.file.Files.createDirectories(arrival)
     val ckpt = base.resolve("ckpt").toString
@@ -782,8 +766,7 @@ class ColdRestartSpec extends SparkSpec {
     * the store root back for the content comparison. */
   private def killResumeCell(cell: String,
       writeSlice: (java.nio.file.Path, Int) => Unit): String = {
-    val base = java.nio.file.Files
-      .createTempDirectory(s"graft_killresume_$cell")
+    val base = tempDir(s"graft_killresume_$cell")
     val arrival = base.resolve("arrival")
     java.nio.file.Files.createDirectories(arrival)
     val ckpt = base.resolve("ckpt").toString
@@ -935,8 +918,7 @@ class ColdRestartSpec extends SparkSpec {
       "artifact: both commit, versions are monotone, every manifest " +
       "attests data that is actually there, no lock debris") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_coldpub_race").toString
+    val root = tempDir("graft_coldpub_race").toString
     hadoopDelete(root)
     try {
       // two full publish runs from two JVMs, launched together — the

@@ -14,7 +14,7 @@ class RelationalSpec extends SparkSpec {
     Tables.prep(spark)
     // external tmp locations, like every production caller: a killed
     // test run must not leak layouts into the unswept ./spark-warehouse
-    val loc = java.nio.file.Files.createTempDirectory("graft_spec_b")
+    val loc = tempDir("graft_spec_b")
     graft.io.BucketedLayout.writeBucketed(
       Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")),
       "spec_orders_b", "o_orderkey", 4,
@@ -78,24 +78,14 @@ class RelationalSpec extends SparkSpec {
 
   test("q93 injects a runtime bloom filter that prunes the fact side pre-shuffle") {
     Tables.prep(spark)
-    val scoped = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      // injection requires a probably-shuffle join; see bloomPruneJoin
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    val withBloom = try {
+    // the confs bloomPruneJoin itself runs under
+    val withBloom = graft.Session.withConf(spark, Relational.bloomConfs: _*) {
       val df = Relational.bloomPruneJoinPlan(spark, dir)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("might_contain"),
         s"runtime bloom filter must inject under the scoped confs:\n$plan")
       assert(plan.contains("bloom_filter_agg"), plan)
       df.collect().map(_.toSeq).toSet
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
     // pruning is semantics-preserving: same rows without the bloom
     val without = {

@@ -111,8 +111,7 @@ class WarehouseIvmSpec extends SparkSpec {
     val b1 = batch((1, "view", 1.5), (1, "view", 2.5), (2, "click", 4.0))
     val b2 = batch((3, "view", 3.0))
     val late = batch((1, "click", 9.0)) // fecha 1 RE-arrives, corrected
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_q220_spec").toString
+    val store = tempDir("graft_q220_spec").toString
     WarehouseIvm.applyRollupBatch(spark, b1, store)
     WarehouseIvm.applyRollupBatch(spark, b2, store)
     val afterTwo = content(store)
@@ -131,8 +130,7 @@ class WarehouseIvmSpec extends SparkSpec {
       ("2024-01-03", "view", 1L, 3.0)))
     // any-fecha-batching law: the same arrivals as ONE batch build the
     // same store content
-    val one = java.nio.file.Files
-      .createTempDirectory("graft_q220_one").toString
+    val one = tempDir("graft_q220_one").toString
     WarehouseIvm.applyRollupBatch(spark,
       batch((1, "click", 9.0), (2, "click", 4.0), (3, "view", 3.0)), one)
     assert(content(one) === afterLate)
@@ -169,15 +167,13 @@ class WarehouseIvmSpec extends SparkSpec {
     val f1 = batch((Some(1), "view", 1.5), (Some(1), "click", 2.0))
     val f2 = batch((Some(1), "view", 2.5), (None, "view", 7.0))
     val f3 = batch((Some(1), "view", 4.0), (Some(2), "click", 9.0))
-    val split = java.nio.file.Files
-      .createTempDirectory("graft_q222_split").toString
+    val split = tempDir("graft_q222_split").toString
     WarehouseIvm.applyRollupBatchAdditive(spark, f1, 0L, "L", split)
     WarehouseIvm.applyRollupBatchAdditive(spark, f2, 1L, "L", split)
     WarehouseIvm.applyRollupBatchAdditive(spark, f3, 2L, "L", split)
     val afterSplit = content(split)
     // == the one-batch build of the same rows
-    val one = java.nio.file.Files
-      .createTempDirectory("graft_q222_one").toString
+    val one = tempDir("graft_q222_one").toString
     WarehouseIvm.applyRollupBatchAdditive(spark,
       f1.unionByName(f2).unionByName(f3), 0L, "L", one)
     assert(afterSplit === content(one),
@@ -196,8 +192,7 @@ class WarehouseIvmSpec extends SparkSpec {
     assert(content(split) === afterSplit, "replayed batch double-counted")
     // order-insensitivity: the same files as (f3, f1, f2) build the
     // same content — ⊕ is commutative/associative
-    val perm = java.nio.file.Files
-      .createTempDirectory("graft_q222_perm").toString
+    val perm = tempDir("graft_q222_perm").toString
     WarehouseIvm.applyRollupBatchAdditive(spark, f3, 0L, "L", perm)
     WarehouseIvm.applyRollupBatchAdditive(spark, f1, 1L, "L", perm)
     WarehouseIvm.applyRollupBatchAdditive(spark, f2, 2L, "L", perm)

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -536,5 +538,77 @@ class StreamsSpec extends SparkSpec {
       graft.queries.Curation.latestLabels(store).get.toString).collect()
     assert(rows.length === rows.map(_.getLong(0)).distinct.length,
       s"duplicate doc rows in the replayed snapshot: ${rows.length}")
+  }
+
+  // ---------------------------------------------------------------
+  // Streams.drain / runToMemory
+  // ---------------------------------------------------------------
+
+  private val Partitions = "spark.sql.shuffle.partitions"
+
+  /** A listed arrival dir holding `files` parquet files of ids. */
+  private def arrivals(prefix: String, files: Int): String = {
+    val dir = tempDir(prefix).resolve("in").toString
+    for (i <- 0 until files)
+      spark.range(i * 10L, i * 10L + 10).coalesce(1)
+        .write.mode("append").parquet(dir)
+    dir
+  }
+
+  private def idStream(dir: String, maxFiles: Int = 1000) =
+    spark.readStream.schema("id BIGINT")
+      .option("maxFilesPerTrigger", maxFiles).parquet(dir)
+
+  test("drain: micro-batches plan on 4 shuffle partitions while the " +
+      "caller's session keeps its own count for the whole run") {
+    val dir = arrivals("drain_outer", 2)
+    val ckpt = tempDir("drain_outer_ckpt").toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    graft.Session.withConf(spark, Partitions -> "7") {
+      Streams.drain(idStream(dir, maxFiles = 1), Some(ckpt))(_.foreachBatch {
+        (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.add((spark.conf.get(Partitions),
+            batch.sparkSession.conf.get(Partitions)))
+          ()
+      })
+      assert(spark.conf.get(Partitions) === "7")
+    }
+    assert(seen.asScala.toSeq === Seq(("7", "4"), ("7", "4")),
+      "one (outer, batch) reading per arrival file")
+  }
+
+  test("drain: a stateful run keeps 4 state-store partitions on a " +
+      "session holding another count") {
+    val dir = arrivals("drain_state", 2)
+    val ckpt = tempDir("drain_state_ckpt")
+    graft.Session.withConf(spark, Partitions -> "7") {
+      Streams.drain(idStream(dir).groupBy((col("id") % 3).as("k")).count(),
+        Some(ckpt.toString))(_.format("noop").outputMode("complete"))
+    }
+    val s = java.nio.file.Files.list(ckpt.resolve("state").resolve("0"))
+    val parts = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.forall(_.isDigit)).toSeq.sorted finally s.close()
+    assert(parts === Seq("0", "1", "2", "3"))
+  }
+
+  test("runToMemory: a new run of a base drops the previous sink of that " +
+      "base only") {
+    val dir = arrivals("rtm_drop", 2)
+    def sinks(base: String): Set[String] = spark.catalog.listTables()
+      .collect().map(_.name).filter(_.startsWith(base + "_")).toSet
+    val other = Streams.runToMemory(idStream(dir), "rtm_other",
+      org.apache.spark.sql.streaming.OutputMode.Append())
+    val first = Streams.runToMemory(idStream(dir), "rtm_probe",
+      org.apache.spark.sql.streaming.OutputMode.Append())
+    val firstName = sinks("rtm_probe")
+    assert(firstName.size === 1)
+    assert(first.count() === 20)
+    val second = Streams.runToMemory(idStream(dir), "rtm_probe",
+      org.apache.spark.sql.streaming.OutputMode.Append())
+    val secondName = sinks("rtm_probe")
+    assert(secondName.size === 1 && secondName != firstName,
+      s"previous sink kept: $firstName -> $secondName")
+    assert(second.count() === 20)
+    assert(sinks("rtm_other").size === 1 && other.count() === 20)
   }
 }
