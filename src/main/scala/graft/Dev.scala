@@ -223,7 +223,6 @@ object Dev {
   }
 
   private def zorder(spark: SparkSession, args: Seq[String]): Unit = {
-    graft.queries.Tables.prep(spark)
     val (lin, zo) = graft.queries.Relational.zorderWritten(spark, args.head)
     for ((label, path) <- Seq(("linear", lin), ("zorder", zo));
          dim <- Seq("ok", "pk")) {
@@ -237,7 +236,6 @@ object Dev {
 
   private def beam(spark: SparkSession, args: Seq[String]): Unit = {
     val sfDir = args.head
-    graft.queries.Tables.prep(spark)
     val sim = graft.queries.Similarity
     val exact5 = sim.cosineTopK(spark, sfDir).filter(col("rnk") <= 5)
       .select(col("qid"), col("vec_id")).persist()

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one SparkSession factory: `local[n]` with `n` shuffle
-  * partitions, UTC session time, no UI, WARN logs. */
+  * partitions, UTC session time, no UI, WARN logs, prepped by
+  * [[graft.queries.Tables.prep]] so every query runner can assume it. */
 object Session {
 
   /** Core count from `SPARK_GRAFT_CPUS`, or `fallback` when unset. */
@@ -18,6 +19,7 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.queries.Tables.prep(spark)
     spark
   }
 

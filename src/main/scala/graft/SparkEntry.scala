@@ -1,23 +1,32 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import graft.queries.{ColdRestart, Curation, Dedup, MultimodalQ, Reference, Relational, Similarity, StreamingQ, Temporal, TextAnalysis, WarehouseIvm}
+import graft.queries.{ColdRestart, Curation, Dedup, MultimodalQ, Query, Reference, Relational, Similarity, StreamingQ, Tables, Temporal, TextAnalysis, WarehouseIvm}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    Tables.prep(spark)
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  }
+  /** Every registered query, each once with its oracle. */
+  private val registry: Map[String, Query] =
     Relational.all ++ Reference.all ++ TextAnalysis.all ++
       Dedup.all ++ Similarity.all ++ StreamingQ.all ++ MultimodalQ.all ++
       Temporal.all ++ Curation.all ++ ColdRestart.all ++ WarehouseIvm.all
+  /** One entry per implemented operator from SURVEY.md §2. Each runner
+    * preps the session it is given first: the external driver and the
+    * perfbench harness hand in sessions the engine did not build. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        Tables.prep(spark)
+        q.run(spark, dir)
+      }
+    }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Reference.oracle ++ TextAnalysis.oracle ++
-      Dedup.oracle ++ Similarity.oracle ++ StreamingQ.oracle ++
-      MultimodalQ.oracle ++ Temporal.oracle ++ Curation.oracle ++
-      ColdRestart.oracle ++ WarehouseIvm.oracle
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    registry.map { case (name, q) => name -> q.oracle }
   /** Queries timed by [[Bench]]: everything except side-effecting /
     * driver-local-fixture probes (q35 writes a temp table per call,
     * q36 writes+reads a local CSV fixture — valid correctness probes,

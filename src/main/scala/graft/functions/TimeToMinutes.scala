@@ -137,7 +137,7 @@ object TimeToMinutesImpl {
 }
 
 /** Session-level registration of graft's native SQL functions.
-  * Registration is guarded (register-once) so per-query `prep` calls
+  * Registration is guarded (register-once) so repeated `prep` calls
   * don't spam replace-function warnings. */
 object GraftFunctions {
   def register(spark: SparkSession): Unit = {

@@ -66,7 +66,6 @@ object ColdRestart {
     * separate-JVM publisher the spec's process-boundary proof runs. */
   private[graft] def publishAll(spark: SparkSession, dir: String,
       root: String): Seq[ArtifactStore.Manifest] = {
-    prep(spark)
     val manifests = Seq(
       ArtifactStore.publish(Curation.baseSigsTable(spark, dir), root,
         SigArtifact),
@@ -130,7 +129,6 @@ object ColdRestart {
     * stays sorted), and publish the next version. */
   private[graft] def chainPublish(spark: SparkSession, dir: String,
       root: String, step: Int): ArtifactStore.Manifest = {
-    prep(spark)
     require(step >= 1 && step <= 3, s"chain step must be 1..3, got $step")
     // Replay guard (advisor find, round 12): each step publishes
     // exactly one version, so version == step. A replayed step whose
@@ -182,7 +180,6 @@ object ColdRestart {
     * high-water mark that survives on storage. */
   private[graft] def chainRollupPublish(spark: SparkSession, dir: String,
       root: String, step: Int): Unit = {
-    prep(spark)
     require(step >= 1 && step <= 3, s"rollup chain step must be 1..3: $step")
     val slice = Tables.events(spark, dir)
       .filter(col("user_id") % 3 === (step - 1))
@@ -228,7 +225,6 @@ object ColdRestart {
     * never pinned by any snapshot, so no reader ever saw them. */
   private[graft] def chainLabelPublish(spark: SparkSession, dir: String,
       root: String, step: Int): Unit = {
-    prep(spark)
     require(step >= 1 && step <= 3, s"label chain step must be 1..3: $step")
     val snap = ArtifactStore.latestSnapshot(spark, root)
     // The chain treats the root's snapshot counter as its step marker,
@@ -346,7 +342,6 @@ object ColdRestart {
 
   private[graft] def coldDedup(s: SparkSession, dir: String,
       root: String): DataFrame = {
-    prep(s)
     val snap = snapOf(s, root) // ONE snapshot for both artifacts
     val (sigs, labels) = par2(
       ArtifactStore.readAt(s, root, SigArtifact, snap)._1,
@@ -359,21 +354,18 @@ object ColdRestart {
 
   private[graft] def coldCodebook(s: SparkSession, dir: String,
       root: String): DataFrame = {
-    prep(s)
     Similarity.codebookRefreshFrom(s, dir,
       ArtifactStore.readAt(s, root, CodebookArtifact, snapOf(s, root))._1)
   }
 
   private[graft] def coldPostings(s: SparkSession, dir: String,
       root: String): DataFrame = {
-    prep(s)
     TextAnalysis.incrementalPostingsFrom(s, dir,
       ArtifactStore.readAt(s, root, PostingsArtifact, snapOf(s, root))._1)
   }
 
   private[graft] def coldGraphInsert(s: SparkSession, dir: String,
       root: String, rebuilt: DataFrame): DataFrame = {
-    prep(s)
     Similarity.graphInsertCompareFrom(s, dir,
       ArtifactStore.readAt(s, root, GraphArtifact, snapOf(s, root))._1,
       rebuilt)
@@ -381,7 +373,6 @@ object ColdRestart {
 
   private[graft] def coldBm25(s: SparkSession, dir: String,
       root: String): DataFrame = {
-    prep(s)
     val snap = snapOf(s, root) // ONE snapshot for both stat artifacts
     val (scalars, hits) = par2(
       ArtifactStore.readAt(s, root, Bm25ScalarsArtifact, snap)._1,
@@ -421,7 +412,6 @@ object ColdRestart {
     * the WARM session where it is already memoized, so the cold call
     * measures the cold INSERT, not a redundant full rebuild. */
   def coldGraphInsertQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val root = publishedStore(spark, dir)
     val rebuilt = Similarity.refinedEdges(spark, dir)
       .filter(col("src") > Similarity.vecDeltaThreshold(spark, dir))
@@ -456,7 +446,6 @@ object ColdRestart {
     * increments flow to the run's REPORTS, the reference's own shape
     * — its daily loads publish warehouse rows, not index rebuilds.) */
   def coldDaily(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val root = publishedStore(spark, dir) // day N-1's hand-off
     val s = fresh(spark)
     // Every read resolves through day N-1's SNAPSHOT — the version
@@ -511,24 +500,19 @@ object ColdRestart {
       }))
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q204_cold_incremental_dedup" -> coldIncrementalDedup,
-    "q205_cold_codebook_refresh" -> coldCodebookRefresh,
-    "q206_cold_postings_merge" -> coldPostingsMerge,
-    "q207_cold_graph_insert" -> coldGraphInsertQ,
-    "q210_cold_bm25_merge" -> coldBm25Merge,
-    "q221_cold_daily" -> coldDaily
-  )
-
   /** Each cold query emits the identical surface as its warm twin, so
     * it shares the twin's full-rebuild oracle verbatim — the hash
     * match is the from-disk-incremental == rebuild proof. */
-  val oracle: Map[String, String] = Map(
-    "q204_cold_incremental_dedup" -> Curation.incrementalDedupSql,
-    "q205_cold_codebook_refresh" -> Similarity.codebookRefreshSql,
-    "q206_cold_postings_merge" -> TextAnalysis.incrementalPostingsSql,
-    "q207_cold_graph_insert" -> Similarity.incrementalGraphInsertSql,
-    "q210_cold_bm25_merge" -> TextAnalysis.bm25Sql,
-    "q221_cold_daily" -> Curation.incrementalDailySql
+  val all: Map[String, Query] = Map(
+    "q204_cold_incremental_dedup" ->
+      Query(coldIncrementalDedup, Curation.incrementalDedupSql),
+    "q205_cold_codebook_refresh" ->
+      Query(coldCodebookRefresh, Similarity.codebookRefreshSql),
+    "q206_cold_postings_merge" ->
+      Query(coldPostingsMerge, TextAnalysis.incrementalPostingsSql),
+    "q207_cold_graph_insert" ->
+      Query(coldGraphInsertQ, Similarity.incrementalGraphInsertSql),
+    "q210_cold_bm25_merge" -> Query(coldBm25Merge, TextAnalysis.bm25Sql),
+    "q221_cold_daily" -> Query(coldDaily, Curation.incrementalDailySql)
   )
 }

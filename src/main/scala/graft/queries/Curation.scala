@@ -158,7 +158,6 @@ object Curation {
     * documents count as size-1 clusters so the histogram partitions
     * the whole corpus. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val labels = dupClusterLabels(spark, dir)
     documents(spark, dir).select(col("doc_id"))
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
@@ -264,7 +263,6 @@ object Curation {
     * (also spec-pinned label-for-label at sf0.001, and by the bridge
     * fixture). */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     dedupHistogramOf(incrementalLabels(spark, dir),
       deltaThreshold(spark, dir))
   }
@@ -383,7 +381,6 @@ object Curation {
     * corpus states. The one-pair-bridges-two-clusters case is
     * spec-pinned on an engineered fixture. */
   def labelBlastRadius(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     blastRadiusOf(incrementalLabels(spark, dir),
       baseCcLabels(spark, dir), deltaThreshold(spark, dir))
   }
@@ -457,7 +454,6 @@ object Curation {
     * publishes. Oracle = q213's verbatim — the surface changed (warm
     * memos → versioned store), the answer must not. */
   def snapshotDiffCold(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val root = labelSnapshotLineage(spark, dir)
     val s = ColdRestart.fresh(spark)
     val v = graft.io.ArtifactStore
@@ -713,7 +709,6 @@ object Curation {
     * labels, so the hash match re-proves incremental == rebuild at
     * the decision grain a consumer actually sees. */
   def arrivalDecisions(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val thr = deltaThreshold(spark, dir)
     val labels = memo(spark, dir, "inc_labels")(incrementalLabels(spark, dir))
     val sizes = labels.groupBy(col("root")).agg(count(lit(1)).as("csize"))
@@ -786,7 +781,6 @@ object Curation {
     * SURVIVING corpus from scratch — the hash match proves
     * repair == rebuild, including the split cases. */
   def retractionRepair(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     retractionLabels(spark, dir)
       .select(col("root"))
       .groupBy(col("root")).agg(count(lit(1)).as("csize"))
@@ -907,7 +901,6 @@ object Curation {
     * projection (the q101 discipline). Excluded from the bench set
     * (writes a scratch audit table per call). */
   def incrementalDaily(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     dailyRunWith(dir, DailyArms(
       s = spark,
       auditName = "q197",
@@ -1122,7 +1115,6 @@ object Curation {
     * across re-runs (the q73 contract), now also stable under
     * re-crawled duplicates arriving with new doc_ids. */
   def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val labels = dupClusterLabels(spark, dir)
     val docs = documents(spark, dir).select(col("doc_id"))
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
@@ -1211,7 +1203,6 @@ object Curation {
     * reconcile is the coarse fast path, this is the row-grain
     * classification run on the flagged slice. */
   def snapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val base = documents(spark, dir)
     val snapA = base.select(col("doc_id"), col("source").as("src_a"),
       md5(col("text")).as("h_a"))
@@ -1289,7 +1280,6 @@ object Curation {
     * (the q51 contract), so the argmax and its tiebreak are
     * cross-engine exact. */
   def qualityKeeper(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val labels = dupClusterLabels(spark, dir)
     TextAnalysis.scoredDocs(spark, dir)
       .select(col("doc_id"), col("quality"))
@@ -1385,7 +1375,6 @@ object Curation {
   }
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val train = documents(spark, dir)
       .filter(col("doc_id") % 97 =!= 0)
     val contaminated = contaminatedDocs(spark, dir)
@@ -1447,7 +1436,6 @@ object Curation {
     * two id-keyed semi/anti joins against the corpus scan; no new
     * corpus-sized shuffle is introduced by composing. */
   def corpusBuild(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val labels = dupClusterLabels(spark, dir)
     val scored = TextAnalysis.scoredDocs(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("quality"))
@@ -1550,7 +1538,6 @@ object Curation {
     * first-element seed equals the 0-seeded fold's first step,
     * verified). */
   def spanDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // Token hashes are computed behind an AGGREGATION BARRIER
     // (posexplode -> hash one row per token -> reassemble in position
     // order), not as a same-projection array: higher-order lambdas
@@ -1650,7 +1637,6 @@ object Curation {
     * kept-count and the kept-id sum so every keep decision lands in
     * the hash. */
   def sourceSample(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val rate = RatesBp.foldLeft(lit(DefaultRateBp)) { case (acc, (s, r)) =>
       when(col("source") === s, r).otherwise(acc)
     }
@@ -1709,7 +1695,6 @@ object Curation {
     * docs) ties identically in both engines via the doc_id
     * tiebreak. */
   def groupSample(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("source"), col("doc_id"),
         expr(s"${Exprs.hash60("cast(doc_id as string)")} % ${1L << 50}")
@@ -1768,7 +1753,6 @@ object Curation {
     * plain windowed cumsum produces identical offsets. */
   def sequencePack(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    prep(spark)
     val t = documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         size(split(trim(col("text")), "\\s+")).as("n"))
@@ -1845,7 +1829,6 @@ object Curation {
     * digest aggregate (or, in the real pipeline, the embedding
     * model's input iterator). */
   def chunk(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("lang"),
         split(lower(trim(col("text"))), "\\s+").as("toks"))
@@ -1918,7 +1901,6 @@ object Curation {
     * order-insensitive xor of (pos, doc_id) hashes. */
   def corpusShuffle(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    prep(spark)
     val t = documents(spark, dir).select(col("doc_id"))
       .withColumn("hk", expr(Exprs.hash60(
         s"concat('$ShuffleSeed:', cast(doc_id as string))")))
@@ -1985,7 +1967,6 @@ object Curation {
     * uncapped-weight total) is broadcast scalars over that tiny
     * table. */
   def mixtureAlloc(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val avail = documents(spark, dir)
       .select(col("source"),
         size(split(trim(col("text")), "\\s+")).as("n"))
@@ -2072,7 +2053,6 @@ object Curation {
     * operators costs no extra shuffle over q110 alone. */
   def shuffledPack(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    prep(spark)
     val t = documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         size(split(trim(col("text")), "\\s+")).as("n"))
@@ -2165,7 +2145,6 @@ object Curation {
       .select(col("user_id"), col("n_events"), col("example"))
 
   def assembleExamples(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     assembled(spark, dir)
       .withColumn("bucket", col("user_id") % 4)
       .withColumn("h", expr(Exprs.hash60("example")))
@@ -2215,7 +2194,6 @@ object Curation {
     * Expand entirely (the q22/q107 exact-vs-approx convention —
     * exact here so the oracle can mirror it). */
   def profile(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val docs = documents(spark, dir)
     val aggs = count(lit(1)).as("n_rows") +:
       ProfileCols.flatMap { c => Seq(
@@ -2276,7 +2254,6 @@ object Curation {
     * mirrors every value; `approx_percentile` is the one-line 100 TB
     * dial that collapses each pass to map-side sketches. */
   def robustOutliers(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = events(spark, dir)
       .filter(col("value").isNotNull)
       .select(col("event_id"), col("event_type"), col("value"))
@@ -2352,7 +2329,6 @@ object Curation {
     * buckets-sized. */
   def lengthBatches(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    prep(spark)
     val t = documents(spark, dir)
       .select(col("doc_id"),
         size(split(trim(col("text")), "\\s+")).as("n"))
@@ -2434,7 +2410,6 @@ object Curation {
     * stage, exactly like q90 — reproducible, re-runs and backfills
     * keep the same rows. */
   def temperatureSample(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val t = documents(spark, dir)
       .select(col("doc_id"), col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n"))
@@ -2519,7 +2494,6 @@ object Curation {
     * arithmetic on identical rounded inputs, no percentile pass
     * needed. */
   def qualityDupLift(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val dups = Dedup.minhashPairs(spark, dir)
       .select(explode(array(col("ia"), col("ib"))).as("doc_id"))
       .distinct()
@@ -2594,7 +2568,6 @@ object Curation {
     * the semantic mirror, not the plan. */
   def curriculumOrder(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    prep(spark)
     val t = TextAnalysis.scoredDocs(spark, dir)
       .select(col("doc_id"), col("quality"))
       .withColumn("qb", least(floor(col("quality") * 10), lit(9L))
@@ -2670,7 +2643,6 @@ object Curation {
     * enumerated (lattice search is a driver-side loop over this same
     * kernel). */
   def fdDiscovery(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     def fd(name: String, rows: DataFrame): DataFrame = rows
       .groupBy(col("lhs"), col("rhs")).agg(count(lit(1)).as("c"))
       .groupBy(col("lhs"))
@@ -2735,67 +2707,36 @@ object Curation {
       .mkString("", "\nUNION ALL\n", "\nORDER BY fd")
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q88_dedup_clusters" -> dedupClusters,
-    "q191_incremental_dedup" -> incrementalDedup,
-    "q213_label_blast_radius" -> labelBlastRadius,
-    "q215_snapshot_diff_cold" -> snapshotDiffCold,
-    "q195_arrival_decisions" -> arrivalDecisions,
-    "q196_retraction_repair" -> retractionRepair,
-    "q197_incremental_daily" -> incrementalDaily,
-    "q165_leakage_safe_split" -> leakageSafeSplit,
-    "q173_snapshot_diff" -> snapshotDiff,
-    "q89_decontaminate" -> decontaminate,
-    "q90_source_sample" -> sourceSample,
-    "q98_span_dedup" -> spanDedup,
-    "q106_group_sample" -> groupSample,
-    "q110_sequence_pack" -> sequencePack,
-    "q113_chunk" -> chunk,
-    "q114_corpus_shuffle" -> corpusShuffle,
-    "q115_mixture_alloc" -> mixtureAlloc,
-    "q118_assemble_examples" -> assembleExamples,
-    "q122_quality_keeper" -> qualityKeeper,
-    "q123_corpus_build" -> corpusBuild,
-    "q125_shuffled_pack" -> shuffledPack,
-    "q130_profile" -> profile,
-    "q134_robust_outliers" -> robustOutliers,
-    "q139_length_batches" -> lengthBatches,
-    "q143_temperature_sample" -> temperatureSample,
-    "q150_quality_dup_lift" -> qualityDupLift,
-    "q154_curriculum_order" -> curriculumOrder,
-    "q155_fd_discovery" -> fdDiscovery
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q88_dedup_clusters" -> dedupClustersSql,
-    "q191_incremental_dedup" -> incrementalDedupSql,
-    "q213_label_blast_radius" -> labelBlastRadiusSql,
+  val all: Map[String, Query] = Map(
+    "q88_dedup_clusters" -> Query(dedupClusters, dedupClustersSql),
+    "q191_incremental_dedup" -> Query(incrementalDedup, incrementalDedupSql),
+    "q213_label_blast_radius" -> Query(labelBlastRadius, labelBlastRadiusSql),
     // the surface changed (warm memos -> versioned store); the answer
     // must not — q213's oracle verbatim
-    "q215_snapshot_diff_cold" -> labelBlastRadiusSql,
-    "q195_arrival_decisions" -> arrivalDecisionsSql,
-    "q196_retraction_repair" -> retractionRepairSql,
-    "q197_incremental_daily" -> incrementalDailySql,
-    "q165_leakage_safe_split" -> leakageSafeSplitSql,
-    "q173_snapshot_diff" -> snapshotDiffSql,
-    "q89_decontaminate" -> decontaminateSql,
-    "q90_source_sample" -> sourceSampleSql,
-    "q98_span_dedup" -> spanDedupSql,
-    "q106_group_sample" -> groupSampleSql,
-    "q110_sequence_pack" -> sequencePackSql,
-    "q113_chunk" -> chunkSql,
-    "q114_corpus_shuffle" -> corpusShuffleSql,
-    "q115_mixture_alloc" -> mixtureAllocSql,
-    "q118_assemble_examples" -> assembleExamplesSql,
-    "q122_quality_keeper" -> qualityKeeperSql,
-    "q123_corpus_build" -> corpusBuildSql,
-    "q125_shuffled_pack" -> shuffledPackSql,
-    "q130_profile" -> profileSql,
-    "q134_robust_outliers" -> robustOutliersSql,
-    "q139_length_batches" -> lengthBatchesSql,
-    "q143_temperature_sample" -> temperatureSampleSql,
-    "q150_quality_dup_lift" -> qualityDupLiftSql,
-    "q154_curriculum_order" -> curriculumOrderSql,
-    "q155_fd_discovery" -> fdDiscoverySql
+    "q215_snapshot_diff_cold" -> Query(snapshotDiffCold, labelBlastRadiusSql),
+    "q195_arrival_decisions" -> Query(arrivalDecisions, arrivalDecisionsSql),
+    "q196_retraction_repair" -> Query(retractionRepair, retractionRepairSql),
+    "q197_incremental_daily" -> Query(incrementalDaily, incrementalDailySql),
+    "q165_leakage_safe_split" -> Query(leakageSafeSplit, leakageSafeSplitSql),
+    "q173_snapshot_diff" -> Query(snapshotDiff, snapshotDiffSql),
+    "q89_decontaminate" -> Query(decontaminate, decontaminateSql),
+    "q90_source_sample" -> Query(sourceSample, sourceSampleSql),
+    "q98_span_dedup" -> Query(spanDedup, spanDedupSql),
+    "q106_group_sample" -> Query(groupSample, groupSampleSql),
+    "q110_sequence_pack" -> Query(sequencePack, sequencePackSql),
+    "q113_chunk" -> Query(chunk, chunkSql),
+    "q114_corpus_shuffle" -> Query(corpusShuffle, corpusShuffleSql),
+    "q115_mixture_alloc" -> Query(mixtureAlloc, mixtureAllocSql),
+    "q118_assemble_examples" -> Query(assembleExamples, assembleExamplesSql),
+    "q122_quality_keeper" -> Query(qualityKeeper, qualityKeeperSql),
+    "q123_corpus_build" -> Query(corpusBuild, corpusBuildSql),
+    "q125_shuffled_pack" -> Query(shuffledPack, shuffledPackSql),
+    "q130_profile" -> Query(profile, profileSql),
+    "q134_robust_outliers" -> Query(robustOutliers, robustOutliersSql),
+    "q139_length_batches" -> Query(lengthBatches, lengthBatchesSql),
+    "q143_temperature_sample" -> Query(temperatureSample, temperatureSampleSql),
+    "q150_quality_dup_lift" -> Query(qualityDupLift, qualityDupLiftSql),
+    "q154_curriculum_order" -> Query(curriculumOrder, curriculumOrderSql),
+    "q155_fd_discovery" -> Query(fdDiscovery, fdDiscoverySql)
   )
 }

@@ -79,7 +79,6 @@ object Dedup {
     * doc_id per group. Output digests the survivor set by group size
     * so every keeper choice affects the result. */
   def exactDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("doc_id"),
         md5(expr(
@@ -191,7 +190,6 @@ object Dedup {
     * storage once and share it across dedup runs. Jaccard uses
     * |A∪B| = |A|+|B|-|A∩B| (one intersect per pair, no union). */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     minhashPairs(spark, dir)
       .select(col("ia"), col("ib"), round(col("jraw"), 4).as("jaccard"))
       .orderBy("ia", "ib")
@@ -331,7 +329,6 @@ object Dedup {
     * pinned, never all-pairs) + a semi-join against the memoized
     * verified pairs; each config's output is one row. */
   def lshTuning(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val sigs = minhashSigs(spark, dir).select(col("doc_id"), col("sig"))
     val verified = minhashPairs(spark, dir).select(col("ia"), col("ib"))
     val totTrue = verified.agg(count(lit(1)).as("n_true"))
@@ -419,7 +416,6 @@ object Dedup {
     * wide-block geometry that survives a 100× corpus, unlike 4-bit
     * blocks whose 16-value keys make candidates O(N²/32). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     simhashCandidates(spark, dir)
       .withColumn("hamming", expr("bit_count(sha ^ shb)"))
       .filter(col("hamming") <= HammingMax)
@@ -432,7 +428,6 @@ object Dedup {
     * ~linearly (not quadratically) when the corpus doubles. */
   private[graft] def simhashCandidates(
       spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // Derives from the shared shingle-hash base (one md5 pass for
     // q56+q57). bit_majority is the native one-pass kernel (the
     // per-bit filter() walks cost ~4s alone at sf0.1). The candidate
@@ -506,7 +501,6 @@ object Dedup {
     * string gram sets — equal cardinalities unless a 64-bit collision
     * occurs (~1e-10 here). */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // See minhashLsh for the repartition-before-projection +
     // shuffle_hash rationale (never single-task gram building or pair
     // generation, never per-pair hash sets).
@@ -588,7 +582,6 @@ object Dedup {
     * universe). The digest xors fp hashes per cell so the WHICH of
     * the overlap is pinned, not just the count. */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val fpSrc = documents(spark, dir)
       .select(col("source"),
         md5(expr(
@@ -619,21 +612,12 @@ object Dedup {
       |  bit_xor(h) AS fp_digest
       |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q55_exact_dedup" -> exactDedup,
-    "q56_minhash_lsh" -> minhashLsh,
-    "q57_simhash" -> simhash,
-    "q58_ngram_jaccard" -> ngramJaccard,
-    "q164_lsh_tuning" -> lshTuning,
-    "q116_source_overlap" -> sourceOverlap
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q55_exact_dedup" -> exactDedupSql,
-    "q56_minhash_lsh" -> minhashLshSql,
-    "q57_simhash" -> simhashSql,
-    "q58_ngram_jaccard" -> ngramJaccardSql,
-    "q164_lsh_tuning" -> lshTuningSql,
-    "q116_source_overlap" -> sourceOverlapSql
+  val all: Map[String, Query] = Map(
+    "q55_exact_dedup" -> Query(exactDedup, exactDedupSql),
+    "q56_minhash_lsh" -> Query(minhashLsh, minhashLshSql),
+    "q57_simhash" -> Query(simhash, simhashSql),
+    "q58_ngram_jaccard" -> Query(ngramJaccard, ngramJaccardSql),
+    "q164_lsh_tuning" -> Query(lshTuning, lshTuningSql),
+    "q116_source_overlap" -> Query(sourceOverlap, sourceOverlapSql)
   )
 }

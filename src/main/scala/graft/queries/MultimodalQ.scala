@@ -15,7 +15,6 @@ object MultimodalQ {
   import Tables._
 
   def mediaFeatures(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val blobs = Multimodal.mediaFromDocuments(documents(spark, dir))
     Multimodal.extractFeatures(blobs).toDF()
       .groupBy(col("kind"))
@@ -66,7 +65,6 @@ object MultimodalQ {
     * a header-grammar or plane-walk defect in [[Multimodal.decodePpm]]
     * breaks the hash. */
   def imageDecode(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     val blobs = nation(spark, dir)
       .select(col("n_nationkey").cast("long")).as[Long]
@@ -124,7 +122,6 @@ object MultimodalQ {
     * the output→source index map — an off-by-one in the stride walk
     * or the ceil-dims breaks the hash. */
   def imageResize(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     mediaDigest(spark, dir, Seq("rw", "rh", "r_sum_rgb")) { id =>
       val r = Multimodal.resizePpm(Multimodal.syntheticPpm(id), 2)
@@ -158,7 +155,6 @@ object MultimodalQ {
     * stride 2 ([[Multimodal.sampleFrames]]); the oracle recomputes the
     * kept frames' byte sum from the generation formula. */
   def frameSample(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     mediaDigest(spark, dir, Seq("n_frames", "n_sampled", "sum_sampled")) {
       id =>
@@ -192,7 +188,6 @@ object MultimodalQ {
     * a sign-extension or little-endian defect in the PCM reassembly
     * breaks the hash. */
   def audioEnergy(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     mediaDigest(spark, dir,
       Seq("n_samples", "n_windows", "sum_abs", "max_window_abs")) { id =>
@@ -254,7 +249,6 @@ object MultimodalQ {
     * oracle regenerates raster and hash from the formula, so the
     * grouping is checked value-for-value, not asserted. */
   def perceptualDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     nation(spark, dir)
       .select(col("n_nationkey").cast("long")).as[Long]
@@ -323,7 +317,6 @@ object MultimodalQ {
   }
 
   def imageDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     nation(spark, dir)
       .select(col("n_nationkey").cast("long")).as[Long]
@@ -383,7 +376,6 @@ object MultimodalQ {
     * sketch-band pattern), with the tightness spec'd numerically in
     * MultimodalSpec. */
   def imageioDecode(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     mediaDigest(spark, dir,
       Seq("png_w", "png_h", "png_sum_rgb", "jpeg_w", "jpeg_h",
@@ -429,7 +421,6 @@ object MultimodalQ {
     * defect in the header parse, sample-width normalization, or
     * little-endian reassembly breaks the hash. */
   def wavDecode(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     mediaDigest(spark, dir,
       Seq("sample_rate", "channels", "n_samples", "n_windows", "sum_abs",
@@ -463,27 +454,15 @@ object MultimodalQ {
       |  CAST(list_max(wins) AS BIGINT) AS max_window_abs
       |FROM e ORDER BY media_id""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q63_media_features" -> mediaFeatures,
-    "q81_image_decode" -> imageDecode,
-    "q82_image_resize" -> imageResize,
-    "q83_frame_sample" -> frameSample,
-    "q84_audio_energy" -> audioEnergy,
-    "q124_image_dedup" -> imageDedup,
-    "q186_perceptual_dedup" -> perceptualDedup,
-    "q161_imageio_decode" -> imageioDecode,
-    "q169_wav_decode" -> wavDecode
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q63_media_features" -> mediaFeaturesSql,
-    "q81_image_decode" -> imageDecodeSql,
-    "q82_image_resize" -> imageResizeSql,
-    "q83_frame_sample" -> frameSampleSql,
-    "q84_audio_energy" -> audioEnergySql,
-    "q124_image_dedup" -> imageDedupSql,
-    "q186_perceptual_dedup" -> perceptualDedupSql,
-    "q161_imageio_decode" -> imageioDecodeSql,
-    "q169_wav_decode" -> wavDecodeSql
+  val all: Map[String, Query] = Map(
+    "q63_media_features" -> Query(mediaFeatures, mediaFeaturesSql),
+    "q81_image_decode" -> Query(imageDecode, imageDecodeSql),
+    "q82_image_resize" -> Query(imageResize, imageResizeSql),
+    "q83_frame_sample" -> Query(frameSample, frameSampleSql),
+    "q84_audio_energy" -> Query(audioEnergy, audioEnergySql),
+    "q124_image_dedup" -> Query(imageDedup, imageDedupSql),
+    "q186_perceptual_dedup" -> Query(perceptualDedup, perceptualDedupSql),
+    "q161_imageio_decode" -> Query(imageioDecode, imageioDecodeSql),
+    "q169_wav_decode" -> Query(wavDecode, wavDecodeSql)
   )
 }

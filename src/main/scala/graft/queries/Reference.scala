@@ -30,7 +30,6 @@ object Reference {
     * class: null-tokens, H:M, H:M:S, broken pieces, too many parts,
     * plain/padded numerics, garbage. */
   def timeToMinutesQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val raw = expr(
       """CASE CAST(l_orderkey % 13 AS INT)
         | WHEN 0 THEN '-'
@@ -115,7 +114,6 @@ object Reference {
   /** X3/X4 lenient int/double coercion (reference main.py:501-528):
     * garbage→0, parse-then-truncate for ints. */
   def lenientCasts(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val raw = expr(
       """CASE CAST(event_id % 8 AS INT)
         | WHEN 0 THEN '42'
@@ -163,7 +161,6 @@ object Reference {
   /** X5 day-first date parsing (reference main.py:1239/1295):
     * format out as DD/MM/YYYY, parse back, roll up by month. */
   def dateDayFirst(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     orders(spark, dir)
       .select(date_format(col("o_orderdate"), "dd/MM/yyyy").as("s"))
       .select(Coerce.parseDateDayFirst(col("s")).as("d"))
@@ -182,7 +179,6 @@ object Reference {
     * names (spaces, case, accents, `%`), extra column dropped,
     * missing column null-filled, casts applied — one select. */
   def conformQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val target = StructType(Seq(
       StructField("cust_key", LongType),
       StructField("name", StringType),
@@ -204,7 +200,6 @@ object Reference {
   /** F1/F2 null handling (reference main.py:1258/1305,1352):
     * synthesized nulls, drop rows missing required keys. */
   def nullDrop(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e2 = events(spark, dir)
       .withColumn("key", when(col("event_id") % 7 === 0, lit(null))
         .otherwise(col("user_id")))
@@ -231,7 +226,6 @@ object Reference {
     * partition with the same content, read back. If overwrite
     * degraded to append, per-date counts double → oracle mismatch. */
   def idempotentLoad(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // One fixed scratch dir, CLEARED before each invocation: dynamic
     // partition overwrite only replaces partitions present in the
     // incoming frame, so stale dates from a previous run against a
@@ -285,9 +279,9 @@ object Reference {
     * column, so the scan's `PartitionFilters` prune the directory
     * listing to exactly one `fecha=...` partition before any file is
     * opened — at 100 TB × 365 days this is the difference between
-    * scanning one day and scanning the table. ReferenceSpec asserts
-    * the plan fact (partitionFilters non-empty, selectedPartitions
-    * == 1); the oracle checks the values. */
+    * scanning one day and scanning the table. IdempotentWriterSpec
+    * asserts the plan fact (partitionFilters non-empty,
+    * selectedPartitions == 1); the oracle checks the values. */
   private[graft] def dailyEventsRead(
       spark: SparkSession, warehouse: String, date: String): DataFrame =
     dailyEventsAgg(spark.read.parquet(warehouse), date)
@@ -303,7 +297,6 @@ object Reference {
       .orderBy("event_type")
 
   def partitionPrunedRead(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     dailyEventsRead(spark, fechaWarehouse(spark, dir), "2024-01-05")
   }
 
@@ -334,13 +327,16 @@ object Reference {
   private[graft] def fechaCatalogTable(
       spark: SparkSession, dir: String): String =
     catalogTables((spark.sparkContext.applicationId, dir)) {
-      val name = "graft_fecha_wh_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
+      val name = dirTableName("graft_fecha_wh", dir)
       registerFechaTableAt(spark, fechaWarehouse(spark, dir), name)
       name
     }
+
+  /** `<prefix>_<first 16 hex digits of md5(dir)>`: one catalog table
+    * name per data dir, so two dirs never collide on one table. */
+  private def dirTableName(prefix: String, dir: String): String =
+    prefix + "_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
   /** PUBLIC entry point — register this engine's fecha warehouse for
     * `dir` under a STABLE, caller-chosen catalog name: the name a BI
@@ -399,12 +395,11 @@ object Reference {
 
   /** q209: q189's single-date BI read re-proven through the CATALOG
     * path — `spark.table(name)` with the hot predicate
-    * (main.py:1535's `WHERE CAST(fecha AS DATE) = ?`). ReferenceSpec
-    * asserts the plan prunes to ONE catalog partition; the oracle
-    * checks the values (same SQL as q189 — the read surface changed,
-    * the answer must not). */
+    * (main.py:1535's `WHERE CAST(fecha AS DATE) = ?`).
+    * IdempotentWriterSpec asserts the plan prunes to ONE catalog
+    * partition; the oracle checks the values (same SQL as q189 — the
+    * read surface changed, the answer must not). */
   def catalogPrunedRead(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     dailyEventsAgg(spark.table(fechaCatalogTable(spark, dir)), "2024-01-05")
   }
 
@@ -426,73 +421,23 @@ object Reference {
     StructType(PreEvolutionTarget.fields :+
       StructField("channel", StringType))
 
-  /** The evolved fecha warehouse + its stable catalog name, built once
-    * per (application, dir): the full schema-evolution cell the
-    * round-12 verdict asked for, end-to-end —
-    *
-    *   1. HISTORY: every fecha except [[EvolutionDay]] lands under the
-    *      PRE-evolution schema (the files on disk genuinely lack the
-    *      new column, as 364 days of history would);
-    *   2. ARRIVAL: the evolution day's file carries `channel`;
-    *      [[graft.conform.Conform.conformTo]] pins it to the EVOLVED
-    *      target (order + types), and the dynamic partition overwrite
-    *      lands exactly that fecha directory;
-    *   3. RE-REGISTRATION: the catalog table is re-registered under
-    *      the SAME stable name with the evolved schema — a METADATA-
-    *      ONLY operation. History is never rewritten: the parquet
-    *      reader fills the missing column with NULL per file, which
-    *      is exactly `conformTo`'s typed-NULL rule applied at read
-    *      time instead of write time — the only shape that survives
-    *      100 TB × 365 days (rewriting history to add a column does
-    *      not);
-    *   4. BI READ: `spark.table(name)` serves BOTH vintages in one
-    *      scan — history rows with NULL channel, the new day's rows
-    *      with values.
-    *
-    * The initial (pre-evolution) registration and the re-registration
-    * both run here so the query exercises the upgrade path a live
-    * deployment takes; ReferenceSpec pins the intermediate states. */
-  private val evolvedWarehouses =
-    new Scratch.Artifact[(String, String)]("graft_evo_wh")
-
-  private[graft] def evolvedWarehouse(spark: SparkSession,
-      dir: String): (String, String) =
-    evolvedWarehouses(spark, dir) { wh =>
-      val name = "graft_evo_wh_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
-      val base = events(spark, dir).select(
-        to_date(col("ts")).as("fecha"), col("event_id"),
-        col("user_id"), col("event_type"), col("value"))
-      val isDay = col("fecha") <=> lit(EvolutionDay).cast("date")
-      // 1. history under the pre-evolution schema
-      IdempotentWriter.overwritePartitions(
-        Conform.conformTo(PreEvolutionTarget)(base.filter(!isDay)),
-        wh, addLoadDate = false)
-      // ...and the BI binding a dashboard made months ago
-      registerFechaTableAt(spark, wh, name)
-      // 2. the evolution day arrives WITH the new column (its value
-      // deterministic from the row, so the oracle can restate it)
-      val arrival = base.filter(isDay)
-        .withColumn("channel", concat(col("event_type"), lit("_ch")))
-      IdempotentWriter.overwritePartitions(
-        Conform.conformTo(EvolvedTarget)(arrival), wh,
-        addLoadDate = false)
-      // 3. re-register the SAME name with the evolved schema —
-      // metadata only; the old files are not touched
-      registerFechaTableAt(spark, wh, name, Some(EvolvedTarget))
-      (wh, name)
-    }
-
-  /** q223: the BI read over the evolved catalog table — one scan
-    * serving both vintages. Per fecha: row count, distinct channels
-    * (0 for history via NULL-fill, the arrival's 5 on the evolution
-    * day), value sum. Oracle = the same derivation from raw events
-    * with the channel rule restated. */
+  /** q223 add-column evolution: history lands under the PRE-evolution
+    * schema (its files genuinely lack `channel`, as 364 days of history
+    * would); the evolution day arrives WITH `channel`, conformed to the
+    * EVOLVED target; the SAME catalog name is re-registered with the
+    * evolved schema — metadata only. History is never rewritten: the
+    * parquet reader fills the missing column with NULL per file,
+    * `conformTo`'s typed-NULL rule applied at read time (the only
+    * shape that survives 100 TB × 365 days). IdempotentWriterSpec pins
+    * the intermediate states. The BI read is one scan serving both
+    * vintages. Per fecha: row count, distinct channels (0 for history
+    * via NULL-fill, the arrival's 5 on the evolution day), value sum.
+    * Oracle = the same derivation from raw events with the channel
+    * rule restated. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
-    val (_, name) = evolvedWarehouse(spark, dir)
+    val (_, name) = driftWarehouse(spark, dir, "evo",
+      PreEvolutionTarget, EvolvedTarget, Map.empty, Some(EvolvedTarget))(
+      _.withColumn("channel", concat(col("event_type"), lit("_ch"))))
     spark.table(name)
       .groupBy(col("fecha"))
       .agg(count(lit(1)).as("n"),
@@ -517,28 +462,26 @@ object Reference {
   // oracle restating the drift rule from raw events.
   // ---------------------------------------------------------------
 
-  /** Shared scaffold for the drift cells: history (every fecha except
-    * [[EvolutionDay]]) conformed to `historyTarget` and registered
-    * under a stable catalog name; the evolution day's slice reshaped
-    * by `arrivalShape` (the drift as the SOURCE produces it),
+  /** Shared scaffold for the drift cells q223–q226: history (every
+    * fecha except [[EvolutionDay]]) conformed to `historyTarget` and
+    * registered under a stable catalog name; the evolution day's slice
+    * reshaped by `arrivalShape` (the drift as the SOURCE produces it),
     * conformed to `arrivalTarget` with `renames`, landed by dynamic
     * partition overwrite; optionally the SAME name re-registered with
     * `reRegisterSchema` (metadata only — q224's widening needs the
     * catalog DDL to be the authority, exactly like q223's add-column;
     * q225/q226 are ingest-side drifts and leave the catalog alone).
     * Built once per (application, dir) for each tag. */
-  private val driftWarehouses = Seq("widen", "rename", "dropcol").map(t =>
-    t -> new Scratch.Artifact[(String, String)](s"graft_${t}_wh")).toMap
+  private val driftWarehouses =
+    Seq("evo", "widen", "rename", "dropcol").map(t =>
+      t -> new Scratch.Artifact[(String, String)](s"graft_${t}_wh")).toMap
 
   private[graft] def driftWarehouse(spark: SparkSession, dir: String,
       tag: String, historyTarget: StructType, arrivalTarget: StructType,
       renames: Map[String, String], reRegisterSchema: Option[StructType])(
       arrivalShape: DataFrame => DataFrame): (String, String) =
     driftWarehouses(tag)(spark, dir) { wh =>
-      val name = s"graft_${tag}_wh_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
+      val name = dirTableName(s"graft_${tag}_wh", dir)
       val base = events(spark, dir).select(
         to_date(col("ts")).as("fecha"), col("event_id"),
         col("user_id"), col("event_type"), col("value"))
@@ -586,7 +529,6 @@ object Reference {
     * of q223, applied to a type. Oracle restates the shift rule from
     * raw events. */
   def schemaWiden(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val (_, name) = driftWarehouse(spark, dir, "widen",
       PreWidenTarget, WidenedTarget, Map.empty, Some(WidenedTarget))(
       _.withColumn("user_id", col("user_id") + lit(4294967296L)))
@@ -616,7 +558,6 @@ object Reference {
     * would have nulled the evolution day's values and the sum would
     * mismatch loudly. */
   def schemaRename(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val (_, name) = driftWarehouse(spark, dir, "rename",
       PreEvolutionTarget, PreEvolutionTarget,
       Map("valor_total" -> "value"), None)(
@@ -636,12 +577,11 @@ object Reference {
     * evolution day (a CRM export dropping a field — SURVEY §5's
     * silent-NULL hazard). The warehouse target keeps the column:
     * conform fills it as a typed NULL and the drift REPORT names the
-    * deviation (`added_null` — ReferenceSpec pins it), history keeps
-    * its real values, and the BI scan serves both vintages with the
-    * NULL-vs-value split visible per fecha. Oracle restates the drop
+    * deviation (`added_null` — IdempotentWriterSpec pins it), history
+    * keeps its real values, and the BI scan serves both vintages with
+    * the NULL-vs-value split visible per fecha. Oracle restates the drop
     * rule from raw events. */
   def schemaDropColumn(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val (_, name) = driftWarehouse(spark, dir, "dropcol",
       PreEvolutionTarget, PreEvolutionTarget, Map.empty, None)(
       _.drop("value"))
@@ -665,7 +605,6 @@ object Reference {
     * with accented/messy headers → probe → conform → coerce → drop
     * null keys. The oracle pins the exact expected rows (VALUES). */
   def csvPipeline(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val csv =
       "ID;Campaña;% In;Tiempo Medio De Respuesta In;Fecha\n" +
         "1;Ventas;95.5;00:02:30;15/01/2024\n" +
@@ -724,7 +663,6 @@ object Reference {
     * SAME normalize→rename→first-match rule `conformTo` applies, so
     * report and conformance cannot disagree (spec-pinned). */
   def schemaDrift(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     val csv =
       "ID;Campaña;In;% In;Fecha;Puntaje Extra;Tiempo Medio De Respuesta In\n" +
@@ -798,7 +736,6 @@ object Reference {
       "Ñandú Ops;5/2/2024;007;Niño;0;0;0;0;0;0;0;0;0;0;0;0;0;0;1:02:30;10:30\n"
 
   def conductaPipeline(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val path =
       writeFixture("graft_conducta_full.csv", conductaCsvFixture, "ISO-8859-1")
     val transformed = graft.conform.Pipeline.conducta(CsvProbe.read(spark, path))
@@ -861,7 +798,6 @@ object Reference {
   }
 
   def estadosPipeline(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val path = writeFixture("graft_estados_full.csv", estadosCsvFixture, "UTF-8")
     graft.conform.Pipeline.estados(CsvProbe.read(spark, path)).orderBy("id")
   }
@@ -906,7 +842,6 @@ object Reference {
     "jdbc:derby:" + Scratch.path("graft_derby") + ";create=true"
 
   def jdbcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val url = derbyUrl
     val table = "tbl_neotel_conducta"
     val ddl = graft.conform.Schemas.Conducta.fields.map { f =>
@@ -940,8 +875,8 @@ object Reference {
     * (reference README.md:113 — the tables exist so Power BI /
     * Metabase can query them): a predicate-filtered read back through
     * the JDBC SOURCE, where the filter must reach the database as SQL
-    * (`PushedFilters` on the JDBC scan — ReferenceSpec asserts it in
-    * the plan) instead of materializing the table into Spark and
+    * (`PushedFilters` on the JDBC scan — JdbcSinkSpec asserts it for
+    * this read shape) instead of materializing the table into Spark and
     * filtering there. At warehouse scale that difference is the whole
     * query: the database serves an indexed slice; an unpushed filter
     * ships every row over JDBC first.
@@ -952,14 +887,13 @@ object Reference {
     * reads back `fecha >= 2024-01-16`. Oracle = the q37 value table
     * under the same predicate. */
   def jdbcPushdownRead(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val cutoff = "2024-01-16"
     jdbcFilteredConducta(spark, dir, cutoff)
       .orderBy("id")
   }
 
-  /** The q170 read, factored so ReferenceSpec can assert the plan:
-    * load (idempotent) + JDBC-source read with the date predicate. */
+  /** The q170 read: load (idempotent) + JDBC-source read with the
+    * date predicate. */
   private[queries] def jdbcFilteredConducta(spark: SparkSession,
       dir: String, cutoff: String): DataFrame = {
     val url = derbyUrl
@@ -998,7 +932,6 @@ object Reference {
     * reuses the same key prefix, and the join co-partitions on
     * (id, fecha) — exactly the plan a BI layer runs at any scale. */
   def dailyRollupJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val interval = events(spark, dir)
       .groupBy(col("user_id").as("id"), to_date(col("ts")).as("fecha"),
         window(col("ts"), "30 minutes").as("w"))
@@ -1037,7 +970,6 @@ object Reference {
     * the native expression and the Column-combinator form (or between
     * generated and interpreted code paths) breaks the hash. */
   def timeToMinutesNativeQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     graft.functions.GraftFunctions.register(spark)
     lineitem(spark, dir).createOrReplaceTempView("li_native")
     spark.sql(
@@ -1074,7 +1006,6 @@ object Reference {
     * [[CsvProbe.routeCol]] (same substring rule as the driver-side
     * router, parity-asserted in CsvProbeSpec), digested per route. */
   def routeByNameQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     nation(spark, dir)
       .withColumn("file_name", concat(lower(col("n_name")),
         when(col("n_nationkey") % 4 === 0, "_conducta_diaria.csv")
@@ -1115,7 +1046,6 @@ object Reference {
     * EMPTY frame — the table must be untouched. The digest reads the
     * table back; the oracle states the seed. */
   def emptyWriteGuard(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val path = Scratch.perCall("graft_f3").toString + "/t"
     val seed = orders(spark, dir)
       .filter(col("o_orderkey") < 100)
@@ -1141,7 +1071,6 @@ object Reference {
     * clamped 31/02 is rejected, a valid date converts to ISO, and
     * `yesterday` of a fixed anchor date. */
   def dateHelpersQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     orders(spark, dir)
       .select(col("o_orderdate").cast("date").as("d"))
       .withColumn("ddmm", date_format(col("d"), "dd/MM/yyyy"))
@@ -1179,7 +1108,6 @@ object Reference {
     * The oracle states the rows directly, so any codec, styles, or
     * serial-date defect breaks the hash. */
   def xlsxRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val src = nation(spark, dir)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .orderBy("n_nationkey").collect()
@@ -1219,7 +1147,6 @@ object Reference {
     * share the same conformance chain, and the oracle states every
     * row twice, tagged by the branch that must have produced it. */
   def readFallbackQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val src = nation(spark, dir)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .orderBy("n_nationkey").collect()
@@ -1280,7 +1207,6 @@ object Reference {
     * output is the per-dataset outcome table the reference logs; the
     * oracle states outcomes and loaded rowcounts independently. */
   def retryLoadQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val path = Scratch.perCall("graft_retry").toString
     val flaky = new java.util.concurrent.atomic.AtomicInteger(0)
     val datasets: Seq[(String, Option[DataFrame])] = Seq(
@@ -1323,7 +1249,6 @@ object Reference {
     * and every clean value; JsonlReadSpec pins the same split so a
     * Spark parse-policy change is caught locally before the driver. */
   def jsonlQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val jsonl = Seq(
       """{"doc_id":1,"text":"hello world","lang":"en","meta":{"src":"web","score":0.9}}""",
       """{"doc_id":2,"text":"hola mundo","lang":"es","meta":{"src":"book","score":0.75}}""",
@@ -1367,7 +1292,6 @@ object Reference {
     * input layout, not corpus-size-invariant, so it has no place in
     * a scale-parameterized oracle.) */
   def compactQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scratch = Scratch.perCall("graft_compact")
       .resolve("docs").toString
     LocalFs.write(documents(spark, dir).repartition(8))
@@ -1395,7 +1319,6 @@ object Reference {
     * oracle pins the deterministic columns (row counts per phase,
     * outcomes) — 5 raw rows in, 3 conformed out, 3 loaded. */
   def runAuditQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val path =
       writeFixture("graft_conducta_audit.csv", conductaCsvFixture, "ISO-8859-1")
     val out = Scratch.path("graft_conducta_audit_tbl")
@@ -1460,7 +1383,6 @@ object Reference {
     * row digesting the continue-on-failure outcome vector (2 ok /
     * 1 failed); the oracle pins every cell. */
   def dailyRunQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // R5: every location comes from typed config, validated up front
     // (injected env — the spec for process-env backing is ConfigSpec).
     // Fixed per-JVM paths: re-runs exercise the delete-and-replace
@@ -1599,7 +1521,6 @@ object Reference {
     * IdempotentWriterSpec); the oracle states the merged table's
     * digest from the same base/batch definitions. */
   def mergeUpsertQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val out = Scratch.perCall("graft_merge").resolve("fact").toString
     val o = orders(spark, dir)
     def shaped(amount: org.apache.spark.sql.Column) =
@@ -1647,7 +1568,6 @@ object Reference {
     * partition scopes one. The oracle recomputes both digests with
     * the same portable md5-prefix hash and the same status rules. */
   def reconcileQ(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // per-row md5 digest work dominates; spread the single-row-group
     // scan — both sides' digest passes derive from the one exchange
     // (ReusedExchange) and parallelize (guide §2.5)
@@ -1701,77 +1621,47 @@ object Reference {
        |ORDER BY 1""".stripMargin
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q30_time_to_minutes" -> timeToMinutesQ,
-    "q31_lenient_casts" -> lenientCasts,
-    "q32_date_dayfirst" -> dateDayFirst,
-    "q33_conform" -> conformQ,
-    "q34_null_drop" -> nullDrop,
-    "q35_idempotent_load" -> idempotentLoad,
-    "q36_csv_pipeline" -> csvPipeline,
-    "q37_conducta_pipeline" -> conductaPipeline,
-    "q38_estados_pipeline" -> estadosPipeline,
-    "q42_jdbc_roundtrip" -> jdbcRoundtrip,
-    "q170_jdbc_pushdown_read" -> jdbcPushdownRead,
-    "q43_time_to_minutes_native" -> timeToMinutesNativeQ,
-    "q44_daily_rollup_join" -> dailyRollupJoin,
-    "q75_route_by_name" -> routeByNameQ,
-    "q76_empty_write_guard" -> emptyWriteGuard,
-    "q77_date_helpers" -> dateHelpersQ,
-    "q78_xlsx_roundtrip" -> xlsxRoundtrip,
-    "q79_read_fallback" -> readFallbackQ,
-    "q80_retry_load" -> retryLoadQ,
-    "q92_jsonl_quarantine" -> jsonlQuarantine,
-    "q94_compact" -> compactQ,
-    "q101_run_audit" -> runAuditQ,
-    "q105_merge_upsert" -> mergeUpsertQ,
-    "q109_reconcile" -> reconcileQ,
-    "q162_daily_run" -> dailyRunQ,
-    "q189_partition_pruned_read" -> partitionPrunedRead,
-    "q208_schema_drift" -> schemaDrift,
-    "q209_catalog_pruned_read" -> catalogPrunedRead,
-    "q223_schema_evolution" -> schemaEvolution,
-    "q224_schema_widen" -> schemaWiden,
-    "q225_schema_rename" -> schemaRename,
-    "q226_schema_drop_column" -> schemaDropColumn
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q30_time_to_minutes" -> timeToMinutesSql,
-    "q31_lenient_casts" -> lenientCastsSql,
-    "q32_date_dayfirst" -> dateDayFirstSql,
-    "q33_conform" -> conformSql,
-    "q34_null_drop" -> nullDropSql,
-    "q35_idempotent_load" -> idempotentLoadSql,
-    "q36_csv_pipeline" -> csvPipelineSql,
-    "q37_conducta_pipeline" -> conductaPipelineSql,
-    "q38_estados_pipeline" -> estadosPipelineSql,
-    "q42_jdbc_roundtrip" -> conductaPipelineSql, // same rows via the JDBC sink
-    "q170_jdbc_pushdown_read" ->
+  val all: Map[String, Query] = Map(
+    "q30_time_to_minutes" -> Query(timeToMinutesQ, timeToMinutesSql),
+    "q31_lenient_casts" -> Query(lenientCasts, lenientCastsSql),
+    "q32_date_dayfirst" -> Query(dateDayFirst, dateDayFirstSql),
+    "q33_conform" -> Query(conformQ, conformSql),
+    "q34_null_drop" -> Query(nullDrop, nullDropSql),
+    "q35_idempotent_load" -> Query(idempotentLoad, idempotentLoadSql),
+    "q36_csv_pipeline" -> Query(csvPipeline, csvPipelineSql),
+    "q37_conducta_pipeline" -> Query(conductaPipeline, conductaPipelineSql),
+    "q38_estados_pipeline" -> Query(estadosPipeline, estadosPipelineSql),
+    // same rows via the JDBC sink
+    "q42_jdbc_roundtrip" -> Query(jdbcRoundtrip, conductaPipelineSql),
+    "q170_jdbc_pushdown_read" -> Query(jdbcPushdownRead,
       s"""SELECT * FROM ($conductaPipelineSql)
-         |WHERE fecha >= DATE '2024-01-16' ORDER BY id""".stripMargin,
-    "q43_time_to_minutes_native" -> timeToMinutesSql, // same semantics, native expr
-    "q44_daily_rollup_join" -> dailyRollupJoinSql,
-    "q75_route_by_name" -> routeByNameSql,
-    "q76_empty_write_guard" -> emptyWriteGuardSql,
-    "q77_date_helpers" -> dateHelpersSql,
-    "q78_xlsx_roundtrip" -> xlsxRoundtripSql,
-    "q79_read_fallback" -> readFallbackSql,
-    "q80_retry_load" -> retryLoadSql,
-    "q92_jsonl_quarantine" -> jsonlQuarantineSql,
-    "q94_compact" -> compactSql,
-    "q101_run_audit" -> runAuditSql,
-    "q105_merge_upsert" -> mergeUpsertSql,
-    "q109_reconcile" -> reconcileSql,
-    "q162_daily_run" -> dailyRunSql,
-    "q189_partition_pruned_read" -> partitionPrunedReadSql,
-    "q208_schema_drift" -> schemaDriftSql,
+         |WHERE fecha >= DATE '2024-01-16' ORDER BY id""".stripMargin),
+    // same semantics, native expr
+    "q43_time_to_minutes_native" ->
+      Query(timeToMinutesNativeQ, timeToMinutesSql),
+    "q44_daily_rollup_join" -> Query(dailyRollupJoin, dailyRollupJoinSql),
+    "q75_route_by_name" -> Query(routeByNameQ, routeByNameSql),
+    "q76_empty_write_guard" -> Query(emptyWriteGuard, emptyWriteGuardSql),
+    "q77_date_helpers" -> Query(dateHelpersQ, dateHelpersSql),
+    "q78_xlsx_roundtrip" -> Query(xlsxRoundtrip, xlsxRoundtripSql),
+    "q79_read_fallback" -> Query(readFallbackQ, readFallbackSql),
+    "q80_retry_load" -> Query(retryLoadQ, retryLoadSql),
+    "q92_jsonl_quarantine" -> Query(jsonlQuarantine, jsonlQuarantineSql),
+    "q94_compact" -> Query(compactQ, compactSql),
+    "q101_run_audit" -> Query(runAuditQ, runAuditSql),
+    "q105_merge_upsert" -> Query(mergeUpsertQ, mergeUpsertSql),
+    "q109_reconcile" -> Query(reconcileQ, reconcileSql),
+    "q162_daily_run" -> Query(dailyRunQ, dailyRunSql),
+    "q189_partition_pruned_read" ->
+      Query(partitionPrunedRead, partitionPrunedReadSql),
+    "q208_schema_drift" -> Query(schemaDrift, schemaDriftSql),
     // same values as q189: the read surface changed (named catalog
     // table), the answer must not
-    "q209_catalog_pruned_read" -> partitionPrunedReadSql,
-    "q223_schema_evolution" -> schemaEvolutionSql,
-    "q224_schema_widen" -> schemaWidenSql,
-    "q225_schema_rename" -> schemaRenameSql,
-    "q226_schema_drop_column" -> schemaDropColumnSql
+    "q209_catalog_pruned_read" ->
+      Query(catalogPrunedRead, partitionPrunedReadSql),
+    "q223_schema_evolution" -> Query(schemaEvolution, schemaEvolutionSql),
+    "q224_schema_widen" -> Query(schemaWiden, schemaWidenSql),
+    "q225_schema_rename" -> Query(schemaRename, schemaRenameSql),
+    "q226_schema_drop_column" -> Query(schemaDropColumn, schemaDropColumnSql)
   )
 }

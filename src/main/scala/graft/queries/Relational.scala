@@ -24,7 +24,6 @@ object Relational {
     * |groups| rows per partition, not data. Grouping cardinality is
     * tiny → broadcast-free, skew-free at any scale. */
   def pricingSummary(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     lineitem(spark, dir)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -76,7 +75,6 @@ object Relational {
         max(col("price")).as("max_price_d"))
 
   def decimalPricing(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     decimalPricingTyped(spark, dir)
       .select(col("l_returnflag"), col("n"),
         col("sum_price_d").cast("string").as("sum_price"),
@@ -102,7 +100,6 @@ object Relational {
     * relationship of the reference (SURVEY §2.5). Group keys are
     * (day, type): bounded cardinality, two-phase agg. */
   def eventsDaily(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .groupBy(to_date(col("ts")).as("d"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
@@ -118,7 +115,6 @@ object Relational {
     * (partial distinct per partition, then final), no driver
     * materialization. */
   def distinctCustomers(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     orders(spark, dir)
       .groupBy(col("o_orderpriority"))
       .agg(countDistinct(col("o_custkey")).as("n_cust"),
@@ -133,7 +129,6 @@ object Relational {
 
   /** ROLLUP grouping sets (subtotals + grand total). */
   def rollupReturns(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     lineitem(spark, dir)
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 4).as("sum_qty"))
@@ -153,7 +148,6 @@ object Relational {
 
   /** CUBE grouping sets. */
   def cubeOrders(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     orders(spark, dir)
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 4).as("sum_price"))
@@ -174,7 +168,6 @@ object Relational {
   /** Star-schema dimension join — both dims BROADCAST (nation/region
     * are KB-sized at any TPC-H scale; no shuffle of the fact side). */
   def joinDims(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val c = customer(spark, dir)
     val n = nation(spark, dir)
     val r = region(spark, dir)
@@ -199,7 +192,6 @@ object Relational {
     * [[graft.io.BucketedLayout]] co-located variant that removes it.
     * Aggregation after the join is two-phase. */
   def joinFacts(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val o = orders(spark, dir)
     val l = lineitem(spark, dir)
     o.join(l, o("o_orderkey") === l("l_orderkey"))
@@ -227,7 +219,6 @@ object Relational {
 
   /** Semi join (EXISTS): customers that placed at least one order. */
   def semiJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val c = customer(spark, dir)
     val o = orders(spark, dir).select(col("o_custkey"))
     c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
@@ -246,7 +237,6 @@ object Relational {
     * plain never-ordered anti join is EMPTY on the harness data —
     * an oracle match on an empty set proves nothing). */
   def antiJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val c = customer(spark, dir)
     val o = orders(spark, dir)
       .filter(col("o_totalprice") > 300000)
@@ -265,7 +255,6 @@ object Relational {
 
   /** Left outer join with null-aware aggregation. */
   def leftJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val p = part(spark, dir)
     val l = lineitem(spark, dir).select(col("l_partkey"), col("l_quantity"))
     p.join(l, p("p_partkey") === l("l_partkey"), "left")
@@ -287,7 +276,6 @@ object Relational {
     * Single shuffle on the partition key; ties broken by key for
     * determinism. */
   def windowTopN(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val w = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
     customer(spark, dir)
@@ -313,7 +301,6 @@ object Relational {
     * shuffle is the window's partitionBy(user_id), and the follow-up
     * agg is two-phase on a bounded key space. */
   def windowLag(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
     events(spark, dir)
@@ -342,7 +329,6 @@ object Relational {
     * running sums weights each value by its remaining sequence length,
     * so any frame-boundary bug changes the digest. */
   def windowRunning(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -371,7 +357,6 @@ object Relational {
     * each partition keeps its local top-k, driver merges k*parts
     * rows, never a full sort. The scalable top-k. */
   def topK(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     orders(spark, dir)
       .select(col("o_orderkey"), round(col("o_totalprice"), 4).as("totalprice"))
       .orderBy(col("totalprice").desc, col("o_orderkey").asc)
@@ -384,7 +369,6 @@ object Relational {
 
   /** Set op: UNION (distinct). */
   def unionIds(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir).select(col("user_id").as("id"))
       .union(orders(spark, dir).select(col("o_custkey").as("id")))
       .distinct()
@@ -399,7 +383,6 @@ object Relational {
     * difference is non-empty on the harness data (customers whose
     * every order is still open). */
   def exceptIds(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     customer(spark, dir).select(col("c_custkey").as("id"))
       .except(orders(spark, dir)
         .filter(col("o_orderstatus") === "F")
@@ -414,7 +397,6 @@ object Relational {
 
   /** Set op: INTERSECT. */
   def intersectIds(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     customer(spark, dir).select(col("c_custkey").as("id"))
       .intersect(events(spark, dir).select(col("user_id").as("id")))
       .orderBy("id")
@@ -427,7 +409,6 @@ object Relational {
   /** JSON extraction from a string column (harness `events.props`).
     * `get_json_object` is a codegen'd path expression — no UDF. */
   def jsonExtract(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .select(get_json_object(col("props"), "$.k").cast("int").as("k"),
         col("value"))
@@ -445,7 +426,6 @@ object Relational {
     * [[graft.streaming.Streams.tumblingCounts]] / q39, runs the
     * identical expression and must produce the identical answer). */
   def tumblingWindow(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
@@ -465,7 +445,6 @@ object Relational {
     * the gap is >= the duration (end-exclusive); the oracle encodes
     * the same boundary. */
   def sessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .groupBy(session_window(col("ts"), "5 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"), sum("value").as("sv"))
@@ -506,7 +485,6 @@ object Relational {
     * value sum, start-time checksum) so the verify output stays small
     * while every window boundary still influences the hash. */
   def slidingWindow(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum("value").as("sv"))
@@ -543,7 +521,6 @@ object Relational {
     * marginals WITHOUT the cross product — a set combination neither
     * rollup nor cube expresses. Same two-phase expand+agg execution. */
   def groupingSets(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     lineitem(spark, dir).createOrReplaceTempView("li_gs")
     spark.sql(
       """SELECT coalesce(l_returnflag, 'ALL') AS rf,
@@ -572,7 +549,6 @@ object Relational {
     * the driver's hash compare verifies the bound itself.
     * RelationalSpec asserts the same band numerically. */
   def approxPercentile(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val li = lineitem(spark, dir)
     val sketch = li
       .groupBy(col("l_returnflag"))
@@ -779,7 +755,6 @@ object Relational {
   }
 
   def percentiles(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val li = lineitem(spark, dir)
     // one scan + one window pass for all three quantile measures —
     // exactQuantilesMulti replaces the former per-measure scans + join
@@ -803,7 +778,6 @@ object Relational {
     * two-phase aggregate over (priority, status) then a projection —
     * the oracle states the same thing as conditional aggregation. */
   def pivotStatus(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     orders(spark, dir)
       .groupBy(col("o_orderpriority"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
@@ -826,7 +800,6 @@ object Relational {
     * conjuncts reach the parquet scan as PushedFilters; only 4 of 11
     * columns are read (ReadSchema pruning). */
   def filterPushdown(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
@@ -847,7 +820,6 @@ object Relational {
   /** Correlated EXISTS subquery through the SQL entry point —
     * Catalyst decorrelates it into a semi join. */
   def sqlExists(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     orders(spark, dir).createOrReplaceTempView("orders_v")
     lineitem(spark, dir).createOrReplaceTempView("lineitem_v")
     spark.sql(
@@ -883,7 +855,6 @@ object Relational {
     * shuffle — measured 2.9 s vs 0.4 s at sf0.1). After the dedup the
     * sketch exists only per (flag, partition): ~32x|flags| buffers. */
   def approxDistinct(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     lineitem(spark, dir)
       .select(col("l_returnflag"), col("l_orderkey")).distinct()
       .groupBy(col("l_returnflag"))
@@ -923,7 +894,6 @@ object Relational {
     new java.util.concurrent.atomic.AtomicLong(0)
 
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val buckets = 8
     val scratch = Scratch.perCall("graft_b23_")
     val tag = spark.sparkContext.applicationId
@@ -1007,7 +977,6 @@ object Relational {
     * alone, which is why it IS benchable while q23 (which re-writes
     * the layout per invocation by construction) is not. */
   def bucketedCatalogRead(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val (ot, lt) = bucketedWritten(spark, dir)
     val s = ColdRestart.fresh(spark)
     val o = s.table(ot)
@@ -1032,7 +1001,6 @@ object Relational {
     * skew-join split is the first-line fix; salting is the manual
     * fallback for extreme single-key skew or non-AQE engines. */
   def saltedJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val Salts = 8
     val e = events(spark, dir)
       .select(col("user_id"), col("value"), col("event_id"))
@@ -1063,7 +1031,6 @@ object Relational {
     * the plain join over the same remap — salting must be
     * result-invisible. */
   def autoSkewJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = events(spark, dir).select(
       when(col("event_id") % 3 === 0, lit(7L))
         .otherwise(col("user_id")).as("user_id"),
@@ -1122,7 +1089,6 @@ object Relational {
     * true key; the join verifies exactly), so the oracle is the plain
     * join. */
   def bloomPruneJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     graft.Session.withConf(spark, bloomConfs: _*) {
       // Eager materialization: injection happens at optimization time,
       // which must run while the scoped confs are in force. The DIGEST
@@ -1157,7 +1123,6 @@ object Relational {
     * count. No self-join, no second distinct. Week grains are
     * Monday-start in both engines. */
   def cohortRetention(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .select(col("user_id"),
         to_date(date_trunc("week", col("ts"))).as("wk"))
@@ -1207,7 +1172,6 @@ object Relational {
     * The digest keeps balances in exact integer cents, so no
     * cross-engine float summation is in play. */
   def scd2Load(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val base = customer(spark, dir)
       .select(col("c_custkey").as("k"), col("c_acctbal").as("bal"),
         col("c_mktsegment").as("seg"))
@@ -1317,7 +1281,6 @@ object Relational {
     * table. Funnel depth extends by adding window columns, not
     * passes. */
   def funnel(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val w = Window.partitionBy("user_id")
     val u = events(spark, dir)
       .select(col("user_id"), col("event_type"),
@@ -1395,7 +1358,6 @@ object Relational {
     * window costs nothing at any corpus scale. The daily-grain
     * reduction IS the design: never window the raw event stream. */
   def rollingAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val daily = events(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(count(lit(1)).as("cnt"))
@@ -1497,7 +1459,6 @@ object Relational {
     * frequencies, which stay discriminative even when every single
     * token is common. */
   def recordLinkage(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // The aggregated entity catalog feeds FOUR subplans per call (the
     // dirty chain's three consumers + the broadcast name table), and
     // each used to re-run the part scan + the ename groupBy exchange
@@ -1698,7 +1659,6 @@ object Relational {
     * cumulative window over each user's own events; the rollup is
     * channels-sized. Exact integer time arithmetic throughout. */
   def attribution(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val enc = when(col("event_type") === "view",
         unix_micros(col("ts")) * 4 + 1)
       .when(col("event_type") === "click",
@@ -1777,7 +1737,6 @@ object Relational {
     * activity-days table (≤365 rows/user/year). Integer day
     * arithmetic (days since epoch) — no date-string tricks. */
   def activityStreaks(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val days = events(spark, dir)
       .select(col("user_id"),
         datediff(to_date(col("ts")), lit("1970-01-01")).as("dn"))
@@ -1830,7 +1789,6 @@ object Relational {
     * transition table is |types|² + |types| rows, so the probability
     * normalization join is over a constant-sized table. */
   def transitionMatrix(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val trans = events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"),
@@ -1879,7 +1837,6 @@ object Relational {
     * groupBy; the regression sums are a second tiny aggregation over
     * the daily table. Nothing else touches data. */
   def volumeTrend(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .groupBy(col("event_type"),
         datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("x"))
@@ -1958,7 +1915,6 @@ object Relational {
     * rollup is ≤ 125 segments. `approx_percentile` is the 100 TB
     * dial for the boundary pass. */
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val p = events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), to_date(col("ts")).as("d"),
@@ -2051,7 +2007,6 @@ object Relational {
     * heavy-key digest). Nothing returns per-key rows except the
     * digest. */
   def skewProfile(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     def profile(tag: String, rows: DataFrame) = {
       val counts = rows.groupBy(col("k")).agg(count(lit(1)).as("cnt"))
       // exact p99 in the q28 shape (sorted window + weighted sum), not
@@ -2147,7 +2102,6 @@ object Relational {
     * session length, the q118 contract); the path table is bounded by
     * |types|³ and ranks via TakeOrderedAndProject. */
   def sessionPaths(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val w = Window.partitionBy("user_id").orderBy(col("tsus"), col("event_id"))
     val wCum = Window.partitionBy("user_id")
       .orderBy(col("tsus"), col("event_id"))
@@ -2219,7 +2173,6 @@ object Relational {
     * per-day distinct is user-keyed and bounded by 7×users. No
     * range-window distinct, no per-day self-join of the event log. */
   def dauWau(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val ud = events(spark, dir)
       .select(col("user_id"),
         datediff(to_date(col("ts")), lit("1970-01-01")).as("dn"))
@@ -2275,7 +2228,6 @@ object Relational {
     * spectrum is a (type, ≤40 buckets) table. Sub-second gaps land in
     * bucket 0 via the greatest(…, 1) clamp. */
   def gapSpectrum(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -2328,7 +2280,6 @@ object Relational {
     * to 800000 — no float division feeds the flag; the rounded share
     * column is display-only. */
   def paretoRevenue(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val users = events(spark, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
@@ -2398,7 +2349,6 @@ object Relational {
     * parents a broadcast; Catalyst picks it) followed by a 1-row
     * digest. No row-level output. */
   def riAudit(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     def rel(name: String, child: DataFrame, parent: DataFrame)
         : DataFrame = {
       val total = child.agg(count(lit(1)).as("n_child_rows"))
@@ -2520,7 +2470,6 @@ object Relational {
   }
 
   def zorderLayout(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // lazily checkpointed: the bucket frame feeds both layouts' stats
     // plus the final rollup, and each reference re-derived the whole
     // build from the source — 9 lineitem scans in one plan, measured
@@ -2652,7 +2601,6 @@ object Relational {
     * pk-range scan the linear layout cannot) and BENCH_NOTES' probe
     * table ([[graft.ZorderProbe]]). */
   def zorderWriteRead(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val (lin, zo) = zorderWritten(spark, dir)
     layoutRoundtrip(spark, Seq(("linear", lin), ("zorder", zo)))
   }
@@ -2739,7 +2687,6 @@ object Relational {
     * scans into a checkpointed (scope, pk, f) frame, then file-grain
     * (≤ [[ZFiles]]+[[ZDeltaFiles]] rows) aggregates. */
   def zorderMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val li = lineitem(spark, dir)
       .select(col("l_orderkey").cast("long").as("ok"),
         col("l_partkey").cast("long").as("pk"))
@@ -2903,7 +2850,6 @@ object Relational {
     * rewrite — which is exactly why q203's decision, not a timer,
     * should gate it. */
   def layoutOptimize(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val (app, opt) = zoptWritten(spark, dir)
     layoutRoundtrip(spark, Seq(("appended", app), ("optimized", opt)))
   }
@@ -2931,117 +2877,62 @@ object Relational {
       |FROM m CROSS JOIN (VALUES ('appended'), ('optimized')) l(layout)
       |ORDER BY 1, 2""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> pricingSummary,
-    "q02_events_daily" -> eventsDaily,
-    "q03_distinct_customers" -> distinctCustomers,
-    "q04_rollup_returns" -> rollupReturns,
-    "q05_cube_orders" -> cubeOrders,
-    "q06_join_dims" -> joinDims,
-    "q07_join_facts" -> joinFacts,
-    "q08_semi_join" -> semiJoin,
-    "q09_anti_join" -> antiJoin,
-    "q10_left_join" -> leftJoin,
-    "q11_window_topn" -> windowTopN,
-    "q12_window_lag" -> windowLag,
-    "q13_window_running" -> windowRunning,
-    "q14_topk" -> topK,
-    "q15_union_ids" -> unionIds,
-    "q16_except_ids" -> exceptIds,
-    "q17_intersect_ids" -> intersectIds,
-    "q18_json_extract" -> jsonExtract,
-    "q19_tumbling_window" -> tumblingWindow,
-    "q20_filter_pushdown" -> filterPushdown,
-    "q21_sql_exists" -> sqlExists,
-    "q22_approx_distinct" -> approxDistinct,
-    "q184_zorder_layout" -> zorderLayout,
-    "q190_decimal_pricing" -> decimalPricing,
-    "q192_zorder_write_read" -> zorderWriteRead,
-    "q203_zorder_maintenance" -> zorderMaintenance,
-    "q211_layout_optimize" -> layoutOptimize,
-    "q212_bucketed_catalog_read" -> bucketedCatalogRead,
-    "q23_bucketed_join" -> bucketedJoin,
-    "q24_salted_join" -> saltedJoin,
-    "q163_auto_skew_join" -> autoSkewJoin,
-    "q25_session_window" -> sessionWindow,
-    "q28_percentiles" -> percentiles,
-    "q29_pivot_status" -> pivotStatus,
-    "q66_sliding_window" -> slidingWindow,
-    "q68_grouping_sets" -> groupingSets,
-    "q69_approx_percentile" -> approxPercentile,
-    "q93_bloom_prune_join" -> bloomPruneJoin,
-    "q95_cohort_retention" -> cohortRetention,
-    "q131_scd2_load" -> scd2Load,
-    "q133_funnel" -> funnel,
-    "q135_rolling_anomaly" -> rollingAnomaly,
-    "q136_record_linkage" -> recordLinkage,
-    "q140_attribution" -> attribution,
-    "q141_activity_streaks" -> activityStreaks,
-    "q142_transition_matrix" -> transitionMatrix,
-    "q144_volume_trend" -> volumeTrend,
-    "q148_rfm_segments" -> rfmSegments,
-    "q151_skew_profile" -> skewProfile,
-    "q156_session_paths" -> sessionPaths,
-    "q157_dau_wau" -> dauWau,
-    "q158_gap_spectrum" -> gapSpectrum,
-    "q159_pareto_revenue" -> paretoRevenue,
-    "q160_ri_audit" -> riAudit
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q01_pricing_summary" -> pricingSummarySql,
-    "q02_events_daily" -> eventsDailySql,
-    "q03_distinct_customers" -> distinctCustomersSql,
-    "q04_rollup_returns" -> rollupReturnsSql,
-    "q05_cube_orders" -> cubeOrdersSql,
-    "q06_join_dims" -> joinDimsSql,
-    "q07_join_facts" -> joinFactsSql,
-    "q08_semi_join" -> semiJoinSql,
-    "q09_anti_join" -> antiJoinSql,
-    "q10_left_join" -> leftJoinSql,
-    "q11_window_topn" -> windowTopNSql,
-    "q12_window_lag" -> windowLagSql,
-    "q13_window_running" -> windowRunningSql,
-    "q14_topk" -> topKSql,
-    "q15_union_ids" -> unionIdsSql,
-    "q16_except_ids" -> exceptIdsSql,
-    "q17_intersect_ids" -> intersectIdsSql,
-    "q18_json_extract" -> jsonExtractSql,
-    "q19_tumbling_window" -> tumblingWindowSql,
-    "q20_filter_pushdown" -> filterPushdownSql,
-    "q21_sql_exists" -> sqlExistsSql,
-    "q22_approx_distinct" -> approxDistinctSql,
-    "q184_zorder_layout" -> zorderLayoutSql,
-    "q190_decimal_pricing" -> decimalPricingSql,
-    "q192_zorder_write_read" -> zorderWriteReadSql,
-    "q203_zorder_maintenance" -> zorderMaintenanceSql,
-    "q211_layout_optimize" -> layoutOptimizeSql,
-    "q212_bucketed_catalog_read" -> joinFactsSql, // same answer via catalog
-    "q23_bucketed_join" -> joinFactsSql, // same answer via bucketed layout
-    "q24_salted_join" -> saltedJoinSql,
-    "q163_auto_skew_join" -> autoSkewJoinSql,
-    "q25_session_window" -> sessionWindowSql,
-    "q28_percentiles" -> percentilesSql,
-    "q29_pivot_status" -> pivotStatusSql,
-    "q66_sliding_window" -> slidingWindowSql,
-    "q68_grouping_sets" -> groupingSetsSql,
-    "q69_approx_percentile" -> approxPercentileSql,
-    "q93_bloom_prune_join" -> bloomPruneJoinSql,
-    "q95_cohort_retention" -> cohortRetentionSql,
-    "q131_scd2_load" -> scd2LoadSql,
-    "q133_funnel" -> funnelSql,
-    "q135_rolling_anomaly" -> rollingAnomalySql,
-    "q136_record_linkage" -> recordLinkageSql,
-    "q140_attribution" -> attributionSql,
-    "q141_activity_streaks" -> activityStreaksSql,
-    "q142_transition_matrix" -> transitionMatrixSql,
-    "q144_volume_trend" -> volumeTrendSql,
-    "q148_rfm_segments" -> rfmSegmentsSql,
-    "q151_skew_profile" -> skewProfileSql,
-    "q156_session_paths" -> sessionPathsSql,
-    "q157_dau_wau" -> dauWauSql,
-    "q158_gap_spectrum" -> gapSpectrumSql,
-    "q159_pareto_revenue" -> paretoRevenueSql,
-    "q160_ri_audit" -> riAuditSql
+  val all: Map[String, Query] = Map(
+    "q01_pricing_summary" -> Query(pricingSummary, pricingSummarySql),
+    "q02_events_daily" -> Query(eventsDaily, eventsDailySql),
+    "q03_distinct_customers" -> Query(distinctCustomers, distinctCustomersSql),
+    "q04_rollup_returns" -> Query(rollupReturns, rollupReturnsSql),
+    "q05_cube_orders" -> Query(cubeOrders, cubeOrdersSql),
+    "q06_join_dims" -> Query(joinDims, joinDimsSql),
+    "q07_join_facts" -> Query(joinFacts, joinFactsSql),
+    "q08_semi_join" -> Query(semiJoin, semiJoinSql),
+    "q09_anti_join" -> Query(antiJoin, antiJoinSql),
+    "q10_left_join" -> Query(leftJoin, leftJoinSql),
+    "q11_window_topn" -> Query(windowTopN, windowTopNSql),
+    "q12_window_lag" -> Query(windowLag, windowLagSql),
+    "q13_window_running" -> Query(windowRunning, windowRunningSql),
+    "q14_topk" -> Query(topK, topKSql),
+    "q15_union_ids" -> Query(unionIds, unionIdsSql),
+    "q16_except_ids" -> Query(exceptIds, exceptIdsSql),
+    "q17_intersect_ids" -> Query(intersectIds, intersectIdsSql),
+    "q18_json_extract" -> Query(jsonExtract, jsonExtractSql),
+    "q19_tumbling_window" -> Query(tumblingWindow, tumblingWindowSql),
+    "q20_filter_pushdown" -> Query(filterPushdown, filterPushdownSql),
+    "q21_sql_exists" -> Query(sqlExists, sqlExistsSql),
+    "q22_approx_distinct" -> Query(approxDistinct, approxDistinctSql),
+    "q184_zorder_layout" -> Query(zorderLayout, zorderLayoutSql),
+    "q190_decimal_pricing" -> Query(decimalPricing, decimalPricingSql),
+    "q192_zorder_write_read" -> Query(zorderWriteRead, zorderWriteReadSql),
+    "q203_zorder_maintenance" -> Query(zorderMaintenance, zorderMaintenanceSql),
+    "q211_layout_optimize" -> Query(layoutOptimize, layoutOptimizeSql),
+    // same answer via catalog
+    "q212_bucketed_catalog_read" -> Query(bucketedCatalogRead, joinFactsSql),
+    // same answer via bucketed layout
+    "q23_bucketed_join" -> Query(bucketedJoin, joinFactsSql),
+    "q24_salted_join" -> Query(saltedJoin, saltedJoinSql),
+    "q163_auto_skew_join" -> Query(autoSkewJoin, autoSkewJoinSql),
+    "q25_session_window" -> Query(sessionWindow, sessionWindowSql),
+    "q28_percentiles" -> Query(percentiles, percentilesSql),
+    "q29_pivot_status" -> Query(pivotStatus, pivotStatusSql),
+    "q66_sliding_window" -> Query(slidingWindow, slidingWindowSql),
+    "q68_grouping_sets" -> Query(groupingSets, groupingSetsSql),
+    "q69_approx_percentile" -> Query(approxPercentile, approxPercentileSql),
+    "q93_bloom_prune_join" -> Query(bloomPruneJoin, bloomPruneJoinSql),
+    "q95_cohort_retention" -> Query(cohortRetention, cohortRetentionSql),
+    "q131_scd2_load" -> Query(scd2Load, scd2LoadSql),
+    "q133_funnel" -> Query(funnel, funnelSql),
+    "q135_rolling_anomaly" -> Query(rollingAnomaly, rollingAnomalySql),
+    "q136_record_linkage" -> Query(recordLinkage, recordLinkageSql),
+    "q140_attribution" -> Query(attribution, attributionSql),
+    "q141_activity_streaks" -> Query(activityStreaks, activityStreaksSql),
+    "q142_transition_matrix" -> Query(transitionMatrix, transitionMatrixSql),
+    "q144_volume_trend" -> Query(volumeTrend, volumeTrendSql),
+    "q148_rfm_segments" -> Query(rfmSegments, rfmSegmentsSql),
+    "q151_skew_profile" -> Query(skewProfile, skewProfileSql),
+    "q156_session_paths" -> Query(sessionPaths, sessionPathsSql),
+    "q157_dau_wau" -> Query(dauWau, dauWauSql),
+    "q158_gap_spectrum" -> Query(gapSpectrum, gapSpectrumSql),
+    "q159_pareto_revenue" -> Query(paretoRevenue, paretoRevenueSql),
+    "q160_ri_audit" -> Query(riAudit, riAuditSql)
   )
 }

@@ -101,7 +101,6 @@ object Similarity {
     * only its local top-10 per query; the shuffle moves k rows per
     * (query, partition). */
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val q = e.filter(queryPred)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
@@ -188,7 +187,6 @@ object Similarity {
     * Hamming distance 1) — both widen candidates linearly, never
     * quadratically. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = sigTable(spark, dir)
     val eb = e.select(col("vec_id"), col("v"), col("nrm"),
       explode(bandCol("sig")).as("b"))
@@ -267,7 +265,6 @@ object Similarity {
     * several probes) collapse inside the TopKAgg buffer exactly as
     * in q61. The q102 ladder measures what the dial buys. */
   def annLshMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = sigTable(spark, dir)
     val eb = e.select(col("vec_id"), col("v"), col("nrm"),
       explode(bandCol("sig")).as("b"))
@@ -329,7 +326,6 @@ object Similarity {
     * array rebuild) and the top-3 closest members per centroid.
     * The centroid table is tiny -> broadcast back to the corpus. */
   def labelCentroids(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val cent = e.select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
       .groupBy(col("label"), col("i"))
@@ -470,7 +466,6 @@ object Similarity {
 
   private def ivfAnnImpl(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val cent = kmeansCodebook(spark, dir)
       .select(col("cell"), col("cv"),
@@ -718,7 +713,6 @@ object Similarity {
     * terms in subspace order, so the oracle mirrors the LUT scores
     * exactly. */
   def pqAnn(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val cb = pqCodebook(spark, dir)
     val enc = pqCodes(spark, dir)
@@ -873,7 +867,6 @@ object Similarity {
     * the oracle checks the banding itself, and a recall collapse is
     * visible) and the verified-pair aggregates. */
   def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = sigTable(spark, dir)
       .select(col("vec_id"), col("v"), col("nrm"),
         explode(bandCol("sig")).as("b"))
@@ -926,7 +919,6 @@ object Similarity {
     * elementwise + array_dot — expressible identically in DuckDB, so
     * the oracle checks every quantized value. */
   def int8Quant(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     vecs(spark, dir)
       .withColumn("scale", expr(
         "greatest(aggregate(v, 0d, (a, x) -> greatest(a, abs(x))), 1e-30) / 127d"))
@@ -1008,7 +1000,6 @@ object Similarity {
     memo(spark, dir, s"ann_top_$name")(build)
 
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val exact5 = servedTop(spark, dir, "exact",
       cosineTopK(spark, dir)).filter(col("rnk") <= 5)
       .select(col("qid"), col("vec_id"))
@@ -1094,7 +1085,6 @@ object Similarity {
     * half-vs-half comparison is a labels-sized self-join. Nothing
     * touches raw vectors after the first aggregate. */
   def centroidDrift(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir).withColumn("half", col("vec_id") % 2)
     val cent = e
       .select(col("label"), col("half"), posexplode(col("v")).as(Seq("i", "x")))
@@ -1165,7 +1155,6 @@ object Similarity {
     * with q56/q88, so in a session that already deduped, this is two
     * joins over tiny inputs. */
   def hybridDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     Dedup.minhashPairs(spark, dir)
       .join(e.select(col("vec_id").as("ia"), col("v").as("va"),
@@ -1228,7 +1217,6 @@ object Similarity {
     * cell-keyed aggregation; removal is emitted as a digest, with the
     * keep set derivable as an anti-join at write time. */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // K ~ sqrt(N): the published SemDeDup cell-depth dial, now LIVE
     // instead of a doc note — with a FIXED K, an m-times-larger corpus
     // deepens every cell m-fold and the within-cell pair volume grows
@@ -1379,7 +1367,6 @@ object Similarity {
     }
 
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val edges = knnEdges(spark, dir)
     val nodes = vecs(spark, dir).select(col("vec_id"))
     def hist(deg: DataFrame, kind: String) = nodes
@@ -1484,7 +1471,6 @@ object Similarity {
     * per-round localCheckpoint, cutting each round to one execution
     * of the last. */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val edges = knnEdges(spark, dir)
     val nodes = vecs(spark, dir).select(col("vec_id"))
     // loop invariants hoisted AND materialized (guide §1.2 "don't
@@ -1579,7 +1565,6 @@ object Similarity {
     * corpus count is a 1-row broadcast. Nothing all-pairs, nothing
     * windowed. */
   def contrastivePairs(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val n1 = e.agg(count(lit(1)).as("n_vecs"))
     val pos = Dedup.minhashPairs(spark, dir)
@@ -1689,7 +1674,6 @@ object Similarity {
     * is the bounded heap. Nothing touches the corpus beyond what the
     * underlying indexes already scanned. */
   def rankFusion(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val exact5 = servedTop(spark, dir, "exact",
       cosineTopK(spark, dir)).filter(col("rnk") <= 5)
       .select(col("qid"), col("vec_id"))
@@ -1780,7 +1764,6 @@ object Similarity {
     * cheaper dot products; at 100 TB the d-prefix scan is the whole
     * point — 8/64ths of the flops and bytes per candidate. */
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     def topAt(d: Int): DataFrame = {
       val ed = e.select(col("vec_id"),
@@ -1890,7 +1873,6 @@ object Similarity {
     * one (label) aggregate. The same pass at 100 TB is the
     * eval-embedding sweep run before every corpus release. */
   def semanticDecon(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val ev = e.filter(deconEvalPred)
       .select(col("vec_id").as("eid"), col("v").as("evv"),
@@ -1965,7 +1947,6 @@ object Similarity {
     * column is a precomputed column written by the dedup run, and
     * this is a single scan. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val roots = Curation.dupClusterLabels(spark, dir)
       .select(col("node").as("vec_id"), col("label").as("cc_root"))
@@ -2035,7 +2016,6 @@ object Similarity {
     * (map-side ≤2k rows per class cross the shuffle). Three corpus
     * scans, no corpus shuffle, nothing all-pairs. */
   def embeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val e = vecs(spark, dir)
     val cent = e.select(posexplode(col("v")).as(Seq("i", "x")))
       .groupBy(col("i")).agg(avg(col("x")).as("cx"))
@@ -2105,7 +2085,6 @@ object Similarity {
     * 2, each round lazily localCheckpoint-ed (the q145 lesson:
     * iterative lineage re-executes multiplicatively without it). */
   def labelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val edges = knnEdges(spark, dir)
     // loop-invariant undirected edge set, materialized once — both
     // voting rounds re-ran its union+distinct shuffle otherwise
@@ -2256,7 +2235,6 @@ object Similarity {
     }
 
   def nnDescent(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val edges = knnEdges(spark, dir)
     val before = scorePairs(spark, dir, edges)
       .withColumn("c4", expr("cast(round(cos * 10000) as bigint)"))
@@ -2382,7 +2360,6 @@ object Similarity {
     * what the ladder exists to surface — recall is a property of
     * index × data, and a deployment monitors it continuously. */
   def graphBeamAnn(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // The ranked result is itself memoized: q168 and the q102 ladder
     // both consume it, and the walk is a deterministic derived table
     // of queries×5 rows — one walk per (session, dir), like every
@@ -2549,7 +2526,6 @@ object Similarity {
     * path; on collision-sparse data it is the better graph. */
   def incrementalGraphInsert(
       spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     graphInsertCompareFrom(spark, dir, baseRefinedGraph(spark, dir),
       refinedEdges(spark, dir)
         .filter(col("src") > vecDeltaThreshold(spark, dir)))
@@ -2754,11 +2730,13 @@ object Similarity {
     * corpus-size-independent; the rebuild re-pays the banded
     * self-join over every surviving vector. */
   def graphRetraction(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     def rm(c: String) =
       expr(s"${Exprs.hash60(s"cast($c as string)")} % 8 = 3")
     val full = refinedEdges(spark, dir)
     val surviving = full.filter(!rm("src") && !rm("dst"))
+    // The victims are the deletion's frontier, bounded as the walk's
+    // query side (broadcast in every hop) is: the two restrictions to
+    // them below broadcast it too, so neither shuffles an edge memo.
     val victims = full.filter(!rm("src") && rm("dst"))
       .select(col("src")).distinct()
     val eSurv = vecs(spark, dir).filter(!rm("vec_id"))
@@ -2778,7 +2756,7 @@ object Similarity {
     // distinct here would be one whole extra shuffle for nothing
     // (reviewer find, r10 continuation; the oracle's UNION dedups,
     // and identical entries make the two forms agree).
-    val repaired = surviving.join(victims, "src")
+    val repaired = surviving.join(broadcast(victims), "src")
       .select(col("src"), col("dst"), col("cos"))
       .unionByName(walked)
       .groupBy(col("src"))
@@ -2789,7 +2767,7 @@ object Similarity {
     val rebuilt = memo(spark, dir, "nn_refined_surv") {
       refineFrom(spark, dir,
         knnEdgesFrom(sigTable(spark, dir).filter(!rm("vec_id"))))
-    }.join(victims, "src")
+    }.join(broadcast(victims), "src")
       .select(col("src"), col("dst"), col("cos"))
     def digest(df: DataFrame, side: String) = df
       .withColumn("h", expr(Exprs.hash60(
@@ -2952,7 +2930,6 @@ object Similarity {
     * aggregates. The DECISION costs one corpus scan — retraining
     * costs [[IvfIters]] of them, which is the point. */
   def codebookRefresh(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     codebookRefreshFrom(spark, dir, baseCodebook(spark, dir))
   }
 
@@ -3095,7 +3072,6 @@ object Similarity {
     * chains) and re-derives every stat. */
   def codebookRefreshExecuted(
       spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val thr = vecDeltaThreshold(spark, dir)
     val trainPred =
       expr(s"${Exprs.hash60("cast(vec_id as string)")} % 2 = 0")
@@ -3162,65 +3138,36 @@ object Similarity {
        |FROM asg GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q193_codebook_refresh" -> codebookRefresh,
-    "q214_codebook_refresh_executed" -> codebookRefreshExecuted,
-    "q198_incremental_graph_insert" -> incrementalGraphInsert,
-    "q202_graph_retraction" -> graphRetraction,
-    "q60_cosine_topk" -> cosineTopK,
-    "q61_ann_lsh" -> annLsh,
-    "q62_label_centroids" -> labelCentroids,
-    "q64_ivf_ann" -> ivfAnn,
-    "q65_embedding_neardup" -> embeddingNearDup,
-    "q70_ivf_nprobe2" -> ivfAnnNprobe2,
-    "q74_int8_quant" -> int8Quant,
-    "q97_pq_ann" -> pqAnn,
-    "q102_ann_recall" -> annRecall,
-    "q104_ann_lsh_multiprobe" -> annLshMultiprobe,
-    "q119_centroid_drift" -> centroidDrift,
-    "q120_hybrid_dedup" -> hybridDedup,
-    "q132_semantic_dedup" -> semanticDedup,
-    "q138_knn_graph" -> knnGraph,
-    "q145_pagerank" -> pagerank,
-    "q149_contrastive_pairs" -> contrastivePairs,
-    "q152_nn_descent" -> nnDescent,
-    "q168_graph_beam_ann" -> graphBeamAnn,
-    "q174_hard_negatives" -> hardNegatives,
-    "q176_embedding_outliers" -> embeddingOutliers,
-    "q177_label_propagation" -> labelPropagation,
-    "q181_rank_fusion" -> rankFusion,
-    "q182_semantic_decon" -> semanticDecon,
-    "q187_matryoshka_recall" -> matryoshkaRecall
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q193_codebook_refresh" -> codebookRefreshSql,
-    "q214_codebook_refresh_executed" -> codebookRefreshExecutedSql,
-    "q198_incremental_graph_insert" -> incrementalGraphInsertSql,
-    "q202_graph_retraction" -> graphRetractionSql,
-    "q60_cosine_topk" -> cosineTopKSql,
-    "q61_ann_lsh" -> annLshSql,
-    "q62_label_centroids" -> labelCentroidsSql,
-    "q64_ivf_ann" -> ivfAnnSql,
-    "q65_embedding_neardup" -> embeddingNearDupSql,
-    "q70_ivf_nprobe2" -> ivfAnnNprobe2Sql,
-    "q74_int8_quant" -> int8QuantSql,
-    "q97_pq_ann" -> pqAnnSql,
-    "q102_ann_recall" -> annRecallSql,
-    "q104_ann_lsh_multiprobe" -> annLshMultiprobeSql,
-    "q119_centroid_drift" -> centroidDriftSql,
-    "q120_hybrid_dedup" -> hybridDedupSql,
-    "q132_semantic_dedup" -> semanticDedupSql,
-    "q138_knn_graph" -> knnGraphSql,
-    "q145_pagerank" -> pagerankSql,
-    "q149_contrastive_pairs" -> contrastivePairsSql,
-    "q152_nn_descent" -> nnDescentSql,
-    "q168_graph_beam_ann" -> graphBeamAnnSql,
-    "q174_hard_negatives" -> hardNegativesSql,
-    "q176_embedding_outliers" -> embeddingOutliersSql,
-    "q177_label_propagation" -> labelPropagationSql,
-    "q181_rank_fusion" -> rankFusionSql,
-    "q182_semantic_decon" -> semanticDeconSql,
-    "q187_matryoshka_recall" -> matryoshkaRecallSql
+  val all: Map[String, Query] = Map(
+    "q193_codebook_refresh" -> Query(codebookRefresh, codebookRefreshSql),
+    "q214_codebook_refresh_executed" ->
+      Query(codebookRefreshExecuted, codebookRefreshExecutedSql),
+    "q198_incremental_graph_insert" ->
+      Query(incrementalGraphInsert, incrementalGraphInsertSql),
+    "q202_graph_retraction" -> Query(graphRetraction, graphRetractionSql),
+    "q60_cosine_topk" -> Query(cosineTopK, cosineTopKSql),
+    "q61_ann_lsh" -> Query(annLsh, annLshSql),
+    "q62_label_centroids" -> Query(labelCentroids, labelCentroidsSql),
+    "q64_ivf_ann" -> Query(ivfAnn, ivfAnnSql),
+    "q65_embedding_neardup" -> Query(embeddingNearDup, embeddingNearDupSql),
+    "q70_ivf_nprobe2" -> Query(ivfAnnNprobe2, ivfAnnNprobe2Sql),
+    "q74_int8_quant" -> Query(int8Quant, int8QuantSql),
+    "q97_pq_ann" -> Query(pqAnn, pqAnnSql),
+    "q102_ann_recall" -> Query(annRecall, annRecallSql),
+    "q104_ann_lsh_multiprobe" -> Query(annLshMultiprobe, annLshMultiprobeSql),
+    "q119_centroid_drift" -> Query(centroidDrift, centroidDriftSql),
+    "q120_hybrid_dedup" -> Query(hybridDedup, hybridDedupSql),
+    "q132_semantic_dedup" -> Query(semanticDedup, semanticDedupSql),
+    "q138_knn_graph" -> Query(knnGraph, knnGraphSql),
+    "q145_pagerank" -> Query(pagerank, pagerankSql),
+    "q149_contrastive_pairs" -> Query(contrastivePairs, contrastivePairsSql),
+    "q152_nn_descent" -> Query(nnDescent, nnDescentSql),
+    "q168_graph_beam_ann" -> Query(graphBeamAnn, graphBeamAnnSql),
+    "q174_hard_negatives" -> Query(hardNegatives, hardNegativesSql),
+    "q176_embedding_outliers" -> Query(embeddingOutliers, embeddingOutliersSql),
+    "q177_label_propagation" -> Query(labelPropagation, labelPropagationSql),
+    "q181_rank_fusion" -> Query(rankFusion, rankFusionSql),
+    "q182_semantic_decon" -> Query(semanticDecon, semanticDeconSql),
+    "q187_matryoshka_recall" -> Query(matryoshkaRecall, matryoshkaRecallSql)
   )
 }

@@ -15,11 +15,8 @@ import graft.streaming.Streams
   * execution reproduces the batch answer exactly (stream/batch
   * unification is the operator contract being tested). */
 object StreamingQ {
-  import Tables.prep
-
   /** Streaming tumbling window == batch q19 (same expression). */
   def streamTumbling(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val out = Streams.runToMemory(
       Streams.tumblingCounts(Streams.eventsStream(spark, dir)),
       "s_tumbling", OutputMode.Complete())
@@ -35,7 +32,6 @@ object StreamingQ {
     * UNIONED with itself (every event arrives twice); exactly-once
     * state dedup must collapse it back to the batch distinct set. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val doubled = Streams.eventsStream(spark, dir)
       .union(Streams.eventsStream(spark, dir))
     val out = Streams.runToMemory(
@@ -59,7 +55,6 @@ object StreamingQ {
     * sealing predicate, so stream == batch INCLUDING the open-session
     * boundary. */
   def streamSessions(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val out = Streams.runToMemory(
       Streams.sessionize(Streams.eventsStream(spark, dir)).toDF(),
       "s_sessions", OutputMode.Append(),
@@ -104,7 +99,6 @@ object StreamingQ {
 
   /** Streaming sliding window == batch q66 (same digest, same oracle). */
   def streamSliding(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val out = Streams.runToMemory(
       Streams.slidingCounts(Streams.eventsStream(spark, dir)),
       "s_sliding", OutputMode.Complete())
@@ -122,7 +116,6 @@ object StreamingQ {
     * digested per user bucket; the oracle is the equivalent batch
     * self-join over µs-truncated timestamps. */
   def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val out = Streams.runToMemory(
       Streams.clickPurchaseJoin(Streams.eventsStream(spark, dir)),
       "s_join", OutputMode.Append())
@@ -151,7 +144,6 @@ object StreamingQ {
     * the streaming form of the batch dimension join (q06). The oracle
     * is the identical batch join, so stream == batch again. */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val dim = Tables.nation(spark, dir)
       .select(col("n_nationkey"), col("n_name"))
     val enriched = Streams.enrichWithDim(
@@ -177,7 +169,6 @@ object StreamingQ {
     * delete-then-insert, README.md:111). The oracle is the same
     * digest straight off the events table. */
   def streamLoad(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scratch = Scratch.perCall("graft_stream_load")
     val out = scratch.resolve("fact").toString
     def runOnce(tag: String): Unit = Streams.incrementalLoad(
@@ -218,7 +209,6 @@ object StreamingQ {
     * [[Streams.dedupCorpusLoad]] contract note for the multi-batch
     * semantics, which StreamsSpec pins. */
   def streamDedupCorpus(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scratch = Scratch.perCall("graft_stream_dedup")
     val out = scratch.resolve("corpus").toString
     def runOnce(tag: String): Unit = Streams.dedupCorpusLoad(
@@ -257,7 +247,6 @@ object StreamingQ {
     * the batch assignment of the whole corpus: stream == batch for
     * the index build too. */
   def streamIvfIndex(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scratch = Scratch.perCall("graft_ivf_index")
     val out = scratch.resolve("index").toString
     Streams.drain(Streams.embeddingsStream(spark, dir),
@@ -290,7 +279,6 @@ object StreamingQ {
     * maintained artifact, the q103/q108 contract extended to the
     * incremental family. */
   def streamLabelRepair(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val store = Scratch.perCall("graft_label_repair")
     Streams.drain(Streams.documentsStream(spark, dir),
         Some(store.resolve("ckpt").toString))(_.foreachBatch {
@@ -319,7 +307,6 @@ object StreamingQ {
     * q127's df-bucketed content digest read from the final store
     * version; oracle = q127's full-rebuild SQL verbatim. */
   def streamPostingsMerge(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val store = Scratch.perCall("graft_postings_stream")
     Streams.drain(Streams.documentsStream(spark, dir),
         Some(store.resolve("ckpt").toString))(_.foreachBatch {
@@ -344,7 +331,6 @@ object StreamingQ {
     * full-rebuild SQL verbatim — stream == batch at the level a user
     * sees, the ranks. */
   def streamBm25Merge(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val store = Scratch.perCall("graft_bm25_stream")
     Streams.drain(Streams.documentsStream(spark, dir),
         Some(store.resolve("ckpt").toString))(_.foreachBatch {
@@ -369,7 +355,6 @@ object StreamingQ {
     * verbatim — stream == batch == incremental for the served
     * rollup. */
   def streamRollupMaintain(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val store = Scratch.perCall("graft_rollup_stream")
     Streams.drain(Streams.eventsStream(spark, dir),
         Some(store.resolve("ckpt").toString))(_.foreachBatch {
@@ -393,7 +378,6 @@ object StreamingQ {
     * stream, the replace stream, and the batch IVM all serve the same
     * rollup. */
   def streamRollupAdditive(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val store = Scratch.perCall("graft_rollup_addstream")
     val ckpt = store.resolve("ckpt").toString
     Streams.drain(Streams.eventsStream(spark, dir), Some(ckpt))(_.foreachBatch {
@@ -425,7 +409,6 @@ object StreamingQ {
     * the broadcast, not the stream. Stream == batch: the oracle
     * derives each event's version arithmetically. */
   def streamVersionedEnrich(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val base = Tables.nation(spark, dir)
       .select(col("n_nationkey"), col("n_name"))
     val cut = lit("2024-01-16 00:00:00").cast("timestamp")
@@ -480,7 +463,6 @@ object StreamingQ {
     * itself — one source of truth, no second scan. Stream == batch:
     * the oracle computes identical PSI straight off events. */
   def streamPsiDrift(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val binned = Streams.eventsStream(spark, dir)
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour"),
@@ -552,7 +534,6 @@ object StreamingQ {
     * sources-sized table. Stream == batch: the oracle computes the
     * identical flags straight off the documents table. */
   def streamMixtureMonitor(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val agg = Streams.documentsStream(spark, dir)
       .select(col("source"),
         size(split(trim(col("text")), "\\s+")).as("n"))
@@ -630,7 +611,6 @@ object StreamingQ {
     * term ASC) order. Stream == batch: the oracle computes the
     * identical top-5 straight off the documents table. */
   def streamTopTerms(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val sketch = Streams.documentsStream(spark, dir)
       .select(col("lang"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
@@ -692,7 +672,6 @@ object StreamingQ {
     * %7 originals + their new versions + carried rest + inserted
     * fresh keys) straight from the customer table. */
   def streamScd2(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scratch = Scratch.perCall("graft_stream_scd2")
     val dim = scratch.resolve("dim").toString
     // seed: the current snapshot, every member one open version
@@ -780,7 +759,6 @@ object StreamingQ {
     * incremental micro-batch — the q96 arrival discipline with
     * event-time state instead of partition overwrite. */
   def streamLateData(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scratch = Scratch.perCall("graft_stream_late")
     val arrivals = java.nio.file.Files
       .createDirectory(scratch.resolve("arrivals"))
@@ -853,59 +831,44 @@ object StreamingQ {
       |    AS window_digest
       |FROM f GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q39_stream_tumbling" -> streamTumbling,
-    "q121_stream_mixture_monitor" -> streamMixtureMonitor,
-    "q126_stream_top_terms" -> streamTopTerms,
-    "q183_stream_psi_drift" -> streamPsiDrift,
-    "q188_stream_versioned_enrich" -> streamVersionedEnrich,
-    "q40_stream_dedup" -> streamDedup,
-    "q41_stream_sessions" -> streamSessions,
-    "q71_stream_sliding" -> streamSliding,
-    "q72_stream_join" -> streamJoin,
-    "q91_stream_enrich" -> streamEnrich,
-    "q96_stream_load" -> streamLoad,
-    "q103_stream_dedup_corpus" -> streamDedupCorpus,
-    "q200_stream_label_repair" -> streamLabelRepair,
-    "q216_stream_postings_merge" -> streamPostingsMerge,
-    "q217_stream_bm25_merge" -> streamBm25Merge,
-    "q220_stream_rollup_maintain" -> streamRollupMaintain,
-    "q222_stream_rollup_additive" -> streamRollupAdditive,
-    "q108_stream_ivf_index" -> streamIvfIndex,
-    "q147_stream_scd2" -> streamScd2,
-    "q153_stream_late_data" -> streamLateData
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q121_stream_mixture_monitor" -> streamMixtureMonitorSql,
-    "q126_stream_top_terms" -> streamTopTermsSql,
-    "q183_stream_psi_drift" -> streamPsiDriftSql,
-    "q188_stream_versioned_enrich" -> streamVersionedEnrichSql,
-    "q39_stream_tumbling" -> streamTumblingSql,
-    "q40_stream_dedup" -> streamDedupSql,
-    "q41_stream_sessions" -> streamSessionsSql,
-    "q71_stream_sliding" -> streamSlidingSql,
-    "q72_stream_join" -> streamJoinSql,
-    "q91_stream_enrich" -> streamEnrichSql,
-    "q96_stream_load" -> streamLoadSql,
-    "q103_stream_dedup_corpus" -> streamDedupCorpusSql,
+  val all: Map[String, Query] = Map(
+    "q39_stream_tumbling" -> Query(streamTumbling, streamTumblingSql),
+    "q121_stream_mixture_monitor" ->
+      Query(streamMixtureMonitor, streamMixtureMonitorSql),
+    "q126_stream_top_terms" -> Query(streamTopTerms, streamTopTermsSql),
+    "q183_stream_psi_drift" -> Query(streamPsiDrift, streamPsiDriftSql),
+    "q188_stream_versioned_enrich" ->
+      Query(streamVersionedEnrich, streamVersionedEnrichSql),
+    "q40_stream_dedup" -> Query(streamDedup, streamDedupSql),
+    "q41_stream_sessions" -> Query(streamSessions, streamSessionsSql),
+    "q71_stream_sliding" -> Query(streamSliding, streamSlidingSql),
+    "q72_stream_join" -> Query(streamJoin, streamJoinSql),
+    "q91_stream_enrich" -> Query(streamEnrich, streamEnrichSql),
+    "q96_stream_load" -> Query(streamLoad, streamLoadSql),
+    "q103_stream_dedup_corpus" ->
+      Query(streamDedupCorpus, streamDedupCorpusSql),
     // q88's full-rebuild histogram IS the q200 oracle: hash match ==
     // stream-maintained labels equal the batch rebuild
-    "q200_stream_label_repair" -> Curation.dedupClustersSql,
+    "q200_stream_label_repair" ->
+      Query(streamLabelRepair, Curation.dedupClustersSql),
     // q127's full-rebuild digest IS the q216 oracle: hash match ==
     // stream == batch for the maintained index
-    "q216_stream_postings_merge" -> TextAnalysis.invertedIndexSql,
+    "q216_stream_postings_merge" ->
+      Query(streamPostingsMerge, TextAnalysis.invertedIndexSql),
     // q129's full-rebuild ranking IS the q217 oracle: stream == batch
     // at the level a user sees, the ranks
-    "q217_stream_bm25_merge" -> TextAnalysis.bm25Sql,
+    "q217_stream_bm25_merge" -> Query(streamBm25Merge, TextAnalysis.bm25Sql),
     // q218's full re-aggregation IS the q220 oracle: the streamed
     // fecha-keyed replace serves the same rollup the batch IVM does
-    "q220_stream_rollup_maintain" -> WarehouseIvm.rollupIvmAppendSql,
+    "q220_stream_rollup_maintain" ->
+      Query(streamRollupMaintain, WarehouseIvm.rollupIvmAppendSql),
     // ...and of the q222 additive arm: same serve surface, general
     // (split-fecha) arrival cadence
-    "q222_stream_rollup_additive" -> WarehouseIvm.rollupIvmAppendSql,
-    "q108_stream_ivf_index" -> Similarity.ivfAssignDigestSql,
-    "q147_stream_scd2" -> streamScd2Sql,
-    "q153_stream_late_data" -> streamLateDataSql
+    "q222_stream_rollup_additive" ->
+      Query(streamRollupAdditive, WarehouseIvm.rollupIvmAppendSql),
+    "q108_stream_ivf_index" ->
+      Query(streamIvfIndex, Similarity.ivfAssignDigestSql),
+    "q147_stream_scd2" -> Query(streamScd2, streamScd2Sql),
+    "q153_stream_late_data" -> Query(streamLateData, streamLateDataSql)
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions.col
 
-/** Harness-table access + per-query session prep. */
+/** Harness-table access + session prep. */
 object Tables {
 
   /** Per-(session, dir, key) memo of persisted derived tables
@@ -121,7 +121,15 @@ object Tables {
     *   - UTC, for timestamp parity with the DuckDB oracle;
     *   - AQE on (runtime shuffle-partition coalescing + skew-join
     *     handling — the 100 TB posture).
-    */
+    *
+    * Called once where a session enters the engine, never in a query
+    * body (`ConfScopeLintSpec`): [[graft.Session.local]] (every session
+    * the engine builds), [[graft.SparkEntry]]'s `queries` runners and
+    * `entry` (sessions the driver or perfbench hand in),
+    * [[ColdRestart.fresh]] (a `newSession()` starts from default confs
+    * and an empty function registry) and
+    * [[Reference.registerFechaTable]] (public, takes a caller's
+    * session). */
   def prep(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

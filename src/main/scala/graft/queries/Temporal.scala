@@ -50,7 +50,6 @@ object Temporal {
     * order at-or-before the event time (left outer: unmatched events
     * keep null). Digested per event type. */
   def asofJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val o = ordersAt(spark, dir)
       .select(col("k"), col("t"), col("ok"),
         lit(null).cast("string").as("event_type"), lit(0).as("pri"))
@@ -88,7 +87,6 @@ object Temporal {
     * intervals into covered buckets and equi-joins; the oracle is the
     * plain range predicate. Digested per event type. */
   def rangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val iv = ordersAt(spark, dir)
       .withColumn("start_us", unix_micros(col("t")))
       .withColumn("end_us", col("start_us") + BucketUs)
@@ -121,13 +119,8 @@ object Temporal {
        | AND e.t >= o.t AND e.t < o.t + INTERVAL 12 HOUR
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q26_asof_join" -> asofJoin,
-    "q27_range_join" -> rangeJoin
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q26_asof_join" -> asofJoinSql,
-    "q27_range_join" -> rangeJoinSql
+  val all: Map[String, Query] = Map(
+    "q26_asof_join" -> Query(asofJoin, asofJoinSql),
+    "q27_range_join" -> Query(rangeJoin, rangeJoinSql)
   )
 }

@@ -18,7 +18,6 @@ object TextAnalysis {
 
   /** Whitespace tokenizer + per-language corpus stats. */
   def tokenStats(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("lang"),
         size(split(trim(col("text")), "\\s+")).as("n_tokens"),
@@ -44,7 +43,6 @@ object TextAnalysis {
     * punctuation), the token-counting shape an LLM-data pipeline
     * needs before a real tokenizer. */
   def tokenBpe(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("source"),
         size(expr("regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\\\s]', 0)"))
@@ -75,7 +73,6 @@ object TextAnalysis {
     * except |langs| partial-agg rows. At 100 TB this is a single
     * corpus scan, embarrassingly parallel. */
   def tokenFertility(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("lang"),
         size(split(trim(col("text")), "\\s+")).as("n_words"),
@@ -135,7 +132,6 @@ object TextAnalysis {
             (col("n_stop") / col("n_tokens")) * 0.5, 4))
 
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     scoredDocs(spark, dir)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -192,7 +188,6 @@ object TextAnalysis {
     * aggregate. Scores are rounded to 4dp BEFORE the median, so the
     * interpolated midpoint is deterministic across engines. */
   def qualityGate(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scored = scoredDocs(spark, dir)
       .select(col("doc_id"), col("lang"), col("quality"))
     val med = scored.groupBy(col("lang"))
@@ -242,7 +237,6 @@ object TextAnalysis {
     * `array_position` (first occurrence of the max), identical to the
     * previous per-column argmax. */
   def langId(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val mk = LangMarkers.zipWithIndex.flatMap { case ((_, ws), i) =>
       ws.flatMap(w => Seq(s"'$w'", i.toString))
     }.mkString("map(", ", ", ")")
@@ -302,7 +296,6 @@ object TextAnalysis {
     * is the per-lang digest rollup. Digest per true lang: docs, mixed
     * docs, identified/abstained chunk totals, xor of mixed doc ids. */
   def mixedLang(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val mk = LangMarkers.zipWithIndex.flatMap { case ((_, ws), i) =>
       ws.flatMap(w => Seq(s"'$w'", (i + 1).toString))
     }.mkString("map(", ", ", ")")
@@ -389,7 +382,6 @@ object TextAnalysis {
     * so every fingerprint value still influences the output without a
     * full-cardinality dump. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("doc_id"),
         md5(expr(
@@ -421,7 +413,6 @@ object TextAnalysis {
     * arithmetic is (acc*131 + code) mod 1e9+7 in both engines, so the
     * oracle mirrors every hash value. Digested per lang. */
   def rollingHash(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val W = 8
     documents(spark, dir)
       .withColumn("s", lower(trim(col("text"))))
@@ -464,7 +455,6 @@ object TextAnalysis {
     * count), never raw text, and the final top-k is
     * TakeOrderedAndProject (per-partition heaps, no full sort). */
   def wordCount(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
       .groupBy(col("tok"))
@@ -487,7 +477,6 @@ object TextAnalysis {
     * hash is the engine-shared one, so the oracle mirrors every
     * assignment value-for-value. Digested per (lang, split). */
   def hashSplit(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .withColumn("bucket", expr(
         s"${Exprs.hash60("cast(doc_id as string)")} % 100"))
@@ -529,7 +518,6 @@ object TextAnalysis {
     * compute in the scan stage, chosen over an explode + (doc, token)
     * groupBy that would shuffle one row per TOKEN of a 100 TB corpus. */
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // O(distinct x tokens) per-doc compute dwarfs one exchange of the
     // text bytes — spread the single-row-group scan (guide §2.5)
     spread(documents(spark, dir), "doc_id")
@@ -615,7 +603,6 @@ object TextAnalysis {
       PhoneRe, "<PHONE>")
 
   def piiRedact(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .withColumn("dirty", piiDirty)
       .withColumn("n_emails", regexp_count(col("dirty"), lit(EmailRe)))
@@ -690,7 +677,6 @@ object TextAnalysis {
     }
 
   def unigramLm(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val docs = documents(spark, dir)
       .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
     val lm = lmState(spark, dir)
@@ -761,7 +747,6 @@ object TextAnalysis {
     * predicate. Digest per lang: docs, kept count, rounded score sum,
     * xor of kept ids. */
   def dsirResample(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // the per-token log-ratio fold is the cost, not the text bytes —
     // spread the single-row-group scan (guide §2.5)
     val docs = spread(documents(spark, dir), "doc_id")
@@ -985,7 +970,6 @@ object TextAnalysis {
     * iteration, so both engines run the same trivially auditable
     * scan. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     trainedMerges(spark, dir)
       .toDF("rnk", "left_sym", "right_sym", "cnt").orderBy("rnk")
@@ -1012,7 +996,6 @@ object TextAnalysis {
     * encoding (length minus sentinel-stripped length), avoiding a
     * split+size array materialization per occurrence. */
   def bpeApply(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val enc = byRank(trainedMerges(spark, dir)).foldLeft(encInit("w")) {
       case (e, (_, a, b, _)) => applyMerge(e, a, b)
     }
@@ -1130,7 +1113,6 @@ object TextAnalysis {
     * compression is the overfit signal). Same scan-stage apply shape
     * as q100 — the merge table is literals, zero joins. */
   def bpeEval(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val merges = byRank(trainedMergesFor(spark, dir, "bpe_merges_train",
       col("doc_id") % 97 =!= 0))
     val enc = merges.foldLeft(encInit("w")) {
@@ -1233,7 +1215,6 @@ object TextAnalysis {
     * buckets by df: the head bucket's cost is visible, not averaged
     * away. */
   def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     postingsDigestOf(postings(spark, dir))
   }
 
@@ -1276,7 +1257,6 @@ object TextAnalysis {
     * FULL rebuild: the content digest hash-matching is the
     * merged == rebuilt proof, exactly the q191 pattern. */
   def incrementalPostings(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     incrementalPostingsFrom(spark, dir, basePostings(spark, dir))
   }
 
@@ -1454,7 +1434,6 @@ object TextAnalysis {
     * corpus-sized), embarrassingly parallel per term; the filter is a
     * codegen'd array op inside the scan stage. */
   def postingsRetraction(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val thr = Curation.deltaThreshold(spark, dir)
     retractionSummary(retractedPostings(spark, dir, thr))
   }
@@ -1548,7 +1527,6 @@ object TextAnalysis {
     * table — index-sized, not corpus-sized — and the per-pair
     * intersection is the allocation-free codegen'd kernel. */
   def postingsSearch(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     val p = postings(spark, dir)
     val qs = SearchQueries.toDF("qid", "ta", "tb")
@@ -1609,7 +1587,6 @@ object TextAnalysis {
     * ties break on doc_id ASC identically in the aggregate and the
     * oracle's window. */
   def bm25(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     import spark.implicits._
     // tokenization is per-row-expensive and runs in two legs (corpus
     // scalars + the tf stream) — spread the single-row-group scan
@@ -1702,7 +1679,6 @@ object TextAnalysis {
     * once, but at harness scale a scratch write costs more than the
     * recompute (the measured q191 negative result, BENCH_NOTES). */
   def incrementalBm25(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     incrementalBm25From(spark, dir,
       baseBm25Scalars(spark, dir), baseBm25Hits(spark, dir))
   }
@@ -1936,7 +1912,6 @@ object TextAnalysis {
     }
 
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     bigramDocBits(spark, dir)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -2090,7 +2065,6 @@ object TextAnalysis {
     * before comparison so the bucket boundary is cross-engine
     * deterministic. */
   def ccnetBuckets(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val scored = bigramDocBits(spark, dir)
       .filter(col("n_bg") >= 1)
       .withColumn("bpt", round(col("bits") / col("n_bg"), 4))
@@ -2162,7 +2136,6 @@ object TextAnalysis {
     * rounded to 4dp per (doc, word) BEFORE summing (the q87
     * convention) so cross-engine ln/sum drift cannot move a rank. */
   def tfidf(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val docs = documents(spark, dir)
     // NOT spread (measured negative, r16): the tokenize explode runs
     // single-task on the one-row-group scan (2x ~360ms branches at
@@ -2238,7 +2211,6 @@ object TextAnalysis {
     * growth curve itself is 10 rows. The running-total window runs on
     * those 10 rows, never on data. */
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val docs = documents(spark, dir)
       .withColumn("epoch",
         (expr(Exprs.hash60("cast(doc_id as string)")) % 10).cast("int"))
@@ -2324,7 +2296,6 @@ object TextAnalysis {
     * spectrum cross-joined back. The corpus is touched once; no
     * rank window over the vocabulary at all. */
   def zipfSpectrum(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val freqs = documents(spark, dir)
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("f"))
@@ -2405,7 +2376,6 @@ object TextAnalysis {
     * the number of LANGUAGES, not the corpus (the q163/BPE bounded-
     * collect discipline). */
   def nbLangClassifier(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     // (spread measured NEGATIVE here, r16: five consumers each pay
     // the exchange, which costs more than the parallelism buys at
     // this pass count — unlike the single-consumer q85/q166 shapes)
@@ -2527,7 +2497,6 @@ object TextAnalysis {
     * vectors (queries-sized), and a rank window over ≤ 4 rows per
     * query. The corpus is touched only by BM25 itself. */
   def prfRerank(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val cands = bm25(spark, dir)
       .select(col("qid"), col("rnk").as("bm25_rnk"), col("doc_id"))
     val e = embeddings(spark, dir)
@@ -2624,7 +2593,6 @@ object TextAnalysis {
       .agg(sum(col("cnt")).as("cell"))
 
   def cmsSketch(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val toks = documents(spark, dir)
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
     val cnts = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
@@ -2700,7 +2668,6 @@ object TextAnalysis {
     * ROWS materializes the same arithmetic through posexplode; the
     * stats-and-fingerprint pass here never pays that fan-out. */
   def ragChunking(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         size(split(lower(trim(col("text"))), "\\s+")).as("n"))
@@ -2775,7 +2742,6 @@ object TextAnalysis {
     * is the (lang, hash)-keyed distinct count — the standard dedup
     * shuffle, never all-pairs. */
   def chunkDedup(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         split(lower(trim(col("text"))), "\\s+").as("toks"))
@@ -2824,79 +2790,44 @@ object TextAnalysis {
        |  bit_xor(chash) AS distinct_digest
        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q50_token_stats" -> tokenStats,
-    "q51_quality_score" -> qualityScore,
-    "q52_lang_id" -> langId,
-    "q167_mixed_lang" -> mixedLang,
-    "q53_fingerprint" -> fingerprint,
-    "q54_token_bpe" -> tokenBpe,
-    "q172_token_fertility" -> tokenFertility,
-    "q59_rolling_hash" -> rollingHash,
-    "q67_word_count" -> wordCount,
-    "q73_hash_split" -> hashSplit,
-    "q85_repetition_stats" -> repetitionStats,
-    "q86_pii_redact" -> piiRedact,
-    "q87_unigram_lm" -> unigramLm,
-    "q166_dsir_resample" -> dsirResample,
-    "q99_bpe_train" -> bpeTrain,
-    "q100_bpe_apply" -> bpeApply,
-    "q107_quality_gate" -> qualityGate,
-    "q111_bpe_eval" -> bpeEval,
-    "q112_tfidf" -> tfidf,
-    "q117_bigram_lm" -> bigramLm,
-    "q171_ccnet_buckets" -> ccnetBuckets,
-    "q127_inverted_index" -> invertedIndex,
-    "q194_incremental_postings" -> incrementalPostings,
-    "q201_postings_retraction" -> postingsRetraction,
-    "q128_postings_search" -> postingsSearch,
-    "q129_bm25" -> bm25,
-    "q199_incremental_bm25" -> incrementalBm25,
-    "q137_vocab_growth" -> vocabGrowth,
-    "q146_zipf_spectrum" -> zipfSpectrum,
-    "q175_nb_lang_classifier" -> nbLangClassifier,
-    "q178_cms_sketch" -> cmsSketch,
-    "q179_rag_chunking" -> ragChunking,
-    "q185_prf_rerank" -> prfRerank,
-    "q180_chunk_dedup" -> chunkDedup
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q50_token_stats" -> tokenStatsSql,
-    "q51_quality_score" -> qualityScoreSql,
-    "q52_lang_id" -> langIdSql,
-    "q167_mixed_lang" -> mixedLangSql,
-    "q53_fingerprint" -> fingerprintSql,
-    "q54_token_bpe" -> tokenBpeSql,
-    "q172_token_fertility" -> tokenFertilitySql,
-    "q59_rolling_hash" -> rollingHashSql,
-    "q67_word_count" -> wordCountSql,
-    "q73_hash_split" -> hashSplitSql,
-    "q85_repetition_stats" -> repetitionStatsSql,
-    "q86_pii_redact" -> piiRedactSql,
-    "q87_unigram_lm" -> unigramLmSql,
-    "q166_dsir_resample" -> dsirResampleSql,
-    "q99_bpe_train" -> bpeTrainSql,
-    "q100_bpe_apply" -> bpeApplySql,
-    "q107_quality_gate" -> qualityGateSql,
-    "q111_bpe_eval" -> bpeEvalSql,
-    "q112_tfidf" -> tfidfSql,
-    "q117_bigram_lm" -> bigramLmSql,
-    "q171_ccnet_buckets" -> ccnetBucketsSql,
-    "q127_inverted_index" -> invertedIndexSql,
-    "q194_incremental_postings" -> incrementalPostingsSql,
-    "q201_postings_retraction" -> postingsRetractionSql,
-    "q128_postings_search" -> postingsSearchSql,
-    "q129_bm25" -> bm25Sql,
+  val all: Map[String, Query] = Map(
+    "q50_token_stats" -> Query(tokenStats, tokenStatsSql),
+    "q51_quality_score" -> Query(qualityScore, qualityScoreSql),
+    "q52_lang_id" -> Query(langId, langIdSql),
+    "q167_mixed_lang" -> Query(mixedLang, mixedLangSql),
+    "q53_fingerprint" -> Query(fingerprint, fingerprintSql),
+    "q54_token_bpe" -> Query(tokenBpe, tokenBpeSql),
+    "q172_token_fertility" -> Query(tokenFertility, tokenFertilitySql),
+    "q59_rolling_hash" -> Query(rollingHash, rollingHashSql),
+    "q67_word_count" -> Query(wordCount, wordCountSql),
+    "q73_hash_split" -> Query(hashSplit, hashSplitSql),
+    "q85_repetition_stats" -> Query(repetitionStats, repetitionStatsSql),
+    "q86_pii_redact" -> Query(piiRedact, piiRedactSql),
+    "q87_unigram_lm" -> Query(unigramLm, unigramLmSql),
+    "q166_dsir_resample" -> Query(dsirResample, dsirResampleSql),
+    "q99_bpe_train" -> Query(bpeTrain, bpeTrainSql),
+    "q100_bpe_apply" -> Query(bpeApply, bpeApplySql),
+    "q107_quality_gate" -> Query(qualityGate, qualityGateSql),
+    "q111_bpe_eval" -> Query(bpeEval, bpeEvalSql),
+    "q112_tfidf" -> Query(tfidf, tfidfSql),
+    "q117_bigram_lm" -> Query(bigramLm, bigramLmSql),
+    "q171_ccnet_buckets" -> Query(ccnetBuckets, ccnetBucketsSql),
+    "q127_inverted_index" -> Query(invertedIndex, invertedIndexSql),
+    "q194_incremental_postings" ->
+      Query(incrementalPostings, incrementalPostingsSql),
+    "q201_postings_retraction" ->
+      Query(postingsRetraction, postingsRetractionSql),
+    "q128_postings_search" -> Query(postingsSearch, postingsSearchSql),
+    "q129_bm25" -> Query(bm25, bm25Sql),
     // the full-rebuild SQL verbatim IS the q199 oracle: hash match ==
     // the incremental-merge-equals-rebuild proof
-    "q199_incremental_bm25" -> bm25Sql,
-    "q137_vocab_growth" -> vocabGrowthSql,
-    "q146_zipf_spectrum" -> zipfSpectrumSql,
-    "q175_nb_lang_classifier" -> nbLangClassifierSql,
-    "q178_cms_sketch" -> cmsSketchSql,
-    "q179_rag_chunking" -> ragChunkingSql,
-    "q185_prf_rerank" -> prfRerankSql,
-    "q180_chunk_dedup" -> chunkDedupSql
+    "q199_incremental_bm25" -> Query(incrementalBm25, bm25Sql),
+    "q137_vocab_growth" -> Query(vocabGrowth, vocabGrowthSql),
+    "q146_zipf_spectrum" -> Query(zipfSpectrum, zipfSpectrumSql),
+    "q175_nb_lang_classifier" -> Query(nbLangClassifier, nbLangClassifierSql),
+    "q178_cms_sketch" -> Query(cmsSketch, cmsSketchSql),
+    "q179_rag_chunking" -> Query(ragChunking, ragChunkingSql),
+    "q185_prf_rerank" -> Query(prfRerank, prfRerankSql),
+    "q180_chunk_dedup" -> Query(chunkDedup, chunkDedupSql)
   )
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.ArtifactStore
-import Tables.prep
 
 /** Incremental maintenance for the WAREHOUSE-side aggregates — the
   * `t_diario_*` tables the reference's own pipeline serves to BI
@@ -91,7 +90,6 @@ object WarehouseIvm {
     * base ∪ one partition-pruned slice aggregate. Oracle = the full
     * re-aggregation over events. */
   def rollupIvmAppend(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val root = store(spark, dir)
     val base = ArtifactStore.read(spark, root, RollupArtifact)
     rollupOut(base.unionByName(grainAgg(whRead(spark, dir).filter(isDay))))
@@ -263,7 +261,6 @@ object WarehouseIvm {
     * sides scan one pruned partition. Oracle = full rebuild over the
     * post-reload warehouse state. */
   def userTotalsReload(spark: SparkSession, dir: String): DataFrame = {
-    prep(spark)
     val root = store(spark, dir) // published warm, read cold below
     val s = ColdRestart.fresh(spark)
     val oldSlice = whRead(s, dir).filter(isDay)
@@ -284,13 +281,8 @@ object WarehouseIvm {
       |  round(sum(value), 4) AS sum_value
       |FROM wh GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q218_rollup_ivm_append" -> rollupIvmAppend,
-    "q219_user_totals_reload" -> userTotalsReload
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q218_rollup_ivm_append" -> rollupIvmAppendSql,
-    "q219_user_totals_reload" -> userTotalsReloadSql
+  val all: Map[String, Query] = Map(
+    "q218_rollup_ivm_append" -> Query(rollupIvmAppend, rollupIvmAppendSql),
+    "q219_user_totals_reload" -> Query(userTotalsReload, userTotalsReloadSql)
   )
 }

@@ -6,19 +6,24 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint: one place changes session conf for a while and one
-  * place runs a bounded stream. Under `src/main/scala`, `.conf.set(` and
-  * `.conf.unset(` appear only in `graft/Session.scala` (`withConf`) and
-  * `graft/queries/Tables.scala` (`prep` and the events pin), and
+/** Source lint: one place changes session conf for a while, one place
+  * runs a bounded stream, and sessions are prepped where they enter
+  * the engine. Under `src/main/scala`, `.conf.set(` and `.conf.unset(`
+  * appear only in `graft/Session.scala` (`withConf`) and
+  * `graft/queries/Tables.scala` (`prep` and the events pin);
   * `Trigger.AvailableNow` and `awaitTermination` only in
-  * `graft/streaming/Streams.scala` (`drain`). Comment lines are
-  * skipped. */
+  * `graft/streaming/Streams.scala` (`drain`); and `prep(` is called only
+  * in `graft/Session.scala`, `graft/SparkEntry.scala`,
+  * `ColdRestart.fresh` and `Reference.registerFechaTable` — never in a
+  * query body. Comment lines are skipped. */
 class ConfScopeLintSpec extends AnyFunSuite {
 
   private val Root = Paths.get("src/main/scala")
 
   private val ConfWrite = """\.conf\.(?:set|unset)\(""".r
   private val StreamRun = """\bTrigger\.AvailableNow\b|\bawaitTermination\b""".r
+  private val PrepCall = """(?<!def )\bprep\(""".r
+  private val DefName = """\bdef (\w+)""".r
 
   /** (line number, token) of every `token` match in `src`. */
   private def offences(src: String, token: scala.util.matching.Regex)
@@ -46,6 +51,12 @@ class ConfScopeLintSpec extends AnyFunSuite {
   private def count(file: String, token: scala.util.matching.Regex): Int =
     offences(Files.readString(Root.resolve(file)), token).size
 
+  /** The name of the last `def` declared at or above 1-based `line`. */
+  private def enclosingDef(src: String, line: Int): String =
+    src.linesIterator.take(line).toSeq.reverseIterator
+      .flatMap(DefName.findFirstMatchIn(_)).map(_.group(1))
+      .nextOption().getOrElse("")
+
   test("the detectors fire on conf writes and stream runs and skip " +
       "comments (negative control)") {
     assert(offences("""spark.conf.set("k", "v")""", ConfWrite) ===
@@ -61,6 +72,17 @@ class ConfScopeLintSpec extends AnyFunSuite {
       ConfWrite) ++ offences(
       """// q.awaitTermination()
         |val awaitTerminationX = 1""".stripMargin, StreamRun) === Nil)
+    assert(offences(
+      """  prep(spark)
+        |  graft.queries.Tables.prep(s)
+        |def prep(spark: SparkSession): Unit = {
+        |  list_prepend(0, xs); prepare(x)
+        |  // prep(spark)
+        |  * [[Tables.prep]] in a doc comment""".stripMargin,
+      PrepCall).map(_._1) === Seq(1, 2))
+    val body = "def fresh(s: S) = {\n  prep(s)\n}\ndef q(s: S) = {\n  prep(s)"
+    assert(offences(body, PrepCall).map { case (n, _) =>
+      enclosingDef(body, n) } === Seq("fresh", "q"))
   }
 
   test("session conf under src/main/scala is written only in Session and " +
@@ -80,5 +102,28 @@ class ConfScopeLintSpec extends AnyFunSuite {
       found.mkString("\n"))
     assert(count("graft/streaming/Streams.scala", StreamRun) === 2,
       "Streams must hold exactly one AvailableNow start/await pair")
+  }
+
+  test("sessions under src/main/scala are prepped only where they enter " +
+      "the engine, never in a query body") {
+    // file -> the one def allowed to call prep there (None: any)
+    val entries = Seq[(String, Option[String])](
+      "graft/Session.scala" -> None,
+      "graft/SparkEntry.scala" -> None,
+      "graft/queries/ColdRestart.scala" -> Some("fresh"),
+      "graft/queries/Reference.scala" -> Some("registerFechaTable"))
+    val found = files.flatMap { f =>
+      val rel = Root.relativize(f).toString
+      val src = Files.readString(f)
+      offences(src, PrepCall).map(_._1).filterNot { n =>
+        entries.toMap.get(rel).exists(_.forall(_ == enclosingDef(src, n)))
+      }.map(n => s"$rel:$n in ${enclosingDef(src, n)}")
+    }
+    assert(found.isEmpty, "prep called outside the session entry points " +
+      "(prep where the session is made, not in a query body):\n" +
+      found.mkString("\n"))
+    assert(entries.map(e => count(e._1, PrepCall)) === Seq(1, 2, 1, 1),
+      "Session.local, SparkEntry's queries and entry, ColdRestart.fresh " +
+        "and Reference.registerFechaTable prep once each")
   }
 }

@@ -1,15 +1,18 @@
 package graft
 
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, NoSuchFileException, Paths}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 
-import scala.io.Source
-import scala.util.Using
+import scala.util.Try
 
 /** Launches a graft main in a child JVM — the test classpath, the
   * module opens Spark needs on Java 17, UI off, UTC — with stdout and
   * stderr going to one temp log, so multi-process specs can run real
-  * publishers, racers and crash-and-resume streams. */
+  * publishers, racers and crash-and-resume streams. Once the child
+  * exits its log is read into memory and the file deleted; [[output]]
+  * and [[tail]] serve it from either place. */
 object ForkedJvm {
 
   private val Opens = Seq(
@@ -21,6 +24,13 @@ object ForkedJvm {
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+
+  /** Per log: the child and its log text, captured at exit. */
+  private val children =
+    new ConcurrentHashMap[File, (Process, CompletableFuture[String])]
+
+  private def read(log: File): String =
+    new String(Files.readAllBytes(log.toPath), StandardCharsets.UTF_8)
 
   /** Start `mainClass args` with `-Xmx<xmx>` and extra `env`; returns
     * the process and its log file. */
@@ -39,12 +49,25 @@ object ForkedJvm {
       .redirectErrorStream(true)
       .redirectOutput(log)
     env.foreach { case (k, v) => pb.environment().put(k, v) }
-    (pb.start(), log)
+    val p = pb.start()
+    children.put(log, (p, p.onExit().thenApply { _ =>
+      try read(log) finally Files.deleteIfExists(log.toPath)
+    }))
+    (p, log)
+  }
+
+  /** A child's whole log: the file while the child runs, the captured
+    * text once it has exited. */
+  def output(log: File): String = {
+    val (p, captured) = children.get(log)
+    if (!p.isAlive) captured.get()
+    else try read(log) catch {
+      case _: NoSuchFileException => captured.get() // exited meanwhile
+    }
   }
 
   /** The last `n` lines of a child's log, for failure messages. */
   def tail(log: File, n: Int): String =
-    Using(Source.fromFile(log, "UTF-8"))(
-      _.getLines().toSeq.takeRight(n).mkString("\n"))
+    Try(output(log).linesIterator.toSeq.takeRight(n).mkString("\n"))
       .getOrElse("<log unreadable>")
 }

@@ -45,7 +45,6 @@ class RegistryPlanLintSpec extends SparkSpec {
   test("no registered batch plan contains a cartesian product or a UDF, " +
       "none re-scans one table more than 7 times, and no generator " +
       "explodes a STORED array column") {
-    graft.queries.Tables.prep(spark)
     val names = SparkEntry.benchQueries.filterNot(isStreaming)
     assert(names.size > 130, s"lint lost coverage: ${names.size}")
     val offenders = names.flatMap { name =>
@@ -130,7 +129,6 @@ class RegistryPlanLintSpec extends SparkSpec {
     // have broadcast had the plan shape let it, so an SMJ surviving
     // with a sub-threshold side means some construct (a repartition,
     // a hint conflict, a stats cliff) is defeating the planner.
-    graft.queries.Tables.prep(spark)
     val names = SparkEntry.benchQueries.filterNot(isStreaming)
     val bar = BigInt(10L * 1024 * 1024)
     val offenders = names.flatMap { name =>
@@ -263,7 +261,6 @@ class RegistryPlanLintSpec extends SparkSpec {
 
   test("the four streamed cells' micro-batch plans pass the same lint " +
       "(q216/q217/q220/q222 — executed foreachBatch actions captured)") {
-    graft.queries.Tables.prep(spark)
     val cells = Seq(
       "q216_stream_postings_merge", "q217_stream_bm25_merge",
       "q220_stream_rollup_maintain", "q222_stream_rollup_additive")
@@ -284,15 +281,13 @@ class RegistryPlanLintSpec extends SparkSpec {
   test("streamed-cell capture sees inner foreachBatch plans (negative " +
       "control: a planted cartesian product is caught)") {
     import org.apache.spark.sql.functions.col
-    graft.queries.Tables.prep(spark)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // disable broadcast so the unconditioned self-join cannot soften
     // into BroadcastNestedLoopJoin — the control must plant the exact
     // node the lint hunts
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("lint_ctrl_ckpt").toString
+      val ckpt = tempDir("lint_ctrl_ckpt").toString
       val qes = captureExecutions {
         val q = graft.streaming.Streams.documentsStream(spark, dir)
           .writeStream
@@ -317,8 +312,6 @@ class RegistryPlanLintSpec extends SparkSpec {
   test("the stored-column-generator detector actually fires (negative " +
       "control: the lint must not pass vacuously)") {
     import org.apache.spark.sql.functions._
-    graft.queries.Tables.prep(spark)
-    // the bad shape: exploding the stored array column directly
     val bad = graft.queries.Tables.embeddings(spark, dir)
       .select(explode(col("embedding")).as("x"))
     assert(storedColumnGenerators(bad.queryExecution.analyzed) ===

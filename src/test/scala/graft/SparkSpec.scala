@@ -12,13 +12,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
 
   /** A fresh directory in `java.io.tmpdir`, deleted with its contents
-    * when the suite ends. Spec dirs named `graft_*` must come from
-    * here: they share the engine scratch orphan pass's namespace. */
+    * when the suite ends. Every spec temp dir comes from here; dirs
+    * named `graft_*` must, since they share the engine scratch orphan
+    * pass's namespace. */
   protected def tempDir(prefix: String): java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     tempDirs.add(d)
     d
   }
+
+  /** An empty file `<prefix><suffix>` in a fresh [[tempDir]]. */
+  protected def tempFile(prefix: String, suffix: String): java.nio.file.Path =
+    java.nio.file.Files.createFile(tempDir(prefix).resolve(prefix + suffix))
 
   // The session is shared across suites; JVM exit stops it.
   override def afterAll(): Unit =
@@ -35,28 +40,28 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Assert the frame plans NO corpus-shuffling join (sort-merge or
     * shuffled-hash) — the bounded-broadcast plan contract several
-    * operators carry. AQE is disabled for a deterministic plan and
-    * the prior value restored; the frame is by-name so its physical
-    * planning happens inside the AQE-off window. */
+    * operators carry. The frame is by-name, so it is built and planned
+    * inside an AQE-off scope. An adaptive root fails the check: an
+    * `AdaptiveSparkPlanExec` is a leaf to `collect`, so a walk under
+    * it would see no join at all. */
   protected def assertBroadcastOnly(
       df: => org.apache.spark.sql.DataFrame, what: String): Unit = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.{
       ShuffledHashJoinExec, SortMergeJoinExec}
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = df.queryExecution.executedPlan
-      assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty &&
-        plan.collect { case j: ShuffledHashJoinExec => j }.isEmpty,
-        s"corpus-shuffling join inside $what:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val plan = Session.withConf(spark,
+      "spark.sql.adaptive.enabled" -> "false")(df.queryExecution.executedPlan)
+    assert(!plan.isInstanceOf[AdaptiveSparkPlanExec],
+      s"adaptive root hides the joins inside $what:\n$plan")
+    assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty &&
+      plan.collect { case j: ShuffledHashJoinExec => j }.isEmpty,
+      s"corpus-shuffling join inside $what:\n$plan")
   }
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
     val s = Session.local(4)
-    s.conf.set("spark.sql.ansi.enabled", "false")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -90,7 +90,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   private def write(text: String, cs: Charset): String = {
-    val f = Files.createTempFile("pipeline_spec", ".csv")
+    val f = tempFile("pipeline_spec", ".csv")
     Files.write(f, text.getBytes(cs))
     f.toString
   }

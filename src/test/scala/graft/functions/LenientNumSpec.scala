@@ -127,7 +127,7 @@ class LenientNumSpec extends SparkSpec {
     // read from files: a projection over a local relation is evaluated
     // by the optimizer, never compiled
     def csv(lines: String*): org.apache.spark.sql.DataFrame = {
-      val f = java.nio.file.Files.createTempFile("codegen_spec", ".csv")
+      val f = tempFile("codegen_spec", ".csv")
       java.nio.file.Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
       graft.io.CsvProbe.read(spark, f.toString)
     }

@@ -10,14 +10,14 @@ import graft.SparkSpec
 class ArrivalReadSpec extends SparkSpec {
 
   private def tmp(name: String, bytes: Array[Byte]): String = {
-    val dir = Files.createTempDirectory("arrival_spec")
+    val dir = tempDir("arrival_spec")
     val p = dir.resolve(name)
     Files.write(p, bytes)
     p.toString
   }
 
   test("real xlsx routes to the spreadsheet reader") {
-    val dir = Files.createTempDirectory("arrival_spec")
+    val dir = tempDir("arrival_spec")
     val p = dir.resolve("drop.xlsx").toString
     XlsxRead.writeMinimal(p, Seq(Seq("a", "b"), Seq("1", "x"), Seq("2", "y")))
     val df = ArrivalRead.read(spark, p)
@@ -26,7 +26,7 @@ class ArrivalReadSpec extends SparkSpec {
   }
 
   test("xlsx arrivals surface TYPED columns (readTyped is the default path)") {
-    val dir = Files.createTempDirectory("arrival_spec")
+    val dir = tempDir("arrival_spec")
     val p = dir.resolve("typed.xlsx").toString
     XlsxRead.writeMinimal(p, Seq(
       Seq("n", "d", "s", "cuando"),

@@ -12,7 +12,7 @@ class CompactSpec extends SparkSpec {
 
   test("unpartitioned: many small files compact to ceil(rows/max) even chunks") {
     import spark.implicits._
-    val path = Files.createTempDirectory("compact_spec").resolve("t").toString
+    val path = tempDir("compact_spec").resolve("t").toString
     (0L until 1000L).map(i => (i, s"row $i")).toDF("id", "s")
       .repartition(40).write.parquet(path)
     val stats = Compact.compact(spark, path, Seq.empty, 300)
@@ -27,7 +27,7 @@ class CompactSpec extends SparkSpec {
 
   test("partitioned: each partition dir compacts to its own ceil(rows/max)") {
     import spark.implicits._
-    val path = Files.createTempDirectory("compact_spec").resolve("p").toString
+    val path = tempDir("compact_spec").resolve("p").toString
     // 3 keys with skewed sizes: 500, 250, 50 rows
     val df = ((0L until 500L).map(i => ("a", i)) ++
       (0L until 250L).map(i => ("b", i)) ++
@@ -45,7 +45,7 @@ class CompactSpec extends SparkSpec {
 
   test("a dataset left only at <path>.compact_old by a cut swap is restored, then compacted") {
     import spark.implicits._
-    val path = Files.createTempDirectory("compact_spec").resolve("r").toString
+    val path = tempDir("compact_spec").resolve("r").toString
     // the state a crash between "retire path" and "move staging in"
     // leaves: no dataset at path, the only complete copy retired
     (0L until 1000L).map(i => (i, s"row $i")).toDF("id", "s")

@@ -138,7 +138,7 @@ class ConditionalCreateSpec extends SparkSpec {
   }
 
   private def tmpLock(): Path = new Path("condfs://" +
-    java.nio.file.Files.createTempDirectory("condfs_spec").toString +
+    tempDir("condfs_spec").toString +
     "/t.lock")
 
   test("the race is REAL on the plain path: without the capability, " +
@@ -204,8 +204,7 @@ class ConditionalCreateSpec extends SparkSpec {
     hc.set("fs.condfs.impl.disable.cache", "true")
     try {
       import spark.implicits._
-      val dir = java.nio.file.Files
-        .createTempDirectory("condfs_commit").toString
+      val dir = tempDir("condfs_commit").toString
       val root = s"condfs://$dir"
       // arm the tear on every FS instance this scheme resolves to:
       // disable.cache gives each resolution a fresh instance, so the
@@ -258,8 +257,7 @@ class ConditionalCreateSpec extends SparkSpec {
     hc.set("fs.condfs.impl", classOf[CondFs].getName)
     hc.set("fs.condfs.impl.disable.cache", "true")
     try {
-      val dir = java.nio.file.Files
-        .createTempDirectory("condfs_lease").toString
+      val dir = tempDir("condfs_lease").toString
       val path = s"condfs://$dir/t"
       val order = java.util.Collections.synchronizedList(
         new java.util.ArrayList[String]())

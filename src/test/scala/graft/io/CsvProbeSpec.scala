@@ -12,7 +12,7 @@ import graft.SparkSpec
 class CsvProbeSpec extends SparkSpec {
 
   private def tmpCsv(content: Array[Byte]): String = {
-    val f = Files.createTempFile("probe_spec", ".csv")
+    val f = tempFile("probe_spec", ".csv")
     Files.write(f, content)
     f.toString
   }

@@ -53,7 +53,7 @@ class IdempotentWriterSpec extends SparkSpec {
 
   test("idempotency: writing the same date twice equals writing it once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("idem_spec").toString
+    val dir = tempDir("idem_spec").toString
     val day1 = Seq((1, "2024-01-01"), (2, "2024-01-01")).toDF("id", "fecha")
     val day2 = Seq((3, "2024-01-02")).toDF("id", "fecha")
     IdempotentWriter.overwritePartitions(day1.union(day2), dir)
@@ -67,7 +67,7 @@ class IdempotentWriterSpec extends SparkSpec {
 
   test("untouched partitions survive a partial overwrite (dynamic mode)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("idem_spec2").toString
+    val dir = tempDir("idem_spec2").toString
     IdempotentWriter.overwritePartitions(
       Seq((1, "2024-01-01"), (2, "2024-01-02")).toDF("id", "fecha"), dir)
     IdempotentWriter.overwritePartitions(
@@ -80,7 +80,7 @@ class IdempotentWriterSpec extends SparkSpec {
 
   test("load_date audit column is appended (DDL default, main.py:1400)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("idem_spec3").toString
+    val dir = tempDir("idem_spec3").toString
     IdempotentWriter.overwritePartitions(
       Seq((1, "2024-01-01")).toDF("id", "fecha"), dir)
     assert(spark.read.parquet(dir).columns.contains("load_date"))
@@ -95,7 +95,7 @@ class IdempotentWriterSpec extends SparkSpec {
     } yield (id, d))
     val samples = Iterator.continually(genRows.sample).flatten.take(8).toSeq
     for (rows <- samples) {
-      val dir = Files.createTempDirectory("idem_prop").toString
+      val dir = tempDir("idem_prop").toString
       val df = rows.toDF("id", "fecha")
       IdempotentWriter.overwritePartitions(df, dir, addLoadDate = false)
       // the daily re-run: replace, never append
@@ -110,7 +110,7 @@ class IdempotentWriterSpec extends SparkSpec {
   test("mergeUpsert: update + insert + survivors; untouched partitions " +
       "keep their exact files; re-apply is a no-op") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_spec").resolve("t").toString
+    val dir = tempDir("merge_spec").resolve("t").toString
     def files(part: String): Set[String] = {
       val d = java.nio.file.Paths.get(dir, s"fecha=$part")
       import scala.jdk.CollectionConverters._
@@ -145,7 +145,7 @@ class IdempotentWriterSpec extends SparkSpec {
 
   test("mergeUpsert on a fresh path creates the table") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("merge_fresh").resolve("t").toString
+    val dir = tempDir("merge_fresh").resolve("t").toString
     val batch = Seq((7, 70.0, "2024-02-01")).toDF("id", "amount", "fecha")
     IdempotentWriter.mergeUpsert(batch, dir, "id")
     assert(spark.read.parquet(dir).count() === 1)
@@ -251,7 +251,7 @@ class IdempotentWriterSpec extends SparkSpec {
       "invisible until recoverPartitions (the MSCK step), then serves " +
       "and prunes") {
     import spark.implicits._
-    val whRoot = Files.createTempDirectory("cat_refresh").toString
+    val whRoot = tempDir("cat_refresh").toString
     val wh = whRoot + "/wh"
     def day(d: String, n: Int) =
       (1 to n).map(i => (i.toLong, d, i * 1.0)).toDF("event_id", "fecha", "value")
@@ -303,7 +303,7 @@ class IdempotentWriterSpec extends SparkSpec {
       "never rewritten, pruning intact") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val whRoot = Files.createTempDirectory("evo_spec").toString
+    val whRoot = tempDir("evo_spec").toString
     val wh = whRoot + "/wh"
     val name = "graft_evo_respec"
     try {
@@ -449,7 +449,7 @@ class IdempotentWriterSpec extends SparkSpec {
   test("two same-fecha writers racing leave exactly one winner's rows " +
       "and no lock/staging debris") {
     import spark.implicits._
-    val path = Files.createTempDirectory("race_wh").toString + "/t"
+    val path = tempDir("race_wh").toString + "/t"
     // Different row COUNTS per payload so even a count-level mix shows.
     def payload(tag: String, n: Int) =
       (1 to n).map(i => (i, "2024-01-01", tag))
@@ -486,7 +486,7 @@ class IdempotentWriterSpec extends SparkSpec {
   }
 
   test("the writer lease admits one holder at a time and is re-entrant") {
-    val path = Files.createTempDirectory("lease_t").toString + "/t"
+    val path = tempDir("lease_t").toString + "/t"
     val inside = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxSeen = new java.util.concurrent.atomic.AtomicInteger(0)
     val threads = (1 to 6).map(_ => new Thread(() =>
@@ -505,7 +505,7 @@ class IdempotentWriterSpec extends SparkSpec {
   }
 
   test("a dead writer's stale lease is broken; the breaker proceeds") {
-    val dir = Files.createTempDirectory("stale_lease").toString
+    val dir = tempDir("stale_lease").toString
     val path = dir + "/t"
     val lock = new java.io.File(path + ".lock")
     java.nio.file.Files.write(lock.toPath, "999999@0".getBytes("UTF-8"))
@@ -524,7 +524,7 @@ class IdempotentWriterSpec extends SparkSpec {
 
   test("a LIVE writer survives contention on a store where mtime never " +
       "changes: staleness is content-version, not setTimes") {
-    val dir = Files.createTempDirectory("live_lease").toString
+    val dir = tempDir("live_lease").toString
     val path = dir + "/t"
     val lock = java.nio.file.Paths.get(path + ".lock")
     val renew = java.nio.file.Paths.get(path + ".lock.renew")
@@ -569,7 +569,7 @@ class IdempotentWriterSpec extends SparkSpec {
   test("the heartbeat renews by content rewrite: the renew sidecar's " +
       "sequence advances while the body runs, the main lock stays " +
       "immutable, and both are cleaned on release") {
-    val dir = Files.createTempDirectory("hb_lease").toString
+    val dir = tempDir("hb_lease").toString
     val path = dir + "/t"
     val lock = java.nio.file.Paths.get(path + ".lock")
     val renew = java.nio.file.Paths.get(path + ".lock.renew")
@@ -602,7 +602,7 @@ class IdempotentWriterSpec extends SparkSpec {
     // token write (or a .crc sidecar was lost) — the lock EXISTS but
     // readToken yields nothing; mapping that to 'reset the clock'
     // would make the orphan permanent (reviewer find, round 12)
-    val dir = Files.createTempDirectory("torn_lock").toString
+    val dir = tempDir("torn_lock").toString
     val path = dir + "/t"
     val lock = java.nio.file.Paths.get(path + ".lock")
     java.nio.file.Files.write(lock, Array.emptyByteArray)
@@ -618,7 +618,7 @@ class IdempotentWriterSpec extends SparkSpec {
       "aborts at the commit point instead of publishing over the new " +
       "holder") {
     import spark.implicits._
-    val root = Files.createTempDirectory("fence_spec").toString
+    val root = tempDir("fence_spec").toString
     val path = s"$root/t"
     // inside a held lease the fence passes; after a simulated
     // break + re-grant (the lock's token replaced) it throws — and an
@@ -651,7 +651,7 @@ class IdempotentWriterSpec extends SparkSpec {
 
   test("release deletes only the holder's OWN lock: a foreign token " +
       "survives a stranger's release path") {
-    val dir = Files.createTempDirectory("own_lease").toString
+    val dir = tempDir("own_lease").toString
     val path = dir + "/t"
     // acquire and, while held, replace the lock with a foreign one
     // (simulating a lost-and-regranted lease); our release must leave

@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -9,7 +7,7 @@ import org.apache.spark.sql.functions._
 class JdbcSinkSpec extends SparkSpec {
 
   private lazy val url =
-    "jdbc:derby:" + Files.createTempDirectory("jdbc_spec").toString +
+    "jdbc:derby:" + tempDir("jdbc_spec").toString +
       "/db;create=true"
   private val allowed = Set("t_spec")
 

@@ -19,7 +19,7 @@ class JsonlReadSpec extends SparkSpec {
       StructField("score", DoubleType))))))
 
   private def readLines(lines: String*) = {
-    val f = Files.createTempFile("jsonl_spec", ".jsonl")
+    val f = tempFile("jsonl_spec", ".jsonl")
     Files.writeString(f, lines.mkString("\n"))
     JsonlRead.read(spark, f.toString, schema)
   }

@@ -28,13 +28,13 @@ class LocalFsSpec extends SparkSpec {
 
   test("setPermission sets 0600 and 0750 in-process and keeps the sticky bit") {
     val fs = rawFs()
-    val f = Files.createTempFile("localfs_spec", ".bin")
+    val f = tempFile("localfs_spec", ".bin")
     fs.setPermission(new org.apache.hadoop.fs.Path(f.toUri), octal("600"))
     assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(f)) === "rw-------")
     fs.setPermission(new org.apache.hadoop.fs.Path(f.toUri), octal("750"))
     assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(f)) === "rwxr-x---")
     // 01777: java.nio has no sticky bit, so this takes the stock path
-    val d = Files.createTempDirectory("localfs_spec")
+    val d = tempDir("localfs_spec")
     fs.setPermission(new org.apache.hadoop.fs.Path(d.toUri), octal("1777"))
     assert((mode(d) & Integer.parseInt("7777", 8)) === Integer.parseInt("1777", 8))
   }
@@ -65,7 +65,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("a partitioned load through the helper leaves the stock write's " +
       "files, .crc sidecars and permissions, and no fs.file.* conf behind") {
-    val base = Files.createTempDirectory("localfs_spec")
+    val base = tempDir("localfs_spec")
     val viaHelper = base.resolve("helper")
     val stock = base.resolve("stock")
     val confBefore = fsFileConf()
@@ -101,7 +101,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("the writer options reach the write job's file system") {
     LocalFsSpec.CountingRaw.calls.set(0)
-    val out = Files.createTempDirectory("localfs_spec").resolve("t").toString
+    val out = tempDir("localfs_spec").resolve("t").toString
     LocalFs.write(facts).option("fs.file.impl", classOf[LocalFsSpec.CountingFs].getName)
       .partitionBy("fecha").parquet(out)
     assert(LocalFsSpec.CountingRaw.calls.get() > 0)
@@ -109,7 +109,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("a flipped byte in a helper-written file fails a plain read with " +
       "ChecksumException") {
-    val out = Files.createTempDirectory("localfs_spec").resolve("t")
+    val out = tempDir("localfs_spec").resolve("t")
     LocalFs.write(facts).partitionBy("fecha").parquet(out.toString)
     assert(spark.read.parquet(out.toString).count() === 4)
     val s = Files.walk(out)

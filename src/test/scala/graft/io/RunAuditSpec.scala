@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** R2 structured run-audit trail: per-phase rows/outcome/duration
@@ -42,7 +40,7 @@ class RunAuditSpec extends SparkSpec {
   }
 
   test("write appends runs to one parquet audit table") {
-    val tbl = Files.createTempDirectory("audit_spec").resolve("audit").toString
+    val tbl = tempDir("audit_spec").resolve("audit").toString
     val a1 = new RunAudit("run-a"); a1.phase[Unit]("d", "p") { ((), 1L) }
     val a2 = new RunAudit("run-b"); a2.phase[Unit]("d", "p") { ((), 2L) }
     a1.write(spark, tbl)

@@ -27,7 +27,7 @@ class ScratchSpec extends SparkSpec {
 
   test("orphan pass: dead or pid-reused owners go, live owners stay, " +
       "marker-less dirs go only past the age limit") {
-    val parent = Files.createTempDirectory("scratch_spec")
+    val parent = tempDir("scratch_spec")
     val now = System.currentTimeMillis()
     val old = now - Scratch.MarkerlessTtlMs - 60000L
     val dead = new ProcessBuilder("true").start()
@@ -92,7 +92,7 @@ class ScratchSpec extends SparkSpec {
   }
 
   test("a child JVM's scratch root is gone after a normal exit") {
-    val tmp = Files.createTempDirectory("scratch_fork")
+    val tmp = tempDir("scratch_fork")
     val (p, log) = ForkedJvm.launch("graft.Dev",
       Seq("explain", "/root/testdata/sf0.001", "q189_partition_pruned_read"),
       Map("JAVA_TOOL_OPTIONS" -> s"-Djava.io.tmpdir=$tmp",
@@ -101,7 +101,7 @@ class ScratchSpec extends SparkSpec {
       s"child JVM still running after 5 min:\n${ForkedJvm.tail(log, 40)}")
     assert(p.exitValue() === 0, ForkedJvm.tail(log, 40))
     // the plan's scan reads the warehouse from the redirected root
-    val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
+    val out = ForkedJvm.output(log)
     assert(out.contains(s"$tmp/graft_"), ForkedJvm.tail(log, 40))
     assert(names(tmp).filter(_.startsWith("graft_")).isEmpty, names(tmp))
   }

@@ -10,7 +10,7 @@ import graft.SparkSpec
 class XlsxReadSpec extends SparkSpec {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("xlsx_spec").resolve(name).toString
+    tempDir("xlsx_spec").resolve(name).toString
 
   private def writeZip(path: String, parts: Seq[(String, String)]): Unit = {
     val zos = new ZipOutputStream(Files.newOutputStream(

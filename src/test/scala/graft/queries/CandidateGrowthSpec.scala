@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -36,7 +34,7 @@ class CandidateGrowthSpec extends SparkSpec {
       (i.toLong, text)
     }
     import spark.implicits._
-    val dir = Files.createTempDirectory("growth_docs").toString
+    val dir = tempDir("growth_docs").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("s0"))
@@ -61,7 +59,7 @@ class CandidateGrowthSpec extends SparkSpec {
       (i.toLong, v.toSeq, s"l${i % 5}")
     }
     import spark.implicits._
-    val dir = Files.createTempDirectory("growth_vecs").toString
+    val dir = tempDir("growth_vecs").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
@@ -107,7 +105,7 @@ class CandidateGrowthSpec extends SparkSpec {
       (i.toLong, text)
     }
     import spark.implicits._
-    val dir = Files.createTempDirectory("growth_spans").toString
+    val dir = tempDir("growth_spans").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("s0"))

@@ -87,10 +87,9 @@ class ColdRestartSpec extends SparkSpec {
   test("q215 == q213: the cold versioned-store diff equals the warm " +
       "memo diff row-for-row (the time-travel audit loses nothing)") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
-    val warm = Curation.all("q213_label_blast_radius")(spark, dir)
+    val warm = Curation.all("q213_label_blast_radius").run(spark, dir)
       .collect().map(_.toSeq).toSet
-    val cold = Curation.all("q215_snapshot_diff_cold")(spark, dir)
+    val cold = Curation.all("q215_snapshot_diff_cold").run(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(warm === cold)
   }
@@ -353,7 +352,6 @@ class ColdRestartSpec extends SparkSpec {
       ArtifactStore.publish(Seq((1L, "x")).toDF("id", "tag"),
         root, "someone_elses")
       ArtifactStore.publishSnapshot(spark, root, Map("someone_elses" -> 1))
-      Tables.prep(spark)
       val err = intercept[IllegalArgumentException] {
         ColdRestart.chainLabelPublish(spark, "/root/testdata/sf0.001",
           root, 1)
@@ -416,7 +414,6 @@ class ColdRestartSpec extends SparkSpec {
       }
 
       // ---- today's process: delta paths from disk == warm twins ----
-      Tables.prep(spark)
       def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
         df.collect().map(_.toString).sorted.toSeq
       assert(rows(ColdRestart.coldDedup(spark, dir, root)) ===
@@ -466,7 +463,6 @@ class ColdRestartSpec extends SparkSpec {
       awaitPublisher(p2, "chain day 2")
       assert(!p2._1.isAlive)
       // day 3: THIS process (the third JVM of the chain)
-      Tables.prep(spark)
       val m3 = ColdRestart.chainPublish(spark, dir, root, 3)
       assert(m3.version === 3,
         s"version threading broke across processes: got v${m3.version}")
@@ -525,7 +521,6 @@ class ColdRestartSpec extends SparkSpec {
         assert(!p._1.isAlive)
       }
       // day 3: THIS process (the third JVM of the chain)
-      Tables.prep(spark)
       ColdRestart.chainLabelPublish(spark, dir, root, 3)
       // snapshot threading across processes: one snapshot per day
       val snap3 = ArtifactStore.latestSnapshot(spark, root).get
@@ -586,7 +581,6 @@ class ColdRestartSpec extends SparkSpec {
     try {
       docs.coalesce(1).write.mode("overwrite")
         .parquet(s"$fixDir/documents.parquet")
-      Tables.prep(spark)
       for (s <- 1 to 3)
         ColdRestart.chainLabelPublish(spark, fixDir, root, s)
       val snap = ArtifactStore.latestSnapshot(spark, root).get
@@ -633,7 +627,6 @@ class ColdRestartSpec extends SparkSpec {
         awaitPublisher(p, s"rollup chain day $s")
         assert(!p._1.isAlive)
       }
-      Tables.prep(spark)
       def served: Seq[Seq[Any]] =
         WarehouseIvm.rollupOut(ArtifactStore.read(spark, root,
             WarehouseIvm.AdditiveRollupArtifact))
@@ -670,7 +663,6 @@ class ColdRestartSpec extends SparkSpec {
       "the batch as a no-op and the final rollup equals the " +
       "uninterrupted run — and a NEW checkpoint lineage fails loudly") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val base = tempDir("graft_killresume")
     val arrival = base.resolve("arrival")
     java.nio.file.Files.createDirectories(arrival)
@@ -706,7 +698,7 @@ class ColdRestartSpec extends SparkSpec {
         Seq(ckpt, root), "graft.StreamCellRun")
       awaitPublisher(p2, "stream rollup run 2 (resume)")
       // the crashed batch WAS re-delivered (WAL replay) ...
-      val log2 = scala.io.Source.fromFile(p2._2, "UTF-8").getLines()
+      val log2 = ForkedJvm.output(p2._2).linesIterator
         .filter(_.startsWith("committed batch")).toSeq
       assert(log2.contains("committed batch 0"),
         s"resume did not re-deliver the in-flight batch: $log2")
@@ -737,7 +729,7 @@ class ColdRestartSpec extends SparkSpec {
       val done = p3._1.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
       assert(done && p3._1.exitValue() != 0,
         "a foreign checkpoint lineage was accepted")
-      val log3 = scala.io.Source.fromFile(p3._2, "UTF-8").mkString
+      val log3 = ForkedJvm.output(p3._2)
       assert(log3.contains("lineage"),
         "the failure did not name the lineage guard")
       // and the artifact is untouched by the refused lineage
@@ -780,7 +772,7 @@ class ColdRestartSpec extends SparkSpec {
     val p2 = launchPublisher(cell, arrival.toString,
       Seq(ckpt, root), "graft.StreamCellRun")
     awaitPublisher(p2, s"stream $cell run 2 (resume)")
-    val log2 = scala.io.Source.fromFile(p2._2, "UTF-8").getLines()
+    val log2 = ForkedJvm.output(p2._2).linesIterator
       .filter(_.startsWith("committed batch")).toSeq
     assert(log2.contains("committed batch 0"),
       s"resume did not re-deliver the in-flight batch: $log2")
@@ -804,7 +796,6 @@ class ColdRestartSpec extends SparkSpec {
       "re-delivers the batch and the served index digest equals the " +
       "full-corpus rebuild — replay absorbed by content idempotence") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val root = killResumeCell("postings",
       sliceWriter(n => docs.filter(col("doc_id") % 3 === (n - 1))))
@@ -824,7 +815,6 @@ class ColdRestartSpec extends SparkSpec {
       "checkpoint re-delivers the batch and the served ranking equals " +
       "q129's full rebuild — dropDuplicates absorbs the replayed rows") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val root = killResumeCell("bm25",
       sliceWriter(n => docs.filter(col("doc_id") % 3 === (n - 1))))
@@ -843,7 +833,6 @@ class ColdRestartSpec extends SparkSpec {
       "re-delivers the fecha-atomic batch as a replace-with-itself and " +
       "the served rollup equals the full re-aggregation") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val events = Tables.events(spark, dir)
       .select(col("ts"), col("event_type"), col("value"))
     // FECHA-ATOMIC slices (q220's documented arrival cadence): every
@@ -873,8 +862,7 @@ class ColdRestartSpec extends SparkSpec {
       "store-only inputs (memo domain stays EMPTY), store ownership " +
       "republished as next versions with the attested rows") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
-    val warm = Curation.all("q197_incremental_daily")(spark, dir)
+    val warm = Curation.all("q197_incremental_daily").run(spark, dir)
       .collect().map(_.toSeq).toSeq
     val root = ColdRestart.publishedStore(spark, dir)
     val before = ColdRestart.AllArtifacts.map { n =>

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -154,7 +152,7 @@ class CurationSpec extends SparkSpec {
   /** Scratch corpus dir for the document-level operators. */
   private def corpus(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("curation_spec").toString
+    val dir = tempDir("curation_spec").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -163,7 +161,7 @@ class CurationSpec extends SparkSpec {
 
   test("leakage-safe split: clusters never span splits, doc policy measured on the same corpus") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("cur_spec").toString
+    val dir = tempDir("cur_spec").toString
     // 10 groups of 3 identical docs (guaranteed near-dup clusters)
     // plus 5 singletons; ids interleaved so naive doc-hash splitting
     // has every chance to tear clusters apart
@@ -355,7 +353,7 @@ class CurationSpec extends SparkSpec {
 
   test("example assembly: ts order, event_id tiebreak, cent rendering, truncation") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("curation_spec").toString
+    val dir = tempDir("curation_spec").toString
     // user 1: arrival order scrambled; two events share a timestamp
     // (tie broken by event_id); user 2: 40 events -> truncates to 32.
     val u1 = Seq(
@@ -438,7 +436,7 @@ class CurationSpec extends SparkSpec {
 
   test("profile: completeness and distinctness on a null-bearing fixture") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("profile_spec").toString
+    val dir = tempDir("profile_spec").toString
     Seq(
       (Some(1L), Some("en"), Some("s0"), Some("a b"), Some(3)),
       (Some(2L), None,       Some("s0"), Some("a b"), Some(3)),
@@ -470,7 +468,7 @@ class CurationSpec extends SparkSpec {
   test("robust outliers: median/MAD ignore the spike that defines the " +
       "outlier — hand-computed") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("curation_spec").toString
+    val dir = tempDir("curation_spec").toString
     // type 'a': 1..9 plus a 1000.0 spike. median = 5.5, deviations
     // sorted = {0.5,0.5,1.5,1.5,2.5,2.5,3.5,3.5,4.5,994.5} -> MAD =
     // 2.5, threshold = 3 * 1.4826 * 2.5 = 11.1195 -> ONLY the spike
@@ -575,7 +573,7 @@ class CurationSpec extends SparkSpec {
   test("fd discovery: key FD exact, violated FD pays its g3 repair " +
       "cost — hand-computed") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("curation_spec").toString
+    val dir = tempDir("curation_spec").toString
     // source A: {en, en} (holds); source B: {en, de} (one row to
     // delete); doc_id -> source is a key FD (always holds)
     Seq((0L, "t0", "en", "A"), (1L, "t1", "en", "A"),
@@ -758,12 +756,10 @@ class CurationSpec extends SparkSpec {
       0 -> "zero filler aaa bbb ccc", 1 -> "one filler ddd eee fff",
       2 -> "two filler ggg hhh iii", 3 -> "three filler jjj kkk lll",
       4 -> "four filler mmm nnn ooo")
-    val dir = java.nio.file.Files.createTempDirectory("retract").toString
+    val dir = tempDir("retract").toString
     texts.toSeq.map { case (i, t) => (i.toLong, "en", s"s$i", t, t.length) }
       .toDF("doc_id", "lang", "source", "text", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Tables.prep(spark)
-    // fixture guard: the FULL clustering links {7,8,9} via the bridge
     val full = Tables.documents(spark, dir).select(col("doc_id"))
       .join(Curation.dupClusterLabels(spark, dir)
         .withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
@@ -783,7 +779,6 @@ class CurationSpec extends SparkSpec {
 
   test("q191 incremental labels equal the full rebuild, doc for doc") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val inc = Curation.incrementalLabels(spark, dir)
     // the full rebuild: q88's corpus-wide CC labels + singleton completion
     val full = Tables.documents(spark, dir).select(col("doc_id"))
@@ -800,7 +795,6 @@ class CurationSpec extends SparkSpec {
   test("split collide (delta x delta ∪ delta x base) emits exactly the " +
       "union-shape collide's verified pairs") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val thr = Curation.deltaThreshold(spark, dir)
     val deltaSigs = Dedup.signaturesFresh(spark,
       Tables.documents(spark, dir).filter(col("doc_id") > thr))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -14,7 +12,7 @@ class DedupSpec extends SparkSpec {
     * `sfDir` by the query functions. */
   private def corpus(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedup_spec").toString
+    val dir = tempDir("dedup_spec").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("s0"))
@@ -102,7 +100,7 @@ class DedupSpec extends SparkSpec {
 
   test("source overlap counts shared fingerprints per ordered source pair") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedup_spec").toString
+    val dir = tempDir("dedup_spec").toString
     // "dup one" lives in src0/src1/src2; "dup two" in src0/src1 (twice
     // in src1 — distinct must collapse it); unique text in src3.
     Seq(

@@ -11,8 +11,6 @@ class RelationalSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("bucketed layout join has no shuffle exchange on either side") {
-    Tables.prep(spark)
-    // external tmp locations, like every production caller: a killed
     // test run must not leak layouts into the unswept ./spark-warehouse
     val loc = tempDir("graft_spec_b")
     graft.io.BucketedLayout.writeBucketed(
@@ -40,7 +38,6 @@ class RelationalSpec extends SparkSpec {
 
   test("q212: a fresh session plans the bucketed SMJ shuffle-free and " +
       "bucket-prunes a point lookup from catalog metadata alone") {
-    Tables.prep(spark)
     val (ot, lt) = Relational.bucketedWritten(spark, dir)
     // the reading session did none of the layout work — catalog
     // metadata (the bucket spec) is all it has
@@ -77,8 +74,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("q93 injects a runtime bloom filter that prunes the fact side pre-shuffle") {
-    Tables.prep(spark)
-    // the confs bloomPruneJoin itself runs under
     val withBloom = graft.Session.withConf(spark, Relational.bloomConfs: _*) {
       val df = Relational.bloomPruneJoinPlan(spark, dir)
       val plan = df.queryExecution.executedPlan.toString
@@ -97,7 +92,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("plain fact-fact join DOES shuffle (the contrast q23 removes)") {
-    Tables.prep(spark)
     val o = Tables.orders(spark, dir).select(col("o_orderkey"))
     val l = Tables.lineitem(spark, dir).select(col("l_orderkey"))
     val joined = o.join(l, o("o_orderkey") === l("l_orderkey"))
@@ -105,7 +99,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("filter pushdown reaches the parquet scan with pruned schema") {
-    Tables.prep(spark)
     val df = Relational.filterPushdown(spark, dir)
     val scan = df.queryExecution.executedPlan.toString
     assert(scan.contains("PushedFilters: ["), scan)
@@ -115,7 +108,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("dimension join broadcasts the small sides") {
-    Tables.prep(spark)
     val df = Relational.joinDims(spark, dir)
     df.collect()
     assert(df.queryExecution.executedPlan.toString
@@ -123,22 +115,18 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("top-k plans as TakeOrderedAndProject, not a global sort") {
-    Tables.prep(spark)
     val df = Relational.topK(spark, dir)
     assert(df.queryExecution.executedPlan.toString
       .contains("TakeOrderedAndProject"))
   }
 
   test("word count plans as TakeOrderedAndProject after two-phase agg") {
-    Tables.prep(spark)
     val df = TextAnalysis.wordCount(spark, dir)
     assert(df.queryExecution.executedPlan.toString
       .contains("TakeOrderedAndProject"))
   }
 
   test("approx percentile stays within the sketch's rank-error bound") {
-    Tables.prep(spark)
-    // accuracy 10000 -> rank error <= n/10000; translate to a value
     // tolerance via a generous relative band (the harness prices are
     // smoothly distributed, so rank error ~ value error here). The
     // query itself emits the band check as `approx_within_5pct` so the
@@ -151,7 +139,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("q28 exact percentiles are distributed (no value-buffering aggregate) and match quantile_cont") {
-    Tables.prep(spark)
     val df = Relational.percentiles(spark, dir)
     // The scale guarantee: no Percentile aggregate (which buffers every
     // group value in executor memory) anywhere in the plan — ranks come
@@ -257,7 +244,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("approx distinct (HLL) stays within 5% of the exact count") {
-    Tables.prep(spark)
     val rows = Relational.approxDistinct(spark, dir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -266,7 +252,6 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("sliding window fans each event into exactly duration/slide windows") {
-    Tables.prep(spark)
     val digest = Relational.slidingWindow(spark, dir).collect()
     val nEvents = Tables.events(spark, dir).count()
     assert(digest.map(_.getLong(2)).sum === 2 * nEvents)
@@ -275,7 +260,7 @@ class RelationalSpec extends SparkSpec {
   test("funnel: stages match in ts order only, later stages need all " +
       "earlier ones — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("funnel_spec").toString
+    val fdir = tempDir("funnel_spec").toString
     def ns(s: Double): Long = (s * 1e9).toLong
     // u1: clean view@1 click@2 purchase@3 (full funnel, delays 1s/2s)
     // u2: click@1 BEFORE its first view@2 -> view only
@@ -304,7 +289,7 @@ class RelationalSpec extends SparkSpec {
 
   test("rolling anomaly: only the spike day flags; warm-up days never do") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("anom_spec").toString
+    val fdir = tempDir("anom_spec").toString
     // 9 days of alternating 9/11 events, then a 30-event day 9.
     // Trailing-7 baseline for day 9: mu = 71/7, sigma ~ 0.9897 ->
     // z ~ 20, flags. Every alternating day stays within |z| < 1.6,
@@ -328,7 +313,7 @@ class RelationalSpec extends SparkSpec {
   test("record linkage: disjoint-token catalog links every dirty record " +
       "to its true entity at distance 1") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("link_spec").toString
+    val fdir = tempDir("link_spec").toString
     // Token-disjoint 4-token names: one deletion corrupts at most 2
     // ADJACENT tokens, so at least one intact token PAIR survives on
     // the dirty side and matches the entity's pair keys — blocking
@@ -351,7 +336,7 @@ class RelationalSpec extends SparkSpec {
   test("attribution: latest qualifying touch wins; stale and missing " +
       "touches fall to none — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("attr_spec").toString
+    val fdir = tempDir("attr_spec").toString
     def ns(s: Long): Long = s * 1000000000L
     val day = 86400L
     Seq(
@@ -382,7 +367,7 @@ class RelationalSpec extends SparkSpec {
   test("activity streaks: islands split on gaps; per-user best streak " +
       "histogram — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("streak_spec").toString
+    val fdir = tempDir("streak_spec").toString
     val day0 = 1704067200L // 2024-01-01 UTC
     def dayTs(d: Int): Long = (day0 + d * 86400L + 3600L) * 1000000000L
     // u1: days 1,2,3 then 5,6 -> best 3; u2: one day -> 1;
@@ -405,7 +390,7 @@ class RelationalSpec extends SparkSpec {
   test("transition matrix: lag pairs with start state, probabilities " +
       "normalize per source — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("trans_spec").toString
+    val fdir = tempDir("trans_spec").toString
     def ns(s: Long): Long = s * 1000000000L
     // u1: a b a ; u2: a a  ->  (^,a):2 p 1.0 ; (a,a):1 and (a,b):1
     // p 0.5 each ; (b,a):1 p 1.0
@@ -429,7 +414,7 @@ class RelationalSpec extends SparkSpec {
   test("volume trend: perfect ramp gives slope 2 r2 1; flat series " +
       "gives slope 0 with null r2") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("trend_spec").toString
+    val fdir = tempDir("trend_spec").toString
     val day0 = 1704067200L
     def dayTs(d: Int, j: Int): Long = (day0 + d * 86400L + j) * 1000000000L
     // type a: 10,12,14,16,18 events on days 0..4 (exact line, slope 2)
@@ -455,7 +440,6 @@ class RelationalSpec extends SparkSpec {
 
   test("funnel plan: the three stage windows share ONE user-keyed " +
       "exchange over the event scan") {
-    Tables.prep(spark)
     val plan = Relational.funnel(spark, dir)
       .queryExecution.executedPlan.toString
     // exchanges: one hashpartitioning(user_id) for the windows + the
@@ -472,7 +456,6 @@ class RelationalSpec extends SparkSpec {
 
   test("length-batches plan: every window is partitioned — no " +
       "single-partition corpus sort") {
-    Tables.prep(spark)
     val plan = Curation.lengthBatches(spark, dir)
       .queryExecution.executedPlan.toString
     // the per-(bucket, length) rank and the bucket-level offset
@@ -490,7 +473,7 @@ class RelationalSpec extends SparkSpec {
   test("rfm: five users spanning the metric range land on the quintile " +
       "diagonal — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("rfm_spec").toString
+    val fdir = tempDir("rfm_spec").toString
     val day0 = 1704067200L
     // user i buys on days 1..i at i dollars each: r = 5-i, f = i,
     // m = 100*i*i cents. Against the 5-user quintile boundaries each
@@ -512,7 +495,7 @@ class RelationalSpec extends SparkSpec {
   test("skew profile: one hot key among uniform keys is the only salt " +
       "candidate — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("skew_spec").toString
+    val fdir = tempDir("skew_spec").toString
     // events: user 0 fires 80 events, users 1..20 fire 2 each ->
     // 120 rows / 21 keys, mean 5.71; heavy iff cnt*21 > 240, so only
     // the hot key qualifies; skew = 80*21/120 = 14.0
@@ -545,7 +528,7 @@ class RelationalSpec extends SparkSpec {
   test("session paths: 3-prefix truncation, gap splits, short sessions " +
       "render fully — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("path_spec").toString
+    val fdir = tempDir("path_spec").toString
     def ns(s: Long): Long = s * 1000000000L
     // u1: a,b,c,d within one session -> path 'a->b->c' (truncated);
     // u2: 'x' alone, then a 400s gap, then 'y','z' -> paths 'x', 'y->z'
@@ -565,7 +548,7 @@ class RelationalSpec extends SparkSpec {
   test("dau/wau: trailing week counts distinct users across activity " +
       "gaps — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("dau_spec").toString
+    val fdir = tempDir("dau_spec").toString
     val day0 = 1704067200L
     def dayTs(d: Int, j: Int): Long = (day0 + d * 86400L + j) * 1000000000L
     // u1 active days 0 and 3 (twice on day 0 — must not double-count),
@@ -591,7 +574,7 @@ class RelationalSpec extends SparkSpec {
   test("gap spectrum: power-of-two second buckets, per-user lag, " +
       "sub-second clamp — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("gap_spec").toString
+    val fdir = tempDir("gap_spec").toString
     def us(v: Long): Long = v * 1000L // microseconds -> ns column
     // u1: gaps 0.5s (bucket 0 via clamp), 3s (bucket 1), 300s
     // (bucket 8: 256..511); u2 single event -> no gap
@@ -613,7 +596,7 @@ class RelationalSpec extends SparkSpec {
   test("pareto: cumulative shares descend from the richest bucket and " +
       "the 80% line flags once — hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("pareto_spec").toString
+    val fdir = tempDir("pareto_spec").toString
     def ns(s: Long): Long = s * 1000000000L
     // user 1: 2x$4.00 = 800c (bucket 9), user 2: $1.50 = 150c
     // (bucket 7), user 3: $0.50 = 50c (bucket 5); total 1000c.
@@ -634,7 +617,7 @@ class RelationalSpec extends SparkSpec {
   test("ri audit: one planted orphan per relationship is found — " +
       "hand-computed") {
     import spark.implicits._
-    val fdir = java.nio.file.Files.createTempDirectory("ri_spec").toString
+    val fdir = tempDir("ri_spec").toString
     Seq((1L, "c1", 0L, 1.0, "S"), (2L, "c2", 5L, 1.0, "S"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal",
         "c_mktsegment")
@@ -663,8 +646,7 @@ class RelationalSpec extends SparkSpec {
   test("scd2: changed keys version, no-ops carry, new keys insert — " +
       "hand-computed state table") {
     import spark.implicits._
-    Tables.prep(spark)
-    val fdir = java.nio.file.Files.createTempDirectory("scd2_spec").toString
+    val fdir = tempDir("scd2_spec").toString
     // k=7,77,91 change (%7); k=11 arrives as a no-op copy; k=13 stays
     // AND re-arrives as the shifted fresh key; k=3 untouched; k=91 is
     // both changed (%7) and the source of a fresh insert (%13).
@@ -687,7 +669,7 @@ class RelationalSpec extends SparkSpec {
 
   test("z-order layout trades a little single-key pruning for " +
       "multi-key pruning the linear layout cannot do at all") {
-    val out = Relational.all("q184_zorder_layout")(spark, dir).collect()
+    val out = Relational.all("q184_zorder_layout").run(spark, dir).collect()
       .map(r => r.getString(0) -> r).toMap
     val lin = out("linear"); val zo = out("zorder")
     // l_partkey is uncorrelated with the linear sort key, so EVERY
@@ -716,7 +698,7 @@ class RelationalSpec extends SparkSpec {
     assert(byName("max_price_d").asInstanceOf[DecimalType].scale === 2)
     // rendering preserves the scale: every value has exactly 2 / 4
     // decimal digits, including trailing zeros a double would drop
-    val rows = Relational.all("q190_decimal_pricing")(spark, dir).collect()
+    val rows = Relational.all("q190_decimal_pricing").run(spark, dir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getString(2).matches("""\d+\.\d{2}"""), r.getString(2))

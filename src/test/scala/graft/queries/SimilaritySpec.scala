@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -13,7 +11,7 @@ class SimilaritySpec extends SparkSpec {
     * plus a small shared component so cosines are distinct. */
   private def corpus(n: Int): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     val rows = (0 until n).map { i =>
       val v = Array.fill(64)(0.01f)
       v(i % 64) = 1.0f
@@ -79,8 +77,8 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     val dir = corpus(120)
-    // Build first (prep() turns AQE on), then plan with AQE off so the
-    // physical tree is a plain SparkPlan we can traverse.
+    // Build first, then plan with AQE off so the physical tree is a
+    // plain SparkPlan we can traverse.
     val dfs = Seq(
       "cosineTopK" -> Similarity.cosineTopK(spark, dir),
       "annLsh" -> Similarity.annLsh(spark, dir),
@@ -116,7 +114,6 @@ class SimilaritySpec extends SparkSpec {
   test("PQ: codebook is per-subspace-width, codes reconstruct full width, " +
       "rerank is exact and self-excluded") {
     val dir = corpus(120)
-    Tables.prep(spark) // registers array_dot before the direct codebook call
     val cb = Similarity.pqCodebook(spark, dir).collect()
     assert(cb.length <= 4 * 16) // M*K, cells may drop if emptied
     assert(cb.forall(_.getSeq[Double](2).length === 16)) // PqSub width
@@ -139,7 +136,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("centroid drift: identical halves cos 1, orthogonal halves cos 0") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     def unit(axis: Int): Seq[Float] = {
       val v = Array.fill(64)(0.0f); v(axis) = 1.0f; v.toSeq
     }
@@ -159,7 +156,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("hybrid dedup: embedding space confirms one text pair, refutes the other") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     // two exact-dup text pairs (jaccard 1 -> decile 10): pair (0,1)
     // has identical embeddings (cos 1, confirmed), pair (2,3) has
     // orthogonal embeddings (cos 0, boilerplate signal).
@@ -187,7 +184,7 @@ class SimilaritySpec extends SparkSpec {
   test("semantic dedup: one member of each identical pair removed, " +
       "orthogonal singletons untouched") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     def unit(axis: Int): Seq[Float] = {
       val v = Array.fill(64)(0.0f); v(axis) = 1.0f; v.toSeq
     }
@@ -211,7 +208,7 @@ class SimilaritySpec extends SparkSpec {
   test("knn graph: twins are always linked both ways; histograms " +
       "partition the node set") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     def unit(axis: Int): Seq[Float] = {
       val v = Array.fill(64)(0.0f); v(axis) = 1.0f; v.toSeq
     }
@@ -236,7 +233,7 @@ class SimilaritySpec extends SparkSpec {
   test("pagerank: mass stays within damping bounds and nodes partition " +
       "into buckets") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     def unit(axis: Int): Seq[Float] = {
       val v = Array.fill(64)(0.0f); v(axis) = 1.0f; v.toSeq
     }
@@ -258,7 +255,7 @@ class SimilaritySpec extends SparkSpec {
   test("contrastive pairs: positive twins at cos 1, deterministic " +
       "negative lands orthogonal") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     // docs 0/1: near-dup texts (the one positive pair); docs 2/3
     // distinct. Embeddings: 0,1 on axis 0 (cos 1); 2,3 on axes 1,2 —
     // whichever the hash picks as the negative partner, it is
@@ -288,7 +285,7 @@ class SimilaritySpec extends SparkSpec {
   test("nn-descent: rescoring over a candidate superset never degrades " +
       "aggregate neighbor quality") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sim_spec").toString
+    val dir = tempDir("sim_spec").toString
     def unit(axis: Int): Seq[Float] = {
       val v = Array.fill(64)(0.0f); v(axis) = 1.0f; v.toSeq
     }
@@ -308,6 +305,24 @@ class SimilaritySpec extends SparkSpec {
     assert((imp == 0L) === (a4 == b4))
   }
 
+  test("assertBroadcastOnly fails on a shuffled join, also when the " +
+      "frame's build turns AQE back on (negative control)") {
+    import org.scalatest.exceptions.TestFailedException
+    def smj = spark.range(100).join(spark.range(100), "id")
+    graft.Session.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val plain = intercept[TestFailedException](
+        assertBroadcastOnly(smj, "a forced sort-merge join"))
+      assert(plain.getMessage.contains("SortMergeJoin"), plain.getMessage)
+      // a prep inside the by-name frame re-enables AQE: the adaptive
+      // root would hide the join from the walk
+      val adaptive = intercept[TestFailedException](
+        assertBroadcastOnly({ Tables.prep(spark); smj }, "a prepped frame"))
+      assert(adaptive.getMessage.contains("adaptive root"),
+        adaptive.getMessage)
+    }
+  }
+
   test("graph beam ANN: self-excluded ranked rows, navigates to the " +
       "query's cluster, and the walk never shuffle-joins the corpus") {
     import spark.implicits._
@@ -315,7 +330,7 @@ class SimilaritySpec extends SparkSpec {
     // mates collide in every LSH band, so the kNN graph is genuinely
     // navigable — the shape graph ANN is built for. Tail jitter keeps
     // cosines distinct across members.
-    val dir = java.nio.file.Files.createTempDirectory("beam_spec").toString
+    val dir = tempDir("beam_spec").toString
     val rows = (0 until 120).map { i =>
       val v = Array.fill(64)(0.0f)
       v(i % 8) = 1.0f
@@ -324,7 +339,6 @@ class SimilaritySpec extends SparkSpec {
     }
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Tables.prep(spark) // registers array_dot before the direct edge call
     // materialize the memoized refined graph first, so the search
     // plan probes the cached edge artifact instead of inlining its
     // build (the serving-time shape)
@@ -357,7 +371,7 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr, not}
     // the navigable clustered fixture from the beam-ANN spec
-    val dir = java.nio.file.Files.createTempDirectory("q202_spec").toString
+    val dir = tempDir("q202_spec").toString
     val rows = (0 until 120).map { i =>
       val v = Array.fill(64)(0.0f)
       v(i % 8) = 1.0f
@@ -366,7 +380,6 @@ class SimilaritySpec extends SparkSpec {
     }
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Tables.prep(spark)
     val full = Similarity.refinedEdges(spark, dir)
     full.count() // materialize the served artifact first
     def rm(c: String) =
@@ -414,7 +427,7 @@ class SimilaritySpec extends SparkSpec {
   test("hard negatives: the anchor's near-dup twin is excluded while " +
       "remaining the plain top-k's #1 hit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("hardneg_spec").toString
+    val dir = tempDir("hardneg_spec").toString
     // documents: doc 1 is a verbatim copy of doc 0 (minhash pair ->
     // same dedup cluster); everything else is lexically distinct.
     val base = "alpha beta gamma delta epsilon zeta eta theta iota " +
@@ -460,7 +473,7 @@ class SimilaritySpec extends SparkSpec {
   test("embedding outliers: the engineered off-manifold vector is its " +
       "label's rank-1 outlier with the most negative z") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("outlier_spec").toString
+    val dir = tempDir("outlier_spec").toString
     val rows = (0 until 120).map { i =>
       val v = Array.fill(64)(0.01f)
       if (i == 7) { // off-manifold: points AGAINST the shared tail
@@ -504,7 +517,7 @@ class SimilaritySpec extends SparkSpec {
   test("semantic decontamination: the eval vector's paraphrase twin is " +
       "flagged, orthogonal vectors are not") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("decon_spec").toString
+    val dir = tempDir("decon_spec").toString
     // eval slice = {0, 97}; vec 5 nearly parallel to eval vec 0 (the
     // paraphrase leak), everything else one-hot on distinct axes with
     // NO shared tail (pairwise cos ~ 0)
@@ -548,7 +561,7 @@ class SimilaritySpec extends SparkSpec {
   test("label propagation: labels flow only within a label's identical-" +
       "vector component, every propagated label is correct") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("labelprop_spec").toString
+    val dir = tempDir("labelprop_spec").toString
     // identical vectors within a label -> kNN edges never cross
     // labels -> any propagated label MUST match the truth
     val rows = (0 until 120).map { i =>
@@ -585,7 +598,7 @@ class SimilaritySpec extends SparkSpec {
     * drifts to an unseen axis or stays in-distribution. */
   private def refreshCorpus(drift: Boolean): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("cb_refresh").toString
+    val dir = tempDir("cb_refresh").toString
     val rows = (0 until 128).map { i =>
       val v = Array.fill(64)(0.01f)
       val axis = if (i > 111 && drift) 32 else i % 4
@@ -601,7 +614,7 @@ class SimilaritySpec extends SparkSpec {
   test("q193: a drifted delta fires refresh; an in-distribution delta " +
       "keeps the codebook (holdout-fair comparison)") {
     def run(dir: String): Map[String, org.apache.spark.sql.Row] =
-      Similarity.all("q193_codebook_refresh")(spark, dir)
+      Similarity.all("q193_codebook_refresh").run(spark, dir)
         .collect().map(r => r.getString(0) -> r).toMap
     val keep = run(refreshCorpus(drift = false))
     assert(keep.keySet === Set("base_train", "base_holdout", "delta"))
@@ -620,7 +633,7 @@ class SimilaritySpec extends SparkSpec {
   test("q214: the executed refresh RESTORES the drifted delta's " +
       "quantization without costing the base corpus its own") {
     def run(dir: String): Map[(String, String), Double] =
-      Similarity.all("q214_codebook_refresh_executed")(spark, dir)
+      Similarity.all("q214_codebook_refresh_executed").run(spark, dir)
         .collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3)).toMap
     val m = run(refreshCorpus(drift = true))

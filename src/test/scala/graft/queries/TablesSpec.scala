@@ -22,7 +22,7 @@ class TablesSpec extends SparkSpec {
   /** Copy a checked-in fixture into a scratch dir under the name the
     * table readers expect (`<dir>/events.parquet`). */
   private def fixtureDir(name: String): String = {
-    val dir = Files.createTempDirectory("ts_canary")
+    val dir = tempDir("ts_canary")
     val src = getClass.getResourceAsStream(s"/fixtures/$name.parquet")
     try Files.copy(src, dir.resolve("events.parquet"))
     finally src.close()
@@ -52,7 +52,7 @@ class TablesSpec extends SparkSpec {
   test("spread inserts the parallelizing exchange ONLY for scans that " +
       "cannot feed the session (round-16 verdict ask #2)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val dir = Files.createTempDirectory("spread_gate")
+    val dir = tempDir("spread_gate")
     val rows = spark.range(0, 1000).select(col("id").as("doc_id"),
       concat(lit("text "), col("id")).as("text"))
     rows.coalesce(1).write.parquet(s"$dir/one.parquet")
@@ -94,7 +94,7 @@ class TablesSpec extends SparkSpec {
     assert(exchanges(plain.groupBy("k").count()) === 1,
       "precondition: AQE checkpoint loses partitioning (if this " +
         "starts failing, memoKeyed's AQE-off workaround is obsolete)")
-    val dir = Files.createTempDirectory("memo_keyed").toString
+    val dir = tempDir("memo_keyed").toString
     val keyed = Tables.memoKeyed(spark, dir, "mk_probe", Seq("k"))(rows)
     assert(keyed.rdd.getNumPartitions === 4)
     assert(exchanges(keyed.groupBy("k").count()) === 0,

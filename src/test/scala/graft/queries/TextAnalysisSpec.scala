@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -12,7 +10,7 @@ class TextAnalysisSpec extends SparkSpec {
   /** documents.parquet fixture with controlled texts. */
   private def corpus(texts: Seq[String]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("text_spec").toString
+    val dir = tempDir("text_spec").toString
     texts.zipWithIndex
       .map { case (t, i) => (i.toLong, "en", s"src$i", t, t.length) }
       .toDF("doc_id", "lang", "source", "text", "n_chars")
@@ -222,7 +220,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("bigram lm: coherent word order scores fewer bits than scrambled") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("text_spec").toString
+    val dir = tempDir("text_spec").toString
     // identical unigram profile (10 a's, 10 b's each), opposite local
     // coherence: the alternating doc's bigrams dominate the model, so
     // the run-length doc must pay more bits per bigram — the signal a
@@ -426,7 +424,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("prf rerank: feedback doc excluded, dense ranks consecutive, " +
       "cosines ordered, every candidate came from bm25") {
     val dir = "/root/testdata/sf0.001"
-    val bm = TextAnalysis.all("q129_bm25")(spark, dir).collect()
+    val bm = TextAnalysis.all("q129_bm25").run(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(2))).toSet
     val out = TextAnalysis.prfRerank(spark, dir).collect()
     assert(out.nonEmpty)
@@ -442,7 +440,7 @@ class TextAnalysisSpec extends SparkSpec {
     // embedding — never appears in its own rerank list
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val bmRanked = TextAnalysis.all("q129_bm25")(spark, dir).collect()
+    val bmRanked = TextAnalysis.all("q129_bm25").run(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     for (q <- out.map(_.getString(0)).distinct) {
       val fbDoc = bmRanked.filter(r => r._1 == q && emb.contains(r._3))
@@ -493,7 +491,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("naive bayes classifier: separable vocabularies classify the held-out " +
       "split correctly; confusion partitions the eval docs") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("nb_spec").toString
+    val dir = tempDir("nb_spec").toString
     // Two languages with DISJOINT vocabularies; enough docs that both
     // the train (md5 bucket < 8) and eval (>= 8) splits hold both
     // languages. With disjoint vocabularies every eval token is either
@@ -543,19 +541,18 @@ class TextAnalysisSpec extends SparkSpec {
     val dir = corpus(
       (0 to 13).map(i => s"alpha beta gamma w$i") ++
         Seq("alpha zeta", "zeta eta"))
-    Tables.prep(spark)
-    val inc = TextAnalysis.all("q194_incremental_postings")(spark, dir)
+    val inc = TextAnalysis.all("q194_incremental_postings").run(spark, dir)
       .collect().map(r =>
         (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
-    val full = TextAnalysis.all("q127_inverted_index")(spark, dir)
+    val full = TextAnalysis.all("q127_inverted_index").run(spark, dir)
       .collect().map(r =>
         (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     // merged == rebuilt: same buckets, counts, AND content digests
     // (membership + order of every posting list)
     assert(inc === full)
-    val newTerms = TextAnalysis.all("q194_incremental_postings")(spark, dir)
+    val newTerms = TextAnalysis.all("q194_incremental_postings").run(spark, dir)
       .collect().map(_.getLong(4)).sum
     assert(newTerms === 2L, s"zeta + eta expected, got $newTerms")
   }
@@ -568,7 +565,6 @@ class TextAnalysisSpec extends SparkSpec {
     val dir = corpus(
       (0 to 13).map(i => s"alpha beta gamma w$i") ++
         Seq("alpha zeta", "zeta eta"))
-    Tables.prep(spark)
     val thr = 13L
     val retracted = TextAnalysis.retractedPostings(spark, dir, thr)
       .select("w", "docs").collect()
@@ -585,7 +581,7 @@ class TextAnalysisSpec extends SparkSpec {
     // lists q201 just restored, so its digest equaling q127's rebuild
     // (already asserted by the q194 test) closes the idempotent
     // re-delivery loop: retract -> re-append == untouched index.
-    val shrunk = TextAnalysis.all("q201_postings_retraction")(spark, dir)
+    val shrunk = TextAnalysis.all("q201_postings_retraction").run(spark, dir)
       .collect().map(_.getLong(4)).sum
     assert(shrunk === 1L, s"only 'alpha' spans base+delta, got $shrunk")
   }
@@ -603,7 +599,6 @@ class TextAnalysisSpec extends SparkSpec {
       val thr = rnd.nextInt(n - 1).toLong // at least one delta doc
       val dir = corpus(texts)
       val baseDir = corpus(texts.take(thr.toInt + 1))
-      Tables.prep(spark)
       val retracted = TextAnalysis.retractedPostings(spark, dir, thr)
         .select("w", "docs").collect()
         .map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
@@ -630,11 +625,10 @@ class TextAnalysisSpec extends SparkSpec {
           else filler(rnd.nextInt(filler.size)))
           .mkString(" "))
       val dir = corpus(texts)
-      Tables.prep(spark)
-      val inc = TextAnalysis.all("q199_incremental_bm25")(spark, dir)
+      val inc = TextAnalysis.all("q199_incremental_bm25").run(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSeq
-      val full = TextAnalysis.all("q129_bm25")(spark, dir)
+      val full = TextAnalysis.all("q129_bm25").run(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSeq
       assert(inc === full,
@@ -654,11 +648,10 @@ class TextAnalysisSpec extends SparkSpec {
       (0 to 13).map(i => s"join hash row batch scan filter pad$i") ++
         Seq("join hash join hash join hash",
           (1 to 30).map(i => s"fill$i").mkString(" ")))
-    Tables.prep(spark)
-    val inc = TextAnalysis.all("q199_incremental_bm25")(spark, dir)
+    val inc = TextAnalysis.all("q199_incremental_bm25").run(spark, dir)
       .collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val full = TextAnalysis.all("q129_bm25")(spark, dir)
+    val full = TextAnalysis.all("q129_bm25").run(spark, dir)
       .collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     // merged == rebuilt: identical (qid, rank, doc, score) tuples

@@ -11,7 +11,6 @@ class ZorderWriteSpec extends SparkSpec {
   test("the written z-order layout prunes the pk-range scan the " +
       "linear layout cannot prune at all") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val (lin, zo) = Relational.zorderWritten(spark, dir)
     val (linOkScan, linOkMatch, _, linTotal) =
       graft.ZorderProbe.measure(spark, lin, "ok")
@@ -42,8 +41,7 @@ class ZorderWriteSpec extends SparkSpec {
       "to a written z-order layout surrender pruning for the delta's rows") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
-    val lay = java.nio.file.Files.createTempDirectory("q203_phys")
+    val lay = tempDir("q203_phys")
       .resolve("t").toString
     val b = Relational.zorderBuckets(spark, dir).localCheckpoint(false)
     val thr = b.agg(max(col("ok"))).head.getLong(0) * 7 / 8
@@ -84,7 +82,6 @@ class ZorderWriteSpec extends SparkSpec {
   test("q211: executing the OPTIMIZE restores the pruning the appended " +
       "delta surrendered — physically, and without changing any answer") {
     val dir = "/root/testdata/sf0.001"
-    Tables.prep(spark)
     val (app, opt) = Relational.zoptWritten(spark, dir)
     val (scanApp, matchApp, _, totalApp) =
       graft.ZorderProbe.measure(spark, app, "pk")
@@ -117,8 +114,7 @@ class ZorderWriteSpec extends SparkSpec {
     import spark.implicits._
     // ok ids 0..159 -> thr = 139, delta = 140..159 in 8 appended files
     def write(deltaPk: Long => Long): String = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("q203_spec").toString
+      val dir = tempDir("q203_spec").toString
       (0L to 159L).map { ok =>
         val pk = if (ok <= 139L) (ok * 37) % 101 else deltaPk(ok)
         (ok, pk)
@@ -126,8 +122,6 @@ class ZorderWriteSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       dir
     }
-    Tables.prep(spark)
-    // clustered delta: every delta pk = 60, outside the probe range
     // [pkm/4, pkm/4 + pkm/10] = [25, 35] -> no delta file is touched,
     // delta waste 0 -> keep the layout
     val keep = Relational.zorderMaintenance(spark, write(_ => 60L))

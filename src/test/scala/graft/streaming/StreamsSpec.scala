@@ -19,8 +19,8 @@ class StreamsSpec extends SparkSpec {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val arrivals = java.nio.file.Files.createTempDirectory("dedup_arrivals")
-    val scratch = java.nio.file.Files.createTempDirectory("dedup_corpus")
+    val arrivals = tempDir("dedup_arrivals")
+    val scratch = tempDir("dedup_corpus")
     // Each arrival is ONE flat parquet file in the listed directory
     // (written to staging, then moved in — exactly how drops land).
     def writeArrival(name: String, docs: Seq[(Long, String, String)]): Unit = {
@@ -128,8 +128,8 @@ class StreamsSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType)))
-    val arrivals = java.nio.file.Files.createTempDirectory("late_arrivals")
-    val scratch = java.nio.file.Files.createTempDirectory("late_scratch")
+    val arrivals = tempDir("late_arrivals")
+    val scratch = tempDir("late_scratch")
     def writeArrival(name: String, hours: Seq[Double]): Unit = {
       val staging = scratch.resolve(s"staging_$name")
       hours.zipWithIndex
@@ -182,8 +182,8 @@ class StreamsSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("cents", LongType)))
-    val arrivals = java.nio.file.Files.createTempDirectory("scd2_arrivals")
-    val scratch = java.nio.file.Files.createTempDirectory("scd2_scratch")
+    val arrivals = tempDir("scd2_arrivals")
+    val scratch = tempDir("scd2_scratch")
     def writeArrival(name: String, rows: Seq[(Long, Long)]): Unit = {
       val staging = scratch.resolve(s"staging_$name")
       rows.toDF("k", "cents")
@@ -223,7 +223,7 @@ class StreamsSpec extends SparkSpec {
   test("versioned enrich: an event joins the dimension version valid at " +
       "its EVENT time, not the current one") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("venrich_spec")
+    val dir = tempDir("venrich_spec")
       .toString
     // same user (key 3): one event just before the 2024-01-16 cut,
     // one just after — they must land in different dimension versions
@@ -264,7 +264,7 @@ class StreamsSpec extends SparkSpec {
   test("psi drift: a shape-shifted window scores high, a reference-shaped " +
       "window scores low, symmetry is exact, psi is never negative") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("psi_spec").toString
+    val dir = tempDir("psi_spec").toString
     // W1 (10:00): 20 events in bin 0; W2 (11:00): 20 in bin 7;
     // W3 (12:00): 10 + 10 -> matches the global 50/50 reference
     def ev(i: Long, hour: Int, v: Double) =
@@ -307,8 +307,7 @@ class StreamsSpec extends SparkSpec {
   test("stateful streaming results are provider-independent: RocksDB " +
       "state store == default in-memory store (the 100 TB config)") {
     val dir = "/root/testdata/sf0.001"
-    graft.queries.Tables.prep(spark)
-    val q = graft.queries.StreamingQ.all("q126_stream_top_terms")
+    val q = graft.queries.StreamingQ.all("q126_stream_top_terms").run
     val defaultRows = q(spark, dir).collect().toSeq
     assert(defaultRows.nonEmpty)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -329,7 +328,7 @@ class StreamsSpec extends SparkSpec {
     * merges exercising different shapes (reviewer find, r11). */
   private class ArrivalFixture(prefix: String,
       applyBatch: (org.apache.spark.sql.DataFrame, String) => Unit) {
-    val scratch = java.nio.file.Files.createTempDirectory(prefix)
+    val scratch = tempDir(prefix)
     private val arrivals = scratch.resolve("arrivals")
     java.nio.file.Files.createDirectories(arrivals)
     val store = scratch.resolve("store").toString
@@ -382,7 +381,6 @@ class StreamsSpec extends SparkSpec {
       graft.io.ArtifactStore.read(spark, root,
           graft.queries.TextAnalysis.StreamPostingsArtifact)
         .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    graft.queries.Tables.prep(spark)
     writeArrival("a1", Seq((1L, "a b"), (2L, "b c")))
     runStream()
     assert(indexOf(store) === Map("a" -> Seq(1L), "b" -> Seq(1L, 2L),
@@ -426,8 +424,6 @@ class StreamsSpec extends SparkSpec {
     def nDocs(root: String): Long =
       graft.io.ArtifactStore.read(spark, root,
         graft.queries.TextAnalysis.StreamDoclensArtifact).count()
-    graft.queries.Tables.prep(spark)
-    // probe terms (q1 = join/hash, q3 = scan/filter): docs built so
     // tf, dl, and df all differ across docs and batches
     val d1 = Seq((1L, "join hash join scan other words here"),
       (2L, "hash filter and some padding tokens"))
@@ -460,7 +456,7 @@ class StreamsSpec extends SparkSpec {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val scratch = java.nio.file.Files.createTempDirectory("q200_spec")
+    val scratch = tempDir("q200_spec")
     val arrivals = scratch.resolve("arrivals")
     java.nio.file.Files.createDirectories(arrivals)
     def docsDF(docs: Seq[(Long, String)]) =
@@ -500,7 +496,6 @@ class StreamsSpec extends SparkSpec {
     val tC = "red green blue yellow purple orange cyan magenta"
     // arrival 1: docs 1/2 duplicate each other, doc 3 unique
     writeArrival("a1", Seq((1L, tA), (2L, tA), (3L, tB)))
-    graft.queries.Tables.prep(spark)
     runStream()
     assert(labelsOf(store) === Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
     // arrival 2, same checkpoint (only the new file is processed):
