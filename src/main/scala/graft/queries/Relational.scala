@@ -13,7 +13,11 @@ import graft.io.{LocalFs, Scratch}
   *
   * Scale notes (100 TB posture) are per-query. Every query imposes a
   * TOTAL order and rounds doubles for hash-stable comparison with the
-  * DuckDB oracle.
+  * DuckDB oracle. For a small collected result that order costs one
+  * task, not a range shuffle: [[ResultSort]] (installed by
+  * [[Tables.prep]]) sorts the result in one partition once AQE has
+  * run the stages below it and their size shows AQE would coalesce
+  * the range shuffle to one partition anyway.
   */
 object Relational {
   import Tables._
@@ -547,7 +551,13 @@ object Relational {
     * asserting the sketch landed within the documented error band —
     * both engines state the expected value of that boolean (true), so
     * the driver's hash compare verifies the bound itself.
-    * RelationalSpec asserts the same band numerically. */
+    * RelationalSpec asserts the same band numerically.
+    *
+    * Unweighted, and it stays so: no Spark 4.1.2 built-in sketch takes
+    * weights. `approx_percentile`/`percentile_approx` take (value,
+    * percentage, accuracy) only; the one aggregate with a frequency
+    * argument, `percentile(value, p, frequency)`, is exact and buffers
+    * every value per group, the shape this query exists to avoid. */
   def approxPercentile(spark: SparkSession, dir: String): DataFrame = {
     val li = lineitem(spark, dir)
     val sketch = li

@@ -1,0 +1,57 @@
+package graft.queries
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LocalRelation, LogicalPlan, ReturnAnswer, Sort}
+import org.apache.spark.sql.execution.{CoalesceExec, SQLExecution, SortExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.internal.SQLConf
+
+/** The final total order of a small result, sorted in one task: plans
+  * a global `Sort` at the answer root as a local sort over a
+  * one-partition coalesce, instead of a range shuffle (a bounds-sampling
+  * job, a map job, then the result job). It fires only when every leaf
+  * below the sort has an exact size — a materialized adaptive query
+  * stage or a local relation, with at least one stage — and that size
+  * is within the target AQE's `CoalesceShufflePartitions` would use
+  * for it, i.e. when AQE would coalesce the range shuffle to one
+  * partition anyway. Adaptive re-planning roots the plan in
+  * `ReturnAnswer`, so a collected query takes the one-task sort once
+  * its last shuffle stage below the sort has run. An initial plan has
+  * no stage and is never changed; a write, whose execution root is a
+  * command, keeps the range shuffle. Installed by [[Tables.prep]]. */
+object ResultSort extends SparkStrategy {
+  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case ReturnAnswer(Sort(order, true, child, _)) if !underCommand && small(child) =>
+      SortExec(order, global = false, CoalesceExec(1, planLater(child))) :: Nil
+    case _ => Nil
+  }
+
+  /** A write's query is re-planned under `ReturnAnswer` too; the
+    * current execution's root tells a command from a result. */
+  private def underCommand: Boolean =
+    Option(SparkContext.getOrCreate().getLocalProperty(SQLExecution.EXECUTION_ID_KEY))
+      .flatMap(id => Option(SQLExecution.getQueryExecution(id.toLong)))
+      .exists(_.logical.isInstanceOf[Command])
+
+  private def small(child: LogicalPlan): Boolean = {
+    val conf = SQLConf.get
+    val leaves = child.collectLeaves()
+    conf.coalesceShufflePartitionsEnabled &&
+    leaves.exists(_.isInstanceOf[LogicalQueryStage]) && leaves.forall {
+      case s: LogicalQueryStage => s.isMaterialized
+      case _: LocalRelation => true
+      case _ => false
+    } && onePartition(conf, child.stats.sizeInBytes)
+  }
+
+  /** Whether `bytes` fit `ShufflePartitionsUtil`'s coalesced-partition
+    * target size for them under the session's AQE confs. */
+  private def onePartition(conf: SQLConf, bytes: BigInt): Boolean = {
+    val minParts = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+      .getOrElse(if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+        SparkContext.getOrCreate().defaultParallelism else 1)
+    val perPart = (bytes + minParts - 1) / minParts
+    bytes <= perPart.min(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      .max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+  }
+}

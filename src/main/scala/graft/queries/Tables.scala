@@ -113,14 +113,17 @@ object Tables {
   }
 
   /** Pin the session semantics every query assumes. All are
-    * runtime-settable SQLConfs, so this works on a session the driver
-    * created:
+    * runtime-settable (SQLConfs and one planner strategy), so this
+    * works on a session the driver created:
     *   - non-ANSI casts (lenient coercions return NULL, not error —
     *     required by [[graft.norm.Coerce]] and mirrored by DuckDB
     *     TRY_CAST in the oracle SQL);
     *   - UTC, for timestamp parity with the DuckDB oracle;
     *   - AQE on (runtime shuffle-partition coalescing + skew-join
-    *     handling — the 100 TB posture).
+    *     handling — the 100 TB posture);
+    *   - [[ResultSort]] in the planner's extra strategies, once: a
+    *     collected result small enough to coalesce to one partition
+    *     is sorted in one task, not through a range shuffle.
     *
     * Called once where a session enters the engine, never in a query
     * body (`ConfScopeLintSpec`): [[graft.Session.local]] (every session
@@ -161,6 +164,8 @@ object Tables {
     // pruning-vacuous — fixed-width non-empty signature arrays.
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    if (!spark.experimental.extraStrategies.contains(ResultSort))
+      spark.experimental.extraStrategies :+= ResultSort
     graft.functions.GraftFunctions.register(spark)
   }
 

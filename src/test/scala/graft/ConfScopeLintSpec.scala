@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft/streaming/Streams.scala` (`drain`); and `prep(` is called only
   * in `graft/Session.scala`, `graft/SparkEntry.scala`,
   * `ColdRestart.fresh` and `Reference.registerFechaTable` — never in a
-  * query body. Comment lines are skipped. */
+  * query body; the planner's `extraStrategies` are written only in
+  * `Tables.prep`. Comment lines are skipped. */
 class ConfScopeLintSpec extends AnyFunSuite {
 
   private val Root = Paths.get("src/main/scala")
@@ -23,6 +24,8 @@ class ConfScopeLintSpec extends AnyFunSuite {
   private val ConfWrite = """\.conf\.(?:set|unset)\(""".r
   private val StreamRun = """\bTrigger\.AvailableNow\b|\bawaitTermination\b""".r
   private val PrepCall = """(?<!def )\bprep\(""".r
+  private val StrategyWrite =
+    """\bextraStrategies\s*(?::\+|\+\+)?=(?!=)|\bextraStrategies_=""".r
   private val DefName = """\bdef (\w+)""".r
 
   /** (line number, token) of every `token` match in `src`. */
@@ -83,6 +86,16 @@ class ConfScopeLintSpec extends AnyFunSuite {
     val body = "def fresh(s: S) = {\n  prep(s)\n}\ndef q(s: S) = {\n  prep(s)"
     assert(offences(body, PrepCall).map { case (n, _) =>
       enclosingDef(body, n) } === Seq("fresh", "q"))
+    assert(offences(
+      """def prep(s: S) = {
+        |  s.experimental.extraStrategies :+= ResultSort
+        |  s.experimental.extraStrategies = Seq(ResultSort)
+        |  s.experimental.extraStrategies ++= Seq(ResultSort)
+        |  s.experimental.extraStrategies_=(Nil)
+        |  if (!s.experimental.extraStrategies.contains(ResultSort)) x
+        |  val same = s.experimental.extraStrategies == Nil
+        |  // s.experimental.extraStrategies = Nil""".stripMargin,
+      StrategyWrite).map(_._1) === Seq(2, 3, 4, 5))
   }
 
   test("session conf under src/main/scala is written only in Session and " +
@@ -125,5 +138,20 @@ class ConfScopeLintSpec extends AnyFunSuite {
     assert(entries.map(e => count(e._1, PrepCall)) === Seq(1, 2, 1, 1),
       "Session.local, SparkEntry's queries and entry, ColdRestart.fresh " +
         "and Reference.registerFechaTable prep once each")
+  }
+
+  test("planner strategies under src/main/scala are installed only in " +
+      "Tables.prep") {
+    val found = files.flatMap { f =>
+      val rel = Root.relativize(f).toString
+      val src = Files.readString(f)
+      offences(src, StrategyWrite).map(_._1).filterNot { n =>
+        rel == "graft/queries/Tables.scala" && enclosingDef(src, n) == "prep"
+      }.map(n => s"$rel:$n in ${enclosingDef(src, n)}")
+    }
+    assert(found.isEmpty, "extraStrategies written outside Tables.prep:\n" +
+      found.mkString("\n"))
+    assert(count("graft/queries/Tables.scala", StrategyWrite) === 1,
+      "Tables.prep installs ResultSort once")
   }
 }

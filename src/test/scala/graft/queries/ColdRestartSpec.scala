@@ -371,12 +371,17 @@ class ColdRestartSpec extends SparkSpec {
   /** Launch a ColdPublish (or `mainClass`) JVM with arguments
     * (dir, root, extraArgs...); returns the process handle plus its
     * log file so a failure can self-diagnose (caller waits via
-    * [[awaitPublisher]]). */
+    * [[awaitPublisher]]). The child's `java.io.tmpdir` is its own
+    * spec temp dir: a child the kill-and-resume specs halt runs no
+    * shutdown hook, so what Spark and the native codecs leave in
+    * tmpdir would otherwise outlive the suite. No child reads another's
+    * tmpdir; checkpoints and stores are passed as arguments. */
   private def launchPublisher(
       dir: String, root: String,
       extraArgs: Seq[String] = Nil,
       mainClass: String = "graft.ColdPublish"): (Process, java.io.File) =
     ForkedJvm.launch(mainClass, Seq(dir, root) ++ extraArgs,
+      Map("JAVA_TOOL_OPTIONS" -> s"-Djava.io.tmpdir=${tempDir("child_tmp")}"),
       xmx = "3g")
 
   private def awaitPublisher(
