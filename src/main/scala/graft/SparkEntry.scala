@@ -57,7 +57,7 @@ object SparkEntry {
       "q162_daily_run",        // composed daily run: fixtures + audited writes per call
       "q197_incremental_daily", // composed incremental run: audited scratch writes per call
       "q221_cold_daily",       // composed cold run: audited writes + 7 republished versions per call
-      "q200_stream_label_repair", // streamed store + versioned label snapshots per call
+      "q200_stream_label_repair", // streamed store + versioned labels and signatures per call
       "q216_stream_postings_merge", // streamed store + versioned index per call
       "q217_stream_bm25_merge", // streamed store + versioned stats per call
       "q220_stream_rollup_maintain", // streamed store + versioned rollup per call

@@ -21,7 +21,10 @@ package graft
   *     batch is bit-identical;
   *   - `bm25` (q217): doc-keyed artifacts merged by dropDuplicates on
   *     their keys — replayed rows are equal, so which duplicate
-  *     survives is immaterial.
+  *     survives is immaterial;
+  *   - `labels` (q200): the label repair re-finds the replayed docs'
+  *     pairs inside the clusters they already joined (a no-op), and
+  *     the doc-keyed signatures dedup on doc_id.
   *
   * Usage: `StreamCellRun <cell> <arrivalDir> <checkpoint> <storeRoot>
   * [crashAfterBatch]`. One file per trigger, so the spec controls
@@ -48,8 +51,10 @@ object StreamCellRun {
           queries.TextAnalysis.applyPostingsBatch(spark, batch, root)
         case "bm25" => (batch, _) =>
           queries.TextAnalysis.applyBm25Batch(spark, batch, root)
+        case "labels" => (batch, _) =>
+          queries.Curation.applyArrivalBatch(spark, batch, root)
         case other => sys.error(s"unknown stream cell '$other' " +
-          "(additive | rollup | postings | bm25)")
+          "(additive | rollup | postings | bm25 | labels)")
       }
     val arrivals = spark.readStream
       .schema(schema)

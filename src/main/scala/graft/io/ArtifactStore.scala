@@ -15,12 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   - each publish lands a NEW version directory
   *     `root/name/v<N>/data` (parquet), never overwriting the version
-  *     a concurrent reader may be serving — the q200 versioned-label
-  *     snapshot pattern generalized;
+  *     a concurrent reader may be serving;
   *   - `MANIFEST.json` (version, row count, schema DDL) is written
   *     AFTER the data and IS the commit marker: a crash mid-publish
   *     leaves a manifest-less directory that readers skip and the
-  *     next publish supersedes — the latestLabels discipline;
+  *     next publish supersedes;
   *   - reads return the newest COMMITTED version and verify the
   *     manifest's row count against the parquet actually read, so a
   *     torn or truncated artifact fails loudly at the consumer
@@ -30,6 +29,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * FileSystem (never java.io/java.nio) — the IdempotentWriter lesson:
   * java.nio probes are always false on hdfs:// / s3a://, exactly the
   * filesystems a cluster deployment stores artifacts on.
+  *
+  * A MAINTAINED artifact (one a stream or a daily run rewrites from
+  * its own previous version) moves forward only through [[advance]]:
+  * read the newest committed version, merge, publish, prune — one
+  * step under one writer lease, so every streamed cell reads and
+  * retains its state under the same rules.
   */
 object ArtifactStore {
 
@@ -158,8 +163,8 @@ object ArtifactStore {
 
   /** Read a SPECIFIC committed version — the time-travel read the
     * snapshot-diff audit (q215) runs on yesterday's and today's
-    * label snapshots. Committed versions are never rewritten, so an
-    * explicit-version read is stable under concurrent publishes (and
+    * published label versions. Committed versions are never
+    * rewritten, so an explicit-version read is stable under concurrent publishes (and
     * under prune, for the newest `keep`). Same manifest verification
     * as the latest-read; an uncommitted or absent version fails
     * loudly rather than serving torn data. */
@@ -203,7 +208,7 @@ object ArtifactStore {
     * recovery path, the exact tear the snapshot exists to prevent.
     * With keep >= 2 a reader that resolved `latestVersion` just before
     * a publish still has one full publish cycle to finish its scan —
-    * the same grace the q200 label snapshots rely on. Runs under the
+    * the grace every [[advance]]d artifact relies on. Runs under the
     * per-artifact writer lease so it cannot race a publish computing
     * its next version number. Returns the deleted version numbers. */
   def prune(spark: SparkSession, root: String, name: String,
@@ -250,6 +255,24 @@ object ArtifactStore {
       }
     }
   }
+
+  /** The one step that moves a maintained artifact forward: under one
+    * writer lease on `root/name`, hand `next` the newest committed
+    * version (manifest-verified), or `None` when there is none yet;
+    * publish what `next` returns as the next version and prune to the
+    * newest two (serving + reader grace). `next` returning `None`
+    * publishes nothing (a replay its caller recognised). Every
+    * streamed cell's foreachBatch body merges through here. */
+  def advance(spark: SparkSession, root: String, name: String)(
+      next: Option[DataFrame] => Option[DataFrame]): Unit =
+    IdempotentWriter.withTableLease(spark, s"$root/$name") {
+      val cur = latestVersion(spark, root, name)
+        .map(readVersion(spark, root, name, _)._1)
+      next(cur).foreach { df =>
+        publish(df, root, name)
+        prune(spark, root, name)
+      }
+    }
 
   // -----------------------------------------------------------------
   // Root-level SNAPSHOT manifests (round-12 verdict, top ask): a

@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.LocalFs
-
 /** Corpus-curation operators a large-scale training-data pipeline
   * runs AFTER pair mining and scoring: near-dup cluster consolidation
   * (connected components over the verified LSH pairs), benchmark
@@ -159,13 +157,9 @@ object Curation {
     * the whole corpus. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val labels = dupClusterLabels(spark, dir)
-    documents(spark, dir).select(col("doc_id"))
+    clusterSizes(documents(spark, dir).select(col("doc_id"))
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-      .select(coalesce(col("label"), col("doc_id")).as("root"))
-      .groupBy(col("root")).agg(count(lit(1)).as("csize"))
-      .groupBy(col("csize"))
-      .agg(count(lit(1)).as("n_clusters"), sum(col("root")).as("sum_roots"))
-      .orderBy("csize")
+      .select(coalesce(col("label"), col("doc_id")).as("root")))
   }
 
   val dedupClustersSql: String =
@@ -576,112 +570,60 @@ object Curation {
     verifyPairs(cands, allSigs)
   }
 
+  private[graft] val StreamLabelsArtifact = "labels_stream"
+  private[graft] val StreamSigsArtifact = "sigs_stream"
+
   /** One streaming-arrival batch of the incremental dedup pipeline —
-    * the foreachBatch body of q200, exposed for the multi-file spec:
-    * sign the batch ([[Dedup.signaturesFresh]]), collide + verify it
-    * against the persisted signature store, repair the persisted
-    * labels, then append the batch's signatures to the store and
-    * write the repaired labels as the next VERSIONED snapshot
-    * (labels_v&lt;n&gt; — the store being rewritten is also the repair's
-    * input, so in-place overwrite would corrupt; versioned daily
-    * label snapshots are what a production pipeline publishes
-    * anyway). Any near-dup pair is discovered exactly once: at the
-    * arrival of its LATER endpoint (the earlier one is in the store
-    * by then; same-batch pairs collide within the delta) — so by the
-    * chained-repair law the final snapshot equals the full-corpus
-    * rebuild regardless of how arrivals were batched. */
+    * the foreachBatch body of q200, exposed for the multi-file and
+    * kill-and-resume specs: sign the batch ([[Dedup.signaturesFresh]]),
+    * collide + verify it against the stored signatures, then advance
+    * two [[graft.io.ArtifactStore]] artifacts under `root` — the
+    * repaired labels FIRST, the doc-keyed signatures (union +
+    * dropDuplicates("doc_id"), q217's doc-length shape) SECOND; the
+    * labels step runs inside the signatures' step, so both read the
+    * signatures once, under the signatures' lease. Any near-dup pair
+    * is discovered exactly once: at the arrival of its LATER endpoint (the earlier one is stored by then; same-batch
+    * pairs collide within the delta) — so by the chained-repair law
+    * the final labels equal the full-corpus rebuild regardless of how
+    * arrivals were batched.
+    *
+    * Replay: a crash after the labels commit but before the
+    * signatures commit re-delivers a batch whose docs are labelled but
+    * unsigned — the repair re-finds the same pairs and is a no-op; a
+    * crash after both re-delivers docs already in the signature
+    * artifact, which the dedup on the merged read collapses (the
+    * signatures are deterministic, so the duplicates are identical
+    * rows). Trade: each batch REWRITES the signature artifact rather
+    * than appending to it, as q217's doc-keyed artifacts do — the
+    * registered q200 delivers its corpus as one batch, so it writes
+    * each artifact once. */
   private[graft] def applyArrivalBatch(spark: SparkSession,
-      batch: DataFrame, store: java.nio.file.Path): Unit = {
+      batch: DataFrame, root: String): Unit = {
+    import graft.io.ArtifactStore
     import spark.implicits._
-    val sigDir = store.resolve("sigs")
     val deltaSigs = Dedup.signaturesFresh(spark, batch)
-    // _SUCCESS is the commit marker, not bare directory existence: a
-    // crash during the FIRST append can leave sigs/ holding only
-    // _temporary (unreadable as parquet); a crash during a LATER
-    // append leaves the previous commit's files readable — which is
-    // exactly the replay semantics we want (the append never
-    // happened).
-    val havePrev =
-      java.nio.file.Files.exists(sigDir.resolve("_SUCCESS"))
-    val baseSigs =
-      if (havePrev) spark.read.parquet(sigDir.toString)
-      else Seq.empty[(Long, Array[Long], Array[Long])]
-        .toDF("doc_id", "hsh", "sig")
-    val baseLabels =
-      if (havePrev)
-        spark.read.parquet(latestLabels(store).get.toString)
-          .select(col("doc_id").as("node"), col("root").as("label"))
-      else Seq.empty[(Long, Long)].toDF("node", "label")
-    // dropDuplicates AFTER the union: a crash between the signature
-    // append and the checkpoint commit replays the batch, putting the
-    // re-delivered doc in BOTH the store and the delta (and, if the
-    // append itself committed, twice in the store) — at-least-once
-    // arrival. Signatures are deterministic, so every duplicate is an
-    // identical row and one dedup here makes the whole read side
-    // exactly-once-equivalent; the label repair is then a no-op by
-    // the re-delivery law.
-    val allSigs = baseSigs.unionByName(deltaSigs)
-      .dropDuplicates("doc_id")
-    val repaired = repairedLabels(allSigs.select(col("doc_id")),
-      baseLabels, collideVerify(deltaSigs, allSigs))
-    val next = (if (havePrev)
-      latestLabels(store).get.getFileName.toString
-        .stripPrefix("labels_v").toInt + 1
-    else 0)
-    LocalFs.write(repaired).mode("overwrite")
-      .parquet(store.resolve(s"labels_v$next").toString)
-    // Idempotent append (advisor find, round 11): a crash-replay after
-    // a COMMITTED append re-delivers the batch, and a bare append would
-    // then grow the store by one duplicate set per replay — correctness
-    // survived via the read-side dropDuplicates above, but the store
-    // and every later band join would grow without bound. Anti-joining
-    // the delta against the store's existing doc_ids makes the append
-    // itself a no-op on replay; the read-side dedup stays as the
-    // belt-and-braces for a crash DURING this very append.
-    val unseenSigs =
-      if (havePrev)
-        deltaSigs.join(baseSigs.select(col("doc_id")), Seq("doc_id"),
-          "left_anti")
-      else deltaSigs
-    LocalFs.write(unseenSigs).mode("append").parquet(sigDir.toString)
-    // Snapshot retention (the ArtifactStore.prune policy applied to
-    // the streamed store): one snapshot lands per arrival and would
-    // otherwise accumulate forever. Keep the newest TWO committed
-    // snapshots — the serving one plus a reader-grace copy (a reader
-    // that resolved latestLabels just before this batch still has one
-    // full arrival cycle to finish); the version counter stays
-    // monotone because `next` derives from the newest survivor.
-    committedLabelSnapshots(store).dropRight(2).foreach { p =>
-      graft.io.Scratch.delete(spark, p.toString)
+    ArtifactStore.advance(spark, root, StreamSigsArtifact) { prevSigs =>
+      val allSigs = prevSigs.fold(deltaSigs)(
+        _.unionByName(deltaSigs).dropDuplicates("doc_id"))
+      // the labels commit BEFORE the signatures they were repaired from
+      ArtifactStore.advance(spark, root, StreamLabelsArtifact) { prev =>
+        val baseLabels = prev.fold(Seq.empty[(Long, Long)].toDF("node", "label"))(
+          _.select(col("doc_id").as("node"), col("root").as("label")))
+        Some(repairedLabels(allSigs.select(col("doc_id")), baseLabels,
+          collideVerify(deltaSigs, allSigs)))
+      }
+      Some(allSigs)
     }
   }
 
-  /** Committed (marker-carrying) labels_v&lt;n&gt; snapshots, oldest
-    * first. */
-  private def committedLabelSnapshots(
-      store: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    if (!java.nio.file.Files.exists(store)) return Seq.empty
-    val it = java.nio.file.Files.list(store)
-    try {
-      scala.jdk.CollectionConverters.IteratorHasAsScala(it.iterator())
-        .asScala
-        .filter(_.getFileName.toString.startsWith("labels_v"))
-        .filter(p => java.nio.file.Files.exists(p.resolve("_SUCCESS")))
-        .toSeq
-        .sortBy(_.getFileName.toString.stripPrefix("labels_v").toInt)
-    } finally it.close()
-  }
-
-  /** Newest COMMITTED labels_v&lt;n&gt; snapshot under the q200 store, if
-    * any: only snapshots carrying the parquet _SUCCESS marker count —
-    * a crash mid-write leaves a directory without one, and serving a
-    * partial snapshot as the next repair's base would silently
-    * corrupt every later label set (the version counter then reuses
-    * the dead number and mode("overwrite") clears the debris).
-    * Driver-side directory listing, bounded by the batch count. */
-  private[graft] def latestLabels(
-      store: java.nio.file.Path): Option[java.nio.file.Path] =
-    committedLabelSnapshots(store).lastOption
+  /** q88's cluster-size histogram over a (root) label column — the
+    * output surface the full rebuild (q88) and the streamed repair
+    * (q200) share, so the two arms cannot drift. */
+  private[graft] def clusterSizes(roots: DataFrame): DataFrame =
+    roots.groupBy(col("root")).agg(count(lit(1)).as("csize"))
+      .groupBy(col("csize"))
+      .agg(count(lit(1)).as("n_clusters"), sum(col("root")).as("sum_roots"))
+      .orderBy("csize")
 
   // ---------------------------------------------------------------
   // q195 arrival keeper decisions (the q191 labels SERVED)

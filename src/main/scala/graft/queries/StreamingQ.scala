@@ -266,15 +266,15 @@ object StreamingQ {
     * prove the daily-batch cadence, q103 streams EXACT dedup, but the
     * NEAR-DUP label repair itself never ran from a stream. Each
     * arriving file batch runs [[Curation.applyArrivalBatch]]: sign
-    * the batch, band-collide it against the persisted signature
-    * store, verify shingle Jaccard, repair the persisted labels
-    * (contracted CC — delta-pair-sized), publish the next versioned
-    * label snapshot, append the batch's signatures. Any near-dup
+    * the batch, band-collide it against the stored signatures, verify
+    * shingle Jaccard, repair the stored labels (contracted CC —
+    * delta-pair-sized), and advance the labels and signature
+    * artifacts of the versioned ArtifactStore. Any near-dup
     * pair is discovered at the arrival of its later endpoint, so by
-    * the chained-repair law the final snapshot equals the FULL
+    * the chained-repair law the final labels equal the FULL
     * rebuild for ANY batching of the arrivals (StreamsSpec pins the
     * multi-file case; here the corpus arrives as one batch). Output
-    * is q88's cluster-size histogram read from the final snapshot;
+    * is q88's cluster-size histogram read from the final version;
     * oracle = q88's full-rebuild SQL — stream == batch for the
     * maintained artifact, the q103/q108 contract extended to the
     * incremental family. */
@@ -283,13 +283,10 @@ object StreamingQ {
     Streams.drain(Streams.documentsStream(spark, dir),
         Some(store.resolve("ckpt").toString))(_.foreachBatch {
       (batch: DataFrame, _: Long) =>
-        Curation.applyArrivalBatch(spark, batch, store)
+        Curation.applyArrivalBatch(spark, batch, store.toString)
     })
-    spark.read.parquet(Curation.latestLabels(store).get.toString)
-      .groupBy(col("root")).agg(count(lit(1)).as("csize"))
-      .groupBy(col("csize"))
-      .agg(count(lit(1)).as("n_clusters"), sum(col("root")).as("sum_roots"))
-      .orderBy("csize")
+    Curation.clusterSizes(graft.io.ArtifactStore.read(
+      spark, store.toString, Curation.StreamLabelsArtifact))
   }
 
   /** q216: the inverted index maintained under STREAMING arrival —

@@ -1347,26 +1347,18 @@ object TextAnalysis {
 
   private[graft] def applyPostingsBatch(spark: SparkSession,
       batch: DataFrame, root: String): Unit = {
-    import graft.io.ArtifactStore
     val deltaPost = postingsOf(batch.select(col("doc_id"), col("text")))
-    val merged =
-      ArtifactStore.latestVersion(spark, root, StreamPostingsArtifact)
-        match {
-          case None => deltaPost
-          case Some(_) =>
-            val base = ArtifactStore
-              .read(spark, root, StreamPostingsArtifact)
-            base.select(col("w"), col("docs").as("bdocs"))
-              .join(deltaPost.select(col("w"), col("docs").as("ddocs")),
-                Seq("w"), "full")
-              .select(col("w"), expr(
-                """sort_array(array_distinct(concat(
-                  |  coalesce(bdocs, cast(array() as array<bigint>)),
-                  |  coalesce(ddocs, cast(array() as array<bigint>)))))"""
-                  .stripMargin).as("docs"))
-        }
-    ArtifactStore.publish(merged, root, StreamPostingsArtifact)
-    ArtifactStore.prune(spark, root, StreamPostingsArtifact, keep = 2)
+    graft.io.ArtifactStore.advance(spark, root, StreamPostingsArtifact) {
+      case None => Some(deltaPost)
+      case Some(base) => Some(base.select(col("w"), col("docs").as("bdocs"))
+        .join(deltaPost.select(col("w"), col("docs").as("ddocs")),
+          Seq("w"), "full")
+        .select(col("w"), expr(
+          """sort_array(array_distinct(concat(
+            |  coalesce(bdocs, cast(array() as array<bigint>)),
+            |  coalesce(ddocs, cast(array() as array<bigint>)))))"""
+            .stripMargin).as("docs")))
+    }
   }
 
   /** q127's df-bucketed content digest over an arbitrary (w, docs)
@@ -1777,24 +1769,16 @@ object TextAnalysis {
     * labels artifact) to make the stream replay-safe. */
   private[graft] def applyBm25Batch(spark: SparkSession,
       batch: DataFrame, root: String): Unit = {
-    import graft.io.ArtifactStore
     val toked = batch.select(col("doc_id"), col("text"))
       .withColumn("toks",
         filter(split(lower(trim(col("text"))), "\\s+"), t => t =!= ""))
     val dls = toked.select(col("doc_id"), size(col("toks")).as("dl"))
     val hits = bm25HitsOf(toked)
-    def mergePublish(name: String, delta: DataFrame,
-        keys: Seq[String]): Unit = {
-      val merged = ArtifactStore.latestVersion(spark, root, name) match {
-        case None => delta
-        case Some(_) => ArtifactStore.read(spark, root, name)
-          .unionByName(delta).dropDuplicates(keys)
-      }
-      ArtifactStore.publish(merged, root, name)
-      ArtifactStore.prune(spark, root, name, keep = 2)
-    }
-    mergePublish(StreamDoclensArtifact, dls, Seq("doc_id"))
-    mergePublish(StreamHitsArtifact, hits, Seq("doc_id", "w"))
+    for ((name, delta, keys) <- Seq(
+        (StreamDoclensArtifact, dls, Seq("doc_id")),
+        (StreamHitsArtifact, hits, Seq("doc_id", "w"))))
+      graft.io.ArtifactStore.advance(spark, root, name)(prev => Some(
+        prev.fold(delta)(_.unionByName(delta).dropDuplicates(keys))))
   }
 
   /** The q129 ranking served from the STREAMED store artifacts —

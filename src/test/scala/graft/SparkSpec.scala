@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +26,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** An empty file `<prefix><suffix>` in a fresh [[tempDir]]. */
   protected def tempFile(prefix: String, suffix: String): java.nio.file.Path =
     java.nio.file.Files.createFile(tempDir(prefix).resolve(prefix + suffix))
+
+  /** Write `df` as ONE parquet file at `target`, the way drops land in
+    * a listed arrival dir: the frame is written to `staging` as a
+    * single part and that part is moved in. */
+  protected def writeArrivalFile(df: org.apache.spark.sql.DataFrame,
+      staging: java.nio.file.Path, target: java.nio.file.Path): Unit = {
+    df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    val s = java.nio.file.Files.list(staging)
+    val part = try s.iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet"))
+      .getOrElse(fail(s"staging $staging produced no parquet part"))
+    finally s.close()
+    java.nio.file.Files.move(part, target)
+  }
 
   // The session is shared across suites; JVM exit stops it.
   override def afterAll(): Unit =

@@ -23,17 +23,11 @@ class StreamsSpec extends SparkSpec {
     val scratch = tempDir("dedup_corpus")
     // Each arrival is ONE flat parquet file in the listed directory
     // (written to staging, then moved in — exactly how drops land).
-    def writeArrival(name: String, docs: Seq[(Long, String, String)]): Unit = {
-      val staging = scratch.resolve(s"staging_$name")
-      docs.map { case (id, text, lang) =>
-        (id, text, lang, "src", text.length.toLong)
-      }.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = java.nio.file.Files.list(staging).iterator()
-      val it = scala.jdk.CollectionConverters.IteratorHasAsScala(part).asScala
-      val src = it.find(_.getFileName.toString.endsWith(".parquet")).get
-      java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
-    }
+    def writeArrival(name: String, docs: Seq[(Long, String, String)]): Unit =
+      writeArrivalFile(docs.map { case (id, text, lang) =>
+          (id, text, lang, "src", text.length.toLong)
+        }.toDF("doc_id", "text", "lang", "source", "n_chars"),
+        scratch.resolve(s"staging_$name"), arrivals.resolve(s"$name.parquet"))
     val out = scratch.resolve("corpus").toString
     val fp = graft.queries.StreamingQ.docFingerprint
     def stream() = spark.readStream
@@ -130,19 +124,13 @@ class StreamsSpec extends SparkSpec {
       StructField("event_id", LongType), StructField("ts", TimestampType)))
     val arrivals = tempDir("late_arrivals")
     val scratch = tempDir("late_scratch")
-    def writeArrival(name: String, hours: Seq[Double]): Unit = {
-      val staging = scratch.resolve(s"staging_$name")
-      hours.zipWithIndex
+    def writeArrival(name: String, hours: Seq[Double]): Unit =
+      writeArrivalFile(hours.zipWithIndex
         .map { case (h, i) =>
           (name.hashCode.toLong * 100 + i,
             new java.sql.Timestamp(1704067200000L + (h * 3600000).toLong)) }
-        .toDF("event_id", "ts")
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = java.nio.file.Files.list(staging).iterator()
-      val it = scala.jdk.CollectionConverters.IteratorHasAsScala(part).asScala
-      val src = it.find(_.getFileName.toString.endsWith(".parquet")).get
-      java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
-    }
+        .toDF("event_id", "ts"),
+        scratch.resolve(s"staging_$name"), arrivals.resolve(s"$name.parquet"))
     val sinkDir = scratch.resolve("win").toString
     val ckpt = scratch.resolve("ckpt").toString
     def run(): Unit = {
@@ -184,15 +172,9 @@ class StreamsSpec extends SparkSpec {
       StructField("k", LongType), StructField("cents", LongType)))
     val arrivals = tempDir("scd2_arrivals")
     val scratch = tempDir("scd2_scratch")
-    def writeArrival(name: String, rows: Seq[(Long, Long)]): Unit = {
-      val staging = scratch.resolve(s"staging_$name")
-      rows.toDF("k", "cents")
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = java.nio.file.Files.list(staging).iterator()
-      val it = scala.jdk.CollectionConverters.IteratorHasAsScala(part).asScala
-      val src = it.find(_.getFileName.toString.endsWith(".parquet")).get
-      java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
-    }
+    def writeArrival(name: String, rows: Seq[(Long, Long)]): Unit =
+      writeArrivalFile(rows.toDF("k", "cents"),
+        scratch.resolve(s"staging_$name"), arrivals.resolve(s"$name.parquet"))
     val dim = scratch.resolve("dim").toString
     val ckpt = scratch.resolve("ckpt").toString
     def run(): Unit = Streams.scd2Load(
@@ -234,20 +216,10 @@ class StreamsSpec extends SparkSpec {
         3L, "view", 2.0, "{}"),
       (2L, java.sql.Timestamp.valueOf("2024-01-02 10:00:00"),
         3L, "view", 4.0, "{}"))
-    val staging = java.nio.file.Paths.get(dir, "staging")
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val it = java.nio.file.Files.list(staging).iterator()
-      .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-    var moved = false
-    while (it.hasNext && !moved) {
-      val p = it.next()
-      if (p.toString.endsWith(".parquet")) {
-        java.nio.file.Files.move(p,
-          java.nio.file.Paths.get(dir, "events.parquet"))
-        moved = true
-      }
-    }
+    writeArrivalFile(
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+      java.nio.file.Paths.get(dir, "staging"),
+      java.nio.file.Paths.get(dir, "events.parquet"))
     // nation fixture: one key (3) suffices
     Seq((3L, "KEY3", 0L, "x"))
       .toDF("n_nationkey", "n_name", "n_regionkey", "n_comment")
@@ -277,21 +249,10 @@ class StreamsSpec extends SparkSpec {
       (50L until 60L).map(ev(_, 12, 37.0))
     // the stream source lists the parent dir for a FILE named
     // events.parquet — write to staging, move the single part in
-    val staging = java.nio.file.Paths.get(dir, "staging")
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val part = java.nio.file.Files.list(staging).iterator()
-.asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-    var moved = false
-    while (part.hasNext && !moved) {
-      val p = part.next()
-      if (p.toString.endsWith(".parquet")) {
-        java.nio.file.Files.move(p,
-          java.nio.file.Paths.get(dir, "events.parquet"))
-        moved = true
-      }
-    }
-    assert(moved, "fixture staging produced no parquet part")
+    writeArrivalFile(
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+      java.nio.file.Paths.get(dir, "staging"),
+      java.nio.file.Paths.get(dir, "events.parquet"))
     val out = graft.queries.StreamingQ.streamPsiDrift(spark, dir).collect()
     assert(out.length === 3)
     val Array(w1, w2, w3) = out
@@ -320,7 +281,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   /** Shared arrival-stream harness for the streamed-store tests
-    * (q216/q217): a scratch dir, single-file parquet arrivals (the
+    * (q200/q216/q217): a scratch dir, single-file parquet arrivals (the
     * production file-source shape — pathGlobFilter needs FLAT
     * *.parquet files), and an AvailableNow file-source stream driving
     * `applyBatch(batch, store)` per batch. One copy, so a fix to the
@@ -344,18 +305,9 @@ class StreamsSpec extends SparkSpec {
       docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
     }
-    def writeArrival(name: String, docs: Seq[(Long, String)]): Unit = {
-      val staging = scratch.resolve(s"staging_$name")
-      docsDF(docs).coalesce(1).write.mode("overwrite")
-        .parquet(staging.toString)
-      val part = java.nio.file.Files.list(staging)
-      try {
-        val src = scala.jdk.CollectionConverters
-          .IteratorHasAsScala(part.iterator()).asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
-      } finally part.close()
-    }
+    def writeArrival(name: String, docs: Seq[(Long, String)]): Unit =
+      writeArrivalFile(docsDF(docs), scratch.resolve(s"staging_$name"),
+        arrivals.resolve(s"$name.parquet"))
     def runStream(): Unit = {
       val q = spark.readStream.schema(docsSchema)
         .option("pathGlobFilter", "*.parquet")
@@ -450,47 +402,14 @@ class StreamsSpec extends SparkSpec {
 
   test("q200 streamed label repair: cross-batch near-dups merge and the " +
       "final snapshot equals the single-batch build (any-batching law)") {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val scratch = tempDir("q200_spec")
-    val arrivals = scratch.resolve("arrivals")
-    java.nio.file.Files.createDirectories(arrivals)
-    def docsDF(docs: Seq[(Long, String)]) =
-      docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-    def writeArrival(name: String, docs: Seq[(Long, String)]): Unit = {
-      val staging = scratch.resolve(s"staging_$name")
-      docsDF(docs).coalesce(1).write.mode("overwrite")
-        .parquet(staging.toString)
-      val part = java.nio.file.Files.list(staging)
-      try {
-        val src = scala.jdk.CollectionConverters
-          .IteratorHasAsScala(part.iterator()).asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
-      } finally part.close()
-    }
-    val store = scratch.resolve("store")
-    def runStream(): Unit = {
-      val q = spark.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(arrivals.toString)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.queries.Curation.applyArrivalBatch(spark, b, store)
-        }
-        .option("checkpointLocation", scratch.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    def labelsOf(s: java.nio.file.Path): Map[Long, Long] =
-      spark.read.parquet(graft.queries.Curation.latestLabels(s).get.toString)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    import graft.queries.Curation
+    val fx = new ArrivalFixture("q200_spec",
+      (b, s) => Curation.applyArrivalBatch(spark, b, s))
+    import fx.{docsDF, runStream, store, writeArrival}
+    def labelRows(root: String) = graft.io.ArtifactStore.read(spark, root,
+      Curation.StreamLabelsArtifact).collect()
+    def labelsOf(root: String): Map[Long, Long] =
+      labelRows(root).map(r => r.getLong(0) -> r.getLong(1)).toMap
     val tA = "alpha beta gamma delta epsilon zeta eta theta"
     val tB = "uno dos tres cuatro cinco seis siete ocho nueve"
     val tC = "red green blue yellow purple orange cyan magenta"
@@ -509,30 +428,28 @@ class StreamsSpec extends SparkSpec {
     val streamed = labelsOf(store)
     assert(streamed(4L) === 1L, "cross-batch near-dup must join cluster 1")
     assert(streamed(6L) === 5L, "arrival-3 dup must join arrival-2's doc")
-    // any-batching law: the 3-arrival stream's final snapshot equals
+    // any-batching law: the 3-arrival stream's final labels equal
     // the same corpus applied as ONE batch to a fresh store
-    val fresh = scratch.resolve("fresh")
-    graft.queries.Curation.applyArrivalBatch(spark,
+    val fresh = fx.scratch.resolve("fresh").toString
+    Curation.applyArrivalBatch(spark,
       docsDF(Seq((1L, tA), (2L, tA), (3L, tB), (4L, tA + " extra"),
         (5L, tC), (6L, tC + " more"))), fresh)
     assert(streamed === labelsOf(fresh))
-    // one snapshot published per arrival
-    assert(graft.queries.Curation.latestLabels(store).get
-      .getFileName.toString === "labels_v2")
+    // one labels version published per arrival
+    assert(graft.io.ArtifactStore.latestVersion(spark, store,
+      Curation.StreamLabelsArtifact) === Some(3))
     // crash-replay: the checkpoint commit can die AFTER the signature
-    // append, re-running the batch against a store that already holds
+    // publish, re-running the batch against a store that already holds
     // its signatures — the dedup-on-read + repair idempotence must
     // make the replay a label no-op
-    graft.queries.Curation.applyArrivalBatch(spark,
-      docsDF(Seq((6L, tC + " more"))), store)
+    Curation.applyArrivalBatch(spark, docsDF(Seq((6L, tC + " more"))), store)
     assert(labelsOf(store) === streamed, "batch replay must be a no-op")
     // row-level check the map comparison above would mask: the
-    // replayed doc must not appear TWICE in the published snapshot
+    // replayed doc must not appear TWICE in the published labels
     // (it sits in both the store and the delta during the replay)
-    val rows = spark.read.parquet(
-      graft.queries.Curation.latestLabels(store).get.toString).collect()
+    val rows = labelRows(store)
     assert(rows.length === rows.map(_.getLong(0)).distinct.length,
-      s"duplicate doc rows in the replayed snapshot: ${rows.length}")
+      s"duplicate doc rows in the replayed labels: ${rows.length}")
   }
 
   // ---------------------------------------------------------------
