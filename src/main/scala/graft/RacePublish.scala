@@ -2,25 +2,24 @@ package graft
 
 /** Standalone racing publisher — one contender of the multi-process
   * artifact-store soak (ArtifactRaceSpec). Each instance is a live
-  * JVM calling [[graft.io.ArtifactStore.publish]] with version
-  * threading, so the spec can interleave REAL processes: two replicas
-  * double-firing the same chained step on one artifact, sibling
+  * JVM calling [[graft.io.ArtifactStore.publish]], so the spec can
+  * interleave REAL processes: two publishers on one artifact, sibling
   * publishers sharing a root, and a paused holder whose lease is
   * broken mid-commit (the spec SIGSTOPs this JVM between its data
   * write and its manifest commit).
   *
-  * Usage: `RacePublish <root> <name> <expectVersion> <nRows> <readyFile> <goFile>`
+  * Usage: `RacePublish <root> <name> <nRows> <readyFile> <goFile>`
   *
   * Protocol: build the frame, touch `readyFile`, spin until `goFile`
   * exists (the spec's start barrier — both contenders enter publish
   * together, after both JVMs are warm), then publish exactly once.
   * Prints `WON <name> v<version> rows=<rows>` on commit; any refusal
-  * (the in-lease version-threading check, the commit fence, a lease
-  * acquisition timeout) propagates as an uncaught exception → nonzero
-  * exit, which IS the loud-loser contract under test. */
+  * (the commit fence, a lease acquisition timeout) propagates as an
+  * uncaught exception → nonzero exit, which IS the loud-loser
+  * contract under test. */
 object RacePublish {
   def main(args: Array[String]): Unit = {
-    val Array(root, name, expectV, nRows, readyFile, goFile) = args.take(6)
+    val Array(root, name, nRows, readyFile, goFile) = args.take(5)
     val spark = Session.local(2)
     import spark.implicits._
     // 32 output files: the post-write manifest step (read-back count
@@ -38,8 +37,7 @@ object RacePublish {
         sys.error(s"barrier file $goFile never appeared")
       Thread.sleep(5)
     }
-    val m = graft.io.ArtifactStore.publish(df, root, name,
-      Some(expectV.toInt))
+    val m = graft.io.ArtifactStore.publish(df, root, name)
     println(s"WON ${m.name} v${m.version} rows=${m.rows}")
     spark.stop()
   }

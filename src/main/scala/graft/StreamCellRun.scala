@@ -1,15 +1,16 @@
 package graft
 
-/** Standalone runner for ONE streamed-maintenance cell — the process
-  * the kill-and-resume proofs murder mid-stream (round-13 verdict,
-  * missing #3 generalized the additive-rollup-only proof to every
-  * streamed sink). ColdRestartSpec launches this JVM against an
-  * arrival directory; the `crash-after` arm halts the JVM inside
-  * foreachBatch AFTER the sink published its artifact, BEFORE
-  * Structured Streaming wrote the batch's commit-log entry. A second
-  * launch resuming the SAME checkpointLocation re-delivers that batch
-  * with its original id (the WAL replay contract), and the sink's
-  * replay protection must absorb it:
+/** Standalone runner for ONE streamed-maintenance cell — the
+  * cross-process proof of every maintained artifact (reference
+  * main.py:201-209: yesterday's state reaches today only through
+  * storage). ColdRestartSpec runs each cell over THREE JVMs sharing
+  * one checkpoint and one store root: the first halts inside
+  * foreachBatch AFTER the sink published batch 0's artifact, BEFORE
+  * Structured Streaming wrote the batch's commit-log entry; the
+  * second resumes the checkpoint, which re-delivers batch 0 with its
+  * original id (the WAL replay contract) before batch 1; the third
+  * sees only batch 2, so its state came from storage alone. Replay
+  * safety is the checkpoint plus each sink's merge law:
   *
   *   - `additive` (q222): batch-id high-water mark + lineage guard —
   *     the replayed id <= hwm, so the batch publishes NOTHING;

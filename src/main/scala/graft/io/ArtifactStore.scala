@@ -64,67 +64,39 @@ object ArtifactStore {
       v: Int): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$root/$name/v$v/MANIFEST.json")
 
+  /** Whether version `v` of `name` carries its manifest (is committed). */
+  private def isCommitted(spark: SparkSession, root: String, name: String,
+      v: Int): Boolean = {
+    val mp = manifestPath(root, name, v)
+    fsOf(spark, mp).exists(mp)
+  }
+
   /** Newest COMMITTED (manifest-carrying) version, if any. */
   def latestVersion(spark: SparkSession, root: String,
       name: String): Option[Int] =
     versions(spark, root, name).sorted(Ordering.Int.reverse)
-      .find(v => fsOf(spark, manifestPath(root, name, v))
-        .exists(manifestPath(root, name, v)))
+      .find(isCommitted(spark, root, name, _))
 
-  /** Publish `df` as the next version of artifact `name`. Returns the
+  /** Publish `df` as the next version of artifact `name`: one more
+    * than the highest version directory present, committed or not, so
+    * crash debris is superseded and never reused. Returns the
     * committed manifest. The row count is taken from the parquet as
     * WRITTEN (a metadata-only scan), not from re-executing `df`'s
     * plan — what readers will see is what the manifest attests.
     *
-    * Publishers of one artifact are serialized by the writer lease
-    * (reviewer find, round 11): without it, two processes could both
-    * compute `next = N` and race mode("overwrite") writes into the
-    * SAME v&lt;N&gt;/data directory — the exclusive manifest create would
-    * then attest one writer's count over the other writer's (possibly
-    * torn) files. Readers need no lease: they only see manifest-
-    * committed versions, and a committed version is never rewritten.
-    *
-    * `expectVersion`: callers whose replay protection is VERSION
-    * THREADING (the chained-day publishers: version/snapshot counter
-    * == step) pass the version this publish must mint. The check runs
-    * INSIDE the lease, after `next` is computed: a check-then-publish
-    * outside the lease lets two replicas of the same step both pass
-    * the replay guard and both publish, inflating the counter past
-    * the step so the genuine next step silently no-ops (advisor find,
-    * round 13). A mismatch here is that race observed — fail loudly. */
-  def publish(df: DataFrame, root: String, name: String,
-      expectVersion: Option[Int] = None): Manifest = {
+    * Publishers of one artifact are serialized by the writer lease:
+    * without it, two processes could both compute `next = N` and race
+    * mode("overwrite") writes into the SAME v&lt;N&gt;/data directory —
+    * the exclusive manifest create would then attest one writer's
+    * count over the other writer's (possibly torn) files. Readers
+    * need no lease: they only see manifest-committed versions, and a
+    * committed version is never rewritten. A publish carries no
+    * replay guard of its own: a maintained artifact is replay-safe
+    * through [[advance]] — its stream checkpoint plus its merge law. */
+  def publish(df: DataFrame, root: String, name: String): Manifest = {
     val spark = df.sparkSession
     IdempotentWriter.withTableLease(spark, s"$root/$name") {
-      val next = expectVersion match {
-        case None => versions(spark, root, name).maxOption.getOrElse(0) + 1
-        case Some(e) =>
-          // version threading: `next` derives from the COMMITTED
-          // latest (a double-fired replica of the same step sees its
-          // twin's commit here and fails loudly), and uncommitted
-          // dirs at or above it are reclaimed as crash debris — a
-          // crash-retried step must mint EXACTLY its step version,
-          // not debris+1 (which would silently shift the whole chain;
-          // the all-dirs `next` of the plain arm exists to avoid
-          // colliding with an in-flight writer, but under the lease +
-          // commit fence an uncommitted dir cannot belong to a live
-          // committable writer).
-          val all = versions(spark, root, name)
-          val committedNext = all.sorted(Ordering.Int.reverse)
-            .find(v => fsOf(spark, manifestPath(root, name, v))
-              .exists(manifestPath(root, name, v)))
-            .getOrElse(0) + 1
-          require(e == committedNext,
-            s"publish of '$name' expected to mint v$e but the newest " +
-              s"committed version is v${committedNext - 1} — a concurrent " +
-              "replica of the same step already published (double-fired " +
-              "scheduler?); refusing to publish past it")
-          all.filter(_ >= e).foreach { v =>
-            val p = new org.apache.hadoop.fs.Path(s"$root/$name/v$v")
-            fsOf(spark, p).delete(p, true)
-          }
-          e
-      }
+      val next = versions(spark, root, name).maxOption.getOrElse(0) + 1
       val dataDir = s"$root/$name/v$next/data"
       LocalFs.write(df).mode("overwrite").parquet(dataDir)
       val rows = spark.read.parquet(dataDir).count()
@@ -171,8 +143,7 @@ object ArtifactStore {
   def readVersion(spark: SparkSession, root: String, name: String,
       version: Int): (DataFrame, Manifest) = {
     val v = version
-    require(fsOf(spark, manifestPath(root, name, v))
-      .exists(manifestPath(root, name, v)),
+    require(isCommitted(spark, root, name, v),
       s"version $v of artifact '$name' under $root is not committed")
     val m = readManifest(spark, root, name, v)
     val df = spark.read.parquet(s"$root/$name/v$v/data")
@@ -216,9 +187,7 @@ object ArtifactStore {
     require(keep >= 1, "retention must keep at least the newest version")
     IdempotentWriter.withTableLease(spark, s"$root/$name") {
       val all = versions(spark, root, name).sorted(Ordering.Int.reverse)
-      val committed = all.filter(v =>
-        fsOf(spark, manifestPath(root, name, v))
-          .exists(manifestPath(root, name, v)))
+      val committed = all.filter(isCommitted(spark, root, name, _))
       // Pin from EVERY snapshot still committed at the root, not the
       // newest `keep`: pinning from the caller's artifact `keep` was
       // correct only while callers aligned the two retentions (keep=1
@@ -332,18 +301,11 @@ object ArtifactStore {
   def readSnapshot(spark: SparkSession, root: String, v: Int): Snapshot =
     parseSnapshot(readUtf8(spark, snapPath(root, v)))
 
-  /** Slurp a small UTF-8 metadata file (manifest / snapshot) — one
-    * copy of the read-fully loop for both. */
+  /** Slurp a small UTF-8 metadata file (manifest / snapshot). */
   private def readUtf8(spark: SparkSession,
       p: org.apache.hadoop.fs.Path): String = {
     val in = fsOf(spark, p).open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](8192)
-      var n = in.read(tmp)
-      while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   /** Publish the next snapshot pinning `artifacts` (name → committed
@@ -355,21 +317,14 @@ object ArtifactStore {
     * and the snapshot LAST: the snapshot write is the transaction's
     * commit point. */
   def publishSnapshot(spark: SparkSession, root: String,
-      artifacts: Map[String, Int],
-      expectVersion: Option[Int] = None): Snapshot = {
+      artifacts: Map[String, Int]): Snapshot = {
     require(artifacts.nonEmpty, "a snapshot must pin at least one artifact")
     artifacts.foreach { case (n, v) =>
-      require(fsOf(spark, manifestPath(root, n, v))
-        .exists(manifestPath(root, n, v)),
+      require(isCommitted(spark, root, n, v),
         s"snapshot refuses to pin uncommitted version v$v of '$n'")
     }
     IdempotentWriter.withTableLease(spark, snapDir(root)) {
       val next = snapshotVersions(spark, root).headOption.getOrElse(0) + 1
-      // same in-lease version-threading fence as publish(expectVersion)
-      expectVersion.foreach(e => require(e == next,
-        s"snapshot publish expected to mint v$e but the root is at " +
-          s"v${next - 1} — a concurrent replica of the same step already " +
-          "committed; refusing to publish past it"))
       val snap = Snapshot(next, artifacts)
       // same commit discipline as the manifest: conditional PUT at the
       // final name where the store offers one, tmp + rename elsewhere,

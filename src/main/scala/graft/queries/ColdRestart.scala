@@ -38,7 +38,9 @@ import Tables.prep
   * contract runs all queries in one process); the PROCESS boundary is
   * proven by ColdRestartSpec, which publishes the store from a
   * separate JVM ([[graft.ColdPublish]]) that exits before the reading
-  * session ever sees the artifacts.
+  * session ever sees the artifacts. The maintained artifacts' own
+  * cross-process proof is the streamed cells' ([[graft.StreamCellRun]]):
+  * three JVMs, a crash and a resume, each equal to the full rebuild.
   */
 object ColdRestart {
 
@@ -101,196 +103,6 @@ object ColdRestart {
       throw new IllegalStateException(
         s"no committed snapshot under $root — the publisher never " +
           "reached its commit point; refusing a possibly-mixed read"))
-
-  // -----------------------------------------------------------------
-  // Three-process chained restart (round-11 verdict ask #2): JVM A
-  // publishes day 1's index and DIES; JVM B reads A's version from the
-  // store, merges day 2's slice, publishes v2, DIES; JVM C merges day
-  // 3's slice — and must equal the one-shot rebuild. This is exactly
-  // where a version-threading bug would hide (latestVersion/publish
-  // across processes, `next = max+1`), and no single-JVM law spec can
-  // reach it.
-  // -----------------------------------------------------------------
-
-  private[graft] val ChainArtifact = "postings_chain"
-
-  /** The chain's day boundaries: day 1 = ids ≤ 6/8·max, day 2 =
-    * (6/8, 7/8], day 3 = the q191-convention delta (> 7/8). */
-  private[graft] def chainThresholds(spark: SparkSession,
-      dir: String): (Long, Long) = {
-    val t2 = Curation.deltaThreshold(spark, dir) // max * 7/8
-    (t2 / 7 * 6, t2)
-  }
-
-  /** One "day" of the chained proof: step 1 publishes the index over
-    * day 1's slice; steps 2 and 3 read the LATEST COMMITTED version —
-    * written by a process that is already dead — merge their day's
-    * slice ([[TextAnalysis.mergedPostingsIndex]]: monotone ids, concat
-    * stays sorted), and publish the next version. */
-  private[graft] def chainPublish(spark: SparkSession, dir: String,
-      root: String, step: Int): ArtifactStore.Manifest = {
-    require(step >= 1 && step <= 3, s"chain step must be 1..3, got $step")
-    // Replay guard (advisor find, round 12): each step publishes
-    // exactly one version, so version == step. A replayed step whose
-    // version is already committed re-merging its slice would
-    // DUPLICATE doc ids in the concat-merged lists (the one arm of
-    // the ColdPublish CLI where replay was silent corruption, not a
-    // no-op like the rollup's hwm). Version threading IS the step
-    // high-water mark here: an already-applied step returns the
-    // committed manifest untouched, and each merge reads its
-    // predecessor's EXACT version (not "latest"), so a replay racing
-    // a later step can never fold a newer index into itself.
-    val latest = ArtifactStore.latestVersion(spark, root, ChainArtifact)
-    if (latest.exists(_ >= step))
-      return ArtifactStore.readManifest(spark, root, ChainArtifact, step)
-    require(latest == (if (step == 1) None else Some(step - 1)),
-      s"chain step $step needs predecessor version ${step - 1} " +
-        s"committed; store has $latest")
-    val (t1, t2) = chainThresholds(spark, dir)
-    val docs = Tables.documents(spark, dir)
-    def prev: DataFrame =
-      ArtifactStore.readVersion(spark, root, ChainArtifact, step - 1)._1
-    val idx = step match {
-      case 1 => TextAnalysis.postingsIndexOf(docs.filter(col("doc_id") <= t1))
-      case 2 => TextAnalysis.mergedPostingsIndex(prev,
-        docs.filter(col("doc_id") > t1 && col("doc_id") <= t2))
-        .select(col("w"), col("docs"))
-      case 3 => TextAnalysis.mergedPostingsIndex(prev,
-        docs.filter(col("doc_id") > t2))
-        .select(col("w"), col("docs"))
-    }
-    // version == step enforced INSIDE the publish lease: the guard
-    // above is advisory only — two replicas of the same step can both
-    // pass it, and the second publish would inflate the counter past
-    // `step`, silently no-opping the genuine next step (advisor find,
-    // round 13)
-    ArtifactStore.publish(idx, root, ChainArtifact,
-      expectVersion = Some(step))
-  }
-
-  /** One "day" of the chained ADDITIVE-ROLLUP proof — the q222 arm's
-    * ⊕ merge + batch-id high-water mark exercised at PROCESS
-    * granularity: each step is a separate JVM that reads the previous
-    * (dead) process's published rollup, merges ITS third of every
-    * fecha (`user_id % 3` — fechas deliberately SPLIT across all
-    * three processes, the arrival cadence q220's replace arm cannot
-    * serve), and publishes the next version with hwm = step. A
-    * re-delivered step (same batch id from a FOURTH process — the
-    * crash-replay-after-restart case) must be a content no-op via the
-    * high-water mark that survives on storage. */
-  private[graft] def chainRollupPublish(spark: SparkSession, dir: String,
-      root: String, step: Int): Unit = {
-    require(step >= 1 && step <= 3, s"rollup chain step must be 1..3: $step")
-    val slice = Tables.events(spark, dir)
-      .filter(col("user_id") % 3 === (step - 1))
-      .select(col("ts"), col("event_type"), col("value"))
-    // one lineage across all three JVMs: the chain IS one logical
-    // stream whose steps are its batch ids (the lineage guard must
-    // not fire between chained processes, only on a genuinely
-    // different id sequence)
-    WarehouseIvm.applyRollupBatchAdditive(spark, slice, step - 1L,
-      "rollup-chain", root)
-  }
-
-  private[graft] val ChainSigsArtifact = "sigs_chain"
-  private[graft] val ChainLabelsArtifact = "labels_chain"
-
-  /** One "day" of the chained LABEL proof — the HARD merge algebra of
-    * the three chains (round-12 verdict, missing #3): the postings
-    * chain merges by monotone concat and the rollup by abelian ⊕ —
-    * algebras where chained == rebuild is near-definitional — but CC
-    * labels merge by BRIDGE CONTRACTION: a delta pair can fuse
-    * components born on DIFFERENT days, so the equality is least
-    * obvious exactly here. Each step is a separate JVM that:
-    *
-    *   1. resolves the previous (dead) process's signature table +
-    *      labels through the step's SNAPSHOT — two artifacts that
-    *      must come from the SAME day (the version-vector commit the
-    *      single-artifact postings/rollup chains don't need);
-    *   2. signs ITS day's slice fresh ([[Dedup.signaturesFresh]]),
-    *      collides it against base ∪ delta ([[Curation.collideVerify]]
-    *      — every candidate has ≥ 1 delta endpoint, delta-bounded);
-    *   3. repairs the labels by contracted CC
-    *      ([[Curation.repairedLabels]] — base components enter as
-    *      super-nodes, so a cross-day bridge relabels both sides with
-    *      the global min);
-    *   4. publishes sigs + labels, then the snapshot LAST — the
-    *      step's commit point.
-    *
-    * Day 1 is the same code against an EMPTY base (contraction
-    * degenerates to identity). Replay-safe by snapshot threading
-    * (snapshot version == step): a replayed finished step returns
-    * without publishing; a step retried after a crash BETWEEN the two
-    * artifact publishes re-runs whole — its orphan versions were
-    * never pinned by any snapshot, so no reader ever saw them. */
-  private[graft] def chainLabelPublish(spark: SparkSession, dir: String,
-      root: String, step: Int): Unit = {
-    require(step >= 1 && step <= 3, s"label chain step must be 1..3: $step")
-    val snap = ArtifactStore.latestSnapshot(spark, root)
-    // The chain treats the root's snapshot counter as its step marker,
-    // which is only sound on a DEDICATED root: a foreign snapshot
-    // (e.g. publishAll's seven-artifact one) would make a never-run
-    // step silently no-op while claiming success (reviewer find,
-    // round 13) — refuse it loudly instead.
-    snap.foreach { sn =>
-      require(sn.artifacts.contains(ChainLabelsArtifact),
-        s"label chain requires a DEDICATED store root: the newest " +
-          s"snapshot at $root (v${sn.version}) pins " +
-          s"${sn.artifacts.keys.toSeq.sorted.mkString(",")} — another " +
-          "publisher owns this root; use a fresh one for the chain")
-    }
-    if (snap.exists(_.version >= step)) return // replayed finished step
-    require(snap.map(_.version) == (if (step == 1) None else Some(step - 1)),
-      s"label chain step $step needs snapshot ${step - 1} committed; " +
-        s"found ${snap.map(_.version)}")
-    val (t1, t2) = chainThresholds(spark, dir)
-    val docs = Tables.documents(spark, dir)
-    val slice = step match {
-      case 1 => col("doc_id") <= t1
-      case 2 => col("doc_id") > t1 && col("doc_id") <= t2
-      case 3 => col("doc_id") > t2
-    }
-    val corpusSoFar =
-      if (step == 1) docs.filter(col("doc_id") <= t1)
-      else if (step == 2) docs.filter(col("doc_id") <= t2)
-      else docs
-    val (baseSigs, baseLabels) = snap match {
-      case None => (
-        // day 1: empty base with the right schemas — the generic
-        // step body then IS the base build
-        Dedup.signaturesFresh(spark, docs.limit(0)),
-        docs.select(col("doc_id").as("node"), col("doc_id").as("label"))
-          .limit(0))
-      case Some(sn) => (
-        ArtifactStore.readAt(spark, root, ChainSigsArtifact, sn)._1,
-        ArtifactStore.readAt(spark, root, ChainLabelsArtifact, sn)._1)
-    }
-    val deltaSigs = Dedup.signaturesFresh(spark, docs.filter(slice))
-    val allSigs = baseSigs.unionByName(deltaSigs)
-    val newPairs = Curation.collideVerify(deltaSigs, allSigs)
-    val newLabels = Curation
-      .repairedLabels(corpusSoFar.select(col("doc_id")), baseLabels,
-        newPairs)
-      .select(col("doc_id").as("node"), col("root").as("label"))
-    // The SNAPSHOT is the step marker, and snapshot version == step is
-    // enforced INSIDE the snapshot lease: the replay guard above is
-    // advisory only — two replicas of the same step can both pass it,
-    // and the second snapshot would inflate the counter past `step`,
-    // silently no-opping the genuine next step (advisor find, round
-    // 13). The ARTIFACT publishes deliberately carry no expectVersion:
-    // the documented crash-between-publishes retry re-mints HIGHER
-    // artifact versions (the orphans were never pinned), and the
-    // snapshot pins exact versions either way. A double-fired
-    // replica's committed-but-never-pinned artifact versions are
-    // harmless debris for prune.
-    val mSigs = ArtifactStore.publish(allSigs, root, ChainSigsArtifact)
-    val mLabels = ArtifactStore.publish(newLabels, root, ChainLabelsArtifact)
-    ArtifactStore.publishSnapshot(spark, root, Map(
-      ChainSigsArtifact -> mSigs.version,
-      ChainLabelsArtifact -> mLabels.version),
-      expectVersion = Some(step))
-    ()
-  }
 
   /** Store root, published exactly once per (application, dir). */
   private val stores =
@@ -442,9 +254,10 @@ object ColdRestart {
     * if every cold delta path equals its warm twin AND the
     * republished versions carry exactly the attested base rows. (The
     * genuinely *incremented*-artifact publish across process
-    * boundaries is ColdRestartSpec's three-JVM chain; here the
-    * increments flow to the run's REPORTS, the reference's own shape
-    * — its daily loads publish warehouse rows, not index rebuilds.) */
+    * boundaries is the streamed cells' three-JVM kill-and-resume in
+    * ColdRestartSpec; here the increments flow to the run's REPORTS,
+    * the reference's own shape — its daily loads publish warehouse
+    * rows, not index rebuilds.) */
   def coldDaily(spark: SparkSession, dir: String): DataFrame = {
     val root = publishedStore(spark, dir) // day N-1's hand-off
     val s = fresh(spark)

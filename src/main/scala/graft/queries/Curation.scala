@@ -142,7 +142,7 @@ object Curation {
     * histogram, q122 keeper, q123 corpus build, q165 split) read; a
     * production pipeline materializes it once per dedup run. Before
     * this memo each consumer re-ran the whole iterative fixpoint. */
-  private[queries] def dupClusterLabels(
+  private[graft] def dupClusterLabels(
       spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "cc_labels") {
       connectedComponents(

@@ -1269,16 +1269,10 @@ object TextAnalysis {
         .filter(col("doc_id") <= Curation.deltaThreshold(spark, dir)))
     }
 
-  /** The q194 merge+digest from an EXPLICIT base index — the
-    * cold-restart seam (q206): a fresh session passes the postings
-    * read back from the [[graft.io.ArtifactStore]]; the delta
-    * tokenization and term-keyed merge below touch no session memo. */
   /** The (w, docs, is_new) index merge every postings-append arm
     * shares: base index ⊕ postings of `deltaDocs` — ids are monotone,
     * so concat of the base list and the delta list IS the full sorted
-    * list. Factored for the three-process chained-restart proof
-    * (ColdRestartSpec), whose each "day" publishes exactly this merge
-    * over the previous process's published version. */
+    * list. */
   private[queries] def mergedPostingsIndex(basePost: DataFrame,
       deltaDocs: DataFrame): DataFrame =
     basePost.select(col("w"), col("docs").as("bdocs"))
@@ -1290,11 +1284,10 @@ object TextAnalysis {
           .as("docs"),
         col("bdocs").isNull.cast("long").as("is_new"))
 
-  /** The one-shot index build over a document set, as the (w, docs)
-    * surface — exposed for the chained-restart proof's rebuild bar. */
-  private[queries] def postingsIndexOf(docs: DataFrame): DataFrame =
-    postingsOf(docs)
-
+  /** The q194 merge+digest from an EXPLICIT base index — the
+    * cold-restart seam (q206): a fresh session passes the postings
+    * read back from the [[graft.io.ArtifactStore]]; the delta
+    * tokenization and term-keyed merge below touch no session memo. */
   private[queries] def incrementalPostingsFrom(spark: SparkSession,
       dir: String, basePost: DataFrame): DataFrame = {
     val thr = Curation.deltaThreshold(spark, dir)

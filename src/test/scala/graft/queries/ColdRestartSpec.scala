@@ -303,63 +303,6 @@ class ColdRestartSpec extends SparkSpec {
     } finally hadoopDelete(root)
   }
 
-  test("version threading is enforced INSIDE the publish lease: a " +
-      "double-fired replica of the same chained step fails loudly at " +
-      "publish time instead of inflating the counter past the step, " +
-      "while a crash-retry reclaims its own debris and mints its step") {
-    import spark.implicits._
-    val root = tempDir("graft_expectv_spec").toString
-    try {
-      // step 1 publishes v1
-      assert(ArtifactStore.publish(Seq((1L, "s1")).toDF("id", "tag"),
-        root, "c", expectVersion = Some(1)).version === 1)
-      // a REPLICA of step 1 (double-fired scheduler: its outside-lease
-      // replay guard read latest=None before the twin committed) must
-      // fail loudly here — the silent alternative publishes v2 and the
-      // genuine step 2 then no-ops via its replay guard, losing a slice
-      val dup = intercept[IllegalArgumentException] {
-        ArtifactStore.publish(Seq((1L, "s1dup")).toDF("id", "tag"),
-          root, "c", expectVersion = Some(1))
-      }
-      assert(dup.getMessage.contains("already published"), dup.getMessage)
-      assert(ArtifactStore.latestVersion(spark, root, "c") === Some(1))
-      // a CRASH-RETRY of step 2 (uncommitted v2 data dir = the crash
-      // debris) must reclaim the debris and mint EXACTLY v2 — the
-      // plain arm's debris+1 would silently shift the whole chain
-      Seq((9L, "torn")).toDF("id", "tag").write.parquet(s"$root/c/v2/data")
-      val retried = ArtifactStore.publish(Seq((2L, "s2")).toDF("id", "tag"),
-        root, "c", expectVersion = Some(2))
-      assert(retried.version === 2)
-      assert(ArtifactStore.read(spark, root, "c")
-        .select("tag").head.getString(0) === "s2")
-      // the snapshot counter carries the same fence
-      ArtifactStore.publishSnapshot(spark, root, Map("c" -> 1),
-        expectVersion = Some(1))
-      val sdup = intercept[IllegalArgumentException] {
-        ArtifactStore.publishSnapshot(spark, root, Map("c" -> 2),
-          expectVersion = Some(1))
-      }
-      assert(sdup.getMessage.contains("already committed"), sdup.getMessage)
-      assert(ArtifactStore.latestSnapshot(spark, root).get.version === 1)
-    } finally hadoopDelete(root)
-  }
-
-  test("the label chain refuses a root owned by another publisher: a " +
-      "foreign snapshot must fail loudly, never silently no-op a step") {
-    import spark.implicits._
-    val root = tempDir("graft_chainguard_spec").toString
-    try {
-      ArtifactStore.publish(Seq((1L, "x")).toDF("id", "tag"),
-        root, "someone_elses")
-      ArtifactStore.publishSnapshot(spark, root, Map("someone_elses" -> 1))
-      val err = intercept[IllegalArgumentException] {
-        ColdRestart.chainLabelPublish(spark, "/root/testdata/sf0.001",
-          root, 1)
-      }
-      assert(err.getMessage.contains("DEDICATED"), err.getMessage)
-    } finally hadoopDelete(root)
-  }
-
   test("snapshot JSON roundtrips the version vector") {
     val s = ArtifactStore.Snapshot(12,
       Map("cc_labels_base" -> 3, "postings_base" -> 7, "bm25_hits" -> 1))
@@ -368,31 +311,26 @@ class ColdRestartSpec extends SparkSpec {
     assert(ArtifactStore.parseSnapshot(json) === s)
   }
 
-  /** Launch a ColdPublish (or `mainClass`) JVM with arguments
-    * (dir, root, extraArgs...); returns the process handle plus its
-    * log file so a failure can self-diagnose (caller waits via
-    * [[awaitPublisher]]). The child's `java.io.tmpdir` is its own
-    * spec temp dir: a child the kill-and-resume specs halt runs no
+  /** Launch `mainClass args` in a child JVM; returns the process
+    * handle plus its log file so a failure can self-diagnose (caller
+    * waits via [[awaitChild]]). The child's `java.io.tmpdir` is its
+    * own spec temp dir: a child the kill-and-resume specs halt runs no
     * shutdown hook, so what Spark and the native codecs leave in
     * tmpdir would otherwise outlive the suite. No child reads another's
     * tmpdir; checkpoints and stores are passed as arguments. */
-  private def launchPublisher(
-      dir: String, root: String,
-      extraArgs: Seq[String] = Nil,
-      mainClass: String = "graft.ColdPublish"): (Process, java.io.File) =
-    ForkedJvm.launch(mainClass, Seq(dir, root) ++ extraArgs,
+  private def launchChild(mainClass: String,
+      args: String*): (Process, java.io.File) =
+    ForkedJvm.launch(mainClass, args,
       Map("JAVA_TOOL_OPTIONS" -> s"-Djava.io.tmpdir=${tempDir("child_tmp")}"),
       xmx = "3g")
 
-  private def awaitPublisher(
+  private def awaitChild(
       p: (Process, java.io.File), what: String,
       expectExit: Int = 0): Unit = {
     val (proc, log) = p
     val done = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
     if (!done || proc.exitValue() != expectExit) {
-      // surface the publisher's own stack trace, not just the exit
-      // code — the log is otherwise an unnamed temp file nobody reads
-      // (reviewer find, r11)
+      // surface the child's own stack trace, not just the exit code
       fail(s"$what failed " +
         s"(exit ${if (done) proc.exitValue() else "timeout"}):\n" +
         ForkedJvm.tail(log, 30))
@@ -407,8 +345,8 @@ class ColdRestartSpec extends SparkSpec {
     hadoopDelete(root) // publisher owns creation
     try {
       // ---- the "yesterday" process: publish and DIE ----
-      val proc = launchPublisher(dir, root)
-      awaitPublisher(proc, "publisher")
+      val proc = launchChild("graft.ColdPublish", dir, root)
+      awaitChild(proc, "publisher")
       assert(!proc._1.isAlive) // the publisher JVM is DEAD before any read
 
       // ---- all seven artifacts committed, with attested row counts ----
@@ -452,327 +390,49 @@ class ColdRestartSpec extends SparkSpec {
     } finally hadoopDelete(root)
   }
 
-  test("three-day chained restart: three JVMs each publish one day's " +
-      "increment through the store and DIE; day 3's index equals the " +
-      "one-shot rebuild list-for-list") {
-    val dir = "/root/testdata/sf0.001"
-    val root = tempDir("graft_chain_spec").toString
-    hadoopDelete(root)
-    try {
-      // day 1 and day 2: separate JVMs, strictly sequential, each dead
-      // before the next starts — state survives on storage alone
-      val p1 = launchPublisher(dir, root, Seq("1"))
-      awaitPublisher(p1, "chain day 1")
-      assert(!p1._1.isAlive)
-      val p2 = launchPublisher(dir, root, Seq("2"))
-      awaitPublisher(p2, "chain day 2")
-      assert(!p2._1.isAlive)
-      // day 3: THIS process (the third JVM of the chain)
-      val m3 = ColdRestart.chainPublish(spark, dir, root, 3)
-      assert(m3.version === 3,
-        s"version threading broke across processes: got v${m3.version}")
-      // every day's version is committed and still readable
-      for (v <- 1 to 3)
-        assert(ArtifactStore.readVersion(spark, root,
-          ColdRestart.ChainArtifact, v)._2.version === v)
-      // the chained index == the one-shot rebuild, list-for-list
-      val chained = ArtifactStore.read(spark, root,
-        ColdRestart.ChainArtifact)
-      val rebuilt = TextAnalysis.postingsIndexOf(
-        Tables.documents(spark, dir))
-      val diff = chained.as("c")
-        .join(rebuilt.as("r"), Seq("w"), "full")
-        .filter(col("c.docs").isNull || col("r.docs").isNull ||
-          col("c.docs") =!= col("r.docs"))
-      assert(diff.count() === 0,
-        "chained increments diverged from the rebuild")
-      // and the increments were real: each day's stored index carries
-      // strictly more posting mass (the harness vocabulary saturates
-      // early, so TERM counts stay flat — the lists grow)
-      val mass = (1 to 3).map(v =>
-        ArtifactStore.readVersion(spark, root,
-          ColdRestart.ChainArtifact, v)._1
-          .agg(sum(size(col("docs")))).head.getLong(0))
-      assert(mass(0) < mass(1) && mass(1) < mass(2),
-        s"chain posting mass did not grow: $mass")
-      // replay safety (advisor find, r12): a FOURTH process re-running
-      // finished step 2 must be a content no-op — without the version-
-      // threading guard the concat merge would DUPLICATE doc ids in
-      // every re-merged list and publish the corruption as v4
-      val replay = launchPublisher(dir, root, Seq("2"))
-      awaitPublisher(replay, "postings chain replay of day 2")
-      assert(ArtifactStore.latestVersion(spark, root,
-        ColdRestart.ChainArtifact) === Some(3),
-        "a replayed chain step published a new version")
-      assert(ArtifactStore.read(spark, root, ColdRestart.ChainArtifact)
-        .as("c").join(rebuilt.as("r"), Seq("w"), "full")
-        .filter(col("c.docs").isNull || col("r.docs").isNull ||
-          col("c.docs") =!= col("r.docs")).count() === 0,
-        "a replayed chain step changed the served index")
-    } finally hadoopDelete(root)
-  }
-
-  test("three-day chained LABEL restart: the bridge-contraction merge " +
-      "across three JVMs equals the one-shot rebuild label-for-label, " +
-      "and a FOURTH process replaying a finished step is a no-op") {
-    val dir = "/root/testdata/sf0.001"
-    val root = tempDir("graft_label_chain").toString
-    hadoopDelete(root)
-    try {
-      // days 1 and 2: separate JVMs, each dead before the next starts
-      for (s <- 1 to 2) {
-        val p = launchPublisher(dir, root, Seq(s.toString, "labels"))
-        awaitPublisher(p, s"label chain day $s")
-        assert(!p._1.isAlive)
-      }
-      // day 3: THIS process (the third JVM of the chain)
-      ColdRestart.chainLabelPublish(spark, dir, root, 3)
-      // snapshot threading across processes: one snapshot per day
-      val snap3 = ArtifactStore.latestSnapshot(spark, root).get
-      assert(snap3.version === 3,
-        s"snapshot threading broke across processes: v${snap3.version}")
-      // the chained labels == the one-shot rebuild, label-for-label
-      val chained = ArtifactStore.readAt(spark, root,
-        ColdRestart.ChainLabelsArtifact, snap3)._1
-        .select(col("node").as("doc_id"), col("label").as("root"))
-      val full = Tables.documents(spark, dir).select(col("doc_id"))
-        .join(Curation.dupClusterLabels(spark, dir)
-          .withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("root"))
-      val diff = chained.as("c").join(full.as("f"), Seq("doc_id"), "full")
-        .filter(col("c.root") =!= col("f.root") ||
-          col("c.root").isNull || col("f.root").isNull)
-      assert(diff.count() === 0,
-        "chained label increments diverged from the rebuild")
-      // a FOURTH process replaying finished step 2: snapshot
-      // threading makes it a no-op — nothing new published
-      val replay = launchPublisher(dir, root, Seq("2", "labels"))
-      awaitPublisher(replay, "label chain replay of day 2")
-      assert(ArtifactStore.latestSnapshot(spark, root).get.version === 3,
-        "a replayed label step advanced the snapshot")
-      assert(ArtifactStore.latestVersion(spark, root,
-        ColdRestart.ChainLabelsArtifact) === Some(3),
-        "a replayed label step published a new version")
-    } finally hadoopDelete(root)
-  }
-
-  test("label chain bridge fixture: a day-3 document fusing a day-1 " +
-      "cluster with a day-2 cluster relabels BOTH with the global min " +
-      "— and the chained result equals the rebuild") {
-    import spark.implicits._
-    // Engineered corpus (max id 8 → day 1 = ids ≤ 6, day 2 = {7},
-    // day 3 = {8}): texts A = "P X" and B = "P Y" share the 6-token
-    // prefix P, so J(A,B) = 4/16 = 0.25 (< 0.5: never merged
-    // directly) while doc 8 = "A B" contains both, J(8,A) = J(8,B) =
-    // 10/18 ≈ 0.56 (≥ 0.5). Day 1 clusters {1,2} (identical A) and
-    // leaves 3 (B) a singleton; day 2's doc 7 (B) merges {3,7}; day
-    // 3's doc 8 BRIDGES the day-1 component {1,2} and the day-2
-    // component {3,7} — the cross-day contraction case the postings
-    // and rollup chains cannot reach.
-    val pfx = "p1 p2 p3 p4 p5 p6"
-    val textA = s"$pfx x1 x2 x3 x4 x5 x6"
-    val textB = s"$pfx y1 y2 y3 y4 y5 y6"
-    val docs = Seq(
-      (1L, textA), (2L, textA), (3L, textB),
-      (4L, "f41 f42 f43 f44 f45"), (5L, "f51 f52 f53 f54 f55"),
-      (6L, "f61 f62 f63 f64 f65"), (7L, textB),
-      (8L, s"$textA $textB"))
-      .map { case (id, t) => (id, t, "en", "fixture", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val fixDir = tempDir("graft_label_fix").toString
-    val root = tempDir("graft_label_fix_store").toString
-    hadoopDelete(root)
-    try {
-      docs.coalesce(1).write.mode("overwrite")
-        .parquet(s"$fixDir/documents.parquet")
-      for (s <- 1 to 3)
-        ColdRestart.chainLabelPublish(spark, fixDir, root, s)
-      val snap = ArtifactStore.latestSnapshot(spark, root).get
-      assert(snap.version === 3)
-      val labels = ArtifactStore.readAt(spark, root,
-        ColdRestart.ChainLabelsArtifact, snap)._1
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // the bridge fused {1,2} ∪ {3,7} ∪ {8} under the global min
-      for (id <- Seq(1L, 2L, 3L, 7L, 8L))
-        assert(labels(id) === 1L, s"doc $id not relabeled to 1: $labels")
-      // fillers stayed singletons
-      for (id <- Seq(4L, 5L, 6L))
-        assert(labels(id) === id, s"doc $id moved: $labels")
-      // day 2's intermediate state really had TWO components (the
-      // bridge happened on day 3, not earlier)
-      val day2 = ArtifactStore.readAt(spark, root,
-        ColdRestart.ChainLabelsArtifact,
-        ArtifactStore.readSnapshot(spark, root, 2))._1
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(day2(1L) === 1L && day2(2L) === 1L)
-      assert(day2(3L) === 3L && day2(7L) === 3L, day2.toString)
-      // and the chained result equals the one-shot rebuild on the
-      // fixture corpus
-      val rebuilt = Tables.documents(spark, fixDir).select(col("doc_id"))
-        .join(Curation.dupClusterLabels(spark, fixDir)
-          .withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("root"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(labels === rebuilt)
-    } finally { hadoopDelete(root); hadoopDelete(fixDir) }
-  }
-
-  test("three-process chained ADDITIVE rollup: every fecha split " +
-      "across three JVMs accumulates to the one-shot rebuild, and a " +
-      "FOURTH process replaying a finished step is a content no-op — " +
-      "the high-water mark survives on storage") {
-    val dir = "/root/testdata/sf0.001"
-    val root = tempDir("graft_rollup_chain").toString
-    hadoopDelete(root)
-    try {
-      for (s <- 1 to 3) {
-        val p = launchPublisher(dir, root, Seq(s.toString, "rollup"))
-        awaitPublisher(p, s"rollup chain day $s")
-        assert(!p._1.isAlive)
-      }
-      def served: Seq[Seq[Any]] =
-        WarehouseIvm.rollupOut(ArtifactStore.read(spark, root,
-            WarehouseIvm.AdditiveRollupArtifact))
-          .collect().map(_.toSeq).toSeq
-      val afterChain = served
-      val expected = WarehouseIvm.rollupOut(
-        Tables.events(spark, dir)
-          .select(to_date(col("ts")).as("fecha"), col("event_type"),
-            col("value"))
-          .groupBy(col("fecha"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_raw")))
-        .collect().map(_.toSeq).toSeq
-      assert(afterChain === expected,
-        "three-process ⊕ chain diverged from the one-shot rebuild")
-      // crash-replay ACROSS a process restart: a fourth JVM
-      // re-delivers step 2 (same batch id); the artifact's hwm — state
-      // that lives on storage, not in any session — must make it a
-      // no-op, publishing nothing
-      val vBefore = ArtifactStore.latestVersion(spark, root,
-        WarehouseIvm.AdditiveRollupArtifact)
-      val replay = launchPublisher(dir, root, Seq("2", "rollup"))
-      awaitPublisher(replay, "rollup chain replay of day 2")
-      assert(ArtifactStore.latestVersion(spark, root,
-        WarehouseIvm.AdditiveRollupArtifact) === vBefore,
-        "a replayed step published a new version")
-      assert(served === afterChain,
-        "a replayed step changed the served rollup")
-    } finally hadoopDelete(root)
-  }
-
-  test("kill-and-resume streamed rollup: a JVM is HALTED inside " +
-      "foreachBatch after the artifact commit but before the streaming " +
-      "commit log; a new JVM resuming the same checkpoint re-delivers " +
-      "the batch as a no-op and the final rollup equals the " +
-      "uninterrupted run — and a NEW checkpoint lineage fails loudly") {
-    val dir = "/root/testdata/sf0.001"
-    val base = tempDir("graft_killresume")
-    val arrival = base.resolve("arrival")
-    java.nio.file.Files.createDirectories(arrival)
-    val ckpt = base.resolve("ckpt").toString
-    val root = base.resolve("store").toString
-    def writeSlice(n: Int): Unit =
-      sliceWriter(n => Tables.events(spark, dir)
-        .filter(col("user_id") % 3 === (n - 1))
-        .select(col("ts"), col("event_type"), col("value")))(arrival, n)
-    try {
-      writeSlice(1)
-      // run 1: crash (halt, not exit — no shutdown hooks) right after
-      // batch 0's artifact publish, BEFORE its streaming commit log
-      val p1 = launchPublisher("additive", arrival.toString,
-        Seq(ckpt, root, "0"), "graft.StreamCellRun")
-      awaitPublisher(p1, "stream rollup run 1 (crash arm)",
-        expectExit = 137)
-      assert(ArtifactStore.latestVersion(spark, root,
-        WarehouseIvm.AdditiveRollupArtifact) === Some(1),
-        "batch 0 did not commit its artifact before the crash")
-      // run 2: the rest of the feed lands; the SAME checkpoint resumes
-      writeSlice(2); writeSlice(3)
-      val p2 = launchPublisher("additive", arrival.toString,
-        Seq(ckpt, root), "graft.StreamCellRun")
-      awaitPublisher(p2, "stream rollup run 2 (resume)")
-      // the crashed batch WAS re-delivered (WAL replay) ...
-      val log2 = ForkedJvm.output(p2._2).linesIterator
-        .filter(_.startsWith("committed batch")).toSeq
-      assert(log2.contains("committed batch 0"),
-        s"resume did not re-deliver the in-flight batch: $log2")
-      // ... as a content no-op: it published nothing (versions 2 and 3
-      // are the two NEW batches), and the served rollup equals the
-      // uninterrupted one-shot build over the whole feed
-      assert(ArtifactStore.latestVersion(spark, root,
-        WarehouseIvm.AdditiveRollupArtifact) === Some(3),
-        "the replayed batch published an extra version")
-      val served = WarehouseIvm.rollupOut(ArtifactStore.read(spark, root,
-          WarehouseIvm.AdditiveRollupArtifact))
-        .collect().map(_.toSeq).toSeq
-      val expected = WarehouseIvm.rollupOut(
-        Tables.events(spark, dir)
-          .select(to_date(col("ts")).as("fecha"), col("event_type"),
-            col("value"))
-          .groupBy(col("fecha"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_raw")))
-        .collect().map(_.toSeq).toSeq
-      assert(served === expected,
-        "kill-and-resume diverged from the uninterrupted run")
-      // run 3: a NEW checkpoint against the same artifact root — batch
-      // ids restart at 0, so without the lineage guard six real
-      // batches would be silently skipped; it must fail LOUDLY instead
-      val freshCkpt = base.resolve("ckpt2").toString
-      val p3 = launchPublisher("additive", arrival.toString,
-        Seq(freshCkpt, root), "graft.StreamCellRun")
-      val done = p3._1.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
-      assert(done && p3._1.exitValue() != 0,
-        "a foreign checkpoint lineage was accepted")
-      val log3 = ForkedJvm.output(p3._2)
-      assert(log3.contains("lineage"),
-        "the failure did not name the lineage guard")
-      // and the artifact is untouched by the refused lineage
-      assert(ArtifactStore.latestVersion(spark, root,
-        WarehouseIvm.AdditiveRollupArtifact) === Some(3))
-    } finally hadoopDelete(base.toString)
-  }
-
   // ---------------------------------------------------------------
-  // Kill-and-resume for the OTHER streamed cells (round-13 verdict,
-  // missing #3): the additive rollup's halt-inside-foreachBatch proof
-  // generalized to q216 (postings merge), q217 (BM25 doc-keyed
-  // merge), q220 (fecha-keyed replace) and q200 (label repair). These
-  // cells' replay protection is CONTENT idempotence, not a batch-id
-  // hwm — there is no id-based skip to guard with a lineage check
-  // (q222's guard exists precisely because ⊕ cannot be
-  // content-idempotent) — so the contract proven here is: the
-  // re-delivered batch leaves the served CONTENT bit-equal to the
+  // Kill-and-resume of every streamed cell (q222, q220, q216, q217,
+  // q200): the cross-process proof of the maintained artifacts. Each
+  // cell runs over three JVMs with a crash inside foreachBatch, and
+  // its served content must equal the full rebuild. q222's replay
+  // protection is its batch-id hwm + lineage guard (⊕ cannot be
+  // content-idempotent); the others' is content idempotence, so the
+  // re-delivered batch must leave the served CONTENT bit-equal to the
   // uninterrupted run's.
   // ---------------------------------------------------------------
 
-  /** One kill-and-resume run for a streamed cell: slice the feed into
-    * three arrival files, crash a child JVM inside foreachBatch after
-    * batch 0's artifact publish (halt 137 — before the streaming
-    * commit log), resume the SAME checkpoint in a second JVM with the
-    * rest of the feed, assert the WAL re-delivered batch 0, and hand
-    * the store root back for the content comparison. */
-  private def killResumeCell(cell: String,
+  /** One kill-and-resume run for a streamed cell: three JVMs share one
+    * checkpoint and one store root, each handed the next arrival
+    * file. JVM 1 halts inside foreachBatch after batch 0's publish
+    * (exit 137, before the streaming commit log), leaving `artifact`
+    * at v1; JVM 2 resumes the checkpoint, and the WAL re-delivers
+    * batch 0 before batch 1; JVM 3 commits batch 2 alone, so its
+    * state came from storage only. Returns the store root for the
+    * content comparison. */
+  private def killResumeCell(cell: String, artifact: String,
       writeSlice: (java.nio.file.Path, Int) => Unit): String = {
     val base = tempDir(s"graft_killresume_$cell")
     val arrival = base.resolve("arrival")
     java.nio.file.Files.createDirectories(arrival)
     val ckpt = base.resolve("ckpt").toString
     val root = base.resolve("store").toString
-    writeSlice(arrival, 1)
-    val p1 = launchPublisher(cell, arrival.toString,
-      Seq(ckpt, root, "0"), "graft.StreamCellRun")
-    awaitPublisher(p1, s"stream $cell run 1 (crash arm)",
-      expectExit = 137)
-    writeSlice(arrival, 2); writeSlice(arrival, 3)
-    val p2 = launchPublisher(cell, arrival.toString,
-      Seq(ckpt, root), "graft.StreamCellRun")
-    awaitPublisher(p2, s"stream $cell run 2 (resume)")
-    val log2 = ForkedJvm.output(p2._2).linesIterator
-      .filter(_.startsWith("committed batch")).toSeq
-    assert(log2.contains("committed batch 0"),
-      s"resume did not re-deliver the in-flight batch: $log2")
+    def run(n: Int, crashArgs: Seq[String], exit: Int): Seq[String] = {
+      writeSlice(arrival, n)
+      val p = launchChild("graft.StreamCellRun",
+        Seq(cell, arrival.toString, ckpt, root) ++ crashArgs: _*)
+      awaitChild(p, s"stream $cell JVM $n", exit)
+      ForkedJvm.output(p._2).linesIterator
+        .filter(_.startsWith("committed batch")).toSeq
+    }
+    run(1, Seq("0"), 137)
+    assert(ArtifactStore.latestVersion(spark, root, artifact) === Some(1),
+      s"$cell: batch 0 did not commit its artifact before the crash")
+    val log2 = run(2, Nil, 0)
+    assert(log2 === Seq("committed batch 0", "committed batch 1"),
+      s"$cell: JVM 2 did not re-deliver the in-flight batch first: $log2")
+    val log3 = run(3, Nil, 0)
+    assert(log3 === Seq("committed batch 2"),
+      s"$cell: JVM 3 did not resume from the checkpoint alone: $log3")
     root
   }
 
@@ -783,13 +443,66 @@ class ColdRestartSpec extends SparkSpec {
     writeArrivalFile(df(n), arrival.resolveSibling(s"slice${n}_tmp"),
       arrival.resolve(s"slice$n.parquet"))
 
+  /** A served rollup artifact and the full re-aggregation it must
+    * equal, both through q220/q222's output surface. */
+  private def servedRollup(root: String, artifact: String): Seq[Seq[Any]] =
+    WarehouseIvm.rollupOut(ArtifactStore.read(spark, root, artifact))
+      .collect().map(_.toSeq).toSeq
+
+  private def rebuiltRollup(dir: String): Seq[Seq[Any]] =
+    WarehouseIvm.rollupOut(
+      Tables.events(spark, dir)
+        .select(to_date(col("ts")).as("fecha"), col("event_type"),
+          col("value"))
+        .groupBy(col("fecha"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_raw")))
+      .collect().map(_.toSeq).toSeq
+
+  test("kill-and-resume streamed rollup: a JVM is HALTED inside " +
+      "foreachBatch after the artifact commit but before the streaming " +
+      "commit log; a new JVM resuming the same checkpoint re-delivers " +
+      "the batch as a no-op and the final rollup equals the " +
+      "uninterrupted run — and a NEW checkpoint lineage fails loudly") {
+    val dir = "/root/testdata/sf0.001"
+    // every fecha split across all three JVMs (`user_id % 3`), the
+    // arrival cadence q220's replace arm cannot serve
+    val root = killResumeCell("additive", WarehouseIvm.AdditiveRollupArtifact,
+      sliceWriter(n => Tables.events(spark, dir)
+        .filter(col("user_id") % 3 === (n - 1))
+        .select(col("ts"), col("event_type"), col("value"))))
+    val base = java.nio.file.Paths.get(root).getParent
+    try {
+      // the replayed batch published nothing: v1 is batch 0, versions
+      // 2 and 3 are the two new batches
+      assert(ArtifactStore.latestVersion(spark, root,
+        WarehouseIvm.AdditiveRollupArtifact) === Some(3),
+        "the replayed batch published an extra version")
+      assert(servedRollup(root, WarehouseIvm.AdditiveRollupArtifact) ===
+        rebuiltRollup(dir), "kill-and-resume diverged from the rebuild")
+      // a NEW checkpoint against the same artifact root — batch ids
+      // restart at 0, so without the lineage guard three real batches
+      // would be silently skipped; it must fail LOUDLY instead
+      val p = launchChild("graft.StreamCellRun", "additive",
+        base.resolve("arrival").toString, base.resolve("ckpt2").toString,
+        root)
+      val done = p._1.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
+      assert(done && p._1.exitValue() != 0,
+        "a foreign checkpoint lineage was accepted")
+      assert(ForkedJvm.output(p._2).contains("lineage"),
+        "the failure did not name the lineage guard")
+      // and the artifact is untouched by the refused lineage
+      assert(ArtifactStore.latestVersion(spark, root,
+        WarehouseIvm.AdditiveRollupArtifact) === Some(3))
+    } finally hadoopDelete(base.toString)
+  }
+
   test("kill-and-resume streamed postings merge (q216): halt inside " +
       "foreachBatch after the artifact publish; the resumed checkpoint " +
       "re-delivers the batch and the served index digest equals the " +
       "full-corpus rebuild — replay absorbed by content idempotence") {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val root = killResumeCell("postings",
+    val root = killResumeCell("postings", TextAnalysis.StreamPostingsArtifact,
       sliceWriter(n => docs.filter(col("doc_id") % 3 === (n - 1))))
     try {
       val served = TextAnalysis.postingsDigestOf(ArtifactStore.read(
@@ -808,7 +521,7 @@ class ColdRestartSpec extends SparkSpec {
       "q129's full rebuild — dropDuplicates absorbs the replayed rows") {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val root = killResumeCell("bm25",
+    val root = killResumeCell("bm25", TextAnalysis.StreamDoclensArtifact,
       sliceWriter(n => docs.filter(col("doc_id") % 3 === (n - 1))))
     try {
       val served = TextAnalysis.bm25FromStreamStore(spark, root)
@@ -830,22 +543,13 @@ class ColdRestartSpec extends SparkSpec {
     // FECHA-ATOMIC slices (q220's documented arrival cadence): every
     // row of one fecha lands in exactly one file; NULL fechas
     // (malformed ts) ride with slice 1
-    val root = killResumeCell("rollup",
+    val root = killResumeCell("rollup", WarehouseIvm.StreamRollupArtifact,
       sliceWriter(n => events.filter(
         coalesce(pmod(dayofyear(to_date(col("ts"))), lit(3)), lit(0))
           === (n - 1))))
     try {
-      val served = WarehouseIvm.rollupOut(ArtifactStore.read(spark, root,
-          WarehouseIvm.StreamRollupArtifact))
-        .collect().map(_.toSeq).toSeq
-      val expected = WarehouseIvm.rollupOut(
-        Tables.events(spark, dir)
-          .select(to_date(col("ts")).as("fecha"), col("event_type"),
-            col("value"))
-          .groupBy(col("fecha"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_raw")))
-        .collect().map(_.toSeq).toSeq
-      assert(served === expected,
+      assert(servedRollup(root, WarehouseIvm.StreamRollupArtifact) ===
+        rebuiltRollup(dir),
         "kill-and-resume rollup replace diverged from the rebuild")
     } finally hadoopDelete(new java.io.File(root).getParent)
   }
@@ -856,7 +560,7 @@ class ColdRestartSpec extends SparkSpec {
       "histogram equals q88's full rebuild") {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val root = killResumeCell("labels",
+    val root = killResumeCell("labels", Curation.StreamLabelsArtifact,
       sliceWriter(n => docs.filter(col("doc_id") % 3 === (n - 1))))
     try {
       val served = Curation.clusterSizes(ArtifactStore.read(spark, root,
@@ -924,10 +628,10 @@ class ColdRestartSpec extends SparkSpec {
       // cross-process arm of the writer lease the in-JVM race specs
       // cannot exercise (IdempotentWriterSpec covers threads; this
       // covers the double-fired SCHEDULER case, two driver processes)
-      val p1 = launchPublisher(dir, root)
-      val p2 = launchPublisher(dir, root)
-      awaitPublisher(p1, "publisher 1")
-      awaitPublisher(p2, "publisher 2")
+      val p1 = launchChild("graft.ColdPublish", dir, root)
+      val p2 = launchChild("graft.ColdPublish", dir, root)
+      awaitChild(p1, "publisher 1")
+      awaitChild(p2, "publisher 2")
       for (n <- ColdRestart.AllArtifacts) {
         // both publishes committed, serialized into versions 1 and 2
         assert(ArtifactStore.latestVersion(spark, root, n) === Some(2), n)

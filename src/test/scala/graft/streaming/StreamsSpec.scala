@@ -452,6 +452,60 @@ class StreamsSpec extends SparkSpec {
       s"duplicate doc rows in the replayed labels: ${rows.length}")
   }
 
+  test("q200 bridge: a batch-3 document fusing a batch-1 cluster with " +
+      "a batch-2 cluster relabels BOTH with the global min, and the " +
+      "streamed labels equal the rebuild") {
+    import graft.io.ArtifactStore
+    import graft.queries.{Curation, Tables}
+    val fx = new ArrivalFixture("q200_bridge",
+      (b, s) => Curation.applyArrivalBatch(spark, b, s))
+    import fx.{docsDF, store}
+    // Engineered corpus: texts A = "P X" and B = "P Y" share the
+    // 6-token prefix P, so J(A,B) = 4/16 = 0.25 (< 0.5: never merged
+    // directly) while doc 8 = "A B" contains both, J(8,A) = J(8,B) =
+    // 10/18 ≈ 0.56 (≥ 0.5). Batch 1 (ids ≤ 6) clusters {1,2}
+    // (identical A) and leaves 3 (B) a singleton; batch 2's doc 7 (B)
+    // merges {3,7}; batch 3's doc 8 BRIDGES the batch-1 component
+    // {1,2} and the batch-2 component {3,7} — the cross-batch
+    // contraction case.
+    val pfx = "p1 p2 p3 p4 p5 p6"
+    val textA = s"$pfx x1 x2 x3 x4 x5 x6"
+    val textB = s"$pfx y1 y2 y3 y4 y5 y6"
+    val corpus = Seq(
+      (1L, textA), (2L, textA), (3L, textB),
+      (4L, "f41 f42 f43 f44 f45"), (5L, "f51 f52 f53 f54 f55"),
+      (6L, "f61 f62 f63 f64 f65"), (7L, textB),
+      (8L, s"$textA $textB"))
+    for (batch <- Seq(corpus.filter(_._1 <= 6), corpus.filter(_._1 == 7),
+        corpus.filter(_._1 == 8)))
+      Curation.applyArrivalBatch(spark, docsDF(batch), store)
+    def labelsAt(v: Int): Map[Long, Long] =
+      ArtifactStore.readVersion(spark, store, Curation.StreamLabelsArtifact,
+        v)._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = labelsAt(3)
+    // the bridge fused {1,2} ∪ {3,7} ∪ {8} under the global min
+    for (id <- Seq(1L, 2L, 3L, 7L, 8L))
+      assert(labels(id) === 1L, s"doc $id not relabeled to 1: $labels")
+    // fillers stayed singletons
+    for (id <- Seq(4L, 5L, 6L))
+      assert(labels(id) === id, s"doc $id moved: $labels")
+    // batch 2's state really had TWO components (the bridge happened
+    // in batch 3, not earlier)
+    val batch2 = labelsAt(2)
+    assert(batch2(1L) === 1L && batch2(2L) === 1L)
+    assert(batch2(3L) === 3L && batch2(7L) === 3L, batch2.toString)
+    // and the streamed result equals the one-shot rebuild on the
+    // fixture corpus
+    val fixDir = fx.scratch.resolve("corpus").toString
+    docsDF(corpus).coalesce(1).write.parquet(s"$fixDir/documents.parquet")
+    val rebuilt = Tables.documents(spark, fixDir).select(col("doc_id"))
+      .join(Curation.dupClusterLabels(spark, fixDir)
+        .withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels === rebuilt)
+  }
+
   // ---------------------------------------------------------------
   // Streams.drain / runToMemory
   // ---------------------------------------------------------------
