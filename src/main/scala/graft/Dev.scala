@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *     spans);
   *   - `profile <sfDir> <query>...` — each query once warm (after one
   *     untimed pass) with a per-job and per-stage wall-time breakdown
-  *     from a SparkListener;
+  *     from a SparkListener and the generated classes each run
+  *     compiled;
   *   - `skew [nRows] [hotShare%]` — the three skew strategies on one
   *     skewed join (BENCH_NOTES "r9: SkewJoin vs AQE skew-split");
   *   - `zorder <sfDir>` — physical pruning of the q192 written layouts
@@ -87,6 +88,10 @@ object Dev {
       SparkEntry.queries(name)(spark, args.head).explain("formatted")
     }
 
+  /** Generated classes Janino has compiled in this JVM so far. */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private case class StageRec(id: Int, name: String, tasks: Int,
       details: String = "", ops: String = "",
       var launch: Long = -1L, var done: Long = -1L)
@@ -119,16 +124,24 @@ object Dev {
           _.done = System.currentTimeMillis())
     })
     args.tail.foreach { name =>
-      // warm pass: session one-time costs (codegen compiler, JIT,
-      // parquet footers) land outside the profiled window
+      // warm run: JIT and parquet footers land outside the profiled
+      // window. It is the same query right before, so the profiled run
+      // finds its generated classes in the codegen cache at any cache
+      // size (0 compiles unless the query alone outgrows the cache);
+      // the warm run's count is what the query compiles when its
+      // classes are not cached, as in a mix that outgrows the cache.
+      val c0 = compiles()
       noop(SparkEntry.queries(name)(spark, sfDir))
+      val c1 = compiles()
       jobs.clear(); stages.clear(); jobStart.clear()
       val t0 = System.nanoTime()
       noop(SparkEntry.queries(name)(spark, sfDir))
       val dt = (System.nanoTime() - t0) / 1e9
+      val c2 = compiles()
       // brief pause for listener-bus drain so late events are counted
       Thread.sleep(300)
-      println(f"===== $name warm total $dt%.3f s, ${jobs.size} jobs, ${stages.size} stages =====")
+      println(f"===== $name warm total $dt%.3f s, ${jobs.size} jobs, ${stages.size} stages, " +
+        s"codegen compiles ${c2 - c1} (warm-up run ${c1 - c0}) =====")
       val t0ms = jobs.map(_._2).minOption.getOrElse(0L)
       var prevEnd = t0ms
       jobs.sortBy(_._2).foreach { case (jid, js, je, sids) =>

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one SparkSession factory: `local[n]` with `n` shuffle
-  * partitions, UTC session time, no UI, WARN logs, prepped by
+  * partitions, UTC session time, no UI, WARN logs, Spark's codegen
+  * cache sized to [[graft.queries.Tables.CodegenCacheEntries]], prepped by
   * [[graft.queries.Tables.prep]] so every query runner can assume it. */
 object Session {
 
@@ -17,6 +18,8 @@ object Session {
       .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.queries.Tables.CodegenCacheKey,
+        graft.queries.Tables.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.queries.Tables.prep(spark)

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.{Command, LocalRelation, LogicalPlan, ReturnAnswer, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SQLExecution, SortExec, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
 import org.apache.spark.sql.internal.SQLConf
 
 /** The final total order of a small result, sorted in one task: plans
@@ -18,7 +19,10 @@ import org.apache.spark.sql.internal.SQLConf
   * `ReturnAnswer`, so a collected query takes the one-task sort once
   * its last shuffle stage below the sort has run. An initial plan has
   * no stage and is never changed; a write, whose execution root is a
-  * command, keeps the range shuffle. Installed by [[Tables.prep]]. */
+  * command, keeps the range shuffle. Neither does a sort whose input
+  * is its own range shuffle (the first stage over a local relation):
+  * that stage has already run, so the global sort over its read is
+  * kept and no job would be saved. Installed by [[Tables.prep]]. */
 object ResultSort extends SparkStrategy {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case ReturnAnswer(Sort(order, true, child, _)) if !underCommand && small(child) =>
@@ -36,12 +40,20 @@ object ResultSort extends SparkStrategy {
   private def small(child: LogicalPlan): Boolean = {
     val conf = SQLConf.get
     val leaves = child.collectLeaves()
-    conf.coalesceShufflePartitionsEnabled &&
+    conf.coalesceShufflePartitionsEnabled && !ownRangeStage(child) &&
     leaves.exists(_.isInstanceOf[LogicalQueryStage]) && leaves.forall {
       case s: LogicalQueryStage => s.isMaterialized
       case _: LocalRelation => true
       case _ => false
     } && onePartition(conf, child.stats.sizeInBytes)
+  }
+
+  /** The sort's input is a materialized range shuffle: the sort's own
+    * exchange, made a stage because nothing below it was one. */
+  private def ownRangeStage(child: LogicalPlan): Boolean = child match {
+    case LogicalQueryStage(_, s: ShuffleQueryStageExec) =>
+      s.shuffle.outputPartitioning.isInstanceOf[RangePartitioning]
+    case _ => false
   }
 
   /** Whether `bytes` fit `ShufflePartitionsUtil`'s coalesced-partition

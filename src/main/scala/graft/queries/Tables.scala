@@ -1,8 +1,11 @@
 package graft.queries
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions.col
+import org.slf4j.LoggerFactory
 
 /** Harness-table access + session prep. */
 object Tables {
@@ -112,9 +115,34 @@ object Tables {
     }
   }
 
-  /** Pin the session semantics every query assumes. All are
-    * runtime-settable (SQLConfs and one planner strategy), so this
-    * works on a session the driver created:
+  /** Entries of Spark's JVM-wide LRU cache of compiled generated
+    * classes (`spark.sql.codegen.cache.maxEntries`, Spark's default
+    * 100). One pass over the 33 BI read paths generates ~400 distinct
+    * classes, so at 100 every pass recompiled all of them in Janino
+    * (~12 ms each, on the driver inside `collect`). 4096 holds ten
+    * such passes, and the 3,758 classes one pass over all 192 benched
+    * queries compiles at sf0.001 (the second pass adds 330 that are
+    * never reused; BENCH_NOTES "codegen cache"). It must stay bounded:
+    * 0 disables the cache. */
+  val CodegenCacheEntries: Int = 4096
+
+  private[graft] val CodegenCacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+
+  /** Whether no generated class had been compiled in this JVM when the
+    * first session was prepped, i.e. Spark had not sized its cache. */
+  private lazy val codegenCacheUnbuilt: Boolean =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount == 0
+
+  private lazy val codegenCacheWarning: Unit =
+    LoggerFactory.getLogger(getClass).warn(s"$CodegenCacheKey is unset and " +
+      "generated code was compiled in this JVM before the first Tables.prep, " +
+      "so Spark's codegen cache keeps its size and every pass over more " +
+      "than its entries recompiles; set " +
+      s"$CodegenCacheKey=$CodegenCacheEntries when building the session")
+
+  /** Pin the session semantics every query assumes. All but the
+    * codegen cache size are runtime-settable (SQLConfs and one planner
+    * strategy), so this works on a session the driver created:
     *   - non-ANSI casts (lenient coercions return NULL, not error —
     *     required by [[graft.norm.Coerce]] and mirrored by DuckDB
     *     TRY_CAST in the oracle SQL);
@@ -123,7 +151,15 @@ object Tables {
     *     handling — the 100 TB posture);
     *   - [[ResultSort]] in the planner's extra strategies, once: a
     *     collected result small enough to coalesce to one partition
-    *     is sorted in one task, not through a range shuffle.
+    *     is sorted in one task, not through a range shuffle;
+    *   - Spark's generated-class cache sized to [[CodegenCacheEntries]]
+    *     (`spark.sql.codegen.cache.maxEntries`), unless the caller set
+    *     that key at build. `spark.conf.set` refuses a static key, so
+    *     it is written on the session's `SQLConf`; Spark reads it once
+    *     per JVM, when it compiles the first generated class, and every
+    *     entry point preps before that. If a class was
+    *     compiled before the JVM's first prep, the cache already has
+    *     its size: nothing is written and one WARN names the key.
     *
     * Called once where a session enters the engine, never in a query
     * body (`ConfScopeLintSpec`): [[graft.Session.local]] (every session
@@ -134,6 +170,12 @@ object Tables {
     * [[Reference.registerFechaTable]] (public, takes a caller's
     * session). */
   def prep(spark: SparkSession): Unit = {
+    val cacheUnbuilt = codegenCacheUnbuilt // decided at the JVM's first prep
+    if (!spark.sessionState.conf.contains(CodegenCacheKey)) {
+      if (cacheUnbuilt)
+        spark.sessionState.conf.setConfString(CodegenCacheKey, CodegenCacheEntries.toString)
+      else codegenCacheWarning
+    }
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

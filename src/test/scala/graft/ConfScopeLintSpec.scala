@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * runs a bounded stream, and sessions are prepped where they enter
   * the engine. Under `src/main/scala`, `.conf.set(` and `.conf.unset(`
   * appear only in `graft/Session.scala` (`withConf`) and
-  * `graft/queries/Tables.scala` (`prep` and the events pin);
+  * `graft/queries/Tables.scala` (`prep` and the events pin), and a
+  * direct `sessionState.conf` write only in `Tables.prep` (the codegen
+  * cache key);
   * `Trigger.AvailableNow` and `awaitTermination` only in
   * `graft/streaming/Streams.scala` (`drain`); and `prep(` is called only
   * in `graft/Session.scala`, `graft/SparkEntry.scala`,
@@ -21,7 +23,11 @@ class ConfScopeLintSpec extends AnyFunSuite {
 
   private val Root = Paths.get("src/main/scala")
 
-  private val ConfWrite = """\.conf\.(?:set|unset)\(""".r
+  /** A write straight to a session's `SQLConf`, which static keys
+    * take and `spark.conf.set` refuses. */
+  private val SqlConfWrite =
+    """\bsessionState\.conf\.(?:setConf|setConfString|unsetConf)\(""".r
+  private val ConfWrite = ("""\.conf\.(?:set|unset)\(|""" + SqlConfWrite.regex).r
   private val StreamRun = """\bTrigger\.AvailableNow\b|\bawaitTermination\b""".r
   private val PrepCall = """(?<!def )\bprep\(""".r
   private val StrategyWrite =
@@ -65,6 +71,14 @@ class ConfScopeLintSpec extends AnyFunSuite {
     assert(offences("""spark.conf.set("k", "v")""", ConfWrite) ===
       Seq(1 -> ".conf.set("))
     assert(offences("x\n  s.conf.unset(k)", ConfWrite).map(_._1) === Seq(2))
+    assert(offences(
+      """spark.sessionState.conf.setConfString("k", "v")
+        |s.sessionState.conf.setConf(SQLConf.ANSI_ENABLED, false)
+        |s.sessionState.conf.unsetConf("k")
+        |// s.sessionState.conf.setConfString("k", "v")
+        |val v = s.sessionState.conf.getConfString("k")""".stripMargin,
+      ConfWrite).map(_._2) === Seq("sessionState.conf.setConfString(",
+        "sessionState.conf.setConf(", "sessionState.conf.unsetConf("))
     assert(offences(".trigger(Trigger.AvailableNow())\nq.awaitTermination()",
       StreamRun).map(_._2) === Seq("Trigger.AvailableNow", "awaitTermination"))
     assert(offences(
@@ -107,6 +121,19 @@ class ConfScopeLintSpec extends AnyFunSuite {
       "and Tables:\n" + found.mkString("\n"))
     // withConf: one set per key, one set and one unset per restore
     assert(count("graft/Session.scala", ConfWrite) === 3)
+    // the one write past spark.conf's static-key check: prep sizing
+    // Spark's codegen cache
+    val sqlConf = files.flatMap { f =>
+      val src = Files.readString(f)
+      offences(src, SqlConfWrite).map { case (n, _) =>
+        s"${Root.relativize(f)} in ${enclosingDef(src, n)}: " +
+          src.linesIterator.drop(n - 1).next().trim }
+    }
+    assert(sqlConf.size === 1 && sqlConf.head.startsWith(
+      "graft/queries/Tables.scala in prep: spark.sessionState.conf" +
+        ".setConfString(CodegenCacheKey,"),
+      "SQLConf written directly outside Tables.prep's codegen cache " +
+        "key:\n" + sqlConf.mkString("\n"))
   }
 
   test("bounded streams under src/main/scala run only through Streams.drain") {

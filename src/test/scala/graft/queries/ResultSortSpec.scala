@@ -142,11 +142,15 @@ class ResultSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(rows.map(_.getLong(0)) === bigRows.map(_.getLong(0)))
     }
     // a local relation alone: its range shuffle is the first stage,
-    // so no stage has run when the sort is planned
+    // so no stage has run when the sort is planned; once that stage has
+    // run, the global sort over its read stays (no one-task re-plan)
     def local = spark.createDataFrame(Seq((2, "b"), (1, "a"))).toDF("k", "s")
     val (localRows, localPlan) = run(local.orderBy("k"))
-    assert(localRows.map(_.getInt(0)) === Seq(1, 2))
+    val (refRows, refPlan) = withoutResultSort(run(local.orderBy("k")))
+    assert(localRows.map(_.getInt(0)) === Seq(1, 2) && localRows === refRows)
     assert(rangeShuffles(localPlan).size === 1, localPlan)
+    assert(collect(localPlan) { case c: CoalesceExec => c }.isEmpty, localPlan)
+    assert(normalised(localPlan) === normalised(refPlan))
     // AQE on but not coalescing: the range shuffle keeps its partitions
     Session.withConf(spark,
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {

@@ -12,6 +12,8 @@
 # each side's median, the change of the medians, the change in every
 # pair and how many pairs "new" won (by the metric's better direction);
 # then every run's correct/failed. Results stay in the printed directory.
+# Exits 1, after the table, when a run left no result or reported
+# correct: false.
 set -euo pipefail
 if [ $# -lt 3 ]; then
   echo "usage: $0 <parent-rev> <workload> <seed>..." >&2
@@ -48,7 +50,8 @@ for seed in "$@"; do
   i=$((i + 1))
 done
 
-python3 - "$work/results" "$repo/BENCHMARK.json" "$@" <<'EOF'
+status=0
+python3 - "$work/results" "$repo/BENCHMARK.json" "$@" <<'EOF' || status=$?
 import json, os, statistics, sys
 
 results, spec_path, seeds = sys.argv[1], sys.argv[2], sys.argv[3:]
@@ -86,5 +89,11 @@ for m in spec["end_to_end"]:
 for (side, s), r in sorted(runs.items()):
     print(f"{side:<5} seed {s}: " + ("no result" if r is None else
           f"correct={r['correct']} failed={r['failed']}/{r['attempted']}"))
+bad = [f"{side} seed {s}" for (side, s), r in sorted(runs.items())
+       if r is None or r.get("correct") is not True]
+if bad:
+    print("perf_ab: no result or not correct: " + ", ".join(bad), file=sys.stderr)
+    sys.exit(1)
 EOF
 echo "perf_ab: results in $work/results" >&2
+exit $status
